@@ -45,7 +45,7 @@ def prepare_needles(
     arrival order).
     """
     # 'auto': all-ASCII/Latin file-backed batches compile to one pure-JVM
-    # scan; computed inputs (e.g. Map._flush buffers) skip the eager probe.
+    # scan; computed inputs (e.g. createDataFrame batches) skip the eager probe.
     # spread=True: a tiny file-backed batch is re-spread so tokenization
     # parallelizes past the scan's 1-2 partitions (no-op at corpus scale).
     out = with_normalized(df, text_col, "norm", adaptive="auto", spread=True)

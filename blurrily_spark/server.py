@@ -20,20 +20,18 @@ Concurrency model: the reference reactor is single-threaded per event loop
 (SURVEY.md §3.3) -- concurrent connections are accepted but commands are
 processed one at a time. We mirror that exactly: a ``ThreadingTCPServer``
 accepts connections concurrently while one lock serializes
-``process_command`` (the facade ``Map`` buffers puts driver-side and is not
-thread-safe; Spark job submission itself is thread-safe, so a cluster
-deployment wanting parallel FINDs would drop the lock and route through the
-immutable postings DataFrame only).
+``process_command`` and saves (``Map``'s index is plain in-process state
+and not thread-safe).
 
-Latency expectation: the reference answers FIND in 1-2 ms (README.md:15-17)
-because the whole index lives in one process's mapped memory. Here every
-FIND is a Spark job, so the floor is the job-scheduling overhead --
-~0.5-2 s on local mode regardless of data size. This server exists for
-protocol parity and operational glue (autosave, SIGUSR1, multi-db
-isolation), not interactive point lookups; the serving answer at scale is
-the precomputed side: export the postings/top-k tables this engine builds
-(bucketed by trigram, see operators/index.py) into a point-lookup store,
-and keep Spark for the batch/streaming maintenance of those tables.
+Latency: the reference answers FIND in 1-2 ms and PUT in about 100 µs
+(README.md:15-17) because its whole index lives in one process's memory.
+``api.Map`` has the same design -- an in-process trigram index that never
+launches a Spark job -- so a round trip costs the tokenizer, one
+``np.bincount`` over the needle's posting lists and the socket. The
+server needs no Spark session; Spark stays the batch/streaming path
+(operators/, plans/) for corpora beyond one process's memory, and reads
+the same parquet snapshots the server saves. The server reports a count
+and total seconds per command through ``command_stats()``.
 
 Known byte-level divergence from the reference: incoming request lines are
 stripped of line terminators ONLY (``rstrip("\\r\\n")``), while the Ruby
@@ -51,11 +49,13 @@ import argparse
 import socket
 import socketserver
 import threading
-
-from pyspark.sql import SparkSession
+from typing import TYPE_CHECKING
 
 from blurrily_spark.api import REF_RANGE, WEIGHT_RANGE, CommandProcessor, MapGroup
 from blurrily_spark.config import LIMIT_DEFAULT, LIMIT_RANGE
+
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
 
 DEFAULT_HOST = "localhost"   # lib/blurrily/defaults.rb:2
 DEFAULT_PORT = 12021         # lib/blurrily/defaults.rb:3
@@ -91,12 +91,13 @@ class BlurrilyServer:
 
     ``port=0`` binds an ephemeral port (exposed via ``.port`` after
     ``start()``), which is how the reference's own specs run it
-    (spec/spec_helper.rb ``find_free_port``).
+    (spec/spec_helper.rb ``find_free_port``). ``spark`` keeps the
+    signature of the facade and may be ``None``: the maps never use it.
     """
 
     def __init__(
         self,
-        spark: SparkSession,
+        spark: SparkSession | None,
         host: str = DEFAULT_HOST,
         port: int = DEFAULT_PORT,
         directory: str = ".",
@@ -113,10 +114,11 @@ class BlurrilyServer:
         self._stopping = threading.Event()
         self._save_requested = threading.Event()
         # plain Lock: saves and command processing are mutually exclusive
-        # across threads. Signal handlers must NEVER call save() directly
-        # (they run nested on the main thread's stack: a plain Lock
-        # deadlocks, an RLock would let a second overwrite-write of the
-        # same snapshot paths interleave with the first) -- they call
+        # across threads (a Map is not thread-safe, and a save must not see
+        # a half-applied command). Signal handlers must NEVER call save()
+        # directly (they run nested on the main thread's stack: a plain
+        # Lock deadlocks, an RLock would let a second save of the same
+        # snapshot path interleave with the first) -- they call
         # request_save(), and the autosave thread performs the save.
         self._lock = threading.Lock()
 
@@ -157,6 +159,12 @@ class BlurrilyServer:
         -- use :meth:`request_save`."""
         with self._lock:
             self.map_group.save_all()
+
+    def command_stats(self) -> dict[str, dict[str, float]]:
+        """Per-command ``{"count": n, "seconds": s}`` since the server was
+        built, for FIND, PUT, DELETE and CLEAR (a copy; read-only)."""
+        with self._lock:
+            return self.processor.command_stats()
 
     def request_save(self) -> None:
         """Async save trigger, safe from signal handlers: only sets an
@@ -311,11 +319,9 @@ def main(argv: list[str] | None = None) -> None:
                         help="Bind to ADDRESS, defaults to 0.0.0.0")
     args = parser.parse_args(argv)
 
-    from blurrily_spark.config import get_spark
-
-    spark = get_spark("blurrily-server")
+    # the served maps are in-process indexes: no Spark session is started
     server = BlurrilyServer(
-        spark, host=args.bind, port=args.port, directory=args.directory
+        None, host=args.bind, port=args.port, directory=args.directory
     ).start()
 
     done = threading.Event()

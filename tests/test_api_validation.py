@@ -1,4 +1,4 @@
-"""Validation envelope + wire-command goldens (C5/C7) and lazy-load facade.
+"""Validation envelope + wire-command goldens (C5/C7) and job-free facade.
 
 Goldens mirror spec/blurrily/command_processor_spec.rb and the EPROTO /
 ENOENT load behaviors of spec/blurrily/map_spec.rb:281-330.
@@ -40,19 +40,31 @@ def test_load_garbage_file_raises_protocol_error(spark, tmp_path):
         Map.load(spark, str(path))
 
 
-def test_load_is_lazy_no_driver_collect(spark, tmp_path):
-    """Loading a snapshot must not materialize every stored ref on the
-    driver; the set is built on the first put() that needs it."""
+def test_map_runs_no_spark_job(spark, tmp_path):
+    """load, put, find, delete and save answer in-process: none of them
+    launches a Spark job, and the dup-ref no-op holds after a load."""
     path = str(tmp_path / "db.trigrams")
     m = Map(spark)
     m.put("london", 123)
     m.save(path)
-    m2 = Map.load(spark, path)
-    assert m2._refs is None  # no eager job ran
-    assert m2.find("london") == [(123, 7, 6)]  # find never needs the set
-    assert m2._refs is None
-    assert m2.put("paris", 123) == 0  # first put materializes + dup no-op
-    assert m2._refs == {123}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("map-no-jobs", "Map must not launch jobs")
+    try:
+        m2 = Map.load(spark, path)
+        assert m2.put("paris", 123) == 0  # dup ref survives the load
+        assert m2.put("paris", 456) == 6
+        assert m2.find("london") == [(123, 7, 6)]
+        m2.delete(123)
+        assert m2.find("london") == []
+        m2.save(path)
+        assert sc.statusTracker().getJobIdsForGroup("map-no-jobs") == []
+        spark.range(1).count()  # control: a job in this group is visible
+        assert sc.statusTracker().getJobIdsForGroup("map-no-jobs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert Map.load(spark, path).find("paris") == [(456, 6, 5)]
 
 
 # -- find limit envelope ----------------------------------------------------

@@ -141,6 +141,24 @@ def test_uses_existing_maps(spark, server, tmp_path):
         assert [t[0] for t in c.find("london")] == [1337]
 
 
+def test_command_stats_count_and_time_each_command(server):
+    with client_for(server) as c:
+        c.put("paris", 1)
+        c.put("paris", 2)
+        c.find("paris")
+        c.delete(2)
+        c.clear()
+        with pytest.raises(ClientError):
+            c.put("paris", 3, weight=1 << 31)  # refused, still counted
+    stats = server.command_stats()
+    assert {cmd: s["count"] for cmd, s in stats.items()} == {
+        "FIND": 1, "PUT": 3, "DELETE": 1, "CLEAR": 1,
+    }
+    assert all(s["seconds"] > 0 for s in stats.values())
+    stats["FIND"]["count"] = 99  # a copy: the server's counters are read-only
+    assert server.command_stats()["FIND"]["count"] == 1
+
+
 # -- client_spec.rb (validation without touching the wire) --------------------
 
 
