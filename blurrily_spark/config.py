@@ -56,11 +56,12 @@ def spread_small_input(df, max_bytes: int | None = None):
         if df.isStreaming or max_bytes <= 0:
             return df
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        # a non-integer partition count (``auto``) leaves the input as it is
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     except Exception:
         return df
     if size >= max_bytes:
         return df
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     return df.repartition(n)
 
 

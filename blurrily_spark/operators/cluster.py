@@ -99,9 +99,9 @@ def _fingerprint_metrics() -> list:
 CC_DRIVER_MAX_EDGES = int(os.environ.get("BLURRILY_CC_DRIVER_MAX_EDGES", "100000"))
 
 
-def _driver_components(rows) -> list[tuple[int, int]]:
+def _driver_components(rows) -> tuple[list[int], list[int]]:
     """Union-find (path-halving) over collected (src, dst) rows; returns
-    one (ref, entity_id=component min) per distinct node."""
+    (refs, entity_ids=component min), one entry per distinct node."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -123,7 +123,8 @@ def _driver_components(rows) -> list[tuple[int, int]]:
         r = find(node)
         if r not in mins or node < mins[r]:
             mins[r] = node
-    return [(node, mins[find(node)]) for node in parent]
+    refs = list(parent)
+    return refs, [mins[find(node)] for node in refs]
 
 
 def connected_components(
@@ -147,39 +148,43 @@ def connected_components(
     that same job. ``stats``, when given, receives ``{"rounds": r}`` for
     callers/tests that pin the per-round job count.
     """
-    obs0 = Observation()
-    e = (
-        _canonical(
-            edges.select(
-                F.col(src).cast("long").alias("src"),
-                F.col(dst).cast("long").alias("dst"),
-            )
+    canon = _canonical(
+        edges.select(
+            F.col(src).cast("long").alias("src"),
+            F.col(dst).cast("long").alias("dst"),
         )
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
-    held_rdd = _checkpoint_rdd(e)
-
     spark = edges.sparkSession
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     if driver_max_edges is None:
         driver_max_edges = CC_DRIVER_MAX_EDGES
+    if driver_max_edges > 0:
+        # Small graph: one collect, cut at one row past the bound, then
+        # union-find on the driver -- same (ref, entity_id=component min)
+        # rows as the loop below, without its per-round jobs. The labels go
+        # back as an Arrow table, which Spark turns into a local relation
+        # with no Python-worker task (a list of tuples would run one per
+        # partition through a Python RDD). A graph past the bound falls
+        # through to the loop.
+        rows = canon.limit(driver_max_edges + 1).collect()
+        if len(rows) <= driver_max_edges:
+            import pyarrow as pa
+
+            refs, ids = _driver_components(rows)
+            if stats is not None:
+                stats["rounds"] = 0
+                stats["driver_path"] = True
+            return spark.createDataFrame(
+                pa.table(
+                    {"ref": pa.array(refs, pa.int64()), "entity_id": pa.array(ids, pa.int64())}
+                )
+            )
+
+    obs0 = Observation()
+    e = canon.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    held_rdd = _checkpoint_rdd(e)
+    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     n_init = int(obs0.get["n"])
-    if 0 < driver_max_edges and n_init <= driver_max_edges:
-        # Tiny graph: union-find on the driver over the already-checkpointed
-        # canonical edges -- same (ref, entity_id=component min) rows as the
-        # loop below, without its per-round jobs. The checkpoint that backed
-        # the collect is freed eagerly.
-        labels = _driver_components(
-            (r["src"], r["dst"]) for r in e.select("src", "dst").collect()
-        )
-        if held_rdd is not None:
-            held_rdd.unpersist(False)
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["driver_path"] = True
-        return spark.createDataFrame(labels, "ref long, entity_id long")
 
     prev_fp = None
     cur_parts = default_parts  # shuffles reset partitioning to the default

@@ -196,11 +196,16 @@ def rescore_pairs_exact(
         F.col("_tg").alias("_tg_b"),
         F.col("_w").alias("weight_b"),
     )
+    # ``matches`` comes out of a one-element explode: a filter on it (the
+    # pipeline's min_matches) cannot be pushed below a generator, so the
+    # optimizer never copies the intersection into the join condition and
+    # each candidate pays for one array_intersect, not two.
+    matches = F.explode(F.array(F.size(F.array_intersect("_tg_a", "_tg_b")).cast("long")))
     return (
         candidates.select("ref_a", "ref_b")
         .join(a, "ref_a")
         .join(b, "ref_b")
-        .withColumn("matches", F.size(F.array_intersect("_tg_a", "_tg_b")).cast("long"))
+        .select("*", matches.alias("matches"))
         .withColumn(
             "jaccard",
             F.col("matches")

@@ -1,19 +1,27 @@
 """End-to-end record-linkage pipeline with checkpoint-resumable stages.
 
-transcripts -> turns (normalize + entity refs)
+transcripts -> turns (normalize + entity refs + trigram array)
             -> postings (trigram inverted index)
             -> pairs (blocking self-join + jaccard)
             -> scores (weight-delta + Jaro-Winkler tie-break)
             -> edges (threshold) -> entities (connected components)
             -> golden (optional survivorship: one canonical record/entity)
 
+Each turn is tokenized once, in the turns stage, as the reference
+tokenizes a record once at PUT and scores every later match from the
+stored codes (ext/blurrily/storage.c:36-41): the turns table carries the
+``trigrams`` array, the postings stage explodes it, and the two-phase
+rescore of the pairs stage reads it back from the turns table.
+
 Every stage is a pure DataFrame transformation whose output is a table
 (parquet here; Iceberg snapshots on a real cluster -- the reference's
 atomic-rename save, ext/blurrily/storage.c:371-374, maps to the table
 format's atomic commit). A stage writes its output dir plus a
-``_blurrily_fingerprint.json`` of its config; re-running with the same
-fingerprint skips the stage (the reference's clean-path save memo,
-lib/blurrily/map.rb:25-30, generalized to every stage). The run manifest
+``_blurrily_fingerprint.json`` of its config and table layout; re-running
+with the same fingerprint skips the stage (the reference's clean-path save
+memo, lib/blurrily/map.rb:25-30, generalized to every stage). Every job a
+stage launches, its build included, carries the job description
+``LinkagePipeline <stage>``. The run manifest
 records, per stage: row count, wall seconds, and **per-partition lineage**
 -- one entry per output parquet file (= one write task / one partition of
 the stage's final plan) with its row count and bytes, read from the
@@ -40,6 +48,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from blurrily_spark.functions.tokenizer import add_trigrams, with_normalized
 from blurrily_spark.operators.cluster import assign_entities, golden_records
@@ -97,6 +106,20 @@ def partition_lineage(path: str, cap: int = 4096) -> dict:
     }
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable: the
+    schema Spark's parquet writer stores and a bare read infers."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def input_identity(df: DataFrame) -> dict:
     """Stage-cache identity of a pipeline input.
 
@@ -123,7 +146,7 @@ def input_identity(df: DataFrame) -> dict:
 
 
 def build_turns(transcripts: DataFrame) -> DataFrame:
-    """transcripts -> turns(ref, conv_id, turn_idx, norm, weight).
+    """transcripts -> turns(ref, conv_id, turn_idx, norm, weight, text).
 
     Stable (conv_id, turn_idx) ordering key is preserved verbatim; the
     per-turn text invariant is checked against this table.
@@ -137,9 +160,11 @@ def build_turns(transcripts: DataFrame) -> DataFrame:
 
 
 def turns_to_postings(turns: DataFrame) -> DataFrame:
-    return add_trigrams(turns, "norm", "_tg").select(
-        F.explode("_tg").alias("trigram"), "ref", "weight"
-    )
+    """turns -> postings(trigram, ref, weight): an explode of the turns'
+    ``trigrams`` array, tokenizing ``norm`` first when there is none."""
+    if "trigrams" not in turns.columns:
+        turns = add_trigrams(turns, "norm", "trigrams")
+    return turns.select(F.explode("trigrams").alias("trigram"), "ref", "weight")
 
 
 class LinkagePipeline:
@@ -147,6 +172,10 @@ class LinkagePipeline:
 
     STAGES = ("turns", "postings", "pairs", "scores", "edges", "entities")
     # "golden" joins STAGES at runtime only when golden=True is configured
+    # Version of the stage tables' columns, part of every fingerprint: a
+    # workdir written under another layout reruns instead of resuming into
+    # tables this code cannot read. 2: turns carries ``trigrams``.
+    LAYOUT = 2
     AUTO_SALT_BUCKETS = 8  # bucket count used when salt_buckets="auto" fires
 
     def __init__(
@@ -214,7 +243,12 @@ class LinkagePipeline:
         # outputs. File-backed inputs are identified by their file set;
         # computed inputs by the logical plan's semantic hash.
         return json.dumps(
-            {"stage": stage, "config": self.config, "input": self._input_ident},
+            {
+                "stage": stage,
+                "config": self.config,
+                "input": self._input_ident,
+                "layout": self.LAYOUT,
+            },
             sort_keys=True,
         )
 
@@ -229,17 +263,18 @@ class LinkagePipeline:
         with open(fp) as fh:
             return fh.read() == self._fingerprint(stage)
 
-    def _write(self, stage: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+    def _write(self, stage: str, df: DataFrame) -> DataFrame:
         t0 = time.time()
         # Row counts ride along as observed metrics on the write job itself
         # (CollectMetrics node) -- no extra count() scan per stage.
         obs = Observation(f"blurrily_{stage}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self._path(stage))
-        out = self.spark.read.parquet(self._path(stage))
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(self._path(stage))
+        # Read back with the schema just written (as the parquet writer
+        # stores it: every field nullable), which skips the schema-inference
+        # job a bare read launches. A resumed stage infers it instead.
+        out = self.spark.read.schema(_as_nullable(df.schema)).parquet(self._path(stage))
         self.metrics[stage] = {
             "rows": obs.get["rows"],
             "seconds": round(time.time() - t0, 3),
@@ -285,16 +320,10 @@ class LinkagePipeline:
         return (b if hot else None), hot
 
     def _rescore_recs(self, turns: DataFrame) -> DataFrame:
-        """(ref, trigrams, weight) side table for rescore_pairs_exact,
-        materialized ONCE (eager localCheckpoint): the rescore joins it on
-        ref_a AND ref_b, and Spark otherwise re-runs the whole tokenization
-        per join side -- measured one full add_trigrams pass (~turns-sized)
-        of pure waste per pairs build. Rows are (long, ~len+1 ints, int),
-        so the materialization is far smaller than the pair stream it
-        feeds."""
-        return add_trigrams(
-            turns.select("ref", "norm", "weight"), "norm", "trigrams"
-        ).localCheckpoint()
+        """(ref, trigrams, weight) side table for rescore_pairs_exact, read
+        from the written turns table: the rescore joins the arrays the
+        turns stage stored on ref_a and ref_b, and tokenizes nothing."""
+        return turns.select("ref", "trigrams", "weight")
 
     def _load_or(self, stage: str, build) -> DataFrame:
         if self._is_done(stage):
@@ -309,13 +338,23 @@ class LinkagePipeline:
                 "partitions": lineage,
             }
             return out
-        return self._write(stage, build())
+        # Tag every job of the stage, its build's eager jobs included.
+        # Only the description: job groups belong to the caller.
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"LinkagePipeline {stage}")
+        try:
+            return self._write(stage, build())
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     # -- the dataflow ---------------------------------------------------
 
     def run(self, transcripts: DataFrame) -> DataFrame:
         self._input_ident = input_identity(transcripts)
-        turns = self._load_or("turns", lambda: build_turns(transcripts))
+        turns = self._load_or(
+            "turns", lambda: add_trigrams(build_turns(transcripts), "norm", "trigrams")
+        )
         postings = self._load_or("postings", lambda: turns_to_postings(turns))
 
         def _pairs():

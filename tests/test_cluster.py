@@ -350,3 +350,45 @@ def test_cluster_metrics_exact_scale_guard(spark):
     df = spark.createDataFrame([(1, 1, 1)], "ref long, entity_id long, entity_true long")
     with _pt.raises(ValueError, match="exact_scale"):
         cluster_metrics(df, exact_scale=10**6)
+
+
+def test_driver_path_builds_labels_without_python_workers(spark):
+    """The driver path collects the canonical edges once, cut one row past
+    the bound, and returns its labels as a local relation: no Python-RDD
+    scan, no checkpoint left behind, and reading the labels runs no job.
+    One edge past the bound takes the distributed loop, with equal labels."""
+    rng = random.Random(17)
+    nodes = list(range(120))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
+    edges = [(a, b) for a, b in edges if a != b]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    n_canonical = len({(max(a, b), min(a, b)) for a, b in edges})
+    expected = union_find_components(edges, {n for e in edges for n in e})
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    stats: dict = {}
+    labels = connected_components(edf, stats=stats, driver_max_edges=n_canonical)
+    assert stats.get("driver_path") is True
+    assert jsc.getPersistentRDDs().size() == before
+    plan = labels._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    sc.setJobGroup("cc-driver-labels", "read driver-path labels")
+    try:
+        got = {r["ref"]: r["entity_id"] for r in labels.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("cc-driver-labels") == []
+    assert got == expected
+
+    stats_x: dict = {}
+    past = connected_components(edf, stats=stats_x, driver_max_edges=n_canonical - 1)
+    assert stats_x.get("driver_path") is None and stats_x["rounds"] >= 1
+    assert {r["ref"]: r["entity_id"] for r in past.collect()} == expected
+
+
+def test_driver_path_empty_graph(spark):
+    edf = spark.createDataFrame([(1, 1)], "src long, dst long")
+    assert connected_components(edf).collect() == []

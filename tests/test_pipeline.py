@@ -353,3 +353,83 @@ def test_pipeline_knn_candidate_mode_f1(spark, tmp_path):
 
     with pytest.raises(ValueError, match="candidate_mode"):
         LinkagePipeline(spark, str(tmp_path), candidate_mode="bogus")
+
+
+def test_pairs_stage_intersects_once(spark, tmp_path, monkeypatch):
+    """The two-phase rescore computes each candidate's array_intersect
+    once: the min_matches filter must not be copied into the join
+    condition next to the projection that computes ``matches``."""
+    plans = {}
+    write = LinkagePipeline._write
+
+    def spy(self, stage, df):
+        plans[stage] = df._jdf.queryExecution().optimizedPlan().toString()
+        return write(self, stage, df)
+
+    monkeypatch.setattr(LinkagePipeline, "_write", spy)
+    t = _toy_transcripts(spark, 60)
+    LinkagePipeline(
+        spark, str(tmp_path), min_matches=3, max_df=16, compute_jw=False
+    ).run(t)
+    assert plans["pairs"].count("array_intersect") == 1, plans["pairs"]
+
+
+def test_stage_jobs_carry_stage_description(spark, tmp_path):
+    """Every job a run launches, eager build jobs included, is described as
+    ``LinkagePipeline <stage>``; the caller's job group and description
+    are left as they were."""
+    sc = spark.sparkContext
+    t = _toy_transcripts(spark, 60)
+    sc.setJobGroup("pipeline-descriptions", "caller's description")
+    try:
+        LinkagePipeline(spark, str(tmp_path), min_matches=2, max_df=16).run(t)
+        assert sc.getLocalProperty("spark.job.description") == "caller's description"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = sc._jsc.sc().statusStore()
+    descriptions = []
+    for jid in sc.statusTracker().getJobIdsForGroup("pipeline-descriptions"):
+        d = store.job(jid).description()
+        descriptions.append(d.get() if d.isDefined() else None)
+    assert descriptions
+    expected = {f"LinkagePipeline {s}" for s in LinkagePipeline.STAGES}
+    assert set(descriptions) == expected, descriptions
+
+
+def test_resume_from_previous_turns_layout_reruns(spark, tmp_path):
+    """A workdir written before ``turns`` carried ``trigrams`` (and before
+    fingerprints named a layout) reruns every stage instead of resuming
+    into a table without the column; the fresh stage read-back has the
+    schema a resumed read infers."""
+    wd = str(tmp_path)
+    t = _toy_transcripts(spark, 60)
+    pipe1 = LinkagePipeline(spark, wd, min_matches=2, max_df=16)
+    ent1 = pipe1.run(t)
+    out1 = sorted(ent1.collect())
+
+    # rewrite the workdir as the previous layout left it
+    turns_path = os.path.join(wd, "turns")
+    old = spark.read.parquet(turns_path).drop("trigrams")
+    old.write.mode("overwrite").parquet(os.path.join(wd, "_old_turns"))
+    spark.read.parquet(os.path.join(wd, "_old_turns")).write.mode(
+        "overwrite"
+    ).parquet(turns_path)
+    for s in LinkagePipeline.STAGES:
+        fp_path = pipe1._fp_file(s)
+        with open(fp_path) as fh:
+            fp = json.load(fh)
+        del fp["layout"]
+        with open(fp_path, "w") as fh:
+            fh.write(json.dumps(fp, sort_keys=True))
+
+    pipe2 = LinkagePipeline(spark, wd, min_matches=2, max_df=16)
+    ent2 = pipe2.run(t)
+    assert not any(pipe2.metrics[s]["skipped"] for s in LinkagePipeline.STAGES)
+    assert sorted(ent2.collect()) == out1
+    assert "trigrams" in spark.read.parquet(turns_path).columns
+
+    pipe3 = LinkagePipeline(spark, wd, min_matches=2, max_df=16)
+    ent3 = pipe3.run(t)
+    assert all(pipe3.metrics[s]["skipped"] for s in LinkagePipeline.STAGES)
+    assert ent3.schema == ent2.schema == ent1.schema
