@@ -825,7 +825,7 @@ def q_edit_distance_join(spark, sf_dir):
     docs = _docs_with_dups(spark, sf_dir)
     p = build_postings(docs, text_col="text", ref_col="doc_id", weight_col=None)
     cand = candidate_pairs(p, keys_only=True)
-    recs = with_normalized(docs, "text", "norm", adaptive="auto").select(
+    recs = with_normalized(docs, "text", "norm").select(
         F.col("doc_id").alias("ref"), "norm"
     )
     out = with_edit_distance(cand, recs, max_dist=EDIT_MAX)

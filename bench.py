@@ -136,10 +136,9 @@ def main() -> None:
     spark = get_spark("blurrily-bench", master=f"local[{CPUS}]")
     # warm up JVM + the Arrow/pandas worker pool outside the timings (cold
     # python-daemon forks under a busy host have produced 10x outliers)
-    from blurrily_spark.functions.tokenizer import nfkd_fold
-
     warm = spark.range(256).selectExpr("concat('wärm', id) AS t")
-    warm.select(nfkd_fold(warm.t)).count()
+    # an identity mapInPandas: unlike a projected UDF, count() cannot prune it
+    warm.mapInPandas(lambda batches: batches, warm.schema).count()
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -469,7 +468,7 @@ def main() -> None:
         ).cache()
         try:
             cand = _cand_pairs(p, max_df=CAP_DF, keys_only=True)
-            recs = _with_norm(docs_meta, "text", "norm", adaptive="auto").select(
+            recs = _with_norm(docs_meta, "text", "norm").select(
                 F.col("doc_id").alias("ref"), "norm"
             )
             row = _with_edit(cand, recs, max_dist=40).selectExpr(

@@ -1,7 +1,6 @@
 from blurrily_spark.functions.tokenizer import (  # noqa: F401
     TRIGRAM_BASE,
     TRIGRAM_COUNT,
-    nfkd_fold,
     normalize,
     normalize_py,
     padded,
@@ -10,5 +9,4 @@ from blurrily_spark.functions.tokenizer import (  # noqa: F401
     trigram_to_string,
     trigrams,
     trigrams_py,
-    trigrams_udf,
 )

@@ -23,8 +23,8 @@ them). Blocking quality is indistinguishable in practice and the key is
 deterministic everywhere.
 
 The expression is pure string codegen (lower/translate/regexp/rpad): no
-UDF, no shuffle -- a projection over the scan, exactly like the trigram
-tokenizer's JVM tiers (functions/tokenizer.py).
+UDF, no shuffle -- a projection over the scan, like the trigram
+tokenizer's normalize (functions/tokenizer.py).
 """
 
 from __future__ import annotations

@@ -1,9 +1,8 @@
 """Trigram tokenization pipeline (reference operators S1-S5).
 
 Re-creates the observable semantics of mezis/blurrily's normalization and
-trigram tokenizer as Spark SQL *expressions* (JVM-side, whole-stage codegen)
-with a vectorized Arrow/pandas UDF only for the Unicode NFKD fold that SQL
-cannot express.
+trigram tokenizer as Spark SQL *expressions* (JVM-side, whole-stage codegen),
+plus pure-Python twins used as the golden model and by the in-process Map.
 
 Reference semantics (cited into /root/reference):
 
@@ -22,12 +21,13 @@ Reference semantics (cited into /root/reference):
   (sortedness there is an implementation artifact; only set semantics are
   observable).
 
-Design note (Spark-first): the whole pipeline is expressible with built-in
+Design note (Spark-first): S1 is one JVM expression and S2-S5 are built-in
 functions (``lower``/``regexp_replace``/``translate``/``transform``/
-``sequence``/``array_distinct``), so at 100 TB the tokenizer runs entirely
-inside whole-stage codegen with zero Python in the hot path. The pandas UDF
-(`nfkd_fold`) is reached only by rows that contain non-ASCII bytes after
-lowering; an all-ASCII corpus never leaves the JVM.
+``sequence``/``array_distinct``), so the tokenizer runs inside whole-stage
+codegen with no Python in any plan, for any script. The NFKD step, which
+SQL has no built-in for, is ``reflect`` on ICU4J's ``Normalizer.decompose``
+(icu4j ships with Spark), reached only by rows that are not ASCII after
+lowering.
 """
 
 from __future__ import annotations
@@ -35,10 +35,8 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 TRIGRAM_BASE = 28  # ext/blurrily/tokeniser.h:22 (alphabet {*, a..z} = 28 symbols)
 TRIGRAM_COUNT = TRIGRAM_BASE**3  # 21952 possible codes; ext/blurrily/storage.c:30
@@ -55,39 +53,13 @@ TRIGRAM_COUNT = TRIGRAM_BASE**3  # 21952 possible codes; ext/blurrily/storage.c:
 # (tests/test_tokenizer.py::test_multiline_clean_line_divergence).
 _CLEAN_RE = "^[a-z ]+$"
 _ASCII_RE = "^[\\x00-\\x7F]*$"
-
-
-def _build_latin_fold() -> tuple[str, str, str]:
-    """Chars whose NFKD-then-ASCII-strip result is <= 1 ASCII char, so the
-    fold is expressible as a JVM ``translate`` (1:1 map or delete).
-
-    Covers Latin-1 Supplement, Latin Extended-A/B and combining marks --
-    i.e. virtually all real-world Latin-script text. Multi-char
-    decompositions (ﬁ -> fi, ĳ -> ij, ...) are excluded and fall through to
-    the exact NFKD pandas UDF.
-    Returns (regex char-class of covered chars, translate src, translate dst
-    [shorter => trailing src chars are deleted]).
-    """
-    mapped: list[tuple[str, str]] = []
-    deleted: list[str] = []
-    for cp in list(range(0x00A0, 0x0250)) + list(range(0x0300, 0x0370)):
-        ch = chr(cp)
-        if ch != ch.lower():  # translate runs on lowered text
-            continue
-        target = "".join(
-            c for c in unicodedata.normalize("NFKD", ch) if ord(c) < 128
-        )
-        if len(target) == 1:
-            mapped.append((ch, target))
-        elif len(target) == 0:
-            deleted.append(ch)
-    src = "".join(m[0] for m in mapped) + "".join(deleted)
-    dst = "".join(m[1] for m in mapped)
-    char_class = "^[\\x00-\\x7F" + src + "]*$"
-    return char_class, src, dst
-
-
-_LATIN_RE, _LATIN_SRC, _LATIN_DST = _build_latin_fold()
+# ICU4J 77 implements Unicode 16, Python 3.11's unicodedata Unicode 14. The
+# only code points where that skew changes S1's output are Unicode 16's
+# outlined A-Z and 0-9 (Symbols for Legacy Computing Supplement): ICU
+# decomposes them to ASCII, Python leaves them unassigned and strips them.
+# Deleting them before the decomposition gives 0 differences from
+# normalize_py over every code point (tests/test_tokenizer.py).
+_ICU_ONLY_RE = "[\\x{1CCD6}-\\x{1CCF9}]"
 
 
 # ---------------------------------------------------------------------------
@@ -132,156 +104,59 @@ def tokenize_py(s: str | None) -> list[int] | None:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized Arrow/pandas UDF for the NFKD fold (slow path only).
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(StringType())
-def nfkd_fold(s: pd.Series) -> pd.Series:
-    """NFKD-decompose, strip non-ASCII, non-[a-z] -> space.
-
-    Only invoked for rows whose lowered text contains non-ASCII bytes
-    (lib/blurrily/map.rb:42's multibyte branch). Arrow-batched; the per-row
-    body is unavoidable because unicodedata has no columnar form.
-    """
-
-    def fold(x: str | None) -> str | None:
-        if x is None:
-            return None
-        d = unicodedata.normalize("NFKD", x)
-        d = d.encode("ascii", "ignore").decode("ascii")
-        return re.sub(r"[^a-z]", " ", d)
-
-    return s.map(fold)
-
-
-@F.pandas_udf(ArrayType(IntegerType()))
-def trigrams_udf(s: pd.Series) -> pd.Series:
-    """Arrow-batched tokenizer (S2-S5) over *normalized* text.
-
-    Provided for API parity with the north-star's "vectorized Arrow UDF"
-    phrasing and as a fallback; the production path is :func:`trigrams`,
-    which compiles to pure JVM expressions.
-    """
-    return s.map(trigrams_py)
-
-
-# ---------------------------------------------------------------------------
 # Spark SQL expression pipeline (the production path).
 # ---------------------------------------------------------------------------
 
 def normalize(col: Column | str) -> Column:
-    """S1 as a Column expression.
+    """S1 as one Column expression (lib/blurrily/map.rb:40-47).
 
-    Three-way branch mirroring lib/blurrily/map.rb:40-47:
-      1. already ``^[a-z ]+$`` after lower  -> unchanged (clean path);
-      2. ASCII-only                         -> SQL ``[^a-z] -> ' '`` (NFKD is
-         the identity on ASCII, so the multibyte branch degenerates to a
-         regexp_replace that codegen handles);
-      3. otherwise                          -> :func:`nfkd_fold` pandas UDF.
+    After ``lower``, cheapest branch first:
+      1. NULL                              -> NULL (``reflect`` would throw);
+      2. already ``^[a-z ]+$``             -> unchanged (clean path);
+      3. ASCII-only                        -> ``[^a-z] -> ' '`` (NFKD is the
+         identity on ASCII);
+      4. otherwise                         -> ICU NFKD, strip non-ASCII,
+         ``[^a-z] -> ' '``.
     Whitespace collapse + trim always apply (map.rb:46).
+
+    ``reflect`` is non-deterministic to Catalyst: keep the result in its own
+    projection (not inside an aggregate) and filter on input columns before
+    normalizing, or the filter no longer reaches the scan.
     """
     c = F.lower(F.col(col) if isinstance(col, str) else col)
-    # Four tiers, cheapest first; tiers 1-3 are pure JVM expressions:
-    #   1. already clean                         -> unchanged
-    #   2. ASCII                                 -> regexp fold
-    #   3. Latin-script (1:1 NFKD decomposable)  -> translate fold
-    #   4. anything else                         -> exact NFKD pandas UDF
-    # The Arrow UDF node is evaluated for every row regardless of the WHEN
-    # branch taken (Catalyst extracts Python UDFs unconditionally), so gate
-    # its *input* to NULL for tier 1-3 rows -- the Python side then does no
-    # unicodedata work and ships nothing back for the dominant case.
-    needs_udf = ~(c.rlike(_ASCII_RE) | c.rlike(_LATIN_RE))  # Or short-circuits
-    folded = nfkd_fold(F.when(needs_udf, c))
-    base = (
-        F.when(c.rlike(_CLEAN_RE), c)
-        .when(c.rlike(_ASCII_RE), F.regexp_replace(c, "[^a-z]", " "))
-        .when(
-            ~needs_udf,
-            F.regexp_replace(F.translate(c, _LATIN_SRC, _LATIN_DST), "[^a-z]", " "),
-        )
-        .otherwise(folded)
+    nfkd = F.reflect(
+        F.lit("com.ibm.icu.text.Normalizer"),
+        F.lit("decompose"),
+        F.regexp_replace(c, _ICU_ONLY_RE, ""),
+        F.lit(True),  # compatibility decomposition: NFKD
     )
-    return F.trim(F.regexp_replace(base, "\\s+", " "))
-
-
-def _normalize_jvm(c: Column) -> Column:
-    """Tiers 1-3 only (caller guarantees no tier-4 rows): pure JVM."""
     base = (
-        F.when(c.rlike(_CLEAN_RE), c)
+        F.when(c.isNull(), F.lit(None))
+        .when(c.rlike(_CLEAN_RE), c)
         .when(c.rlike(_ASCII_RE), F.regexp_replace(c, "[^a-z]", " "))
         .otherwise(
-            F.regexp_replace(F.translate(c, _LATIN_SRC, _LATIN_DST), "[^a-z]", " ")
+            F.regexp_replace(F.regexp_replace(nfkd, "[^\\x00-\\x7F]", ""), "[^a-z]", " ")
         )
     )
     return F.trim(F.regexp_replace(base, "\\s+", " "))
 
 
-def with_normalized(
-    df,
-    text_col: str,
-    out_col: str = "norm",
-    adaptive: bool | str = False,
-    spread: bool = False,
-):
-    """Bulk normalization with a plan-level split: rows whose lowered text is
-    ASCII/Latin take a branch containing NO Python node at all (the Arrow
-    UDF node would otherwise round-trip every row, nulls included), and only
-    genuinely non-Latin rows flow through the exact-NFKD UDF branch. The
-    union preserves S1 semantics exactly; row order is not preserved (no
-    engine operator depends on it).
+def with_normalized(df, text_col: str, out_col: str = "norm", spread: bool = False):
+    """``df`` plus ``out_col`` = :func:`normalize` of ``text_col``: one lazy
+    projection, so it launches no Spark job and works on streaming input.
 
     ``spread=True`` re-spreads a tiny file-backed scan across the session's
     shuffle parallelism (:func:`blurrily_spark.config.spread_small_input`)
-    AFTER the probe, so the normalization and everything stacked on top of
-    it parallelize instead of running on the 1-2 tasks a single-row-group
-    file yields; a no-op at real corpus sizes.
-
-    ``adaptive=True`` first runs a cheap single-column probe (filter +
-    limit 1, column-pruned at the scan): if the input has no tier-4 rows --
-    the overwhelmingly common case for real corpora -- the returned plan is
-    ONE scan of pure JVM expressions with no Python node and no union at
-    all. The probe is an eager job, so it is illegal on streaming
-    DataFrames and wasteful on expensive computed inputs; ``adaptive=
-    'auto'`` (what the engine's operators pass) probes only when the input
-    is batch AND file-backed (``df.inputFiles()`` non-empty => the second
-    scan is a cheap column-pruned file read), and otherwise falls back to
-    the lazy union plan -- so operator construction never launches a job on
-    computed inputs and never throws on streaming ones.
+    before the projection, so the normalization and everything stacked on
+    top of it parallelize instead of running on the 1-2 tasks a
+    single-row-group file yields; a no-op at real corpus sizes.
     """
     from blurrily_spark.config import spread_small_input, tune_session
 
     tune_session(df.sparkSession)
-    if adaptive == "auto":
-        adaptive = (not df.isStreaming) and bool(df.inputFiles())
-    probe_df = df
     if spread:
-        # spread the returned plan only -- the probe below keeps running on
-        # the raw scan (column-pruned, no shuffle)
         df = spread_small_input(df)
-    c = F.lower(F.col(text_col))
-    # ASCII test first: Spark's Or codegen short-circuits, so the expensive
-    # ~300-char Latin class regex only ever runs on non-ASCII rows
-    # (measured 10x on an ASCII-dominant corpus).
-    latin_ok = c.rlike(_ASCII_RE) | c.rlike(_LATIN_RE)
-    if adaptive:
-        # a parallel any() aggregation, NOT filter+limit(1): when no row
-        # matches (the common all-ASCII/Latin case) limit(1) degenerates to
-        # serial partition waves (CollectLimit scale-up), which caps scaling;
-        # the aggregation is one fully-parallel column-pruned scan.
-        has_exotic = probe_df.agg(
-            F.max(
-                F.when(~latin_ok & F.col(text_col).isNotNull(), 1).otherwise(0)
-            ).alias("x")
-        ).collect()[0]["x"]
-        if not has_exotic:
-            return df.withColumn(out_col, _normalize_jvm(c))
-    latin = df.where(latin_ok | F.col(text_col).isNull()).withColumn(
-        out_col, _normalize_jvm(c)
-    )
-    exotic = df.where(~latin_ok).withColumn(
-        out_col, F.trim(F.regexp_replace(nfkd_fold(c), "\\s+", " "))
-    )
-    return latin.unionByName(exotic)
+    return df.withColumn(out_col, normalize(F.col(text_col)))
 
 
 def _enc(ch: Column) -> Column:
@@ -369,10 +244,12 @@ def add_trigrams(df, norm_col: str, out_col: str = "trigrams"):
 def with_trigrams(df, text_col: str, out_col: str = "trigrams", norm_col: str | None = None):
     """normalize + trigrams over a DataFrame: raw text -> array<int> column.
 
-    Two projections by construction: Spark forbids Python UDFs (the NFKD
-    branch of :func:`normalize`) inside higher-order-function lambdas, so
-    the normalized text must be materialized as its own column before
-    :func:`trigrams` references it.
+    Two projections by construction: :func:`trigrams` reads its input
+    inside a ``transform`` lambda, once per window, and Catalyst neither
+    hoists nor de-duplicates the non-deterministic ``reflect`` in
+    :func:`normalize`. Inlined, the whole S1 fold would rerun for every
+    window of every row; as its own column it runs once per row, and the
+    projection boundary also keeps it out of any later aggregate.
     """
     tmp = norm_col or "__norm"
     out = df.withColumn(tmp, normalize(F.col(text_col)))

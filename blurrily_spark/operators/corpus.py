@@ -45,12 +45,6 @@ from pyspark.sql import functions as F
 from blurrily_spark.functions.tokenizer import with_normalized
 
 
-def _norm(df: DataFrame, text_col: str) -> DataFrame:
-    # spread=True: re-spread tiny file-backed scans so the gram explodes
-    # and token joins parallelize (no-op at corpus scale).
-    return with_normalized(df, text_col, "_norm", adaptive="auto", spread=True)
-
-
 def _gram_array(col, n: int, distinct: bool):
     """Sliding word n-grams over a normalized text column; documents
     shorter than ``n`` words contribute their whole text as one gram
@@ -67,7 +61,7 @@ def _gram_array(col, n: int, distinct: bool):
 def _exploded_grams(
     df: DataFrame, id_col: str, text_col: str, n: int, distinct: bool
 ) -> DataFrame:
-    d = _norm(df, text_col)
+    d = with_normalized(df, text_col, "_norm", spread=True)
     return d.select(
         F.col(id_col).cast("long").alias("id"),
         F.explode(_gram_array(F.col("_norm"), n, distinct)).alias("gram"),
@@ -184,7 +178,7 @@ def tfidf_top_terms(
     filter Spark pushes into WindowGroupLimit (per-partition top-k before
     the full sort).
     """
-    words = _norm(df, text_col).select(
+    words = with_normalized(df, text_col, "_norm", spread=True).select(
         F.col(id_col).cast("long").alias("id"),
         F.explode(F.split(F.col("_norm"), " ")).alias("term"),
     )
@@ -329,7 +323,7 @@ def _token_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     pos 0). The predecessor is attached at array-build time (one
     ``transform`` over the word array), so there is no per-document
     ``lag`` window and the only cost is the explode itself."""
-    d = _norm(df, text_col)
+    d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.filter(F.split(F.col("_norm"), " "), lambda w: w != F.lit(""))
     toks = F.when(
         F.size(words) >= 1,

@@ -39,15 +39,6 @@ from blurrily_spark.functions.tokenizer import with_normalized
 SIMHASH_BITS = 62  # 2 x 31-bit portable hashes; fits a positive int64
 
 
-def _norm_col(df: DataFrame, text_col: str) -> DataFrame:
-    # 'auto': an all-ASCII/Latin *file-backed* corpus compiles to a single
-    # pure-JVM scan (no Arrow round-trip, no union); computed/streaming
-    # inputs skip the eager probe -- see tokenizer.with_normalized.
-    # spread=True: tiny file-backed scans are re-spread across the shuffle
-    # parallelism so shingling/hashing parallelize (no-op at corpus scale).
-    return with_normalized(df, text_col, "_norm", adaptive="auto", spread=True)
-
-
 def exact_duplicates(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -62,7 +53,7 @@ def exact_duplicates(
     """
     win = Window.partitionBy(F.xxhash64("_norm"), "_norm")
     return (
-        _norm_col(df, text_col)
+        with_normalized(df, text_col, "_norm", spread=True)
         .withColumn("canonical_id", F.min(id_col).over(win))
         .withColumn("is_dup", F.col(id_col) != F.col("canonical_id"))
         .select(F.col(id_col), "canonical_id", "is_dup")
@@ -102,7 +93,7 @@ def shingle_pairs_jaccard(
     scale path is :func:`minhash_lsh_pairs`, which this validates.
     """
     sh = (
-        _norm_col(df, text_col)
+        with_normalized(df, text_col, "_norm", spread=True)
         .select(F.col(id_col).alias("id"), F.explode(word_shingles(F.col("_norm"), w)).alias("sh"))
         .distinct()
     )
@@ -169,7 +160,7 @@ def jaccard_join_exact(
     if not (0 < threshold <= 1):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = (
-        _norm_col(df, text_col)
+        with_normalized(df, text_col, "_norm", spread=True)
         .select(
             F.col(id_col).alias("id"),
             F.explode(word_shingles(F.col("_norm"), w)).alias("sh"),
@@ -256,7 +247,7 @@ def minhash_signatures(
     array_min(transform(...)).
     """
     params = _permutation_params(num_hashes, seed)
-    base = _norm_col(df, text_col).select(
+    base = with_normalized(df, text_col, "_norm", spread=True).select(
         F.col(id_col).alias("id"),
         F.transform(
             word_shingles(F.col("_norm"), w),
@@ -732,7 +723,7 @@ def duplicate_spans(
     """
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
-    d = _norm_col(df, text_col)
+    d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     n = F.size(words)
     # slice() clamps past the end, so short docs (n < w) fall out of the
@@ -800,7 +791,7 @@ def duplicate_span_positions(
     """
     if stride < 1:
         raise ValueError(f"stride must be >= 1, got {stride}")
-    d = _norm_col(df, text_col)
+    d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     n = F.size(words)
     wins = F.transform(
@@ -862,7 +853,7 @@ def cut_duplicate_spans(
     positions = duplicate_span_positions(
         df, id_col, text_col, w, min_docs, hash_fn, stride, with_win=False
     )
-    d = _norm_col(df, text_col)
+    d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     wordpos = d.select(
         F.col(id_col).cast("long").alias("id"),
@@ -937,7 +928,7 @@ def simhash62(
     tokens; the fingerprint projection raises (F.raise_error, evaluated
     once per document) rather than silently corrupting past the bound.
     """
-    toks = _norm_col(df, text_col).select(
+    toks = with_normalized(df, text_col, "_norm", spread=True).select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col("_norm"), " ")).alias("tok"),
     )

@@ -58,9 +58,10 @@ def find(
     ref ASC). ``limit_col`` (per-query limit) takes precedence over the
     scalar ``limit``; both default to LIMIT_DEFAULT=10.
     """
-    # normalize in its own projection: the NFKD pandas UDF cannot appear
-    # inside the transform() lambda of trigrams() (Spark forbids Python UDFs
-    # in higher-order functions), so F1 is a two-step select.
+    # normalize in its own projection: trigrams() reads its input once per
+    # window inside a transform() lambda, and Catalyst does not de-duplicate
+    # normalize's non-deterministic reflect (ICU NFKD), so F1 is a two-step
+    # select that folds each needle once.
     q = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
         normalize(F.col(query_text_col)).alias("_norm"),

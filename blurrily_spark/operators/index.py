@@ -44,11 +44,9 @@ def prepare_needles(
     single row per ref is kept (sufficient for batch builds, which have no
     arrival order).
     """
-    # 'auto': all-ASCII/Latin file-backed batches compile to one pure-JVM
-    # scan; computed inputs (e.g. createDataFrame batches) skip the eager probe.
     # spread=True: a tiny file-backed batch is re-spread so tokenization
     # parallelizes past the scan's 1-2 partitions (no-op at corpus scale).
-    out = with_normalized(df, text_col, "norm", adaptive="auto", spread=True)
+    out = with_normalized(df, text_col, "norm", spread=True)
     if weight_col is not None and weight_col in df.columns:
         w = F.col(weight_col).cast("int")
         out = out.withColumn(

@@ -307,7 +307,7 @@ def token_blocking_pairs(
     from blurrily_spark.functions.tokenizer import with_normalized
 
     toks = (
-        with_normalized(docs, text_col, "_norm", adaptive="auto")
+        with_normalized(docs, text_col, "_norm")
         .select(
             F.col(id_col).cast("long").alias("ref"),
             F.explode(F.split(F.col("_norm"), " ")).alias("token"),

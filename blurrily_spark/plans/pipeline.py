@@ -152,7 +152,7 @@ def build_turns(transcripts: DataFrame) -> DataFrame:
     per-turn text invariant is checked against this table.
     """
     return (
-        with_normalized(transcripts, "text", "norm", adaptive="auto")
+        with_normalized(transcripts, "text", "norm")
         .withColumn("ref", F.xxhash64("conv_id", "turn_idx"))
         .withColumn("weight", F.length("norm"))
         .select("ref", "conv_id", "turn_idx", "norm", "weight", "text")

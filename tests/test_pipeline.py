@@ -246,8 +246,7 @@ def test_pipeline_auto_salting_activates_on_skew_only(spark, tmp_path):
 
     # --- plan shape (verdict #1's pin): hot-key salting = a UNION of the
     # plain cold join and the salted hot join (the salt attribute only
-    # exists in the hot branch; the adaptive-normalize split contributes
-    # its own Union in every plan, so the salt column is the discriminator)
+    # exists in the hot branch, so the salt column is the discriminator)
     import re
 
     postings = turns_to_postings(build_turns(skew))

@@ -4,8 +4,8 @@ Asserts the plan properties the engine's 100 TB design depends on, so a
 refactor that silently reintroduces a Python eval node, loses a pushdown,
 or degrades a join strategy fails CI instead of shipping:
 
-* full-corpus scans over ASCII data carry NO Python/Arrow eval node
-  (tokenizer tiers 1-3 + the adaptive split plan);
+* full-corpus scans carry NO Python/Arrow eval node (normalize is one JVM
+  expression, ICU NFKD included);
 * subset predicates reach the parquet scan (PushedFilters);
 * FIND's per-query top-k compiles to WindowGroupLimit (rank-limit
   pushdown), its gather join broadcasts the needle side;
@@ -27,7 +27,7 @@ def _plan(df) -> str:
 
 
 NO_PYTHON_QUERIES = [
-    "index_build",       # postings build (adaptive normalize, staged trigrams)
+    "index_build",       # postings build (JVM normalize, staged trigrams)
     "dedup_exact",       # full-corpus normalize scan
     "doc_fingerprint",   # normalize + rolling-hash fold
     "token_count",
@@ -69,7 +69,7 @@ NO_PYTHON_QUERIES = [
     "block_filtering",    # broadcast df counts + per-ref window, pure SQL
     "threshold_sweep",    # one conditional-sum aggregate + stack unpivot
     "cluster_stats",      # CC assignment + edge-count joins, no Python
-    "token_blocking",     # adaptive normalize + token self-join, pure SQL
+    "token_blocking",     # JVM normalize + token self-join, pure SQL
     "edit_distance_join", # JVM banded levenshtein after length prefilter
     "set_similarity",     # four codegen'd divisions over the count joins
     "idf_cosine_pairs",   # scaled-int idf sums, float only in the division
