@@ -233,16 +233,10 @@ def q_dedup_exact(spark, sf_dir):
     return dedup.exact_duplicates(_docs(spark, sf_dir))
 
 
-def q_ngram_jaccard(spark, sf_dir):
-    return dedup.shingle_pairs_jaccard(
-        _docs_with_dups(spark, sf_dir), w=3, threshold=NGRAM_THRESHOLD
-    ).select("id_a", "id_b", "inter", F.round("jaccard", 6).alias("jaccard"))
-
-
 def q_jaccard_join_exact(spark, sf_dir):
     # prefix-filtered EXACT threshold jaccard join (AllPairs/PPJoin
-    # family): by construction it must equal the brute all-pairs baseline,
-    # so it shares ngram_jaccard_pairs' oracle SQL verbatim
+    # family): it equals the brute all-pairs relation, so it serves both
+    # ngram_jaccard_pairs and jaccard_join_exact under one oracle SQL
     return dedup.jaccard_join_exact(
         _docs_with_dups(spark, sf_dir), w=3, threshold=NGRAM_THRESHOLD
     ).select("id_a", "id_b", "inter", F.round("jaccard", 6).alias("jaccard"))
@@ -958,7 +952,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "match_edges": q_match_edges,
         "connected_components": q_connected_components,
         "dedup_exact": q_dedup_exact,
-        "ngram_jaccard_pairs": q_ngram_jaccard,
+        "ngram_jaccard_pairs": q_jaccard_join_exact,
         "jaccard_join_exact": q_jaccard_join_exact,
         "minhash_signatures": q_minhash_sigs,
         "minhash_lsh_pairs": q_minhash_lsh,
@@ -1165,8 +1159,7 @@ SELECT id_a, id_b, inter,
        round(inter / CAST(ca.n + cb.n - inter AS DOUBLE), 6) AS jaccard
 FROM inter JOIN counts ca ON ca.ref = id_a JOIN counts cb ON cb.ref = id_b
 WHERE inter / CAST(ca.n + cb.n - inter AS DOUBLE) >= {NGRAM_THRESHOLD}"""
-    # the prefix-filtered exact join has the same contract as the brute
-    # baseline -- identical oracle, different physical strategy
+    # both names run the prefix-filtered exact join: one oracle
     out["jaccard_join_exact"] = out["ngram_jaccard_pairs"]
 
     out["minhash_signatures"] = f"""WITH {oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},

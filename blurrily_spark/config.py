@@ -35,7 +35,7 @@ _EXCLUDED_RULE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenera
 # corpus) the scan already yields enough partitions and the spread is a
 # no-op by construction -- the bound is "well under one 128 MB split per
 # core", not a tuning knob for any particular host.
-SPREAD_MAX_BYTES = int(os.environ.get("BLURRILY_SPREAD_MAX_BYTES", str(64 << 20)))
+SPREAD_MAX_BYTES = 64 << 20
 
 
 def spread_small_input(df, max_bytes: int | None = None):
@@ -113,10 +113,7 @@ def get_spark(
         # partitions for small shuffles; at scale totalBytes/parallelism
         # dominates the floor, so large shuffles are sized exactly as
         # before.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("BLURRILY_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # Shuffled-hash joins only via AQE's runtime conversion (guide
         # §3.1): with this threshold AQE rewrites a sort-merge join to
         # shuffled-hash when every post-shuffle partition's MEASURED size
@@ -126,10 +123,7 @@ def get_spark(
         # build partition (a hot-trigram posting list in the d^2
         # self-joins) must fit its hash map in memory where sort-merge
         # would have spilled.
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("BLURRILY_SHJ_LOCAL_MAP_THRESHOLD", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

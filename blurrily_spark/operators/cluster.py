@@ -20,8 +20,6 @@ table write per iteration, which also gives checkpoint-resume).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -96,7 +94,7 @@ def _fingerprint_metrics() -> list:
 # IDENTICAL labels (component min), pinned by an equivalence test. Above
 # the bound the large-star/small-star loop runs unchanged; 0 disables the
 # driver path entirely.
-CC_DRIVER_MAX_EDGES = int(os.environ.get("BLURRILY_CC_DRIVER_MAX_EDGES", "100000"))
+CC_DRIVER_MAX_EDGES = 100_000
 
 
 def _driver_components(rows) -> tuple[list[int], list[int]]:

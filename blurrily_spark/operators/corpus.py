@@ -43,28 +43,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blurrily_spark.functions.tokenizer import with_normalized
-
-
-def _gram_array(col, n: int, distinct: bool):
-    """Sliding word n-grams over a normalized text column; documents
-    shorter than ``n`` words contribute their whole text as one gram
-    (same clamping contract as dedup.word_shingles / duplicate_spans)."""
-    words = F.split(col, " ")
-    sz = F.size(words)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(sz - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    return F.array_distinct(grams) if distinct else grams
+from blurrily_spark.operators.dedup import word_shingles
 
 
 def _exploded_grams(
     df: DataFrame, id_col: str, text_col: str, n: int, distinct: bool
 ) -> DataFrame:
     d = with_normalized(df, text_col, "_norm", spread=True)
+    grams = word_shingles(F.col("_norm"), n)
     return d.select(
         F.col(id_col).cast("long").alias("id"),
-        F.explode(_gram_array(F.col("_norm"), n, distinct)).alias("gram"),
+        F.explode(F.array_distinct(grams) if distinct else grams).alias("gram"),
     )
 
 

@@ -61,60 +61,16 @@ def exact_duplicates(
 
 
 def word_shingles(col, w: int = 3):
-    """Sliding word w-grams over normalized text, as array<string>.
+    """Sliding word w-grams over normalized text, as array<string>, in
+    text order with repeats kept (callers dedupe where a set is meant).
 
-    Pure SQL: split -> transform(sequence) -> dedup. Empty/short texts
-    yield the whole text as a single shingle.
+    Pure SQL: split -> transform(sequence). Texts shorter than ``w`` words
+    (NULL and empty included) yield the whole text as a single shingle.
     """
     words = F.split(col, " ")
-    n = F.size(words)
-    return F.array_distinct(
-        F.when(
-            n >= w,
-            F.transform(
-                F.sequence(F.lit(0), n - F.lit(w)),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, w)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", words)))
-    )
-
-
-def shingle_pairs_jaccard(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (the brute-force baseline).
-
-    Explode shingles -> self-join on shingle -> count intersections ->
-    jaccard vs per-doc shingle counts. Quadratic in the worst case; the
-    scale path is :func:`minhash_lsh_pairs`, which this validates.
-    """
-    sh = (
-        with_normalized(df, text_col, "_norm", spread=True)
-        .select(F.col(id_col).alias("id"), F.explode(word_shingles(F.col("_norm"), w)).alias("sh"))
-        .distinct()
-    )
-    counts = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("id").alias("id_a"), "sh")
-    b = sh.select(F.col("id").alias("id_b"), "sh")
-    inter = (
-        a.join(b, "sh")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(counts.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(counts.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "inter", "jaccard")
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(words) - w, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(words, i + 1, w)),
     )
 
 
@@ -125,11 +81,10 @@ def jaccard_join_exact(
     w: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """EXACT threshold Jaccard self-join via prefix filtering -- the same
-    output as :func:`shingle_pairs_jaccard` (every pair with shingle-set
-    Jaccard >= ``threshold``, no misses, no approximation) without the
-    all-pairs blowup (AllPairs / PPJoin family: Bayardo et al., WWW 2007;
-    Xiao et al., WWW 2008).
+    """EXACT threshold Jaccard self-join via prefix filtering: every pair
+    with shingle-set Jaccard >= ``threshold``, no misses, no approximation,
+    without the all-pairs blowup (AllPairs / PPJoin family: Bayardo et
+    al., WWW 2007; Xiao et al., WWW 2008).
 
     Why it is exact: ``J(A,B) >= t`` forces overlap ``o >= ceil(t*|A|)``
     (from ``o >= t(|A|+|B|-o)`` and ``|B| >= o``). Under any one global
@@ -152,8 +107,7 @@ def jaccard_join_exact(
     Scale shape: explode-prefix -> equi-join -> distinct pairs -> two
     array joins. The only data-dependent blowup is genuinely-similar
     mass; compare :func:`minhash_lsh_pairs` (approximate, constant-factor
-    candidates) and :func:`shingle_pairs_jaccard` (brute baseline this
-    function must equal, pinned in tests).
+    candidates). Equality with a brute all-pairs join is pinned in tests.
 
     Returns ``(id_a, id_b, inter, jaccard)``, ``id_a < id_b``.
     """

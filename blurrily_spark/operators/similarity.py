@@ -79,6 +79,13 @@ def _lit_vec(vec):
     return F.expr("array(%s)" % ", ".join(_dlit(x) for x in vec))
 
 
+def _quote_name(col_name: str) -> str:
+    """SQL identifier for the column ``F.col(col_name)`` names: each
+    dot-separated part backticked, embedded backticks doubled, so a nested
+    field (``payload.embedding``) stays a field reference."""
+    return ".".join("`%s`" % part.replace("`", "``") for part in col_name.split("."))
+
+
 def _dot_sql(col_name: str, vec) -> str:
     """SQL text of ``dot(col, literal vec)`` -- the same ordered
     zip_with/aggregate fold as :func:`dot` (identical casts, double 0.0
@@ -87,7 +94,7 @@ def _dot_sql(col_name: str, vec) -> str:
     centroid."""
     arr = "array(%s)" % ", ".join(_dlit(x) for x in vec)
     return (
-        f"aggregate(zip_with(`{col_name}`, {arr}, "
+        f"aggregate(zip_with({_quote_name(col_name)}, {arr}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
@@ -406,8 +413,9 @@ def assign_buckets_df(
 
     The scale path when the codebook is too large to ship as a plan literal
     (e.g. k = 4096 IVF lists): broadcast-join corpus x codebook, score, and
-    keep the per-vector argmax via a window. Same tie rule as
-    :func:`assign_buckets` (max cosine, then lowest bucket id).
+    keep the per-vector argmax via a window. Same tie rule and the same
+    output columns as :func:`assign_buckets` (max cosine, then lowest
+    bucket id; ``vec_id, _v, bucket, _n``).
     """
     scored = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
@@ -418,7 +426,12 @@ def assign_buckets_df(
     return (
         scored.withColumn("_rn", F.row_number().over(win))
         .where(F.col("_rn") == 1)
-        .select("vec_id", "_v", F.col("bucket").cast("int").alias("bucket"))
+        .select(
+            "vec_id",
+            "_v",
+            F.col("bucket").cast("int").alias("bucket"),
+            l2_norm(F.col("_v")).alias("_n"),
+        )
     )
 
 

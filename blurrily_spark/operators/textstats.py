@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from blurrily_spark.functions.hashing import poly_hash
 from blurrily_spark.functions.tokenizer import with_normalized
+from blurrily_spark.operators.dedup import word_shingles
 
 # Tiny built-in stopword lists for the n-gram language heuristic.
 STOPWORDS = {
@@ -137,18 +138,6 @@ def scrub_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return df.select(F.col(id_col), txt.alias("clean_text"), *counts)
 
 
-def _word_grams(words, n: int):
-    """Adjacent word n-grams as array<string>; empty when len < n."""
-    sz = F.size(words)
-    return F.when(
-        sz >= n,
-        F.transform(
-            F.sequence(F.lit(0), sz - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def repetition_stats(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -193,7 +182,7 @@ def repetition_stats(
     ).otherwise(F.lit(0.0))
     base = d.select(
         F.col(id_col).alias("id"),
-        words.alias("_ws"),
+        "_norm",
         n_lines.cast("int").alias("n_lines"),
         F.round(dup_line_frac, 6).alias("dup_line_frac"),
     )
@@ -201,11 +190,13 @@ def repetition_stats(
     def tag(arr, n: int):
         return F.transform(arr, lambda g: F.struct(F.lit(n).alias("t"), g.alias("g")))
 
-    tagged = F.concat(
-        tag(F.col("_ws"), 1),
-        tag(_word_grams(F.col("_ws"), 2), 2),
-        tag(_word_grams(F.col("_ws"), 3), 3),
-    )
+    def grams(n: int):
+        # a text shorter than n words has no n-grams here
+        return F.when(F.size(words) >= n, word_shingles(F.col("_norm"), n)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    tagged = F.concat(tag(words, 1), tag(grams(2), 2), tag(grams(3), 3))
     cnt = (
         base.select("id", F.explode(tagged).alias("tg"))
         .groupBy("id", F.col("tg.t").alias("t"), F.col("tg.g").alias("g"))

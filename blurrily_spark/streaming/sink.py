@@ -66,11 +66,7 @@ stores (``s3a://``, ``abfs://``, ...).
 
 from __future__ import annotations
 
-from functools import reduce
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -327,12 +323,7 @@ class BatchSink:
 
     # -- compaction ----------------------------------------------------------
 
-    def compact(
-        self,
-        transform: Callable[[DataFrame], DataFrame] | None = None,
-        tag_seq: bool = False,
-        retain_data: int = 1,
-    ) -> bool:
+    def compact(self, retain_data: int = 1) -> bool:
         """Fold the current base (if any) plus every committed batch into
         the next base generation; returns True if anything was folded.
 
@@ -348,15 +339,8 @@ class BatchSink:
            A crash mid-GC leaves only ignorable garbage (reads filter on
            the watermark), cleaned up by the next compaction.
 
-        ``transform`` (e.g. ``lambda df: df.distinct()``) lets key
-        sidecars stay minimal across folds. ``tag_seq=True`` hands the
-        transform a ``_seq`` column carrying each row's commit sequence
-        (its batch id; base rows carry the base's folded-through
-        watermark) -- the Iceberg sequence-number analogue, needed by
-        merge-on-read delete folds where a tombstone only applies to rows
-        committed before it; the transform must drop ``_seq`` before
-        returning. Callers must ensure no writer
-        is mid-batch-group: see :meth:`read_paths` on the exclude guard.
+        Callers must ensure no writer is mid-batch-group: see
+        :meth:`read_paths` on the exclude guard.
         **Snapshot retention** (``retain_data``, default 1): the marker
         cut-over is immediate -- new reads take the new base -- but the
         superseded DATA files (folded batch dirs, the previous base and
@@ -371,36 +355,16 @@ class BatchSink:
         """
         gen, folded_through = self._base_state()
         batch_ids = [i for i in self.committed_ids() if i > folded_through]
-        if not batch_ids and (gen is None or transform is None):
-            return False  # nothing new to fold (and no re-transform asked)
+        if not batch_ids:
+            return False  # nothing new to fold
         paths = ([] if gen is None else [self.base_path(gen)]) + [
             self.batch_path(i) for i in batch_ids
         ]
-        if not paths:
-            return False
-        if tag_seq:
-            parts = (
-                []
-                if gen is None
-                else [
-                    self.spark.read.parquet(self.base_path(gen)).withColumn(
-                        "_seq", F.lit(int(folded_through)).cast("long")
-                    )
-                ]
-            ) + [
-                self.spark.read.parquet(self.batch_path(i)).withColumn(
-                    "_seq", F.lit(int(i)).cast("long")
-                )
-                for i in batch_ids
-            ]
-            df = reduce(DataFrame.unionByName, parts)
-        else:
-            df = self.spark.read.parquet(*paths)
-        if transform is not None:
-            df = transform(df)
         new_gen = (gen or 0) + 1
-        new_folded = max(batch_ids) if batch_ids else folded_through
-        df.write.mode("overwrite").parquet(self.base_path(new_gen))
+        new_folded = max(batch_ids)
+        self.spark.read.parquet(*paths).write.mode("overwrite").parquet(
+            self.base_path(new_gen)
+        )
         publish_small_file(
             self.spark, f"{self.base_marker_dir}/{new_gen}", str(new_folded).encode("utf-8")
         )
@@ -491,124 +455,3 @@ def read_sink(spark: SparkSession, directory: str) -> DataFrame | None:
     """Read a :class:`BatchSink` directory (committed batches only)."""
     return BatchSink(spark, directory).read()
 
-
-class MergeOnReadStore:
-    """Merge-on-read postings store: O(batch) appends, O(deleted-refs)
-    deletes, anti-join reads -- the parquet stand-in for Iceberg's
-    equality-delete files.
-
-    The reference's ``delete(ref)`` walks all 28^3 posting lists in place
-    (ext/blurrily/storage.c:584-612) and its save rewrites the whole map;
-    a snapshot rewrite is exactly what does NOT scale to a 100 TB postings
-    table. Here a delete writes a TOMBSTONE batch into the
-    ``<dir>/_tombstones`` sidecar sink -- a few bytes per deleted ref,
-    zero data files touched -- and :meth:`read` subtracts tombstones with
-    one broadcast anti-join. :meth:`compact` folds tombstones into the
-    next base generation via the data sink's own crash-safe
-    ``compact(transform=, tag_seq=True)`` and then empties the sidecar.
-
-    Deletes are SEQUENCE-AWARE, matching both Iceberg sequence numbers and
-    the reference's re-add semantics (spec/blurrily/map_spec.rb:108-113:
-    delete 1337 then put 'paris', 1337 -> findable): each tombstone
-    records ``as_of`` = the data sink's high watermark at delete time and
-    only erases rows committed at or before it. Rows appended later --
-    including re-adds of a deleted ref -- survive the anti-join and the
-    fold. Crash between the data fold and the sidecar fold is benign: the
-    surviving tombstones' ``as_of`` lies at or below the new base's
-    watermark, so they match nothing until the next compact() clears them.
-
-    Same quiescence contract as :meth:`BatchSink.compact`: run compaction
-    from a maintenance job, never concurrently with a writer.
-    """
-
-    def __init__(self, spark: SparkSession, directory: str, key_col: str = "ref"):
-        self.spark = spark
-        self.key_col = key_col
-        self.data = BatchSink(spark, directory)
-        self.tombstones = BatchSink(spark, f"{directory.rstrip('/')}/_tombstones")
-
-    def append(self, df: DataFrame) -> int:
-        """Commit ``df`` as the next data batch; returns its sequence."""
-        seq = self.data.high_watermark() + 1
-        self.data.write(df, seq)
-        self.data.commit(seq)
-        return seq
-
-    def delete(self, refs: DataFrame | list[int]) -> int:
-        """Tombstone the given refs: one tiny sidecar batch, no data file
-        touched. Missing refs are harmless no-ops (map_spec.rb:104-106).
-        Returns the tombstone batch's sequence."""
-        as_of = self.data.high_watermark()
-        if isinstance(refs, DataFrame):
-            t = refs.select(F.col(self.key_col).cast("long").alias(self.key_col))
-        else:
-            t = self.spark.createDataFrame(
-                [(int(r),) for r in refs], f"{self.key_col} long"
-            )
-        t = t.withColumn("as_of", F.lit(int(as_of)).cast("long"))
-        seq = self.tombstones.high_watermark() + 1
-        self.tombstones.write(t, seq)
-        self.tombstones.commit(seq)
-        return seq
-
-    def _tagged_data(self) -> DataFrame | None:
-        """Committed data rows with their ``_seq`` commit sequence (base
-        rows carry the folded-through watermark -- valid because live
-        tombstones always postdate the base, see class docstring)."""
-        gen, folded_through = self.data._base_state()
-        parts = (
-            []
-            if gen is None
-            else [
-                self.spark.read.parquet(self.data.base_path(gen)).withColumn(
-                    "_seq", F.lit(int(folded_through)).cast("long")
-                )
-            ]
-        ) + [
-            self.spark.read.parquet(self.data.batch_path(i)).withColumn(
-                "_seq", F.lit(int(i)).cast("long")
-            )
-            for i in self.data.committed_ids()
-            if i > folded_through
-        ]
-        if not parts:
-            return None
-        return reduce(DataFrame.unionByName, parts)
-
-    def _anti(self, tagged: DataFrame, tombs: DataFrame) -> DataFrame:
-        cond = (tagged[self.key_col] == tombs[self.key_col]) & (
-            tagged["_seq"] <= tombs["as_of"]
-        )
-        return tagged.join(F.broadcast(tombs), cond, "left_anti").drop("_seq")
-
-    def read(self) -> DataFrame | None:
-        """Live rows: committed data minus applicable tombstones (one
-        broadcast anti-join; tombstone volume is bounded by compaction
-        cadence, never by table size)."""
-        tagged = self._tagged_data()
-        if tagged is None:
-            return None
-        tombs = self.tombstones.read()
-        if tombs is None:
-            return tagged.drop("_seq")
-        return self._anti(tagged, tombs)
-
-    def compact(self, retain_data: int = 1) -> bool:
-        """Fold data + applicable tombstone erasures into the next base
-        generation (crash-safe via :meth:`BatchSink.compact`), then empty
-        the tombstone sidecar. ``retain_data`` is the snapshot-retention
-        window forwarded to both folds. Returns True if anything changed."""
-        tombs = self.tombstones.read()
-        if tombs is None:
-            return self.data.compact(retain_data=retain_data)
-        changed = self.data.compact(
-            transform=lambda df: self._anti(df, tombs),
-            tag_seq=True,
-            retain_data=retain_data,
-        )
-        # sidecar fold runs strictly AFTER the data fold is marker-visible:
-        # every folded tombstone's erasure is now baked into the base
-        self.tombstones.compact(
-            transform=lambda df: df.limit(0), retain_data=retain_data
-        )
-        return True

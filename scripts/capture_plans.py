@@ -1,8 +1,11 @@
 """Capture .explain("formatted") for the bench-relevant query plans.
 
 Usage: python scripts/capture_plans.py <outdir> <suffix>
-  e.g.  ENGINE_ROOT=/tmp/r5base python scripts/capture_plans.py plans/r06 before
-        ENGINE_ROOT=/root/repo  python scripts/capture_plans.py plans/r06 after
+  e.g.  ENGINE_ROOT=<old checkout> python scripts/capture_plans.py plans/new before
+        ENGINE_ROOT=<new checkout> python scripts/capture_plans.py plans/new after
+
+The round-6 captures made this way are kept in git history only:
+``git show 30e1a08:plans/r06/`` lists them.
 
 ENGINE_ROOT (not PYTHONPATH -- the sys.path.insert below takes
 precedence over it) selects which engine tree is imported; it defaults

@@ -6,6 +6,9 @@ entry-oracle gate (tests/test_entry_oracle.py::test_query_matches_oracle
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from blurrily_spark.functions.tokenizer import with_normalized
 from blurrily_spark.operators import dedup
 
 BASE = (
@@ -351,6 +354,38 @@ def test_fully_duplicated_doc_cuts_to_empty(spark):
     assert got[2]["kept_text"] == "" and got[2]["n_words"] > 0
 
 
+def _brute_jaccard_pairs(df, w: int = 3, threshold: float = 0.5):
+    """All-pairs exact shingle-set Jaccard: explode distinct shingles,
+    self-join on the shingle, count intersections, divide by the union.
+    Quadratic; only a reference for :func:`dedup.jaccard_join_exact`."""
+    sh = (
+        with_normalized(df, "text", "_norm")
+        .select(
+            F.col("doc_id").alias("id"),
+            F.explode(dedup.word_shingles(F.col("_norm"), w)).alias("sh"),
+        )
+        .distinct()
+    )
+    counts = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    inter = (
+        sh.select(F.col("id").alias("id_a"), "sh")
+        .join(sh.select(F.col("id").alias("id_b"), "sh"), "sh")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return (
+        inter.join(counts.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
+        .join(counts.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "inter", "jaccard")
+    )
+
+
 def test_jaccard_join_exact_equals_brute(spark):
     """Prefix filtering is an exact method: across thresholds and a seeded
     random corpus (injected near-dups + unique tails), the prefix-filtered
@@ -370,7 +405,7 @@ def test_jaccard_join_exact_equals_brute(spark):
     for t in (0.3, 0.5, 0.8, 1.0):
         brute = sorted(
             (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))
-            for r in dedup.shingle_pairs_jaccard(df, threshold=t).collect()
+            for r in _brute_jaccard_pairs(df, threshold=t).collect()
         )
         fast = sorted(
             (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))

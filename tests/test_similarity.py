@@ -69,8 +69,9 @@ def test_assign_buckets_df_matches_literal(spark, emb):
         [(i, c) for i, c in enumerate(cents)], "bucket int, cvec array<double>"
     )
     viadf = similarity.assign_buckets_df(corpus, cents_df)
-    got_a = {(r["vec_id"], r["bucket"]) for r in lit.collect()}
-    got_b = {(r["vec_id"], r["bucket"]) for r in viadf.collect()}
+    assert viadf.columns == lit.columns  # one output schema, staged _n included
+    got_a = {(r["vec_id"], r["bucket"], r["_n"]) for r in lit.collect()}
+    got_b = {(r["vec_id"], r["bucket"], r["_n"]) for r in viadf.collect()}
     assert got_a == got_b
 
 
@@ -89,6 +90,26 @@ def test_rp_lsh_subset_of_brute_with_high_recall(spark):
     assert brute, "dup injection must produce qualifying pairs"
     recall = len(rp & brute) / len(brute)
     assert recall >= 0.95, f"recall {recall}"
+
+
+def test_rp_lsh_nested_vector_field_equals_top_level(spark):
+    """The generated-SQL sketch path resolves a dotted name the way
+    ``F.col`` does: a vector nested as ``payload.embedding`` gives the same
+    near-dup pairs as the same vectors in a top-level column."""
+    import __spark_entry__ as em
+
+    flat = em._emb_with_dups(spark, SF_DIR)
+    nested = flat.select(
+        "vec_id", F.struct(F.col("vec").alias("embedding")).alias("payload")
+    )
+
+    def pairs(df, vec_col):
+        out = similarity.rp_lsh_near_dup_pairs(df, threshold=em.NEARDUP_COS, vec_col=vec_col)
+        return sorted(tuple(r) for r in out.collect())
+
+    want = pairs(flat, "vec")
+    assert want, "dup injection must produce qualifying pairs"
+    assert pairs(nested, "payload.embedding") == want
 
 
 def test_maxmin_seeding_deterministic(spark, emb):

@@ -1,4 +1,4 @@
-"""Structured Streaming: file-source ingest -> postings sink, resume, stats,
+"""Structured Streaming: file-source ingest -> postings sink, resume,
 batchId-idempotent atomic commits, and pre-banded incremental dedup."""
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from blurrily_spark.streaming.stream import (
     index_batch_writer,
     minhash_batch_writer,
     stream_index_build,
-    stream_turn_stats,
 )
 
 
@@ -221,39 +220,6 @@ def test_stream_minhash_dedup_incremental(spark, tmp_path, monkeypatch):
     assert read_sink(spark, sigs).select("id").distinct().count() > n_ids1
     # every batch-1 pair is still exactly once (append-only, no re-emit)
     assert p1 <= set(all_pairs)
-
-
-def test_stream_turn_stats_memory_sink(spark, tmp_path):
-    src = str(tmp_path / "in")
-    _land(generate_transcripts(spark, n_entities=4, seed=9), src)
-    agg = stream_turn_stats(spark, src, window="5 minutes", watermark="1 minute")
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("turn_stats").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM turn_stats").collect()
-    assert rows
-    assert {r["role"] for r in rows} <= {"user", "assistant", "tool"}
-    assert sum(r["turns"] for r in rows) == spark.read.parquet(src).count()
-
-
-def test_stateful_conversation_progress(spark, tmp_path):
-    from blurrily_spark.streaming.stream import stream_conversation_progress
-
-    src = str(tmp_path / "in")
-    t = generate_transcripts(spark, n_entities=3, variants_per_entity=2,
-                             turns_per_conv=4, seed=6)
-    _land(t, src)
-    agg = stream_conversation_progress(spark, src)
-    q = (agg.writeStream.outputMode("update").format("memory")
-         .queryName("conv_progress").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["conv_id"]: (r["n_turns"], r["max_turn_idx"])
-           for r in spark.sql("SELECT * FROM conv_progress").collect()}
-    expected = {r["conv_id"]: r["n"] for r in
-                t.groupBy("conv_id").count().withColumnRenamed("count", "n").collect()}
-    assert set(got) == set(expected)
-    for conv, n in expected.items():
-        assert got[conv] == (n, n - 1)
 
 
 def test_sink_compaction_bounds_read_paths(spark, tmp_path):
