@@ -38,6 +38,15 @@ _EXCLUDED_RULE = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenera
 SPREAD_MAX_BYTES = 64 << 20
 
 
+def shuffle_partitions(spark: "SparkSession") -> int | None:
+    """The session's ``spark.sql.shuffle.partitions``, or None when it is
+    not an integer (managed platforms accept ``auto``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return None
+
+
 def spread_small_input(df, max_bytes: int | None = None):
     """Repartition a *tiny* input to the session's shuffle parallelism so
     per-row compute parallelizes; identity for streaming inputs and for
@@ -56,11 +65,11 @@ def spread_small_input(df, max_bytes: int | None = None):
         if df.isStreaming or max_bytes <= 0:
             return df
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        # a non-integer partition count (``auto``) leaves the input as it is
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     except Exception:
         return df
-    if size >= max_bytes:
+    # a non-integer partition count (``auto``) leaves the input as it is
+    n = shuffle_partitions(df.sparkSession)
+    if n is None or size >= max_bytes:
         return df
     return df.repartition(n)
 

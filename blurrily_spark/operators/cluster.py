@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import shuffle_partitions
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Orient (big, small), drop self-loops, dedup."""
@@ -181,7 +183,7 @@ def connected_components(
     obs0 = Observation()
     e = canon.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint()
     held_rdd = _checkpoint_rdd(e)
-    default_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    default_parts = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
     n_init = int(obs0.get["n"])
 
     prev_fp = None

@@ -38,6 +38,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import shuffle_partitions
+
 
 def trigram_df_counts(postings: DataFrame) -> DataFrame:
     """Per-trigram document frequency. At most 21952 rows -- always tiny."""
@@ -61,7 +63,8 @@ def hot_trigrams(
     kept measurable for the skew bench)."""
     rows = trigram_df_counts(postings.select("trigram")).collect()
     if hot_df is None:
-        n_part = int(postings.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        spark = postings.sparkSession
+        n_part = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
         total_sq = sum(r["df"] * r["df"] for r in rows)
         hot_df = max(2 * int(salt_buckets), math.isqrt(total_sq // max(n_part, 1)))
     return [r["trigram"] for r in rows if r["df"] > hot_df], int(hot_df)
@@ -642,7 +645,9 @@ def global_sort_ranks(
 
     spark = df.sparkSession
     if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        num_partitions = (
+            shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
+        )
     keys = (
         df.select(id_col, key_col)
         .repartitionByRange(num_partitions, F.col(key_col), F.col(id_col))

@@ -2,18 +2,18 @@
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql.conf import RuntimeConfig
 
-from blurrily_spark.config import spread_small_input
+from blurrily_spark.config import shuffle_partitions, spread_small_input
 
 
-def test_spread_small_input_keeps_input_on_non_integer_partitions(spark, monkeypatch):
+@pytest.fixture
+def auto_partitions(monkeypatch):
     """Managed platforms accept ``spark.sql.shuffle.partitions=auto`` (open
-    source Spark refuses it, so the conf read is stubbed): the helper must
-    return its input unchanged instead of raising ValueError."""
-    df = spark.range(10)
-    assert spread_small_input(df) is not df  # a tiny input is spread
-
+    source Spark refuses it, so the conf read is stubbed)."""
     real_get = RuntimeConfig.get
 
     def get(self, key, *args, **kwargs):
@@ -22,4 +22,47 @@ def test_spread_small_input_keeps_input_on_non_integer_partitions(spark, monkeyp
         return real_get(self, key, *args, **kwargs)
 
     monkeypatch.setattr(RuntimeConfig, "get", get)
+
+
+def test_spread_small_input_keeps_input_on_non_integer_partitions(spark, request):
+    """The helper must return its input unchanged instead of raising
+    ValueError."""
+    df = spark.range(10)
+    assert spread_small_input(df) is not df  # a tiny input is spread
+
+    request.getfixturevalue("auto_partitions")
+    assert shuffle_partitions(spark) is None
     assert spread_small_input(df) is df
+
+
+def test_hot_trigrams_falls_back_to_default_parallelism(spark, auto_partitions):
+    from blurrily_spark.operators.pairs import hot_trigrams
+
+    rows = [(1, r) for r in range(40)] + [(t, 0) for t in range(2, 12)]
+    postings = spark.createDataFrame(rows, "trigram int, ref long")
+    hot, thr = hot_trigrams(postings, salt_buckets=2)
+    total_sq = 40 * 40 + 10
+    assert thr == math.isqrt(total_sq // spark.sparkContext.defaultParallelism)
+    assert hot == [1]
+
+
+def test_connected_components_loop_on_non_integer_partitions(spark, auto_partitions):
+    from blurrily_spark.operators.cluster import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)] + [(20, 21)], "src long, dst long"
+    )
+    # driver_max_edges=0 forces the distributed loop, which sizes its rounds
+    # from the partition count
+    labels = connected_components(edges, driver_max_edges=0)
+    got = {r["ref"]: r["entity_id"] for r in labels.collect()}
+    assert got == {**{i: 0 for i in range(9)}, 20: 20, 21: 20}
+
+
+def test_global_sort_ranks_on_non_integer_partitions(spark, auto_partitions):
+    from blurrily_spark.operators.pairs import global_sort_ranks
+
+    df = spark.createDataFrame([(i, f"k{i % 3}") for i in range(9)], "id long, k string")
+    ranks = {r["id"]: r["rank"] for r in global_sort_ranks(df, "k", "id").collect()}
+    expected = sorted(range(9), key=lambda i: (f"k{i % 3}", i))
+    assert ranks == {i: n + 1 for n, i in enumerate(expected)}
