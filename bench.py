@@ -54,7 +54,7 @@ Queries:
                       length-gap prefilter -> thresholded banded
                       levenshtein over the SF documents
   q_meta_blocking  -- WNP meta-blocking prune of the capped candidate
-                      graph (node-stat groupBy + equi-joins + filter)
+                      graph (per-node and per-edge windows + filter)
   q_knn_join       -- per-record top-10 similarity join (batch FIND with
                       the corpus as queries) over the stored BUCKETED
                       index: the directed trigram self-join is
@@ -373,8 +373,9 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
             p.unpersist()
 
     # round 5: meta-blocking WNP pruning over the capped candidate graph --
-    # one node-stat groupBy + two equi-joins + a filter; the count forces
-    # the pruned set and reports the survival rate as an extra
+    # one lazy plan: a per-node window, a per-edge window and a filter over
+    # a single read of the pairs; the count forces the pruned set and
+    # reports the survival rate as an extra
     def _run_meta_blocking() -> None:
         p = _build_postings(
             docs_meta, text_col="text", ref_col="doc_id", weight_col=None
@@ -514,8 +515,9 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
             act=count,
         ),
         # round 5: CCNet-style LM quality scoring, corpus as its own bigram
-        # model (token explode + 2 count aggs + 3 equi-joins); the avg forces
-        # the full scoring pass
+        # model (one train-side token explode + a bigram agg and its per-word
+        # sum + 3 equi-joins, no job before the action); the avg forces the
+        # full scoring pass
         Query(
             "q_lm_score",
             plan=lambda: corpus_ops.lm_score(docs_only, docs_only).selectExpr(

@@ -22,7 +22,8 @@ ext/blurrily/tokeniser.rl:52-60's normalize -> window pattern):
   rank window partitioned by document (WindowGroupLimit pushes the k cut
   below the sort).
 * :func:`lm_score` -- CCNet-style LM quality scoring: an add-k bigram
-  model trained corpus-side (two hash aggregations), per-document mean
+  model trained corpus-side (one bigram aggregation and its per-word
+  sum), per-document mean
   token log-probability + OOV counts via three equi-joins of the doc
   tokens against the count tables. No windows, no pairwise work.
 
@@ -311,20 +312,18 @@ def _token_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     normalized text, with the previous token carried along (NULL at
     pos 0). The predecessor is attached at array-build time (one
     ``transform`` over the word array), so there is no per-document
-    ``lag`` window and the only cost is the explode itself."""
+    ``lag`` window and the only cost is the explode itself. ``w`` is
+    non-nullable (split yields no NULL element)."""
     d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.filter(F.split(F.col("_norm"), " "), lambda w: w != F.lit(""))
-    toks = F.when(
-        F.size(words) >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words)),
-            lambda i: F.struct(
-                (i - 1).alias("pos"),
-                F.element_at(words, i).alias("w"),
-                F.when(i > 1, F.element_at(words, i - 1)).alias("w_prev"),
-            ),
+    toks = F.transform(
+        words,
+        lambda w, i: F.struct(
+            i.alias("pos"),
+            w.alias("w"),
+            F.when(i > 0, F.element_at(words, i)).alias("w_prev"),
         ),
-    ).otherwise(F.array().cast("array<struct<pos:int,w:string,w_prev:string>>"))
+    )
     return d.select(
         F.col(id_col).cast("long").alias("id"), F.explode(toks).alias("t")
     ).select("id", "t.pos", "t.w", "t.w_prev")
@@ -359,32 +358,30 @@ def lm_score(
     scores rather than vanishing.
 
     Scale shape: both corpora reduce to token-level explodes (cost linear
-    in token count, the same class as every textstats pass); the model is
-    two hash aggregations (``c1``, ``c2``) plus a one-row stats aggregate
-    that joins in via broadcast; scoring is three equi-joins of the doc
-    tokens against those count tables -- no windows, no pairwise work,
-    nothing driver-side. Zipf-hot words skew the count-table join keys;
+    in token count, the same class as every textstats pass), each read
+    once; the model is one bigram hash aggregation (``c2``), its per-word
+    sum (``c1``) and a one-row stats aggregate that joins in via
+    broadcast; scoring is three equi-joins of the doc tokens against those
+    count tables -- no windows, no pairwise work, nothing driver-side, and
+    no job before the action. Zipf-hot words skew the count-table join keys;
     at cluster scale AQE skew-join splitting covers it (the count side is
     one row per key, so replication is free).
     """
     if k <= 0:
         raise ValueError(f"smoothing k must be > 0, got {k}")
     t_toks = _token_rows(train, id_col, text_col)
-    # The unigram table is consumed THREE times (corpus stats + the w and
-    # w_prev scoring joins) and Spark otherwise re-runs the train-side
-    # explode+aggregate per consumer; one eager materialization of the
-    # vocabulary-sized aggregate (the meta_blocking_prune pattern) keeps
-    # the token explode at one pass. Vocabulary rows are tiny relative to
-    # the corpus at any scale. EAGER (construction-time job); blocks live
-    # until periodic GC -- the documented localCheckpoint trade.
-    uni = t_toks.groupBy("w").agg(F.count(F.lit(1)).alias("c1")).localCheckpoint()
+    # One train-side pass: c2 is one (w_prev, w) aggregate and c1 its
+    # per-word sum, so every count table derives from one explode and
+    # Spark reuses its exchanges across the four consumers. pos 0 keys
+    # w_prev as '' (never a word, so never joined): with both keys
+    # non-nullable, no consumer infers its own IS NOT NULL filter, which
+    # would give each a different subtree and defeat the reuse.
+    big = t_toks.groupBy(
+        F.coalesce("w_prev", F.lit("")).alias("w_prev"), "w"
+    ).agg(F.count(F.lit(1)).alias("c2"))
+    uni = big.groupBy("w").agg(F.sum("c2").alias("c1"))
     stats = uni.agg(
         F.sum("c1").alias("_n"), F.count(F.lit(1)).alias("_v")
-    )
-    big = (
-        t_toks.where(F.col("pos") > 0)
-        .groupBy("w_prev", "w")
-        .agg(F.count(F.lit(1)).alias("c2"))
     )
     d_toks = _token_rows(docs, id_col, text_col)
     kk = F.lit(float(k))

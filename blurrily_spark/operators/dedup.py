@@ -638,6 +638,63 @@ def near_dedup_against(
     )
 
 
+def _span_occurrences(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    w: int,
+    min_docs: int,
+    hash_fn: str,
+    stride: int,
+    keep_win: bool,
+) -> DataFrame:
+    """One row per window occurrence: ``(id, start_word[, win], _dup)``
+    over rolling ``w``-word windows of the normalized text, one every
+    ``stride`` words. ``_dup`` is true iff the window occurs in >=
+    ``min_docs`` distinct documents (non-NULL ids, as ``count_distinct``
+    counts them).
+
+    One pass: the windows are built once and the document count is a
+    window over the window key -- ``dense_rank`` by id, then its ``max``
+    per key -- so the occurrence stream is never re-read by a separate
+    frequency aggregation and a join back; the plan stays lazy.
+    """
+    if stride < 1:
+        raise ValueError(f"stride must be >= 1, got {stride}")
+    d = with_normalized(df, text_col, "_norm", spread=True)
+    words = F.split(F.col("_norm"), " ")
+    n = F.size(words)
+    # slice() clamps past the end, so short docs (n < w) fall out of the
+    # same expression as one whole-text window -- no special case
+    wins = F.transform(
+        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0)), F.lit(stride)),
+        lambda i: F.struct(
+            i.cast("int").alias("start"),
+            F.concat_ws(" ", F.slice(words, i + F.lit(1), w)).alias("win"),
+        ),
+    )
+    occ = d.select(
+        F.col(id_col).cast("long").alias("id"), F.explode(wins).alias("s")
+    ).select("id", F.col("s.start").alias("start_word"), F.col("s.win").alias("win"))
+    key = "win"
+    if hash_fn == "fast":
+        # a column, not a partitionBy expression: each of the two windows
+        # would extract its own copy of the expression and shuffle again
+        key = "_wk"
+        occ = occ.withColumn(key, F.xxhash64("win"))
+    by_key = Window.partitionBy(key)
+    # NULL ids rank last and are left out, so max(_r) is the distinct
+    # non-NULL id count of the key
+    rank = F.dense_rank().over(by_key.orderBy(F.col("id").asc_nulls_last()))
+    n_docs = F.coalesce(F.max("_r").over(by_key), F.lit(0))
+    return occ.withColumn("_r", F.when(F.col("id").isNotNull(), rank)).select(
+        "id",
+        "start_word",
+        *(["win"] if keep_win else []),
+        (n_docs >= min_docs).alias("_dup"),
+    )
+
+
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -667,54 +724,27 @@ def duplicate_spans(
     ``dup_fraction`` to drop boilerplate-heavy docs, or feed spans to a
     cut-and-keep pass.
 
-    Scale shape: the explode is ~n_words rows per document; the window
-    document-frequency aggregation, the semi-join back, and the per-doc
-    rollup are all equi-key shuffles -- never pairwise. ``hash_fn='fast'``
-    ships 8-byte ``xxhash64`` window keys through the shuffles instead of
-    the w-word strings (the default 'exact' keeps raw windows so the
-    DuckDB oracle can reproduce the result bit-for-bit). Documents
-    shorter than ``w`` words contribute their whole text as one window.
+    Scale shape: the explode is ~n_words rows per document; one shuffle
+    by window key flags duplicated windows (a window over the key, see
+    :func:`_span_occurrences`) and one per-doc rollup counts them --
+    equi-key shuffles over a single read of the input, never pairwise, and
+    no job runs before the action. ``hash_fn='fast'`` shuffles 8-byte
+    ``xxhash64`` window keys instead of the w-word strings (the default
+    'exact' keeps raw windows so the DuckDB oracle can reproduce the
+    result bit-for-bit). Documents shorter than ``w`` words contribute
+    their whole text as one window.
     """
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    d = with_normalized(df, text_col, "_norm", spread=True)
-    words = F.split(F.col("_norm"), " ")
-    n = F.size(words)
-    # slice() clamps past the end, so short docs (n < w) fall out of the
-    # same expression as one whole-text window -- no special case
-    wins = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0)), F.lit(stride)),
-        lambda i: F.concat_ws(" ", F.slice(words, i + F.lit(1), w)),
+    occ = _span_occurrences(
+        df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
     )
-    exploded = d.select(
-        F.col(id_col).cast("long").alias("id"), F.explode(wins).alias("win")
-    )
-    key = F.xxhash64("win") if hash_fn == "fast" else F.col("win")
-    # materialize the keyed window stream ONCE (eager, the
-    # meta_blocking_prune pattern): it feeds THREE consumers (window
-    # document frequency, per-doc totals, per-doc dup counts) and Spark
-    # otherwise re-runs the normalize+explode per consumer -- measured 3x
-    # the explode cost; the checkpoint rows are just (id, wk). EAGER
-    # (construction-time job); blocks live until periodic GC.
-    keyed = exploded.select("id", key.alias("wk")).localCheckpoint()
-    dup_keys = (
-        keyed.groupBy("wk")
-        .agg(F.count_distinct("id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .select("wk")
-    )
-    per_doc = keyed.groupBy("id").agg(F.count(F.lit(1)).alias("n_windows"))
-    dup_per_doc = (
-        keyed.join(dup_keys, "wk", "left_semi")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_dup_windows"))
-    )
-    n_dup = F.coalesce("n_dup_windows", F.lit(0))
-    return per_doc.join(dup_per_doc, "id", "left").select(
+    return occ.groupBy("id").agg(
+        F.count(F.lit(1)).alias("n_windows"),
+        F.sum(F.col("_dup").cast("long")).alias("n_dup_windows"),
+    ).select(
         "id",
         "n_windows",
-        n_dup.alias("n_dup_windows"),
-        F.round(n_dup / F.col("n_windows"), 6).alias("dup_fraction"),
+        "n_dup_windows",
+        F.round(F.col("n_dup_windows") / F.col("n_windows"), 6).alias("dup_fraction"),
     )
 
 
@@ -726,7 +756,6 @@ def duplicate_span_positions(
     min_docs: int = 2,
     hash_fn: str = "exact",
     stride: int = 1,
-    with_win: bool = True,
 ) -> DataFrame:
     """Per-span cut points for :func:`duplicate_spans` (round-3 verdict
     #7): one row per OCCURRENCE of a duplicated window --
@@ -737,46 +766,19 @@ def duplicate_span_positions(
     substring-dedup story beyond per-doc statistics.
 
     Same scale shape as :func:`duplicate_spans`: explode (~n_words/stride
-    rows per doc), one document-frequency aggregation over window keys,
-    one semi-join back -- all equi-key, never pairwise. ``hash_fn='fast'``
-    ships 8-byte keys through the frequency shuffle (the win string is
-    still carried to the output for the cutter); 'exact' keys by the raw
-    window so the DuckDB oracle reproduces rows bit-for-bit.
+    rows per doc), one shuffle by window key that flags duplicated
+    windows, then a filter -- equi-key, never pairwise, lazy.
+    ``hash_fn='fast'`` shuffles 8-byte keys (the win string still rides
+    along to the output); 'exact' keys by the raw window so the DuckDB
+    oracle reproduces rows bit-for-bit.
     """
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-    d = with_normalized(df, text_col, "_norm", spread=True)
-    words = F.split(F.col("_norm"), " ")
-    n = F.size(words)
-    wins = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0)), F.lit(stride)),
-        lambda i: F.struct(
-            i.cast("int").alias("start"),
-            F.concat_ws(" ", F.slice(words, i + F.lit(1), w)).alias("win"),
-        ),
+    return (
+        _span_occurrences(
+            df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=True
+        )
+        .where("_dup")
+        .drop("_dup")
     )
-    exploded = d.select(
-        F.col(id_col).cast("long").alias("id"), F.explode(wins).alias("s")
-    ).select("id", F.col("s.start").alias("start_word"), F.col("s.win").alias("win"))
-    key = F.xxhash64("win") if hash_fn == "fast" else F.col("win")
-    keyed = exploded.withColumn("wk", key)
-    if not with_win:
-        # consumers that only need cut points (cut_duplicate_spans) drop the
-        # w-word window string BEFORE the dup-key joins, so the occurrence
-        # stream ships (id, start_word, wk) instead of carrying every span
-        # text through the shuffle
-        keyed = keyed.select("id", "start_word", "wk")
-    # materialized once (eager): consumed by the document-frequency
-    # aggregation AND the occurrence semi-join -- see duplicate_spans
-    keyed = keyed.localCheckpoint()
-    dup_keys = (
-        keyed.groupBy("wk")
-        .agg(F.count_distinct("id").alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .select("wk")
-    )
-    out_cols = ["id", "start_word"] + (["win"] if with_win else [])
-    return keyed.join(dup_keys, "wk", "left_semi").select(*out_cols)
 
 
 def cut_duplicate_spans(
@@ -797,16 +799,18 @@ def cut_duplicate_spans(
     doc-level dedup would instead have dropped whole documents that also
     carried unique content).
 
-    Scale shape: duplicated occurrences -> covered word positions
-    (explode of at most w per occurrence, deduped on (id, pos)) -> one
-    anti-join against the document's indexed words -> one per-doc
-    aggregation that rebuilds the text (sort_array over (pos, word)
-    structs; bounded by the document length, which the input row already
-    holds). No pairwise work anywhere.
+    Scale shape: duplicated occurrences (the one-pass flagging of
+    :func:`duplicate_span_positions`, without the span text) -> covered
+    word positions (explode of at most w per occurrence, deduped on
+    (id, pos)) -> one anti-join against the document's indexed words ->
+    one per-doc aggregation that rebuilds the text (sort_array over
+    (pos, word) structs; bounded by the document length, which the input
+    row already holds). No pairwise work anywhere, and no job before the
+    action.
     """
-    positions = duplicate_span_positions(
-        df, id_col, text_col, w, min_docs, hash_fn, stride, with_win=False
-    )
+    positions = _span_occurrences(
+        df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
+    ).where("_dup")
     d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     wordpos = d.select(

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blurrily_spark.config import shuffle_partitions
@@ -495,8 +495,6 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
     """
     if not (0.0 < float(ratio) <= 1.0):
         raise ValueError(f"ratio must be in (0, 1], got {ratio!r}")
-    from pyspark.sql.window import Window
-
     sizes = trigram_df_counts(postings.select("trigram"))
     p = postings.join(F.broadcast(sizes), "trigram")
     by_ref = Window.partitionBy("ref")
@@ -526,24 +524,13 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
 #   (the paper's redefined/union WNP -- guarantees every non-isolated node
 #   retains its max-weight edge, so no record is orphaned by pruning).
 #
-# Distributed shape: node statistics are one groupBy over the 2|E|-row
-# directed view (one row per node out), then two equi-joins back on node id
-# -- the same class as with_jaccard's count joins. Nothing is ever
-# re-paired; pruning is a filter. Mean comparisons are evaluated as
-# ``w * cnt >= sum_w`` so integer weights (CBS/matches) stay exact integer
-# math end-to-end -- bit-identical to the DuckDB oracle.
-
-
-def _node_weight_stats(edges: DataFrame, weight_col: str) -> DataFrame:
-    """Per-node (sum of incident edge weights, incident edge count)."""
-    directed = edges.select(
-        F.col("ref_a").alias("node"), F.col(weight_col).alias("_w")
-    ).unionByName(
-        edges.select(F.col("ref_b").alias("node"), F.col(weight_col).alias("_w"))
-    )
-    return directed.groupBy("node").agg(
-        F.sum("_w").alias("sum_w"), F.count(F.lit(1)).alias("cnt")
-    )
+# Distributed shape: WNP explodes each edge into its two endpoint rows
+# and reads the node statistics off a window partitioned by node; the
+# edge-level OR is a second window over the edge's own key -- so the
+# input is read once and nothing is joined back or re-paired (pruning is
+# a filter). WEP broadcasts a one-row global aggregate. Mean comparisons
+# are evaluated as ``w * cnt >= sum_w`` so integer weights (CBS/matches)
+# stay exact integer math end-to-end -- bit-identical to the DuckDB oracle.
 
 
 def meta_blocking_prune(
@@ -562,20 +549,6 @@ def meta_blocking_prune(
     """
     if scheme not in ("wnp", "wep"):
         raise ValueError(f"unknown meta-blocking scheme: {scheme!r}")
-    # Materialize the candidate graph ONCE (eager, like connected_components'
-    # per-round checkpoint): every pruning scheme consumes ``edges`` at least
-    # three times (the surviving stream + per-node/global stats built from a
-    # union of two directed views), and Spark re-derives the full blocking
-    # self-join per consumer -- measured 3x the dominant stage on the bench
-    # graph, with the copies racing to fill the same cache. At scale this is
-    # the same decision as staging the candidate table before pruning.
-    # EAGER: the checkpoint runs the upstream job at operator-construction
-    # time (streaming inputs are unsupported here), and its blocks live
-    # until the JVM's periodic ContextCleaner GC -- the documented
-    # localCheckpoint trade (see cluster._checkpoint_rdd). Appropriate for
-    # batch analytics; a service looping these per-request should recycle
-    # its session periodically.
-    edges = edges.localCheckpoint()
     w = F.col(weight_col)
     if scheme == "wep":
         # one-row global stats; crossJoin broadcasts it to every partition
@@ -587,22 +560,27 @@ def meta_blocking_prune(
             .where(w * F.col("_tc") >= F.col("_tw"))
             .drop("_tw", "_tc")
         )
-    stats = _node_weight_stats(edges, weight_col)
-    sa = stats.select(
-        F.col("node").alias("ref_a"),
-        F.col("sum_w").alias("_sa"),
-        F.col("cnt").alias("_ca"),
+    # one row per (edge, endpoint): _side 0 is ref_a's row, 1 is ref_b's
+    ends = edges.select(
+        "*", F.posexplode(F.array("ref_a", "ref_b")).alias("_side", "_node")
     )
-    sb = stats.select(
-        F.col("node").alias("ref_b"),
-        F.col("sum_w").alias("_sb"),
-        F.col("cnt").alias("_cb"),
-    )
+    by_node = Window.partitionBy("_node")
+    node_keep = w * F.count(F.lit(1)).over(by_node) >= F.sum(w).over(by_node)
+    # duplicate edges share endpoints and weight, hence the same flags,
+    # so the edge key needs no row id; side 0 then carries each input row
+    # and a side-1 row matters only when it keeps the edge
+    by_edge = Window.partitionBy("ref_a", "ref_b", weight_col)
     return (
-        edges.join(sa, "ref_a")
-        .join(sb, "ref_b")
-        .where((w * F.col("_ca") >= F.col("_sa")) | (w * F.col("_cb") >= F.col("_sb")))
-        .drop("_sa", "_ca", "_sb", "_cb")
+        ends.withColumn("_keep", node_keep)
+        .where((F.col("_side") == 0) | F.col("_keep"))
+        .withColumn("_keep", F.max("_keep").over(by_edge))
+        # a NULL endpoint names no record, so its edge is never kept
+        .where(
+            (F.col("_side") == 0)
+            & F.col("_keep")
+            & F.col("ref_a").isNotNull()
+            & F.col("ref_b").isNotNull()
+        )
         .select(*edges.columns)
     )
 
@@ -637,12 +615,14 @@ def global_sort_ranks(
     """Exact 1-based global rank of every row under ``ORDER BY key, id``,
     without a single-task window. Returns ``(id_col, key_col, rank)``.
 
-    One range shuffle of the keys-only projection (persisted: the count
-    job and the rank job share it instead of re-shuffling), a <=P-row
-    count collect, and a partition-local window whose pid grouping hashes
-    whole already-sorted runs -- never a global sort on one task."""
-    from pyspark.sql import Window
-
+    One range shuffle of the keys-only projection, a <=P-row count
+    collect, and a per-pid window -- never a global sort on one task.
+    EAGER: the shuffle is localCheckpointed so the count job and the rank
+    job share one range partitioning; unlike a persist, it leaves no entry
+    in the session's cache. The window reads the checkpoint through a
+    range exchange on the pid, which gives each task about one pid, where
+    hashing P pids into P tasks would double some up and leave others
+    empty."""
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = (
@@ -652,7 +632,7 @@ def global_sort_ranks(
         df.select(id_col, key_col)
         .repartitionByRange(num_partitions, F.col(key_col), F.col(id_col))
         .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .localCheckpoint()
     )
     counts = {r["_pid"]: r["n"] for r in keys.groupBy("_pid").agg(
         F.count(F.lit(1)).alias("n")).collect()}
@@ -665,7 +645,7 @@ def global_sort_ranks(
         F.col("_pid"),
     ) if offsets else F.lit(0)
     local = Window.partitionBy("_pid").orderBy(key_col, id_col)
-    return keys.select(
+    return keys.repartitionByRange(num_partitions, "_pid").select(
         id_col,
         key_col,
         (F.row_number().over(local) + off).cast("long").alias("rank"),

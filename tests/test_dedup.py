@@ -263,7 +263,9 @@ def test_load_banded_signatures_guards(spark, tmp_path):
 
 def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
     """Pure-Python oracle: windows per doc (with offsets), dup-window set,
-    covered positions, and kept text -- mirrors normalize + clamp rules."""
+    covered positions, kept text and per-doc ``(n_windows,
+    n_dup_windows)`` -- mirrors normalize + clamp rules. A ``None`` id
+    has windows but, as in ``count_distinct``, counts as no document."""
     from blurrily_spark.functions.tokenizer import normalize_py
 
     wins: dict[int, list[tuple[int, str]]] = {}
@@ -276,7 +278,7 @@ def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
 
     docs_per_win = Counter()
     for i, lst in wins.items():
-        for win in {win for _, win in lst}:
+        for win in {win for _, win in lst} if i is not None else ():
             docs_per_win[win] += 1
     dup = {win for win, c in docs_per_win.items() if c >= min_docs}
     positions = {
@@ -291,7 +293,8 @@ def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
                 covered.update(range(s, min(s + w, len(ws))))
         kept_words = [wd for p, wd in enumerate(ws) if p not in covered]
         kept[i] = (" ".join(kept_words), len(ws), len(kept_words))
-    return positions, kept
+    stats = {i: (len(lst), sum(win in dup for _, win in lst)) for i, lst in wins.items()}
+    return positions, kept, stats
 
 
 def test_span_positions_and_cut_golden(spark):
@@ -302,7 +305,7 @@ def test_span_positions_and_cut_golden(spark):
         3: "no overlap with anyone at all in this document text",
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    exp_pos, exp_kept = _span_oracle(texts, w=8, min_docs=2)
+    exp_pos, exp_kept, _ = _span_oracle(texts, w=8, min_docs=2)
     got_pos = {
         (r["id"], r["start_word"], r["win"])
         for r in dedup.duplicate_span_positions(df, w=8).collect()
@@ -325,11 +328,18 @@ def test_span_cut_randomized_python_oracle(spark):
     for trial in range(3):
         texts = {
             i: " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 40)))
-            for i in range(14)
+            for i in [*range(14), None]
         }
         df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
         w, stride = rng.choice([(4, 1), (5, 2), (3, 1)])
-        exp_pos, exp_kept = _span_oracle(texts, w=w, min_docs=2, stride=stride)
+        exp_pos, exp_kept, exp_stats = _span_oracle(
+            texts, w=w, min_docs=2, stride=stride
+        )
+        got_stats = {
+            r["id"]: (r["n_windows"], r["n_dup_windows"])
+            for r in dedup.duplicate_spans(df, w=w, stride=stride).collect()
+        }
+        assert got_stats == exp_stats, f"stats mismatch (trial {trial}, w={w})"
         got_pos = {
             (r["id"], r["start_word"], r["win"])
             for r in dedup.duplicate_span_positions(
@@ -342,7 +352,9 @@ def test_span_cut_randomized_python_oracle(spark):
             for r in dedup.cut_duplicate_spans(
                 df, w=w, stride=stride, hash_fn="fast"
             ).collect()
+            if r["id"] is not None  # a NULL id names no document to rebuild
         }
+        del exp_kept[None]
         assert got_kept == exp_kept, f"kept-text mismatch (trial {trial}, w={w})"
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import itertools
 
+import pytest
+
 from conftest import put_rows
 
 from blurrily_spark.functions.tokenizer import normalize_py, tokenize_py
@@ -224,6 +226,17 @@ def test_global_sort_ranks_exact_permutation(spark):
         for i, (ref, _) in enumerate(sorted(rows, key=lambda r: (r[1], r[0])))
     }
     assert {r["ref"]: r["rank"] for r in got} == expect
+
+
+def test_global_sort_ranks_leaves_no_cached_table(spark):
+    """The shared range shuffle is a localCheckpoint, not a persist that
+    stays in the session's cache after the ranks are dropped."""
+    from blurrily_spark.operators.pairs import global_sort_ranks
+
+    spark.catalog.clearCache()
+    df = spark.createDataFrame([(i, f"k{i % 7}") for i in range(50)], "ref long, key string")
+    assert len(global_sort_ranks(df, "key", "ref", num_partitions=3).collect()) == 50
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_sorted_neighborhood_matches_oracle(spark):
@@ -447,6 +460,53 @@ def test_meta_blocking_wnp_keeps_every_nodes_max_edge(spark):
     before = {(r["ref_a"], r["ref_b"]) for r in edges.collect()}
     after = {(r["ref_a"], r["ref_b"]) for r in kept.collect()}
     assert after <= before
+
+
+def _mb_model(rows, scheme):
+    """Pure-Python meta-blocking over ``(tag, ref_b, ref_a, w)`` rows: every
+    input row is judged on its own (duplicates stay), NULL weights never
+    pass, and WNP drops an edge with a NULL endpoint while its weight
+    still counts for the other endpoint's mean."""
+    if scheme == "wep":
+        tw = sum(r[3] for r in rows if r[3] is not None)
+        return [r for r in rows if r[3] is not None and r[3] * len(rows) >= tw]
+    sums, cnts = {}, {}
+    for _, b, a, w in rows:
+        for n in (a, b):
+            cnts[n] = cnts.get(n, 0) + 1
+            sums[n] = sums.get(n, 0) + (w or 0)
+    return [
+        r
+        for r in rows
+        if r[3] is not None
+        and None not in (r[1], r[2])
+        and any(r[3] * cnts[n] >= sums[n] for n in (r[1], r[2]))
+    ]
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("scheme", ["wnp", "wep"])
+def test_meta_blocking_matches_python_model(spark, scheme, seed):
+    """Seeded graphs with weight ties, repeated (ref_a, ref_b) rows, NULL
+    weights, a NULL endpoint and a payload column, in a column order the
+    output must keep."""
+    import random
+
+    from blurrily_spark.operators.pairs import meta_blocking_prune
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(60):
+        a, b = rng.sample(range(12), 2)
+        w = None if rng.random() < 0.1 else rng.randint(1, 4)
+        rows.append((f"p{i}", max(a, b), min(a, b), w))
+    rows += [(f"p{len(rows)}", *rows[0][1:]), ("p_null", None, 3, 2)]
+    df = spark.createDataFrame(rows, "tag string, ref_b long, ref_a long, matches int")
+    kept = meta_blocking_prune(df, scheme=scheme)
+    assert kept.columns == df.columns
+    assert sorted(r["tag"] for r in kept.collect()) == sorted(
+        r[0] for r in _mb_model(rows, scheme)
+    )
 
 
 def test_meta_blocking_rejects_unknown_scheme(spark):

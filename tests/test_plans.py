@@ -10,7 +10,9 @@ or degrades a join strategy fails CI instead of shipping:
 * FIND's per-query top-k compiles to WindowGroupLimit (rank-limit
   pushdown), its gather join broadcasts the needle side;
 * brute-force cosine scoring broadcasts the query batch -- never a
-  CartesianProduct.
+  CartesianProduct;
+* building the span, meta-blocking and LM-scoring operators launches no
+  Spark job and keeps a streaming input streaming.
 """
 
 from __future__ import annotations
@@ -64,7 +66,7 @@ NO_PYTHON_QUERIES = [
     "fs_estimate_mu",     # tagged explode + groupBy, no Python
     "cluster_metrics",    # contingency-table aggregates, scaled-int math
     "incremental_entities",
-    "meta_blocking",      # node-stat groupBy + equi-joins + filter, pure SQL
+    "meta_blocking",      # node and edge windows + filter, pure SQL
     "blocking_metrics",   # truth-table aggregates, integer math
     "block_filtering",    # broadcast df counts + per-ref window, pure SQL
     "threshold_sweep",    # one conditional-sum aggregate + stack unpivot
@@ -161,3 +163,61 @@ def test_fs_score_adds_no_exchange(spark):
     after = fs_score(base, [fm])._jdf.queryExecution().executedPlan().toString()
     assert after.count("Exchange") == before.count("Exchange") == 0
     assert "ArrowEvalPython" not in after and "BatchEvalPython" not in after
+
+
+DOCS_SCHEMA = "doc_id long, text string"
+EDGES_SCHEMA = "ref_a long, ref_b long, matches long"
+
+
+def _lazy_operator_cases():
+    from blurrily_spark.operators import corpus, dedup, pairs
+
+    return {
+        "duplicate_spans_exact": lambda d, e: dedup.duplicate_spans(d, w=3),
+        "duplicate_spans_fast": lambda d, e: dedup.duplicate_spans(
+            d, w=3, hash_fn="fast"
+        ),
+        "duplicate_span_positions": lambda d, e: dedup.duplicate_span_positions(
+            d, w=3
+        ),
+        "cut_duplicate_spans": lambda d, e: dedup.cut_duplicate_spans(d, w=3),
+        "lm_score": lambda d, e: corpus.lm_score(d, d),
+        "meta_blocking_wnp": lambda d, e: pairs.meta_blocking_prune(e, scheme="wnp"),
+        "meta_blocking_wep": lambda d, e: pairs.meta_blocking_prune(e, scheme="wep"),
+    }
+
+
+@pytest.mark.parametrize("kind", ["memory", "streaming"])
+@pytest.mark.parametrize("name", sorted(_lazy_operator_cases()))
+def test_operator_construction_launches_no_job(spark, tmp_path, name, kind):
+    """Operators build plans, not jobs: no localCheckpoint (a LogicalRDD in
+    the plan) and no job before the action, and a streaming input yields
+    a streaming plan instead of failing inside an eager job."""
+    # inline VALUES are a LocalRelation, so any LogicalRDD is the operator's
+    docs = spark.sql(
+        "SELECT * FROM VALUES (1L, 'a b c d e'), (2L, 'x a b c d'), (3L, 'q r s'),"
+        " (4L, 'a b c q r') AS t(doc_id, text)"
+    )
+    edges = spark.sql(
+        "SELECT * FROM VALUES (1L, 2L, 3L), (1L, 3L, 1L), (2L, 3L, 2L), (3L, 4L, 1L)"
+        " AS t(ref_a, ref_b, matches)"
+    )
+    if kind == "streaming":
+        docs.write.parquet(str(tmp_path / "docs"))
+        edges.write.parquet(str(tmp_path / "edges"))
+        docs = spark.readStream.schema(DOCS_SCHEMA).parquet(str(tmp_path / "docs"))
+        edges = spark.readStream.schema(EDGES_SCHEMA).parquet(str(tmp_path / "edges"))
+    sc = spark.sparkContext
+    group = f"lazy-{name}-{kind}"
+    sc.setJobGroup(group, "construction only")
+    try:
+        out = _lazy_operator_cases()[name](docs, edges)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out.isStreaming == (kind == "streaming")
+        if kind == "memory":
+            assert "LogicalRDD" not in out._jdf.queryExecution().analyzed().toString()
+            out.collect()
+            # control: the group does see the action's jobs
+            assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
