@@ -890,46 +890,6 @@ def q_events_window(spark, sf_dir):
     )
 
 
-def q_multimodal(spark, sf_dir):
-    """Multimodal feature extraction (rows-only: the codec layer is a
-    declared deterministic-fake seam -- sources/multimodal.py -- so there
-    is no SQL oracle; schema/fan-out/determinism are pytest-gated). One
-    row per media asset: Arrow-batched mapInPandas decode for images and
-    audio, per-frame fan-out + order-insensitive aggregate for video."""
-    from blurrily_spark.sources import multimodal as mm
-
-    media = mm.generate_media(spark, n=96, seed=13)
-
-    def fsum(col):
-        return F.round(
-            F.aggregate(col, F.lit(0.0), lambda a, x: a + x.cast("double")), 5
-        )
-
-    img = mm.decode_image_features(media).select(
-        "media_id",
-        F.lit("image").alias("kind"),
-        F.size("embedding").alias("feature_dim"),
-        fsum(F.col("embedding")).alias("feat_sum"),
-    )
-    aud = mm.decode_audio_features(media).select(
-        "media_id",
-        F.lit("audio").alias("kind"),
-        F.size("mfcc").alias("feature_dim"),
-        fsum(F.col("mfcc")).alias("feat_sum"),
-    )
-    vid = (
-        mm.sample_video_frames(media)
-        .select("media_id", fsum(F.col("frame")).alias("_fs"))
-        .groupBy("media_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("feature_dim"),
-            F.max("_fs").alias("feat_sum"),  # max: order-insensitive, exact
-        )
-        .select("media_id", F.lit("video").alias("kind"), "feature_dim", "feat_sum")
-    )
-    return img.unionByName(aud).unionByName(vid)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: batch fuzzy FIND over the sf0.001 documents corpus."""
     return q_find(spark, "/root/testdata/sf0.001")
@@ -1004,7 +964,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sessionize": q_sessionize,
         "session_stats": q_session_stats,
         "events_window_agg": q_events_window,
-        "multimodal_features": q_multimodal,
     }
 
 

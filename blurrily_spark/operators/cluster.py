@@ -331,9 +331,8 @@ def incremental_entities(
     every delta endpoint, and is EXACTLY equal to recomputing
     ``assign_entities`` over (history union delta): a supernode's id is the
     min of its old component, so the min over merged supernodes is the min
-    of the merged component (pinned by the equivalence test). This is the
-    batch face of the streaming incremental dedup -- new near-dup pairs
-    arrive per trigger, entities update in O(batch) work.
+    of the merged component (pinned by the equivalence test). New near-dup
+    pairs arrive per batch, and entities update in O(batch) work.
     """
     p = prev.select(
         F.col("ref").cast("long").alias("ref"),

@@ -410,145 +410,9 @@ def near_dedup(
     )
 
 
-def save_banded_signatures(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 7,
-    hash_fn: str = "portable",
-) -> None:
-    """Persist a reference corpus's BANDED MinHash signatures for repeated
-    :func:`near_dedup_against` batches -- the signing + banding pass over
-    the (large, stable) reference side runs once, not once per batch
-    (round-3 verdict #5).
-
-    Layout is a committed :class:`blurrily_spark.streaming.sink.BatchSink`
-    (single batch 0), so the stored table is byte-compatible with the
-    streaming dedup's signature history and readable with ``read_sink``; a
-    ``_sig_meta`` JSON records the signature parameters so loads can't be
-    silently mismatched. At cluster scale, store this bucketed by
-    ``bhash`` to make every batch's banded join shuffle-free on the
-    reference side.
-    """
-    import json
-
-    from blurrily_spark.streaming.sink import BatchSink
-
-    _require_integral_id(df, id_col, "save_banded_signatures")
-    banded = banded_signatures(
-        minhash_signatures(df, id_col, text_col, w, num_hashes, seed, hash_fn),
-        num_hashes,
-        bands,
-    ).withColumn("id", F.col("id").cast("long"))
-    sink = BatchSink(df.sparkSession, path)
-    sink.write(banded, 0)
-    sink.commit(0)
-    meta = {
-        "w": w, "num_hashes": num_hashes, "bands": bands,
-        "seed": seed, "hash_fn": hash_fn,
-    }
-    from blurrily_spark.streaming.sink import publish_small_file
-
-    publish_small_file(
-        df.sparkSession, f"{sink.directory}/_sig_meta", json.dumps(meta).encode("utf-8")
-    )
-
-
-def save_banded_signatures_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    buckets: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 7,
-    hash_fn: str = "portable",
-) -> None:
-    """The cluster-scale layout of :func:`save_banded_signatures`: the
-    banded reference signatures persisted as a table bucketed+sorted by
-    the banded join's exact keys ``(band, bhash)``.
-
-    Bucketing must cover BOTH join keys: Spark's co-partitioning check
-    (requireAllClusterKeysForCoPartition) does not accept a subset
-    bucketing, so a bhash-only layout would re-shuffle the stored side.
-    With (band, bhash) buckets, every incoming batch's candidate join
-    reads the stored reference WITHOUT a shuffle exchange on that side
-    (asserted in tests/test_bucketed.py) -- only the small new batch
-    repartitions. On a real cluster this is an Iceberg table with a
-    bucket(band, bhash)-style transform.
-    """
-    _require_integral_id(df, id_col, "save_banded_signatures_bucketed")
-    banded = banded_signatures(
-        minhash_signatures(df, id_col, text_col, w, num_hashes, seed, hash_fn),
-        num_hashes,
-        bands,
-    ).withColumn("id", F.col("id").cast("long"))
-    (
-        banded.write.mode("overwrite")
-        .bucketBy(buckets, "band", "bhash")
-        .sortBy("band", "bhash")
-        .option("path", path)
-        .saveAsTable(table_name)
-    )
-
-
-def load_banded_signatures(spark, path: str) -> tuple[DataFrame, dict]:
-    """(banded signatures, signature parameters) previously stored by
-    :func:`save_banded_signatures`. The meta dict is what the NEW side of
-    a cross-corpus dedup must be signed with -- pass it through, don't
-    guess (a w/num_hashes/seed mismatch silently destroys recall)."""
-    import json
-
-    from blurrily_spark.streaming.sink import BatchSink, read_small_file
-
-    sink = BatchSink(spark, path)
-    df = sink.read()
-    if df is None:
-        raise FileNotFoundError(f"no committed banded signatures at {path!r}")
-    raw = read_small_file(spark, f"{sink.directory}/_sig_meta")
-    if raw is None:
-        raise FileNotFoundError(f"missing _sig_meta at {path!r}")
-    meta = json.loads(raw.decode("utf-8"))
-    return df, meta
-
-
-def near_dedup_against_stored(
-    new_df: DataFrame,
-    ref_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """:func:`near_dedup_against` with the reference side loaded pre-banded
-    from :func:`save_banded_signatures` -- signature parameters come from
-    the stored meta, so only the NEW batch is signed. Identical output to
-    the unstored call with the same parameters."""
-    ref_banded, meta = load_banded_signatures(new_df.sparkSession, ref_path)
-    return near_dedup_against(
-        new_df,
-        None,
-        id_col=id_col,
-        text_col=text_col,
-        w=meta["w"],
-        num_hashes=meta["num_hashes"],
-        bands=meta["bands"],
-        threshold=threshold,
-        seed=meta["seed"],
-        hash_fn=meta["hash_fn"],
-        ref_banded=ref_banded,
-    )
-
-
 def near_dedup_against(
     new_df: DataFrame,
-    ref_df: DataFrame | None,
+    ref_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 3,
@@ -557,12 +421,10 @@ def near_dedup_against(
     threshold: float = 0.5,
     seed: int = 7,
     hash_fn: str = "portable",
-    ref_banded: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-corpus near-dedup: flag documents of ``new_df`` that
     near-duplicate any document of ``ref_df`` (a fresh crawl against the
-    retained training corpus) -- the batch face of
-    :func:`blurrily_spark.streaming.stream.stream_minhash_dedup`.
+    retained training corpus).
 
     Returns one row per new document:
     ``(id, matched_ref_id, est_jaccard, is_dup)`` where ``matched_ref_id``
@@ -576,32 +438,18 @@ def near_dedup_against(
     collisions, never |new| x |ref|; candidates are thresholded *before*
     any aggregation, and the best match is a single max(struct) aggregate
     -- duplicate band hits for one pair need no dedup shuffle, the max
-    absorbs them. For repeated batches against one reference corpus, store
-    the reference side once with :func:`save_banded_signatures` and batch
-    through :func:`near_dedup_against_stored` (or pass ``ref_banded``
-    directly) -- the reference is never re-signed; the streaming variant
-    keeps the same layout incrementally.
+    absorbs them.
     """
-    _require_integral_id(new_df, id_col, "near_dedup_against")
-    sn = banded_signatures(
-        minhash_signatures(new_df, id_col, text_col, w, num_hashes, seed, hash_fn),
-        num_hashes,
-        bands,
-    ).withColumn("id", F.col("id").cast("long"))
-    if ref_banded is not None:
-        # pre-banded reference (save_banded_signatures / streaming history)
-        # -- the caller (or near_dedup_against_stored's meta) guarantees the
-        # signature parameters match the ones used here for the new side
-        sr = ref_banded
-    else:
-        if ref_df is None:
-            raise ValueError("near_dedup_against needs ref_df or ref_banded")
-        _require_integral_id(ref_df, id_col, "near_dedup_against")
-        sr = banded_signatures(
-            minhash_signatures(ref_df, id_col, text_col, w, num_hashes, seed, hash_fn),
+
+    def banded(df: DataFrame) -> DataFrame:
+        _require_integral_id(df, id_col, "near_dedup_against")
+        return banded_signatures(
+            minhash_signatures(df, id_col, text_col, w, num_hashes, seed, hash_fn),
             num_hashes,
             bands,
         ).withColumn("id", F.col("id").cast("long"))
+
+    sn, sr = banded(new_df), banded(ref_df)
     cand = _banded_candidates(
         sn, sr, num_hashes, bands, left_id="new_id", right_id="ref_id"
     ).where(F.col("est_jaccard") >= threshold)
@@ -823,7 +671,13 @@ def cut_duplicate_spans(
             F.sequence(F.col("start_word"), F.col("start_word") + F.lit(w - 1))
         ).alias("pos"),
     ).distinct()
-    kept = wordpos.join(covered, ["id", "pos"], "left_anti")
+    # null-safe id equality: a NULL-id document is still a document whose
+    # words are cut and rebuilt (plain equality never matches NULL)
+    kept = wordpos.join(
+        covered,
+        wordpos["id"].eqNullSafe(covered["id"]) & (wordpos["pos"] == covered["pos"]),
+        "left_anti",
+    )
     rebuilt = kept.groupBy("id").agg(
         F.concat_ws(
             " ",
@@ -838,8 +692,10 @@ def cut_duplicate_spans(
         F.col(id_col).cast("long").alias("id"),
         F.size(words).cast("long").alias("n_words"),
     )
-    return totals.join(rebuilt, "id", "left").select(
-        "id",
+    return totals.join(
+        rebuilt, totals["id"].eqNullSafe(rebuilt["id"]), "left"
+    ).select(
+        totals["id"],
         F.coalesce("kept_text", F.lit("")).alias("kept_text"),
         "n_words",
         F.coalesce("n_kept_words", F.lit(0)).alias("n_kept_words"),

@@ -45,7 +45,7 @@ def _py_l2_norm(vec) -> float:
     """Driver-side twin of :func:`l2_norm`: strictly sequential
     left-to-right double accumulation, so the result is bit-identical to
     the JVM fold (both are correctly-rounded IEEE-754 ops in the same
-    order -- the same argument as :func:`_probe_buckets`)."""
+    order; whole-stage codegen does not reassociate the sum)."""
     import math
 
     acc = 0.0
@@ -214,11 +214,9 @@ def ivf_topk(
 ) -> DataFrame:
     """ANN top-k probing the nprobe nearest centroid buckets per query.
 
-    Bucketed corpus joins query probes on bucket id -- at scale the corpus
-    is *stored* partitioned by bucket, so a probe scans only its partitions
-    (partition pruning does the IVF inverted-list lookup): that layout is
-    :func:`save_ivf_index` + :func:`ivf_topk_stored`, which is plan- and
-    behaviorally-verified to touch only probed buckets.
+    The corpus is bucketed by its nearest centroid and joins the
+    broadcast query probes on bucket id, so each query scores only the
+    vectors of its ``nprobe`` buckets.
     """
     from blurrily_spark.config import spread_small_input
 
@@ -243,157 +241,6 @@ def ivf_topk(
         "query_id",
         "vec_id",
         _cos_pre(F.col("_v"), F.col("_qv"), F.col("_n"), F.col("_qn")).alias("cos"),
-    )
-    win = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
-
-
-def save_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize an IVF index: the corpus written ``partitionBy(bucket)``
-    (one directory per inverted list) with the coarse codebook stored
-    alongside as ``_ivf_codebook`` JSON.
-
-    This is the storage layout :func:`ivf_topk`'s docstring promises: a
-    probe against the stored index becomes a *partition-pruned* scan --
-    Spark's directory pruning IS the inverted-list lookup, so a
-    ``nprobe``/``k``-bucket query reads only those buckets' files and
-    never touches the rest of the corpus (verified by plan + inputFiles
-    in tests/test_similarity.py). At 100 TB this is the difference
-    between scanning ~nprobe/n_lists of the corpus and scanning all of
-    it; re-clustering is a rewrite of this table (Iceberg/Delta partition
-    evolution on a real cluster).
-    """
-    import json
-
-    from blurrily_spark.streaming.sink import publish_small_file
-
-    assigned = assign_buckets(corpus, centroids, id_col, vec_col)
-    (
-        assigned.select("vec_id", F.col("_v").alias("embedding"), "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    publish_small_file(
-        corpus.sparkSession,
-        f"{path.rstrip('/')}/_ivf_codebook",
-        json.dumps(centroids).encode("utf-8"),
-    )
-
-
-def load_ivf_codebook(spark, path: str) -> list[list[float]]:
-    """The coarse codebook stored by :func:`save_ivf_index`."""
-    import json
-
-    from blurrily_spark.streaming.sink import read_small_file
-
-    raw = read_small_file(spark, f"{path.rstrip('/')}/_ivf_codebook")
-    if raw is None:
-        raise FileNotFoundError(f"no _ivf_codebook at {path!r}")
-    return json.loads(raw.decode("utf-8"))
-
-
-def _probe_buckets(qvec: list[float], centroids: list[list[float]], nprobe: int) -> list[int]:
-    """nprobe nearest centroid indices for one query vector, driver-side.
-
-    Bit-for-bit the same scores as :func:`ivf_topk`'s JVM path: both run a
-    strictly sequential left-to-right double accumulation, so Python and
-    whole-stage-codegen produce identical IEEE-754 results; the tie rule
-    (score DESC, bucket index DESC) mirrors the reversed array_sort there.
-    """
-    import math
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += float(x) * float(y)
-        return acc
-
-    def _norm(a):
-        acc = 0.0
-        for x in a:
-            acc += float(x) * float(x)
-        return math.sqrt(acc)
-
-    qn = _norm(qvec)
-    scores = [_dot(qvec, c) / (qn * _norm(c)) for c in centroids]
-    order = sorted(range(len(centroids)), key=lambda i: (scores[i], i), reverse=True)
-    return order[:nprobe]
-
-
-def ivf_topk_stored(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """:func:`ivf_topk` against a :func:`save_ivf_index` table, with the
-    probed buckets pushed into the scan as a partition filter.
-
-    The query batch is collected driver-side (ANN query batches are small
-    by contract -- they are broadcast in every variant here) to compute
-    each query's ``nprobe`` buckets; the corpus read then carries
-    ``bucket IN (union of probed buckets)``, which Spark turns into
-    directory-level partition pruning -- only the probed inverted lists
-    are listed, opened, or scored. Identical results to :func:`ivf_topk`
-    with the stored codebook.
-
-    The driver-side collect is bounded: past ``max_queries`` rows (default
-    100k -- at typical dims that is well under a gigabyte of vectors, and
-    past it the probe union approaches all buckets so pruning buys nothing
-    anyway) the call fails loudly instead of OOMing the driver; route big
-    query sets through the DataFrame-native :func:`ivf_topk`, which keeps
-    the assignment distributed.
-    """
-    centroids = load_ivf_codebook(spark, path)
-    qrows = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_qv")
-        )
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_topk_stored collects the query batch driver-side and is "
-            f"capped at max_queries={max_queries} rows; use ivf_topk (the "
-            f"DataFrame-native path, distributed bucket assignment) for "
-            f"larger query sets"
-        )
-    probe_rows = []
-    for r in qrows:
-        qv = list(map(float, r["_qv"]))
-        for b in _probe_buckets(qv, centroids, nprobe):
-            probe_rows.append((r["query_id"], qv, b))
-    probes = spark.createDataFrame(
-        probe_rows, f"query_id long, _qv array<double>, bucket int"
-    )
-    all_buckets = sorted({b for _, _, b in probe_rows})
-    corpus = (
-        spark.read.parquet(path)
-        .where(F.col("bucket").isin(all_buckets))
-        .select("vec_id", "embedding", "bucket", l2_norm(F.col("embedding")).alias("_n"))
-    )
-    scored = corpus.join(
-        F.broadcast(probes.withColumn("_qn", l2_norm(F.col("_qv")))), "bucket"
-    ).select(
-        "query_id",
-        "vec_id",
-        _cos_pre(F.col("embedding"), F.col("_qv"), F.col("_n"), F.col("_qn")).alias("cos"),
     )
     win = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
@@ -596,11 +443,11 @@ def rp_signature(vec_col, planes: list[list[float]]):
 
 def rp_lsh_near_dup_pairs(
     emb: DataFrame,
+    dim: int,
     threshold: float = 0.95,
     n_bits: int = 32,
     max_hamming: int = 6,
     seed: int = 11,
-    dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -619,14 +466,14 @@ def rp_lsh_near_dup_pairs(
     P[Hamming <= 6] > 0.97 per pair (measured in tests). More bits buy
     recall at scale; the blocking contract itself is threshold-derived,
     as in :func:`blurrily_spark.operators.dedup.simhash_near_dups`.
+
+    ``dim`` is the vector length; the caller knows it, so building the
+    plan reads no row.
     """
     from blurrily_spark.functions.hashing import chunk_bounds
 
     from blurrily_spark.config import spread_small_input
 
-    if dim is None:
-        first = emb.select(F.size(vec_col)).first()
-        dim = int(first[0])
     planes = random_hyperplanes(n_bits, dim, seed)
     sigs = spread_small_input(emb).select(
         F.col(id_col).alias("id"),

@@ -28,7 +28,7 @@ Latency: the reference answers FIND in 1-2 ms and PUT in about 100 µs
 ``api.Map`` has the same design -- an in-process trigram index that never
 launches a Spark job -- so a round trip costs the tokenizer, one
 ``np.bincount`` over the needle's posting lists and the socket. The
-server needs no Spark session; Spark stays the batch/streaming path
+server needs no Spark session; Spark stays the batch path
 (operators/, plans/) for corpora beyond one process's memory, and reads
 the same parquet snapshots the server saves. The server reports a count
 and total seconds per command through ``command_stats()``.

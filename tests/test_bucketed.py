@@ -100,46 +100,6 @@ def test_find_against_bucketed_table_plan(spark, tmp_path):
     assert out.count() > 0
 
 
-def test_bucketed_banded_reference_join_has_no_history_shuffle(spark, tmp_path):
-    """The streaming/cross-corpus dedup claim: a reference signature table
-    bucketed by the banded join's exact keys (band, bhash) joins incoming
-    banded batches with NO exchange on the stored side -- only the small
-    new batch repartitions. (A bhash-only layout does NOT qualify: Spark's
-    co-partitioning check refuses subset bucketing.)"""
-    from blurrily_spark.operators import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    dedup.save_banded_signatures_bucketed(
-        docs, "banded_ref_t1", str(tmp_path / "br"), buckets=8,
-        num_hashes=16, bands=4, hash_fn="fast",
-    )
-    new_banded = dedup.banded_signatures(
-        dedup.minhash_signatures(
-            docs.limit(50), num_hashes=16, hash_fn="fast"
-        ),
-        16,
-        4,
-    ).withColumn("id", F.col("id").cast("long"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        stored = spark.table("banded_ref_t1")
-        cand = dedup._banded_candidates(
-            new_banded, stored, 16, 4, left_id="new_id", right_id="ref_id"
-        )
-        plan = cand._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan, plan[:2000]
-        # exactly ONE hash exchange: the new batch repartitioning to meet
-        # the bucketed side; the stored reference must not shuffle
-        assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
-        assert cand.count() > 0  # both docs sets overlap -> candidates exist
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_bucketed_knn_join_has_no_join_shuffle(spark, tmp_path):
     """knn_join over the bucketed stored layout (the bench's q_knn_join
     shape): the directed self-join must be exchange-free on both sides --

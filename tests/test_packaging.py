@@ -50,3 +50,86 @@ def test_pyfiles_zip_imports_like_an_executor(tmp_path):
     loc, name = proc.stdout.strip().splitlines()
     assert loc.startswith(zpath + os.sep), loc
     assert name == "blurrily_spark.plans.pipeline"
+
+
+def _reached_modules(root: str) -> set[str]:
+    """Repo modules the non-test entry points import, transitively.
+
+    The roots are ``bench.py``, ``__spark_entry__.py``, ``perfbench/*.py``
+    and ``scripts/*.py`` (``test_*`` files excluded). Every ``import`` and
+    ``from ... import`` node counts, including those inside function
+    bodies. Reaching a submodule reaches its parent packages' ``__init__``
+    too, as importing it executes them. Returns repo-relative paths.
+    """
+    import ast
+    import glob
+
+    def resolve(name: str, from_dir: str) -> str | None:
+        # a dotted name against the repo root, or a bare name against the
+        # importing script's own directory (it is sys.path[0] when run)
+        for base in (root, from_dir):
+            stem = os.path.join(base, *name.split("."))
+            for cand in (stem + ".py", os.path.join(stem, "__init__.py")):
+                if os.path.isfile(cand):
+                    return os.path.relpath(cand, root)
+        return None
+
+    def with_parents(name: str) -> list[str]:
+        parts = name.split(".")
+        return [".".join(parts[: i + 1]) for i in range(len(parts))]
+
+    def imported_names(rel: str) -> list[str]:
+        path = os.path.join(root, rel)
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        pkg = os.path.dirname(rel).split(os.sep)
+        names: list[str] = []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    names.extend(with_parents(a.name))
+            elif isinstance(node, ast.ImportFrom):
+                # level 1 is the importing module's package, 2 its parent
+                base = pkg[: len(pkg) - node.level + 1] if node.level else []
+                mod = ".".join(base + ([node.module] if node.module else []))
+                names.extend(with_parents(mod))
+                # "from pkg import name" imports the submodule pkg.name if any
+                names.extend(f"{mod}.{a.name}" for a in node.names)
+        return names
+
+    roots = [os.path.join(root, "bench.py"), os.path.join(root, "__spark_entry__.py")]
+    for d in ("perfbench", "scripts"):
+        roots += sorted(glob.glob(os.path.join(root, d, "*.py")))
+    todo = [
+        os.path.relpath(p, root)
+        for p in roots
+        if not os.path.basename(p).startswith("test_")
+    ]
+    seen: set[str] = set()
+    while todo:
+        rel = todo.pop()
+        if rel in seen:
+            continue
+        seen.add(rel)
+        here = os.path.join(root, os.path.dirname(rel))
+        for name in imported_names(rel):
+            hit = resolve(name, here)
+            if hit is not None and hit not in seen:
+                todo.append(hit)
+    return seen
+
+
+def test_every_package_module_is_reached_from_a_non_test_root():
+    """Code that only tests import is not part of the engine: every module
+    under ``blurrily_spark/`` must be imported, directly or transitively,
+    by the benchmark, the entry point, perfbench or a script."""
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    reached = _reached_modules(root)
+    package = {
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, "blurrily_spark", "**", "*.py"), recursive=True)
+    }
+    assert "blurrily_spark/plans/pipeline.py" in reached
+    assert sorted(package - reached) == []

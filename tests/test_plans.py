@@ -11,8 +11,8 @@ or degrades a join strategy fails CI instead of shipping:
   pushdown), its gather join broadcasts the needle side;
 * brute-force cosine scoring broadcasts the query batch -- never a
   CartesianProduct;
-* building the span, meta-blocking and LM-scoring operators launches no
-  Spark job and keeps a streaming input streaming.
+* building the span, meta-blocking, LM-scoring and RP-LSH operators
+  launches no Spark job and keeps a streaming input streaming.
 """
 
 from __future__ import annotations
@@ -170,7 +170,15 @@ EDGES_SCHEMA = "ref_a long, ref_b long, matches long"
 
 
 def _lazy_operator_cases():
-    from blurrily_spark.operators import corpus, dedup, pairs
+    from pyspark.sql import functions as F
+
+    from blurrily_spark.operators import corpus, dedup, pairs, similarity
+
+    def vectors(d):
+        return d.select(
+            F.col("doc_id").alias("vec_id"),
+            F.array(F.length("text").cast("double"), F.lit(1.0)).alias("embedding"),
+        )
 
     return {
         "duplicate_spans_exact": lambda d, e: dedup.duplicate_spans(d, w=3),
@@ -184,6 +192,9 @@ def _lazy_operator_cases():
         "lm_score": lambda d, e: corpus.lm_score(d, d),
         "meta_blocking_wnp": lambda d, e: pairs.meta_blocking_prune(e, scheme="wnp"),
         "meta_blocking_wep": lambda d, e: pairs.meta_blocking_prune(e, scheme="wep"),
+        "rp_lsh_near_dup_pairs": lambda d, e: similarity.rp_lsh_near_dup_pairs(
+            vectors(d), dim=2
+        ),
     }
 
 
