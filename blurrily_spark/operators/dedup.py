@@ -543,6 +543,22 @@ def _span_occurrences(
     )
 
 
+def _one_null_id(op: str, doc_id: Column, n_docs: Column) -> Column:
+    """Filter predicate that fails the query when two or more documents
+    have a NULL id: the per-document rollups group by id, so they would be
+    merged into one document."""
+    return F.when(
+        doc_id.isNull() & (n_docs > 1),
+        F.raise_error(
+            F.concat(
+                F.lit(f"{op}: "),
+                n_docs.cast("string"),
+                F.lit(" documents have a NULL id; give each document its own id"),
+            )
+        ),
+    ).otherwise(F.lit(True))
+
+
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -580,7 +596,8 @@ def duplicate_spans(
     ``xxhash64`` window keys instead of the w-word strings (the default
     'exact' keeps raw windows so the DuckDB oracle can reproduce the
     result bit-for-bit). Documents shorter than ``w`` words contribute
-    their whole text as one window.
+    their whole text as one window. At most one document may have a NULL
+    id; with two or more the query fails.
     """
     occ = _span_occurrences(
         df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
@@ -588,6 +605,10 @@ def duplicate_spans(
     return occ.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum(F.col("_dup").cast("long")).alias("n_dup_windows"),
+        # every document has exactly one window at word 0
+        F.count_if(F.col("start_word") == 0).alias("_docs"),
+    ).where(
+        _one_null_id("duplicate_spans", F.col("id"), F.col("_docs"))
     ).select(
         "id",
         "n_windows",
@@ -641,64 +662,67 @@ def cut_duplicate_spans(
     """Cut-and-keep pass: remove every word covered by a duplicated
     ``w``-word window and reassemble the remaining text in order.
 
-    Returns one row per input document:
+    Returns one row per document id:
     ``(id, kept_text, n_words, n_kept_words)`` -- a fully-duplicated
     document keeps an empty string (the cross-doc boilerplate is gone;
     doc-level dedup would instead have dropped whole documents that also
-    carried unique content).
+    carried unique content). At most one document may have a NULL id;
+    with two or more the query fails.
 
     Scale shape: duplicated occurrences (the one-pass flagging of
     :func:`duplicate_span_positions`, without the span text) -> covered
     word positions (explode of at most w per occurrence, deduped on
-    (id, pos)) -> one anti-join against the document's indexed words ->
-    one per-doc aggregation that rebuilds the text (sort_array over
-    (pos, word) structs; bounded by the document length, which the input
-    row already holds). No pairwise work anywhere, and no job before the
-    action.
+    (id, pos)) -> one outer join against the document's indexed words ->
+    one per-doc aggregation that counts the words and rebuilds the text
+    from the uncovered ones (sort_array over (pos, word) structs; bounded
+    by the document length, which the input row already holds). No
+    pairwise work anywhere, and no job before the action.
     """
     positions = _span_occurrences(
         df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
     ).where("_dup")
     d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
+    # outer: a NULL-text document keeps one row, with NULL pos and word
     wordpos = d.select(
         F.col(id_col).cast("long").alias("id"),
-        F.posexplode(words).alias("pos", "word"),
+        F.size(words).cast("long").alias("_n_words"),
+        F.posexplode_outer(words).alias("pos", "word"),
     )
     covered = positions.select(
-        "id",
+        F.col("id").alias("_cid"),
         F.explode(
             F.sequence(F.col("start_word"), F.col("start_word") + F.lit(w - 1))
-        ).alias("pos"),
+        ).alias("_cpos"),
     ).distinct()
     # null-safe id equality: a NULL-id document is still a document whose
     # words are cut and rebuilt (plain equality never matches NULL)
-    kept = wordpos.join(
+    marked = wordpos.join(
         covered,
-        wordpos["id"].eqNullSafe(covered["id"]) & (wordpos["pos"] == covered["pos"]),
-        "left_anti",
+        wordpos["id"].eqNullSafe(covered["_cid"]) & (wordpos["pos"] == covered["_cpos"]),
+        "left",
     )
-    rebuilt = kept.groupBy("id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                lambda s: s["word"],
-            ),
-        ).alias("kept_text"),
-        F.count(F.lit(1)).alias("n_kept_words"),
-    )
-    totals = d.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.size(words).cast("long").alias("n_words"),
-    )
-    return totals.join(
-        rebuilt, totals["id"].eqNullSafe(rebuilt["id"]), "left"
-    ).select(
-        totals["id"],
-        F.coalesce("kept_text", F.lit("")).alias("kept_text"),
-        "n_words",
-        F.coalesce("n_kept_words", F.lit(0)).alias("n_kept_words"),
+    kept = F.col("_cpos").isNull() & F.col("word").isNotNull()
+    # every document has exactly one row at word 0, or one NULL-pos row
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    return (
+        # only kept words and one row per document reach the aggregation
+        marked.where(kept | first)
+        .groupBy("id")
+        .agg(
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.array_sort(F.collect_list(F.when(kept, F.struct("pos", "word")))),
+                    lambda s: s["word"],
+                ),
+            ).alias("kept_text"),
+            F.max("_n_words").alias("n_words"),
+            F.count_if(kept).alias("n_kept_words"),
+            F.count_if(first).alias("_docs"),
+        )
+        .where(_one_null_id("cut_duplicate_spans", F.col("id"), F.col("_docs")))
+        .select("id", "kept_text", "n_words", "n_kept_words")
     )
 
 

@@ -77,7 +77,6 @@ def candidate_pairs(
     salt_buckets: int | None = None,
     keys_only: bool = False,
     hot_df: int | None = None,
-    hot_keys: list | None = None,
 ) -> DataFrame:
     """All candidate pairs sharing >= min_matches trigrams.
 
@@ -102,10 +101,7 @@ def candidate_pairs(
     pair multiset (each posting row lands in exactly one branch, so each
     (trigram, pair) match is produced exactly once). Note the hot-key scan
     runs an eager aggregation job at plan-build time when salting is
-    requested; callers that already ran :func:`hot_trigrams` (e.g. the
-    linkage pipeline, which records the decision in its metrics) pass the
-    list through ``hot_keys`` to skip the recomputation -- an explicitly
-    empty list means "nothing is hot, join plainly"."""
+    requested."""
     if keys_only and min_matches > 1:
         raise ValueError("keys_only candidate generation cannot apply min_matches")
     cols = ["trigram", "ref"] if keys_only else ["trigram", "ref", "weight"]
@@ -126,13 +122,9 @@ def candidate_pairs(
         *([] if keys_only else [F.col("weight").alias("weight_b")]),
     )
 
-    if hot_keys is None:
-        hot_keys = []
-        if salt_buckets and salt_buckets > 1:
-            hot_keys, _ = hot_trigrams(p, salt_buckets, hot_df)
-    elif hot_keys and not (salt_buckets and salt_buckets > 1):
-        raise ValueError("hot_keys requires salt_buckets > 1")
-
+    hot_keys = []
+    if salt_buckets and salt_buckets > 1:
+        hot_keys, _ = hot_trigrams(p, salt_buckets, hot_df)
     if hot_keys:
         b = int(salt_buckets)
         is_hot = F.col("trigram").isin(hot_keys)  # InSet over <= 21952 codes

@@ -80,11 +80,7 @@ def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    records: DataFrame,
-    compute_jw: bool = True,
-) -> DataFrame:
+def score_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
     """Attach score components to candidate pairs.
 
     ``records`` is ``(ref, norm)`` (+ optionally ``n_trigrams``) -- the
@@ -92,32 +88,24 @@ def score_pairs(
     never stores strings, README.md:125-127, so text-based tie-breaking is
     an extension that needs this side table).
 
-    Returns pairs + ``weight_delta`` (+ ``jw`` when requested). Ordering
-    convention for consumers: (matches DESC, weight_delta ASC, jw DESC,
-    ref_a ASC, ref_b ASC).
+    Returns pairs + ``weight_delta`` + ``jw``. Ordering convention for
+    consumers: (matches DESC, weight_delta ASC, jw DESC, ref_a ASC,
+    ref_b ASC).
     """
-    out = pairs.withColumn(
-        "weight_delta", F.abs(F.col("weight_a") - F.col("weight_b"))
-    )
-    if compute_jw:
-        texts = records.select(F.col("ref"), F.col("norm"))
-        out = (
-            out.join(
-                texts.withColumnRenamed("ref", "ref_a").withColumnRenamed(
-                    "norm", "_norm_a"
-                ),
-                "ref_a",
-            )
-            .join(
-                texts.withColumnRenamed("ref", "ref_b").withColumnRenamed(
-                    "norm", "_norm_b"
-                ),
-                "ref_b",
-            )
-            .withColumn("jw", jaro_winkler("_norm_a", "_norm_b"))
-            .drop("_norm_a", "_norm_b")
+    texts = records.select(F.col("ref"), F.col("norm"))
+    return (
+        pairs.withColumn("weight_delta", F.abs(F.col("weight_a") - F.col("weight_b")))
+        .join(
+            texts.withColumnRenamed("ref", "ref_a").withColumnRenamed("norm", "_norm_a"),
+            "ref_a",
         )
-    return out
+        .join(
+            texts.withColumnRenamed("ref", "ref_b").withColumnRenamed("norm", "_norm_b"),
+            "ref_b",
+        )
+        .withColumn("jw", jaro_winkler("_norm_a", "_norm_b"))
+        .drop("_norm_a", "_norm_b")
+    )
 
 
 def with_edit_distance(
@@ -213,19 +201,12 @@ def with_edit_distance(
 
 
 def match_edges(
-    scored_pairs: DataFrame,
-    jaccard_threshold: float | None = None,
-    min_matches: int | None = None,
-    jw_threshold: float | None = None,
+    scored_pairs: DataFrame, jaccard_threshold: float | None = None
 ) -> DataFrame:
     """Thresholded match decisions -> edge list for clustering."""
     out = scored_pairs
     if jaccard_threshold is not None:
         out = out.where(F.col("jaccard") >= jaccard_threshold)
-    if min_matches is not None:
-        out = out.where(F.col("matches") >= min_matches)
-    if jw_threshold is not None:
-        out = out.where(F.col("jw") >= jw_threshold)
     return out.select(F.col("ref_a").alias("src"), F.col("ref_b").alias("dst"))
 
 

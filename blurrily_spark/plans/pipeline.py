@@ -5,7 +5,6 @@ transcripts -> turns (normalize + entity refs + trigram array)
             -> pairs (blocking self-join + jaccard)
             -> scores (weight-delta + Jaro-Winkler tie-break)
             -> edges (threshold) -> entities (connected components)
-            -> golden (optional survivorship: one canonical record/entity)
 
 Each turn is tokenized once, in the turns stage, as the reference
 tokenizes a record once at PUT and scores every later match from the
@@ -51,11 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from blurrily_spark.functions.tokenizer import add_trigrams, with_normalized
-from blurrily_spark.operators.cluster import assign_entities, golden_records
-from blurrily_spark.operators.find import knn_join
+from blurrily_spark.operators.cluster import assign_entities
 from blurrily_spark.operators.pairs import (
     candidate_pairs,
-    hot_trigrams,
     rescore_pairs_exact,
     with_jaccard,
 )
@@ -171,12 +168,10 @@ class LinkagePipeline:
     """Staged, resumable run of the full linkage dataflow."""
 
     STAGES = ("turns", "postings", "pairs", "scores", "edges", "entities")
-    # "golden" joins STAGES at runtime only when golden=True is configured
     # Version of the stage tables' columns, part of every fingerprint: a
     # workdir written under another layout reruns instead of resuming into
     # tables this code cannot read. 2: turns carries ``trigrams``.
     LAYOUT = 2
-    AUTO_SALT_BUCKETS = 8  # bucket count used when salt_buckets="auto" fires
 
     def __init__(
         self,
@@ -185,49 +180,13 @@ class LinkagePipeline:
         jaccard_threshold: float = 0.6,
         min_matches: int = 2,
         max_df: int | None = None,
-        salt_buckets: int | str | None = "auto",
-        compute_jw: bool = True,
-        jw_threshold: float | None = None,
-        golden: bool = False,
-        candidate_mode: str = "threshold",
-        knn_k: int = 20,
     ):
-        # candidate_mode="knn": candidate generation via the per-record
-        # top-k similarity join (knn_join) instead of the full blocking
-        # self-join. The candidate set is then BOUNDED at n*knn_k pairs by
-        # construction -- the property thresholded blocking cannot offer at
-        # 10^12 turns, where a popular template's pair output is quadratic
-        # no matter the threshold. Exact matches/jaccard are restored per
-        # candidate (rescore_pairs_exact), so downstream thresholds keep
-        # their exact semantics; recall differs from "threshold" mode only
-        # for records with more than knn_k true near-dups (those pairs are
-        # still merged transitively by connected components whenever the
-        # kNN graph keeps each record connected to SOME duplicate).
-        if candidate_mode not in ("threshold", "knn"):
-            raise ValueError(f"unknown candidate_mode: {candidate_mode!r}")
-        # salt_buckets="auto" (the default): the pipeline self-protects
-        # against trigram skew. It runs hot_trigrams() over the postings
-        # stage (one map-side-combined agg to <= 28^3 rows, driver-cheap)
-        # and salts AUTO_SALT_BUCKETS ways exactly those keys whose own
-        # pair output d(d-1)/2 exceeds a shuffle task's fair share
-        # (d > sqrt(sum(df^2)/shuffle_partitions), floored at 2B -- the
-        # documented threshold, see hot_trigrams). A uniform corpus yields
-        # an empty hot list and the plain single-join plan; a skewed one
-        # activates the salted branch for its heavy keys only. The
-        # decision is recorded in metrics["pairs_salting"]. Pass an int to
-        # force the bucket count, or None/0 to disable skew protection.
         self.spark = spark
         self.workdir = workdir
         self.config = {
             "jaccard_threshold": jaccard_threshold,
             "min_matches": min_matches,
             "max_df": max_df,
-            "salt_buckets": salt_buckets,
-            "compute_jw": compute_jw,
-            "jw_threshold": jw_threshold,
-            "golden": golden,
-            "candidate_mode": candidate_mode,
-            "knn_k": knn_k,
         }
         self.metrics: dict[str, dict] = {}
         self._input_ident: dict | None = None
@@ -285,46 +244,6 @@ class LinkagePipeline:
             fh.write(self._fingerprint(stage))
         return out
 
-    def _resolve_salting(self, postings: DataFrame) -> tuple[int | None, list | None]:
-        """(salt_buckets, hot_keys) for candidate_pairs, per the configured
-        skew policy; records the decision in metrics["pairs_salting"]."""
-        sb = self.config["salt_buckets"]
-        if not sb:
-            return None, None
-        b = self.AUTO_SALT_BUCKETS if sb == "auto" else int(sb)
-        max_df = self.config["max_df"]
-        if max_df:
-            # Two-phase blocking already caps every key's generation df at
-            # max_df: a "hot" trigram (df far above any sane max_df) never
-            # reaches the self-join, so salting has nothing to protect and
-            # hot_trigrams()'s full-postings aggregation pass would be pure
-            # waste (plus an always-empty second join branch in the plan).
-            # The capped join's per-key output is bounded at max_df^2 --
-            # skew-immune by construction.
-            self.metrics["pairs_salting"] = {
-                "buckets": b,
-                "hot_df_threshold": None,
-                "hot_key_count": 0,
-                "active": False,
-                "reason": f"max_df={max_df} caps per-key generation; "
-                "capped join is skew-immune",
-            }
-            return None, None
-        hot, threshold = hot_trigrams(postings, b)
-        self.metrics["pairs_salting"] = {
-            "buckets": b,
-            "hot_df_threshold": threshold,
-            "hot_key_count": len(hot),
-            "active": bool(hot),
-        }
-        return (b if hot else None), hot
-
-    def _rescore_recs(self, turns: DataFrame) -> DataFrame:
-        """(ref, trigrams, weight) side table for rescore_pairs_exact, read
-        from the written turns table: the rescore joins the arrays the
-        turns stage stored on ref_a and ref_b, and tokenizes nothing."""
-        return turns.select("ref", "trigrams", "weight")
-
     def _load_or(self, stage: str, build) -> DataFrame:
         if self._is_done(stage):
             out = self.spark.read.parquet(self._path(stage))
@@ -359,34 +278,6 @@ class LinkagePipeline:
 
         def _pairs():
             max_df = self.config["max_df"]
-            if self.config["candidate_mode"] == "knn":
-                # Bounded candidate generation: each record keeps its top-k
-                # FIND matches (directed), folded to unordered pair keys.
-                # Skew protection is inherent (<= k output rows per query
-                # record regardless of any trigram's df), so the salting
-                # machinery stays out of this plan.
-                self.metrics["pairs_salting"] = {
-                    "buckets": 0,
-                    "hot_df_threshold": None,
-                    "hot_key_count": 0,
-                    "active": False,
-                    # OUTPUT is k-bounded per record; the directed trigram
-                    # join's WORK under a hot key is bounded only when
-                    # max_df caps it -- set max_df on skewed corpora
-                    "reason": (
-                        f"knn candidate OUTPUT is bounded at k={self.config['knn_k']} "
-                        f"per record; join work under hot trigrams is capped by "
-                        f"max_df={max_df}" + ("" if max_df else " (unset: uncapped)")
-                    ),
-                }
-                knn = knn_join(postings, k=self.config["knn_k"], max_df=max_df)
-                cand = knn.select(
-                    F.least("query_ref", "ref").alias("ref_a"),
-                    F.greatest("query_ref", "ref").alias("ref_b"),
-                ).distinct()
-                exact = rescore_pairs_exact(cand, self._rescore_recs(turns))
-                return exact.where(F.col("matches") >= self.config["min_matches"])
-            salt_b, hot_keys = self._resolve_salting(postings)
             if max_df:
                 # Two-phase blocking (the scale path): hot trigrams are
                 # excluded from candidate *generation* (bounding the
@@ -398,21 +289,18 @@ class LinkagePipeline:
                     postings,
                     min_matches=1,
                     max_df=max_df,
-                    salt_buckets=salt_b,
-                    hot_keys=hot_keys,
                     # phase 2 recomputes matches/weights exactly, so phase 1
                     # ships bare (ref_a, ref_b) through the pair-dedup
                     # shuffle -- the pipeline's dominant shuffle
                     keys_only=True,
                 )
-                exact = rescore_pairs_exact(cand, self._rescore_recs(turns))
+                # phase 2 joins the trigram arrays the turns stage stored on
+                # ref_a and ref_b, and tokenizes nothing
+                exact = rescore_pairs_exact(
+                    cand, turns.select("ref", "trigrams", "weight")
+                )
                 return exact.where(F.col("matches") >= self.config["min_matches"])
-            raw = candidate_pairs(
-                postings,
-                min_matches=self.config["min_matches"],
-                salt_buckets=salt_b,
-                hot_keys=hot_keys,
-            )
+            raw = candidate_pairs(postings, min_matches=self.config["min_matches"])
             return with_jaccard(raw, postings)
 
         pairs = self._load_or("pairs", _pairs)
@@ -427,16 +315,11 @@ class LinkagePipeline:
                 F.col("jaccard") >= self.config["jaccard_threshold"]
             )
             records = turns.select("ref", "norm")
-            return score_pairs(
-                survivors, records, compute_jw=self.config["compute_jw"]
-            )
+            return score_pairs(survivors, records)
 
         scores = self._load_or("scores", _scores)
 
-        def _edges():
-            return match_edges(scores, jw_threshold=self.config["jw_threshold"])
-
-        edges = self._load_or("edges", _edges)
+        edges = self._load_or("edges", lambda: match_edges(scores))
 
         def _entities():
             assignments = assign_entities(turns.select("ref"), edges)
@@ -446,21 +329,6 @@ class LinkagePipeline:
 
         entities = self._load_or("entities", _entities)
 
-        # Optional survivorship tail: one canonical turn per entity
-        # (longest normalized text, ties to lowest ref -- a deterministic
-        # election, so resumes and re-runs agree). Exposed as its own
-        # resumable stage because at scale the golden table is the
-        # published artifact; the per-turn assignment is lineage.
-        self.golden_df: DataFrame | None = None
-        if self.config["golden"]:
-            self.golden_df = self._load_or(
-                "golden",
-                lambda: golden_records(
-                    turns.select("ref", F.col("norm").alias("text")),
-                    entities.select("ref", "entity_id"),
-                ),
-            )
-
         manifest = {
             "config": self.config,
             "stages": self.metrics,
@@ -469,8 +337,3 @@ class LinkagePipeline:
             json.dump(manifest, fh, indent=2, default=str)
         return entities
 
-
-def run_pipeline(
-    spark: SparkSession, transcripts: DataFrame, workdir: str, **config
-) -> DataFrame:
-    return LinkagePipeline(spark, workdir, **config).run(transcripts)

@@ -51,7 +51,13 @@ import socketserver
 import threading
 from typing import TYPE_CHECKING
 
-from blurrily_spark.api import REF_RANGE, WEIGHT_RANGE, CommandProcessor, MapGroup
+from blurrily_spark.api import (
+    WEIGHT_RANGE,
+    CommandProcessor,
+    MapGroup,
+    validate_needle,
+    validate_ref,
+)
 from blurrily_spark.config import LIMIT_DEFAULT, LIMIT_RANGE
 
 if TYPE_CHECKING:
@@ -237,21 +243,21 @@ class BlurrilyClient:
     def find(self, needle: str, limit: int | None = None) -> list[list[int]]:
         if limit is None:
             limit = LIMIT_DEFAULT
-        self._check_needle(needle)
+        validate_needle(needle)
         if not LIMIT_RANGE[0] <= limit <= LIMIT_RANGE[1]:
             raise ValueError(f"LIMIT value must be in {LIMIT_RANGE[0]}..{LIMIT_RANGE[1]}")
         flat = [int(x) for x in self._send(["FIND", self._db, needle, limit])]
         return [flat[i : i + 3] for i in range(0, len(flat), 3)]
 
     def put(self, needle: str, ref: int, weight: int = 0) -> None:
-        self._check_needle(needle)
-        self._check_ref(ref)
+        validate_needle(needle)
+        validate_ref(ref)
         if not WEIGHT_RANGE[0] <= weight <= WEIGHT_RANGE[1]:
             raise ValueError(f"WEIGHT value must be in {WEIGHT_RANGE[0]}..{WEIGHT_RANGE[1]}")
         self._send(["PUT", self._db, needle, ref, weight])
 
     def delete(self, ref: int) -> None:
-        self._check_ref(ref)
+        validate_ref(ref)
         self._send(["DELETE", self._db, ref])
 
     def clear(self) -> None:
@@ -272,16 +278,6 @@ class BlurrilyClient:
         self.close()
 
     # -- internals ---------------------------------------------------------
-
-    @staticmethod
-    def _check_needle(needle) -> None:
-        if not isinstance(needle, str) or not needle or "\t" in needle:
-            raise ValueError("bad needle")
-
-    @staticmethod
-    def _check_ref(ref) -> None:
-        if not isinstance(ref, int) or not REF_RANGE[0] <= ref <= REF_RANGE[1]:
-            raise ValueError(f"REF value must be in {REF_RANGE[0]}..{REF_RANGE[1]}")
 
     def _connection(self):
         if self._sock is None:

@@ -82,7 +82,6 @@ try:
         "pairs_per_sec": round(n_pairs / wall, 1),
         "turns_per_sec": round(n_turns / wall, 1),
         "stage_secs": {{k: v["seconds"] for k, v in m.items() if "seconds" in v}},
-        "salting": m.get("pairs_salting"),
         "entities_rows": n_entities,
     }}))
 finally:

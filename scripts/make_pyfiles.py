@@ -16,8 +16,8 @@ executors. The driver script stays outside the zip (``--py-files`` extends
 
 where ``your_job.py`` does e.g.::
 
-    from blurrily_spark.plans.pipeline import run_pipeline
-    entities = run_pipeline(spark, transcripts, workdir, max_df=500)
+    from blurrily_spark.plans.pipeline import LinkagePipeline
+    entities = LinkagePipeline(spark, workdir, max_df=500).run(transcripts)
 
 No hard-coded master/parallelism lives in the package itself
 (``blurrily_spark/config.py`` leaves ``master`` to the submitter), so the

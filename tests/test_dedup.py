@@ -6,6 +6,8 @@ entry-oracle gate (tests/test_entry_oracle.py::test_query_matches_oracle
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from blurrily_spark.functions.tokenizer import with_normalized
@@ -307,6 +309,15 @@ def test_span_cut_randomized_python_oracle(spark):
             ).collect()
         }
         assert got_kept == exp_kept, f"kept-text mismatch (trial {trial}, w={w})"
+
+    # one NULL id is a document of its own (the None key above); two would
+    # fall into one id group and merge, so both rollups fail instead
+    two_null = spark.createDataFrame(
+        [(None, "p q r"), (None, "s t u v")], "doc_id long, text string"
+    )
+    for op in (dedup.duplicate_spans, dedup.cut_duplicate_spans):
+        with pytest.raises(SparkRuntimeException, match="2 documents have a NULL id"):
+            op(two_null, w=2).collect()
 
 
 def test_fully_duplicated_doc_cuts_to_empty(spark):

@@ -52,17 +52,30 @@ def test_pyfiles_zip_imports_like_an_executor(tmp_path):
     assert name == "blurrily_spark.plans.pipeline"
 
 
-def _reached_modules(root: str) -> set[str]:
-    """Repo modules the non-test entry points import, transitively.
+def _root_files(root: str) -> list[str]:
+    """Repo-relative paths of the non-test entry points: ``bench.py``,
+    ``__spark_entry__.py``, ``perfbench/*.py`` and ``scripts/*.py``
+    (``test_*`` files excluded)."""
+    import glob
 
-    The roots are ``bench.py``, ``__spark_entry__.py``, ``perfbench/*.py``
-    and ``scripts/*.py`` (``test_*`` files excluded). Every ``import`` and
+    roots = [os.path.join(root, "bench.py"), os.path.join(root, "__spark_entry__.py")]
+    for d in ("perfbench", "scripts"):
+        roots += sorted(glob.glob(os.path.join(root, d, "*.py")))
+    return [
+        os.path.relpath(p, root)
+        for p in roots
+        if not os.path.basename(p).startswith("test_")
+    ]
+
+
+def _reached_modules(root: str) -> set[str]:
+    """Repo modules the non-test entry points (:func:`_root_files`)
+    import, transitively. Every ``import`` and
     ``from ... import`` node counts, including those inside function
     bodies. Reaching a submodule reaches its parent packages' ``__init__``
     too, as importing it executes them. Returns repo-relative paths.
     """
     import ast
-    import glob
 
     def resolve(name: str, from_dir: str) -> str | None:
         # a dotted name against the repo root, or a bare name against the
@@ -97,14 +110,7 @@ def _reached_modules(root: str) -> set[str]:
                 names.extend(f"{mod}.{a.name}" for a in node.names)
         return names
 
-    roots = [os.path.join(root, "bench.py"), os.path.join(root, "__spark_entry__.py")]
-    for d in ("perfbench", "scripts"):
-        roots += sorted(glob.glob(os.path.join(root, d, "*.py")))
-    todo = [
-        os.path.relpath(p, root)
-        for p in roots
-        if not os.path.basename(p).startswith("test_")
-    ]
+    todo = _root_files(root)
     seen: set[str] = set()
     while todo:
         rel = todo.pop()
@@ -133,3 +139,49 @@ def test_every_package_module_is_reached_from_a_non_test_root():
     }
     assert "blurrily_spark/plans/pipeline.py" in reached
     assert sorted(package - reached) == []
+
+
+def _pipeline_options_passed(root: str, params: list[str]) -> set[str]:
+    """Names of the ``LinkagePipeline`` parameters (``params``, in order)
+    some non-test root passes: keywords, positional arguments, and the
+    keys of a ``**name`` whose ``name`` (or ``self.name``) is assigned a
+    ``dict(...)`` call or a dict literal in the same file."""
+    import ast
+
+    def name_of(node) -> str | None:
+        return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+
+    passed: set[str] = set()
+    for rel in _root_files(root):
+        with open(os.path.join(root, rel), encoding="utf-8") as f:
+            nodes = list(ast.walk(ast.parse(f.read())))
+        dicts: dict[str, list[str]] = {}
+        for node in nodes:
+            if isinstance(node, ast.Assign) and len(node.targets) == 1:
+                v = node.value
+                if isinstance(v, ast.Call) and name_of(v.func) == "dict":
+                    dicts[name_of(node.targets[0])] = [k.arg for k in v.keywords]
+                elif isinstance(v, ast.Dict):
+                    dicts[name_of(node.targets[0])] = [
+                        k.value for k in v.keys if isinstance(k, ast.Constant)
+                    ]
+        for node in nodes:
+            if isinstance(node, ast.Call) and name_of(node.func) == "LinkagePipeline":
+                passed.update(params[: len(node.args)])
+                for k in node.keywords:
+                    passed.update([k.arg] if k.arg else dicts.get(name_of(k.value), []))
+    return passed
+
+
+def test_every_pipeline_option_is_passed_by_a_non_test_root():
+    """An option that only tests set selects a code path only tests reach:
+    every keyword of ``LinkagePipeline.__init__`` must be passed by the
+    benchmark, the entry point, perfbench or a script."""
+    import inspect
+
+    from blurrily_spark.plans.pipeline import LinkagePipeline
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    params = list(inspect.signature(LinkagePipeline).parameters)
+    options = set(params) - {"spark", "workdir"}
+    assert sorted(options - _pipeline_options_passed(root, params)) == []

@@ -124,7 +124,7 @@ def test_score_pairs_jw_matches_python(spark):
     postings = build_postings(haystack_df, order_col="seq")
     records = prepare_needles(haystack_df, order_col="seq").select("ref", "norm")
     pairs = with_jaccard(candidate_pairs(postings), postings)
-    scored = score_pairs(pairs, records, compute_jw=True).collect()
+    scored = score_pairs(pairs, records).collect()
     norm = {ref: normalize_py(text) for text, ref in HAYSTACK}
     for r in scored:
         exp = jaro_winkler_py(norm[r["ref_a"]], norm[r["ref_b"]])

@@ -69,12 +69,8 @@ def test_pipeline_end_to_end(spark, tmp_path):
 
     # --- manifest written with per-stage metrics
     manifest = json.load(open(os.path.join(str(tmp_path), "_manifest.json")))
-    assert set(manifest["stages"]) == set(LinkagePipeline.STAGES) | {"pairs_salting"}
-    assert all(
-        not s["skipped"]
-        for k, s in manifest["stages"].items()
-        if k in LinkagePipeline.STAGES
-    )
+    assert set(manifest["stages"]) == set(LinkagePipeline.STAGES)
+    assert not any(s["skipped"] for s in manifest["stages"].values())
 
     # --- per-partition lineage: every stage lists its output files with
     # footer-derived row counts that reconcile exactly with the observed
@@ -210,148 +206,68 @@ def _toy_transcripts(spark, n_docs, hot_docs=0, seed=7):
     return spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
 
 
-def test_pipeline_auto_salting_activates_on_skew_only(spark, tmp_path):
-    """Round-4 verdict #2: the pipeline's default salt_buckets="auto" is a
-    df-driven skew decision -- on a corpus with a dominant trigram the
-    salted (two-join union) plan activates for the hot keys only, on a
-    uniform corpus the plain single-join plan runs, and the decision is
-    recorded in the run manifest."""
+def test_hot_key_salting_on_skewed_postings(spark):
+    """Hot-key salting is a df-driven skew decision: on postings with a
+    dominant trigram the salted plan is a UNION of the plain cold join and
+    the salted hot join, on uniform postings nothing is hot, and salting
+    never changes the pair multiset."""
+    import re
+
     from blurrily_spark.operators.pairs import candidate_pairs, hot_trigrams
-    from blurrily_spark.plans.pipeline import build_turns, turns_to_postings
+    from blurrily_spark.plans.pipeline import turns_to_postings
 
-    # --- uniform: nothing hot, plain plan, pipeline still green
-    uni = _toy_transcripts(spark, 120, hot_docs=0)
-    pipe_u = LinkagePipeline(
-        spark, str(tmp_path / "uni"), min_matches=2, compute_jw=False
-    )
-    pipe_u.run(uni)
-    assert pipe_u.metrics["pairs_salting"]["active"] is False
-    assert pipe_u.metrics["pairs_salting"]["hot_key_count"] == 0
+    uniform = turns_to_postings(build_turns(_toy_transcripts(spark, 120)))
+    assert hot_trigrams(uniform, 8)[0] == []
 
-    # --- skewed: the shared-word trigrams cross the fair-share threshold
     # 200/500 docs share the word: its two trigrams reach df=205 against a
     # fair-share threshold of ~155 (the 100-doc variant's df=105 correctly
     # stays UNDER the ~127 threshold -- two keys at 105 are not a straggler)
-    skew = _toy_transcripts(spark, 500, hot_docs=200)
-    pipe_s = LinkagePipeline(
-        spark, str(tmp_path / "skew"), min_matches=2, compute_jw=False
-    )
-    pipe_s.run(skew)
-    m = pipe_s.metrics["pairs_salting"]
-    assert m["active"] is True and 1 <= m["hot_key_count"] <= 8
-    assert m["buckets"] == LinkagePipeline.AUTO_SALT_BUCKETS
-    # decision lands in the manifest
-    with open(os.path.join(str(tmp_path / "skew"), "_manifest.json")) as fh:
-        assert json.load(fh)["stages"]["pairs_salting"]["active"] is True
-
-    # --- plan shape (verdict #1's pin): hot-key salting = a UNION of the
-    # plain cold join and the salted hot join (the salt attribute only
-    # exists in the hot branch, so the salt column is the discriminator)
-    import re
-
-    postings = turns_to_postings(build_turns(skew))
-    hot, _thr = hot_trigrams(postings, LinkagePipeline.AUTO_SALT_BUCKETS)
-    assert hot
-    salted_plan = (
-        candidate_pairs(postings, salt_buckets=8, hot_keys=hot)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
+    postings = turns_to_postings(build_turns(_toy_transcripts(spark, 500, hot_docs=200)))
+    hot, _thr = hot_trigrams(postings, 8)
+    assert 1 <= len(hot) <= 8
+    salted = candidate_pairs(postings, salt_buckets=8)
+    salted_plan = salted._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" in salted_plan and re.search(r"\bsalt#", salted_plan)
-    plain_plan = (
-        candidate_pairs(postings)._jdf.queryExecution().optimizedPlan().toString()
-    )
+    plain = candidate_pairs(postings)
+    plain_plan = plain._jdf.queryExecution().optimizedPlan().toString()
     assert not re.search(r"\bsalt#", plain_plan)
-
-    # salting must not change the answer: pair multisets identical
-    a = sorted(map(tuple, candidate_pairs(postings, salt_buckets=8, hot_keys=hot).collect()))
-    b = sorted(map(tuple, candidate_pairs(postings).collect()))
-    assert a == b
+    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
-def test_pipeline_golden_stage(spark, tmp_path):
-    """golden=True appends a survivorship stage: exactly one canonical
-    record per entity, its ref a member of that entity, n_members summing
-    back to the turn count -- and the stage resumes like every other."""
-    from blurrily_spark.sources.synth import generate_transcripts
-
-    t = generate_transcripts(
-        spark, n_entities=6, variants_per_entity=3, turns_per_conv=3, seed=9
-    )
-    wd = str(tmp_path / "wd")
-    pipe = LinkagePipeline(
-        spark, wd, jaccard_threshold=0.5, min_matches=2, golden=True
-    )
-    entities = pipe.run(t)
-    golden = pipe.golden_df
-    assert golden is not None
-    g = golden.collect()
-    ents = entities.collect()
-    by_entity: dict[int, set[int]] = {}
-    for r in ents:
-        by_entity.setdefault(r["entity_id"], set()).add(r["ref"])
-    assert {r["entity_id"] for r in g} == set(by_entity)
-    assert sum(r["n_members"] for r in g) == len(ents)
-    for r in g:
-        assert r["canonical_ref"] in by_entity[r["entity_id"]]
-        assert r["canonical_len"] == len(r["canonical_text"])
-    # resume: a second run over the same workdir skips the golden stage
-    pipe2 = LinkagePipeline(
-        spark, wd, jaccard_threshold=0.5, min_matches=2, golden=True
-    )
-    pipe2.run(t)
-    assert pipe2.metrics["golden"]["skipped"]
-
-
-def test_capped_blocking_skips_salting_scan(spark, tmp_path, monkeypatch):
-    """With max_df two-phase blocking, no surviving key can be hot (its
-    generation df is capped), so the auto-salt decision must short-circuit
-    WITHOUT running hot_trigrams' full-postings aggregation -- and must say
-    why in the manifest."""
-    import blurrily_spark.plans.pipeline as pl
-
-    def _boom(*a, **k):  # the scan we must never pay in the capped path
-        raise AssertionError("hot_trigrams must not run when max_df is set")
-
-    monkeypatch.setattr(pl, "hot_trigrams", _boom)
-    t = _toy_transcripts(spark, 120, hot_docs=40)
-    pipe = LinkagePipeline(
-        spark, str(tmp_path / "wd"), min_matches=2, max_df=64, compute_jw=False
-    )
-    pipe.run(t)
-    m = pipe.metrics["pairs_salting"]
-    assert m["active"] is False and "max_df" in m["reason"]
-
-
-def test_pipeline_knn_candidate_mode_f1(spark, tmp_path):
-    """candidate_mode='knn': bounded per-record candidate generation keeps
-    F1 >= 0.99 on the labeled corpus, and the pairs stage is provably
-    bounded at n_turns * knn_k (the property thresholded blocking lacks)."""
-    import pytest
+def test_knn_candidates_rescored_keep_f1(spark):
+    """The bounded alternative to the blocking self-join, at operator
+    level: each turn's top-k FIND matches (knn_join), folded to unordered
+    pairs and rescored exactly (rescore_pairs_exact), keep F1 >= 0.99 on
+    the labeled corpus, and the candidate set is bounded at n_turns * k."""
+    from blurrily_spark.functions.tokenizer import add_trigrams
+    from blurrily_spark.operators.cluster import assign_entities
+    from blurrily_spark.operators.find import knn_join
+    from blurrily_spark.operators.pairs import rescore_pairs_exact
+    from blurrily_spark.operators.scoring import match_edges
+    from blurrily_spark.plans.pipeline import turns_to_postings
 
     transcripts = generate_transcripts(
         spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
         words_per_turn=8, n_perturbations=1, seed=11, with_truth=True,
     )
-    pipe = LinkagePipeline(
-        spark, str(tmp_path), jaccard_threshold=0.55, min_matches=2,
-        candidate_mode="knn", knn_k=10,
-    )
-    entities = pipe.run(transcripts.drop("entity_true"))
+    turns = add_trigrams(build_turns(transcripts.drop("entity_true")), "norm", "trigrams")
+    knn = knn_join(turns_to_postings(turns), k=10)
+    cand = knn.select(
+        F.least("query_ref", "ref").alias("ref_a"),
+        F.greatest("query_ref", "ref").alias("ref_b"),
+    ).distinct()
+    pairs = rescore_pairs_exact(cand, turns.select("ref", "trigrams", "weight"))
+    edges = match_edges(pairs.where(F.col("matches") >= 2), jaccard_threshold=0.55)
+    entities = assign_entities(turns.select("ref"), edges)
+
     truth_rows = transcripts.select(
         F.xxhash64("conv_id", "turn_idx").alias("ref"), "entity_true", "turn_idx"
     ).collect()
     truth = {r["ref"]: (r["entity_true"], r["turn_idx"]) for r in truth_rows}
     pred = {r["ref"]: r["entity_id"] for r in entities.collect()}
     f1 = pairwise_f1(pred, truth)
-    assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99 in knn candidate mode"
-
-    # the bound is structural: distinct unordered pairs from n*k directed edges
-    n_turns = transcripts.count()
-    assert pipe.metrics["pairs"]["rows"] <= n_turns * 10
-    assert pipe.metrics["pairs_salting"]["reason"].startswith("knn")
-
-    with pytest.raises(ValueError, match="candidate_mode"):
-        LinkagePipeline(spark, str(tmp_path), candidate_mode="bogus")
+    assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99 with kNN candidates"
+    assert cand.count() <= len(truth_rows) * 10
 
 
 def test_pairs_stage_intersects_once(spark, tmp_path, monkeypatch):
@@ -367,9 +283,7 @@ def test_pairs_stage_intersects_once(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(LinkagePipeline, "_write", spy)
     t = _toy_transcripts(spark, 60)
-    LinkagePipeline(
-        spark, str(tmp_path), min_matches=3, max_df=16, compute_jw=False
-    ).run(t)
+    LinkagePipeline(spark, str(tmp_path), min_matches=3, max_df=16).run(t)
     assert plans["pairs"].count("array_intersect") == 1, plans["pairs"]
 
 
