@@ -12,9 +12,7 @@ from blurrily_spark.functions.tokenizer import (
     normalize,
     normalize_py,
     tokenize_py,
-    trigrams,
     trigrams_py,
-    with_trigrams,
 )
 
 __all__ = [
@@ -22,9 +20,7 @@ __all__ = [
     "get_spark",
     "normalize",
     "normalize_py",
-    "with_trigrams",
     "tokenize_py",
-    "trigrams",
     "trigrams_py",
 ]
 

@@ -47,10 +47,10 @@ def shuffle_partitions(spark: "SparkSession") -> int | None:
         return None
 
 
-def spread_small_input(df, max_bytes: int | None = None):
+def spread_small_input(df):
     """Repartition a *tiny* input to the session's shuffle parallelism so
     per-row compute parallelizes; identity for streaming inputs and for
-    anything whose optimizer size estimate reaches ``max_bytes``.
+    anything whose optimizer size estimate reaches ``SPREAD_MAX_BYTES``.
 
     Sizing uses the optimized plan's ``stats.sizeInBytes`` rather than
     ``inputFiles``: it covers cached inputs (whose file scans are replaced
@@ -59,17 +59,15 @@ def spread_small_input(df, max_bytes: int | None = None):
     big corpus can't masquerade as small. Measured: spreading the 10k-doc
     bench corpus to 32 partitions takes the MinHash-LSH pass 5.3s -> 2.1s
     warm (the signature stage was 2 tasks); identity at corpus scale."""
-    if max_bytes is None:
-        max_bytes = SPREAD_MAX_BYTES
     try:
-        if df.isStreaming or max_bytes <= 0:
+        if df.isStreaming:
             return df
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return df
     # a non-integer partition count (``auto``) leaves the input as it is
     n = shuffle_partitions(df.sparkSession)
-    if n is None or size >= max_bytes:
+    if n is None or size >= SPREAD_MAX_BYTES:
         return df
     return df.repartition(n)
 

@@ -4,9 +4,7 @@ from blurrily_spark.functions.tokenizer import (  # noqa: F401
     normalize,
     normalize_py,
     padded,
-    with_trigrams,
     tokenize_py,
     trigram_to_string,
-    trigrams,
     trigrams_py,
 )

@@ -171,32 +171,6 @@ def padded(norm: Column | str) -> Column:
     return F.concat(F.lit("**"), F.translate(c, " ", "*"), F.lit("*"))
 
 
-def trigrams(norm: Column | str) -> Column:
-    """S2-S5 as one Column expression over *normalized* text.
-
-    ``array_distinct(transform(sequence(0, len), k -> code(window_k)))`` --
-    len+1 windows (tokeniser.c:72-75), base-28 encode (tokeniser.c:21-31),
-    set-dedup (tokeniser.c:93-118).
-
-    NOTE: convenient for small/query-side expressions, but the padding
-    expression is evaluated inside the lambda (per character access =
-    O(n^2) interpreted work per row). Bulk paths must use
-    :func:`add_trigrams`, which stages padded -> char codes -> windows as
-    materialized columns so every lambda access is an O(1) element_at.
-    """
-    c = F.col(norm) if isinstance(norm, str) else norm
-    p = padded(c)
-    one = F.lit(1)
-
-    def code(k: Column) -> Column:
-        c0 = _enc(p.substr(k + one, one))
-        c1 = _enc(p.substr(k + F.lit(2), one))
-        c2 = _enc(p.substr(k + F.lit(3), one))
-        return (c0 + c1 * TRIGRAM_BASE + c2 * TRIGRAM_BASE * TRIGRAM_BASE).cast("int")
-
-    return F.array_distinct(F.transform(F.sequence(F.lit(0), F.length(c)), code))
-
-
 def codes_from_padded(p: Column | str) -> Column:
     """Per-character base-28 codes of the padded string, as array<int>."""
     c = F.col(p) if isinstance(p, str) else p
@@ -239,24 +213,6 @@ def add_trigrams(df, norm_col: str, out_col: str = "trigrams"):
         )
     )
     return out.drop("__pad", "__codes")
-
-
-def with_trigrams(df, text_col: str, out_col: str = "trigrams", norm_col: str | None = None):
-    """normalize + trigrams over a DataFrame: raw text -> array<int> column.
-
-    Two projections by construction: :func:`trigrams` reads its input
-    inside a ``transform`` lambda, once per window, and Catalyst neither
-    hoists nor de-duplicates the non-deterministic ``reflect`` in
-    :func:`normalize`. Inlined, the whole S1 fold would rerun for every
-    window of every row; as its own column it runs once per row, and the
-    projection boundary also keeps it out of any later aggregate.
-    """
-    tmp = norm_col or "__norm"
-    out = df.withColumn(tmp, normalize(F.col(text_col)))
-    out = out.withColumn(out_col, trigrams(F.col(tmp)))
-    if norm_col is None:
-        out = out.drop(tmp)
-    return out
 
 
 def trigram_to_string(code: int) -> str:

@@ -20,12 +20,9 @@ one declarative Spark plan per *batch* of queries:
 * F6 limit: default 10 (lib/blurrily/defaults.rb:6); ``limit <= 0`` =>
   default (ext/blurrily/map_ext.c:142-146).
 
-Scale notes: the query side is broadcast when it is a needle batch
-(broadcast hash join, no shuffle of the postings); for huge query batches
-set ``broadcast_queries=False`` to let AQE pick shuffle-hash/SMJ on
-``trigram``, which co-locates for free when postings are bucketed by
-trigram. The per-query top-k compiles to WindowGroupLimit (rank-limit
-pushdown), not a global sort.
+Scale notes: the query side is a needle batch and is always broadcast
+(broadcast hash join, no shuffle of the postings). The per-query top-k
+compiles to WindowGroupLimit (rank-limit pushdown), not a global sort.
 
 The batch generalizations :func:`knn_join` (per-record top-k over the
 whole corpus -- FIND with the corpus as queries) and
@@ -49,7 +46,6 @@ def find(
     query_id_col: str = "query_id",
     limit: int | None = None,
     limit_col: str | None = None,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch FIND: one ranked result set per query row.
 
@@ -58,8 +54,8 @@ def find(
     ref ASC). ``limit_col`` (per-query limit) takes precedence over the
     scalar ``limit``; both default to LIMIT_DEFAULT=10.
     """
-    # normalize in its own projection: trigrams() reads its input once per
-    # window inside a transform() lambda, and Catalyst does not de-duplicate
+    # normalize in its own projection: add_trigrams reads it twice (the
+    # padded text and its length), and Catalyst does not de-duplicate
     # normalize's non-deterministic reflect (ICU NFKD), so F1 is a two-step
     # select that folds each needle once.
     q = queries.select(
@@ -85,10 +81,7 @@ def find(
         F.explode("_tg").alias("trigram"),
         *(["_limit"] if limit_col else []),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-
-    joined = q.join(postings, "trigram")
+    joined = F.broadcast(q).join(postings, "trigram")
 
     aggs = [
         F.count(F.lit(1)).alias("matches"),
@@ -182,7 +175,6 @@ def find_idf(
     query_id_col: str = "query_id",
     k: int = LIMIT_DEFAULT,
     scale: int = 1_000_000,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Rarity-weighted FIND: rank by summed trigram idf instead of raw count.
 
@@ -235,11 +227,8 @@ def find_idf(
     q = add_trigrams(q, "_norm", "_tg").select(
         "query_id", F.explode("_tg").alias("trigram")
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-
     scored = (
-        q.join(pw, "trigram")
+        F.broadcast(q).join(pw, "trigram")
         .groupBy("query_id", "ref")
         .agg(
             F.count(F.lit(1)).alias("matches"),

@@ -10,8 +10,9 @@ F4 (storage.c:527-563), because both sides are trigram-deduped.
 Scale design (the part the single-node reference never had to solve):
 
 * **Bounded key space.** There are at most 28^3 = 21952 trigram codes
-  (ext/blurrily/storage.c:30), so per-trigram document frequencies always
-  fit on the driver / in a broadcast -- heavy-key decisions are cheap.
+  (ext/blurrily/storage.c:30), so the per-trigram document frequencies
+  always fit in a broadcast -- heavy-key decisions are cheap, and they
+  stay in the plan instead of passing through the driver.
 * **Skew.** Trigram DF is Zipf-like; a trigram with df=d contributes
   d*(d-1)/2 pairs. Three levers, composable:
   - ``max_df``: drop trigrams with df > max_df from *blocking* (the
@@ -20,20 +21,18 @@ Scale design (the part the single-node reference never had to solve):
   - AQE skew-join (enabled in get_spark): splits oversized partitions at
     runtime.
   - ``salt_buckets``: explicit salted self-join over the HOT keys only --
-    the bounded key space makes the heavy-key list driver-cheap (one
-    map-side-combined agg to <= 21952 rows), so the split is exact: cold
-    trigrams take the plain join, hot trigrams take a salted join (left
-    side split into B salt buckets by ref hash, right side replicated B
-    times), and the union is the same pair multiset. Salting every key
-    (the naive form) replicates the whole right side B times -- at 100 TB
-    the cold 99% of the corpus would pay B x shuffle volume to fix a
-    straggler caused by a handful of keys.
+    the bounded key space makes the hot flag cheap (one map-side-combined
+    agg to <= 21952 rows, broadcast back onto the postings), so the split
+    is exact: cold trigrams take the plain join, hot trigrams take a
+    salted join (left side split into B salt buckets by ref hash, right
+    side replicated B times), and the union is the same pair multiset.
+    Salting every key (the naive form) replicates the whole right side B
+    times -- at 100 TB the cold 99% of the corpus would pay B x shuffle
+    volume to fix a straggler caused by a handful of keys.
 * **Half-matrix.** ``ref_a < ref_b`` keeps each unordered pair once.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,28 +45,33 @@ def trigram_df_counts(postings: DataFrame) -> DataFrame:
     return postings.groupBy("trigram").agg(F.count(F.lit(1)).alias("df"))
 
 
-def hot_trigrams(
-    postings: DataFrame, salt_buckets: int, hot_df: int | None = None
-) -> tuple[list, int]:
-    """(hot trigram keys, resolved df threshold) for skew salting.
+def _hot_flags(df: DataFrame, salt_buckets: int, hot_df: int | None) -> DataFrame:
+    """``(trigram, _hot)`` over a ``(trigram, df)`` table, for skew salting,
+    as a plan: no job runs here.
 
-    One aggregation over postings (map-side combined down to <= 28^3 rows,
-    always driver-small -- ext/blurrily/storage.c:30's bounded code space
-    is what makes exact skew planning cheap). ``hot_df=None`` auto-derives
-    the threshold from the work model: a trigram with df = d contributes
-    d*(d-1)/2 ~ d^2/2 pairs, so a key deserves salting only when its own
-    pair output exceeds a task's fair share of the total --
-    ``d > sqrt(sum(df^2) / shuffle_partitions)`` (floored at ``2 *
-    salt_buckets``: below that, splitting d rows B ways buys nothing).
-    ``hot_df=0`` marks every key hot (the naive salt-everything plan,
-    kept measurable for the skew bench)."""
-    rows = trigram_df_counts(postings.select("trigram")).collect()
-    if hot_df is None:
-        spark = postings.sparkSession
-        n_part = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
-        total_sq = sum(r["df"] * r["df"] for r in rows)
-        hot_df = max(2 * int(salt_buckets), math.isqrt(total_sq // max(n_part, 1)))
-    return [r["trigram"] for r in rows if r["df"] > hot_df], int(hot_df)
+    ``hot_df`` flags ``df > hot_df`` (``hot_df=0`` marks every key hot: the
+    naive salt-everything plan, kept measurable for the skew bench).
+    ``hot_df=None`` derives the threshold from the work model: a trigram
+    with df = d contributes d*(d-1)/2 ~ d^2/2 pairs, so a key deserves
+    salting only when its own pair output exceeds a task's fair share of
+    the total -- ``d > sqrt(sum(df^2) / P)``, floored at ``2 *
+    salt_buckets`` (below that, splitting d rows B ways buys nothing). The
+    one-row threshold is cross-joined onto the <= 28^3-row df table. The
+    sum is taken in double so no df overflows it under ANSI mode; the
+    threshold moves only the layout, never the pairs."""
+    if hot_df is not None:
+        return df.select("trigram", (F.col("df") > F.lit(int(hot_df))).alias("_hot"))
+    spark = df.sparkSession
+    n_part = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
+    thr = df.agg(
+        F.greatest(
+            F.lit(2 * int(salt_buckets)).cast("long"),
+            F.floor(F.sqrt(F.sum(F.col("df").cast("double") ** 2) / F.lit(n_part))),
+        ).alias("_thr")
+    )
+    return df.crossJoin(F.broadcast(thr)).select(
+        "trigram", (F.col("df") > F.col("_thr")).alias("_hot")
+    )
 
 
 def candidate_pairs(
@@ -94,55 +98,52 @@ def candidate_pairs(
     aggregation buffers. Requires ``min_matches == 1`` (phase 1 cannot
     threshold a count it does not compute).
 
-    ``salt_buckets`` salts ONLY the hot keys (see :func:`hot_trigrams`;
-    ``hot_df`` overrides the auto threshold): cold trigrams -- the vast
-    majority at any scale -- join plainly with zero replication, hot ones
-    spread over B salted tasks, and the two branches union into the same
-    pair multiset (each posting row lands in exactly one branch, so each
-    (trigram, pair) match is produced exactly once). Note the hot-key scan
-    runs an eager aggregation job at plan-build time when salting is
-    requested."""
+    ``salt_buckets`` salts ONLY the hot keys (see :func:`_hot_flags`;
+    ``hot_df`` overrides the auto threshold): the flag table is broadcast
+    onto the postings, cold trigrams -- the vast majority at any scale --
+    join plainly with zero replication, hot ones spread over B salted
+    tasks, and the two branches union into the same pair multiset (each
+    posting row lands in exactly one branch, so each (trigram, pair) match
+    is produced exactly once)."""
     if keys_only and min_matches > 1:
         raise ValueError("keys_only candidate generation cannot apply min_matches")
     cols = ["trigram", "ref"] if keys_only else ["trigram", "ref", "weight"]
     p = postings.select(*cols)
+    df = trigram_df_counts(p)
     if max_df is not None:
-        keep = trigram_df_counts(p).where(F.col("df") <= max_df).select("trigram")
+        # the cap drops whole trigrams, so the kept ones keep their df
+        df = df.where(F.col("df") <= max_df)
         # keep is bounded by the 28^3 key space -> broadcast, never a shuffle
-        p = p.join(F.broadcast(keep), "trigram")
+        p = p.join(F.broadcast(df.select("trigram")), "trigram")
 
-    left = p.select(
-        "trigram",
-        F.col("ref").alias("ref_a"),
-        *([] if keys_only else [F.col("weight").alias("weight_a")]),
-    )
-    right = p.select(
-        "trigram",
-        F.col("ref").alias("ref_b"),
-        *([] if keys_only else [F.col("weight").alias("weight_b")]),
-    )
+    def side(rows: DataFrame, s: str) -> DataFrame:
+        return rows.select(
+            "trigram",
+            F.col("ref").alias(f"ref_{s}"),
+            *([] if keys_only else [F.col("weight").alias(f"weight_{s}")]),
+        )
 
-    hot_keys = []
     if salt_buckets and salt_buckets > 1:
-        hot_keys, _ = hot_trigrams(p, salt_buckets, hot_df)
-    if hot_keys:
         b = int(salt_buckets)
-        is_hot = F.col("trigram").isin(hot_keys)  # InSet over <= 21952 codes
-        hot_l = left.where(is_hot).withColumn(
+        flagged = p.join(F.broadcast(_hot_flags(df, b, hot_df)), "trigram")
+        cold, hot = flagged.where(~F.col("_hot")), flagged.where(F.col("_hot"))
+        hot_l = side(hot, "a").withColumn(
             "salt", F.pmod(F.xxhash64("ref_a"), F.lit(b))
         )
-        hot_r = right.where(is_hot).withColumn(
+        hot_r = side(hot, "b").withColumn(
             "salt",
             F.explode(F.sequence(F.lit(0).cast("long"), F.lit(b - 1).cast("long"))),
         )
         joined = (
-            left.where(~is_hot)
-            .join(right.where(~is_hot), ["trigram"])
+            side(cold, "a")
+            .join(side(cold, "b"), ["trigram"])
             .unionByName(hot_l.join(hot_r, ["trigram", "salt"]).drop("salt"))
             .where(F.col("ref_a") < F.col("ref_b"))
         )
     else:
-        joined = left.join(right, ["trigram"]).where(F.col("ref_a") < F.col("ref_b"))
+        joined = side(p, "a").join(side(p, "b"), ["trigram"]).where(
+            F.col("ref_a") < F.col("ref_b")
+        )
 
     if keys_only:
         return joined.select("ref_a", "ref_b").dropDuplicates(["ref_a", "ref_b"])
@@ -592,55 +593,55 @@ def meta_blocking_prune(
 # shuffle of a keys-only projection: (1) `repartitionByRange` on the full
 # (key, id) total order (unique composite -> no boundary ties, so
 # partition-local order concatenates to the exact global order),
-# (2) partition row counts (<= num_partitions rows, driver-tiny) turn into
-# broadcast cumulative offsets, and rank = local row_number + offset.
-# Identical output to single-task `row_number`, verified against exactly
-# that SQL by the DuckDB oracle.
+# (2) partition row counts (<= P rows), read off the same exchange, turn
+# into broadcast cumulative offsets, and rank = index in the sorted
+# partition + offset.
+# Nothing reaches the driver and no job runs before the action. Identical
+# output to single-task `row_number`, verified against exactly that SQL by
+# the DuckDB oracle.
 
 
-def global_sort_ranks(
-    df: DataFrame,
-    key_col: str,
-    id_col: str,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def global_sort_ranks(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
     """Exact 1-based global rank of every row under ``ORDER BY key, id``,
     without a single-task window. Returns ``(id_col, key_col, rank)``.
 
-    One range shuffle of the keys-only projection, a <=P-row count
-    collect, and a per-pid window -- never a global sort on one task.
-    EAGER: the shuffle is localCheckpointed so the count job and the rank
-    job share one range partitioning; unlike a persist, it leaves no entry
-    in the session's cache. The window reads the checkpoint through a
-    range exchange on the pid, which gives each task about one pid, where
-    hashing P pids into P tasks would double some up and leave others
-    empty."""
+    A plan, not a job: one range shuffle of the keys-only projection over
+    P = the session's shuffle partitions. Its per-partition counts and its
+    rows read that one exchange (executed as a ``ReusedExchange``), so both
+    see the same sampled range bounds. Each pid's offset is the sum of the
+    counts of the pids before it: every count row fans out to the later
+    pids (at most P^2/2 rows), summed per pid and broadcast back. A row's
+    rank is its index in its sorted partition plus its pid's offset, so
+    the rows take no second shuffle. Exact only while Spark reuses the
+    exchange, so a session with exchange reuse off is refused."""
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = (
-            shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
-        )
+    if spark.conf.get("spark.sql.exchange.reuse", "true").lower() == "false":
+        raise ValueError("global_sort_ranks needs spark.sql.exchange.reuse=true")
+    n = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
     keys = (
         df.select(id_col, key_col)
-        .repartitionByRange(num_partitions, F.col(key_col), F.col(id_col))
+        .repartitionByRange(n, F.col(key_col), F.col(id_col))
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
     )
-    counts = {r["_pid"]: r["n"] for r in keys.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off = F.element_at(
-        F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv]),
-        F.col("_pid"),
-    ) if offsets else F.lit(0)
-    local = Window.partitionBy("_pid").orderBy(key_col, id_col)
-    return keys.repartitionByRange(num_partitions, "_pid").select(
-        id_col,
-        key_col,
-        (F.row_number().over(local) + off).cast("long").alias("rank"),
+    # a cumulative window over the counts would need one task (an Exchange
+    # SinglePartition); the fan-out keeps even this P-row step keyed by pid
+    before = F.when(F.col("_from") < F.col("_pid"), F.col("_n")).otherwise(0)
+    offsets = (
+        keys.groupBy(F.col("_pid").alias("_from"))
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .select("_from", "_n", F.explode(F.sequence("_from", F.lit(n - 1))).alias("_pid"))
+        .groupBy("_pid")
+        .agg(F.sum(before).alias("_off"))
+    )
+    # the row's index in its sorted partition: the low 33 bits of
+    # monotonically_increasing_id (the partition id fills the high bits;
+    # a partition holds far fewer than 2^33 rows)
+    local = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    return (
+        keys.sortWithinPartitions(key_col, id_col)
+        .withColumn("_rn", local)
+        .join(F.broadcast(offsets), "_pid")
+        .select(id_col, key_col, (F.col("_rn") + F.col("_off") + 1).alias("rank"))
     )
 
 
@@ -649,7 +650,6 @@ def sorted_neighborhood_pairs(
     key_col: str,
     id_col: str = "ref",
     window: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate pairs whose global sort ranks differ by < ``window``.
 
@@ -661,7 +661,7 @@ def sorted_neighborhood_pairs(
     >= 2; w=2 degenerates to adjacent-pairs."""
     if window < 2:
         raise ValueError("window must be >= 2 (w-1 successors per record)")
-    ranked = global_sort_ranks(df, key_col, id_col, num_partitions)
+    ranked = global_sort_ranks(df, key_col, id_col)
     left = ranked.select(
         F.col(id_col).alias("ref_a"),
         F.col("rank").alias("rank_a"),

@@ -330,21 +330,16 @@ def kmeans_centroids(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seeding: str = "maxmin",
 ) -> list[list[float]]:
     """Lloyd-iteration coarse codebook (cosine assignment, mean update).
 
     Fully distributed per iteration: assign (JVM cosine) -> posexplode ->
     groupBy(bucket, dim) mean -> collect k*dim floats to the driver (the
     codebook is dimension-sized by construction). Deterministic: seeds are
-    farthest-first from the lowest-id vector (``seeding='maxmin'``) or the
-    k lowest-id vectors (``seeding='lowid'``). Empty buckets keep their
-    previous centroid.
+    farthest-first from the lowest-id vector (:func:`maxmin_centroids`).
+    Empty buckets keep their previous centroid.
     """
-    if seeding == "maxmin":
-        cents = maxmin_centroids(corpus, k, id_col, vec_col)
-    else:
-        cents = take_centroids(corpus, k, id_col, vec_col)
+    cents = maxmin_centroids(corpus, k, id_col, vec_col)
     for _ in range(iterations):
         assigned = assign_buckets(corpus, cents, id_col, vec_col)
         means = (

@@ -51,11 +51,7 @@ from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructT
 
 from blurrily_spark.functions.tokenizer import add_trigrams, with_normalized
 from blurrily_spark.operators.cluster import assign_entities
-from blurrily_spark.operators.pairs import (
-    candidate_pairs,
-    rescore_pairs_exact,
-    with_jaccard,
-)
+from blurrily_spark.operators.pairs import candidate_pairs, rescore_pairs_exact
 from blurrily_spark.operators.scoring import match_edges, score_pairs
 
 
@@ -170,8 +166,9 @@ class LinkagePipeline:
     STAGES = ("turns", "postings", "pairs", "scores", "edges", "entities")
     # Version of the stage tables' columns, part of every fingerprint: a
     # workdir written under another layout reruns instead of resuming into
-    # tables this code cannot read. 2: turns carries ``trigrams``.
-    LAYOUT = 2
+    # tables this code cannot read. 2: turns carries ``trigrams``. 3: pairs
+    # is the rescored form for every ``max_df`` (no ``tg_a``/``tg_b``).
+    LAYOUT = 3
 
     def __init__(
         self,
@@ -277,31 +274,25 @@ class LinkagePipeline:
         postings = self._load_or("postings", lambda: turns_to_postings(turns))
 
         def _pairs():
-            max_df = self.config["max_df"]
-            if max_df:
-                # Two-phase blocking (the scale path): hot trigrams are
-                # excluded from candidate *generation* (bounding the
-                # self-join at sum(min(df, max_df)^2)), then exact
-                # matches/jaccard are restored per candidate with one
-                # array_intersect -- no information loss for near-dups,
-                # which always share rare trigrams too.
-                cand = candidate_pairs(
-                    postings,
-                    min_matches=1,
-                    max_df=max_df,
-                    # phase 2 recomputes matches/weights exactly, so phase 1
-                    # ships bare (ref_a, ref_b) through the pair-dedup
-                    # shuffle -- the pipeline's dominant shuffle
-                    keys_only=True,
-                )
-                # phase 2 joins the trigram arrays the turns stage stored on
-                # ref_a and ref_b, and tokenizes nothing
-                exact = rescore_pairs_exact(
-                    cand, turns.select("ref", "trigrams", "weight")
-                )
-                return exact.where(F.col("matches") >= self.config["min_matches"])
-            raw = candidate_pairs(postings, min_matches=self.config["min_matches"])
-            return with_jaccard(raw, postings)
+            # Two-phase blocking (the scale path): with ``max_df`` set, hot
+            # trigrams are excluded from candidate *generation* (bounding
+            # the self-join at sum(min(df, max_df)^2)), then exact
+            # matches/jaccard are restored per candidate with one
+            # array_intersect -- no information loss for near-dups, which
+            # always share rare trigrams too. ``max_df=None`` caps nothing.
+            cand = candidate_pairs(
+                postings,
+                min_matches=1,
+                max_df=self.config["max_df"],
+                # phase 2 recomputes matches/weights exactly, so phase 1
+                # ships bare (ref_a, ref_b) through the pair-dedup shuffle
+                # -- the pipeline's dominant shuffle
+                keys_only=True,
+            )
+            # phase 2 joins the trigram arrays the turns stage stored on
+            # ref_a and ref_b, and tokenizes nothing
+            exact = rescore_pairs_exact(cand, turns.select("ref", "trigrams", "weight"))
+            return exact.where(F.col("matches") >= self.config["min_matches"])
 
         pairs = self._load_or("pairs", _pairs)
 

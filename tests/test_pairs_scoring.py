@@ -59,27 +59,30 @@ def test_pair_matches_salted_identical(spark):
 
 
 def test_salted_keys_only_identical(spark):
-    plain, _ = _spark_pairs(spark, keys_only=True)
-    salted, _ = _spark_pairs(spark, keys_only=True, salt_buckets=4, hot_df=1)
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
+    plain = sorted(map(tuple, _spark_pairs(spark, keys_only=True)[0].collect()))
+    for kw in (dict(hot_df=1), dict(hot_df=0), dict()):
+        salted, _ = _spark_pairs(spark, keys_only=True, salt_buckets=4, **kw)
+        assert sorted(map(tuple, salted.collect())) == plain, kw
+
+
+def _hot_set(flags) -> set:
+    return {r["trigram"] for r in flags.where("_hot").collect()}
 
 
 def test_hot_trigrams_threshold(spark):
-    from blurrily_spark.operators.pairs import hot_trigrams
+    from blurrily_spark.operators.pairs import _hot_flags, trigram_df_counts
 
     postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
-    # explicit threshold: exactly the trigrams with df > 1
-    hot, thr = hot_trigrams(postings, salt_buckets=4, hot_df=1)
-    assert thr == 1
-    from blurrily_spark.operators.pairs import trigram_df_counts
-
-    exp = {r["trigram"] for r in trigram_df_counts(postings).collect() if r["df"] > 1}
-    assert set(hot) == exp
+    counts = trigram_df_counts(postings)
+    df = {r["trigram"]: r["df"] for r in counts.collect()}
+    # explicit threshold: exactly the trigrams with df > 1; every key flagged
+    flags = _hot_flags(counts, salt_buckets=4, hot_df=1)
+    assert {r["trigram"] for r in flags.collect()} == set(df)
+    assert _hot_set(flags) == {t for t, d in df.items() if d > 1}
+    assert _hot_set(_hot_flags(counts, salt_buckets=4, hot_df=0)) == set(df)
     # auto threshold never goes below 2 * salt_buckets (splitting tiny keys
     # buys nothing) -- on this corpus nothing clears it
-    hot_auto, thr_auto = hot_trigrams(postings, salt_buckets=4)
-    assert thr_auto >= 8
-    assert hot_auto == []
+    assert _hot_set(_hot_flags(counts, salt_buckets=4, hot_df=None)) == set()
 
 
 def test_min_matches_filter(spark):
@@ -211,7 +214,16 @@ def _snm_oracle(rows, window):
     return sorted(out)
 
 
-def test_global_sort_ranks_exact_permutation(spark):
+@pytest.fixture
+def set_shuffle_partitions(spark):
+    """Set ``spark.sql.shuffle.partitions`` for one test; restored after."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, prev)
+
+
+def test_global_sort_ranks_exact_permutation(spark, set_shuffle_partitions):
     import random
 
     from blurrily_spark.operators.pairs import global_sort_ranks
@@ -220,7 +232,8 @@ def test_global_sort_ranks_exact_permutation(spark):
     rows = [(i, f"k{rng.randrange(40):02d}") for i in rng.sample(range(10_000), 300)]
     df = spark.createDataFrame(rows, "ref long, key string")
     # more partitions than rows in some ranges -> exercises empty partitions
-    got = global_sort_ranks(df, "key", "ref", num_partitions=7).collect()
+    set_shuffle_partitions(7)
+    got = global_sort_ranks(df, "key", "ref").collect()
     expect = {
         ref: i + 1
         for i, (ref, _) in enumerate(sorted(rows, key=lambda r: (r[1], r[0])))
@@ -228,15 +241,32 @@ def test_global_sort_ranks_exact_permutation(spark):
     assert {r["ref"]: r["rank"] for r in got} == expect
 
 
-def test_global_sort_ranks_leaves_no_cached_table(spark):
-    """The shared range shuffle is a localCheckpoint, not a persist that
-    stays in the session's cache after the ranks are dropped."""
+def test_global_sort_ranks_leaves_no_cached_table(spark, set_shuffle_partitions):
+    """The shared range shuffle is a reused exchange inside the plan, not a
+    persist that stays in the session's cache after the ranks are dropped."""
     from blurrily_spark.operators.pairs import global_sort_ranks
 
     spark.catalog.clearCache()
     df = spark.createDataFrame([(i, f"k{i % 7}") for i in range(50)], "ref long, key string")
-    assert len(global_sort_ranks(df, "key", "ref", num_partitions=3).collect()) == 50
+    set_shuffle_partitions(3)
+    got = {r["ref"]: r["rank"] for r in global_sort_ranks(df, "key", "ref").collect()}
+    expected = sorted(range(50), key=lambda i: (f"k{i % 7}", i))
+    assert got == {ref: n + 1 for n, ref in enumerate(expected)}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_global_sort_ranks_refuses_sessions_without_exchange_reuse(spark):
+    """Both reads of the range exchange must see the same sampled bounds;
+    without exchange reuse each would sample its own."""
+    from blurrily_spark.operators.pairs import global_sort_ranks
+
+    df = spark.createDataFrame([(1, "a")], "ref long, key string")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        with pytest.raises(ValueError, match="exchange.reuse"):
+            global_sort_ranks(df, "key", "ref")
+    finally:
+        spark.conf.unset("spark.sql.exchange.reuse")
 
 
 def test_sorted_neighborhood_matches_oracle(spark):

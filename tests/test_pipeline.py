@@ -67,6 +67,18 @@ def test_pipeline_end_to_end(spark, tmp_path):
     kept = turns.select("conv_id", "turn_idx", "text").orderBy("conv_id", "turn_idx").collect()
     assert [tuple(r) for r in orig] == [tuple(r) for r in kept]
 
+    # --- max_df=None runs the rescored plan uncapped: the same pair rows as
+    # the direct count join over the postings
+    from blurrily_spark.operators.pairs import candidate_pairs, with_jaccard
+
+    postings = spark.read.parquet(os.path.join(str(tmp_path), "postings"))
+    cols = ["ref_a", "ref_b", "matches", "jaccard", "weight_a", "weight_b"]
+    direct = with_jaccard(candidate_pairs(postings, min_matches=2), postings)
+    staged = spark.read.parquet(os.path.join(str(tmp_path), "pairs"))
+    assert sorted(map(tuple, staged.select(*cols).collect())) == sorted(
+        map(tuple, direct.select(*cols).collect())
+    )
+
     # --- manifest written with per-stage metrics
     manifest = json.load(open(os.path.join(str(tmp_path), "_manifest.json")))
     assert set(manifest["stages"]) == set(LinkagePipeline.STAGES)
@@ -213,18 +225,25 @@ def test_hot_key_salting_on_skewed_postings(spark):
     never changes the pair multiset."""
     import re
 
-    from blurrily_spark.operators.pairs import candidate_pairs, hot_trigrams
+    from blurrily_spark.operators.pairs import (
+        _hot_flags,
+        candidate_pairs,
+        trigram_df_counts,
+    )
     from blurrily_spark.plans.pipeline import turns_to_postings
 
+    def hot(postings):
+        flags = _hot_flags(trigram_df_counts(postings), 8, None)
+        return [r["trigram"] for r in flags.where("_hot").collect()]
+
     uniform = turns_to_postings(build_turns(_toy_transcripts(spark, 120)))
-    assert hot_trigrams(uniform, 8)[0] == []
+    assert hot(uniform) == []
 
     # 200/500 docs share the word: its two trigrams reach df=205 against a
     # fair-share threshold of ~155 (the 100-doc variant's df=105 correctly
     # stays UNDER the ~127 threshold -- two keys at 105 are not a straggler)
     postings = turns_to_postings(build_turns(_toy_transcripts(spark, 500, hot_docs=200)))
-    hot, _thr = hot_trigrams(postings, 8)
-    assert 1 <= len(hot) <= 8
+    assert 1 <= len(hot(postings)) <= 8
     salted = candidate_pairs(postings, salt_buckets=8)
     salted_plan = salted._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" in salted_plan and re.search(r"\bsalt#", salted_plan)

@@ -11,8 +11,11 @@ or degrades a join strategy fails CI instead of shipping:
   pushdown), its gather join broadcasts the needle side;
 * brute-force cosine scoring broadcasts the query batch -- never a
   CartesianProduct;
-* building the span, meta-blocking, LM-scoring and RP-LSH operators
-  launches no Spark job and keeps a streaming input streaming.
+* building the span, meta-blocking, LM-scoring, RP-LSH, salted-pairs and
+  sorted-neighborhood operators launches no Spark job and keeps a
+  streaming input streaming;
+* ``global_sort_ranks`` reads its one range exchange twice, the second
+  time as a ``ReusedExchange``.
 """
 
 from __future__ import annotations
@@ -172,7 +175,10 @@ EDGES_SCHEMA = "ref_a long, ref_b long, matches long"
 def _lazy_operator_cases():
     from pyspark.sql import functions as F
 
-    from blurrily_spark.operators import corpus, dedup, pairs, similarity
+    from blurrily_spark.operators import corpus, dedup, index, pairs, similarity
+
+    def postings(d):
+        return index.build_postings(d, text_col="text", ref_col="doc_id")
 
     def vectors(d):
         return d.select(
@@ -194,6 +200,15 @@ def _lazy_operator_cases():
         "meta_blocking_wep": lambda d, e: pairs.meta_blocking_prune(e, scheme="wep"),
         "rp_lsh_near_dup_pairs": lambda d, e: similarity.rp_lsh_near_dup_pairs(
             vectors(d), dim=2
+        ),
+        "candidate_pairs_salted_hot_df": lambda d, e: pairs.candidate_pairs(
+            postings(d), salt_buckets=8, hot_df=1
+        ),
+        "candidate_pairs_salted_auto": lambda d, e: pairs.candidate_pairs(
+            postings(d), salt_buckets=8
+        ),
+        "sorted_neighborhood_pairs": lambda d, e: pairs.sorted_neighborhood_pairs(
+            d, "text", id_col="doc_id", window=3
         ),
     }
 
@@ -232,3 +247,25 @@ def test_operator_construction_launches_no_job(spark, tmp_path, name, kind):
             assert list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
+
+
+def test_global_sort_ranks_reuses_its_range_exchange(spark):
+    """The per-partition counts and the ranked rows read ONE range shuffle:
+    the second read is a ReusedExchange of the first, so both see the same
+    sampled range bounds -- what keeps the offsets exact."""
+    import re
+
+    from blurrily_spark.operators.pairs import global_sort_ranks
+
+    df = spark.range(500).selectExpr(
+        "id AS ref", "format_string('k%03d', CAST(pmod(id, 50) AS INT)) AS key"
+    )
+    out = global_sort_ranks(df, "key", "ref")
+    assert len(out.collect()) == 500
+    plan = _plan(out)  # the final adaptive plan, after the action
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    by_key = re.compile(r"Exchange rangepartitioning\(key#\d+ ASC NULLS FIRST, ref#")
+    reused = [line for line in final if "ReusedExchange" in line]
+    fresh = [line for line in final if by_key.search(line) and line not in reused]
+    assert len(fresh) == 1, plan
+    assert len(reused) == 1 and by_key.search(reused[0]), plan

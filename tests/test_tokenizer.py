@@ -9,11 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from blurrily_spark.functions.tokenizer import (
+    add_trigrams,
     normalize,
     normalize_py,
     tokenize_py,
     trigram_to_string,
-    trigrams,
     trigrams_py,
 )
 
@@ -78,17 +78,19 @@ def test_spark_trigrams_match_python(spark):
     inputs = [s for s, _ in NORMALIZE_CASES] + [s for s, _ in COUNT_CASES]
     df = spark.createDataFrame([(s,) for s in set(inputs)], "raw string")
     got = (
-        df.withColumn("norm", normalize("raw"))
-        .select("raw", F.array_sort(trigrams("norm")).alias("tg"))
+        add_trigrams(df.withColumn("norm", normalize("raw")), "norm", "tg")
+        .select("raw", "norm", F.array_sort("tg").alias("tg"))
         .collect()
     )
     for row in got:
+        assert row["tg"] == trigrams_py(row["norm"]), row["raw"]
         assert row["tg"] == tokenize_py(row["raw"]), row["raw"]
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_spark_matches_python_on_random_strings(spark, seed):
-    """Property: the SQL-expression path == the pure-Python golden model."""
+    """Property: the staged SQL-expression path every operator runs
+    (normalize, then add_trigrams) == the pure-Python golden model."""
     import random
 
     rng = random.Random(seed)
@@ -100,12 +102,13 @@ def test_spark_matches_python_on_random_strings(spark, seed):
     ]
     df = spark.createDataFrame([(s,) for s in samples], "raw string")
     got = (
-        df.withColumn("norm", normalize("raw"))
-        .select("raw", "norm", F.array_sort(trigrams("norm")).alias("tg"))
+        add_trigrams(df.withColumn("norm", normalize("raw")), "norm", "tg")
+        .select("raw", "norm", F.array_sort("tg").alias("tg"))
         .collect()
     )
     for row in got:
         assert row["norm"] == normalize_py(row["raw"]), repr(row["raw"])
+        assert row["tg"] == trigrams_py(row["norm"]), repr(row["raw"])
         assert row["tg"] == tokenize_py(row["raw"]), repr(row["raw"])
 
 
