@@ -32,7 +32,7 @@ Queries:
   q_contamination  -- benchmark decontamination: 8-gram overlap of every
                       document against a leaked-subset holdout (fast hash
                       family)
-  q_lm_score       -- CCNet-style LM quality scoring: add-k bigram model
+  q_lm_score       -- CCNet-style LM quality scoring: add-one bigram model
                       trained on the corpus, per-doc mean log-prob + OOV
   q_semantic_dedup -- SemDeDup pass (cluster-assign -> within-cluster
                       cosine dup graph -> CC -> keeper) over the full

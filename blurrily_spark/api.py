@@ -5,12 +5,12 @@ Gives a user of the reference (``Blurrily::Map`` -- lib/blurrily/map.rb,
 PUT/FIND/DELETE/CLEAR -- lib/blurrily/command_processor.rb) a drop-in
 equivalent:
 
-    m = Map(spark)
+    m = Map()
     m.put("paris", 123)          # -> 6 (unique trigrams; 0 on dup ref)
     m.find("pariis")             # -> [(123, 5, 5)]
     m.delete(123)
     m.save("/path/db")           # parquet snapshot, written then renamed
-    m = Map.load(spark, "/path/db")
+    m = Map.load("/path/db")
 
 Semantics mirrored from the reference:
 * put returns the needle's unique-trigram count, 0 if the ref is already
@@ -43,7 +43,6 @@ import shutil
 import time
 import uuid
 from array import array
-from typing import TYPE_CHECKING
 
 import numpy as np
 import pyarrow as pa
@@ -52,9 +51,6 @@ import pyarrow.parquet as pq
 
 from blurrily_spark.config import LIMIT_DEFAULT, LIMIT_RANGE
 from blurrily_spark.functions.tokenizer import normalize_py, trigrams_py
-
-if TYPE_CHECKING:
-    from pyspark.sql import SparkSession
 
 REF_RANGE = (1, 1 << 31)     # lib/blurrily/defaults.rb:8
 WEIGHT_RANGE = (0, 1 << 31)  # lib/blurrily/defaults.rb:9
@@ -132,8 +128,7 @@ class Map:
     MAX_LOAD_BYTES = 1 << 30
     _BYTES_PER_ROW = 16
 
-    def __init__(self, spark: SparkSession | None = None):
-        # ``spark`` keeps the facade's signature; the map never uses it
+    def __init__(self):
         self._clean_path: str | None = None
         self._closed = False
         self._reset()
@@ -310,7 +305,7 @@ class Map:
         )
 
     @classmethod
-    def load(cls, spark: SparkSession | None, path: str) -> "Map":
+    def load(cls, path: str) -> "Map":
         """Open a snapshot. Missing path => FileNotFoundError (the
         reference's ENOENT); unreadable or wrong-schema data =>
         ProtocolError (its EPROTO, storage.c:244-250); a snapshot above
@@ -349,7 +344,7 @@ class Map:
             raise ProtocolError(f"not a postings snapshot: {path}") from exc
         if any(col.null_count for col in table.columns):
             raise ProtocolError(f"not a postings snapshot: {path} (null values)")
-        m = cls(spark)
+        m = cls()
         m._index(*(table.column(name).to_numpy() for name in _ARROW_SCHEMA.names))
         m._clean_path = path
         return m
@@ -380,8 +375,7 @@ class MapGroup:
     """Named multi-tenant maps (lib/blurrily/map_group.rb): one Map per db
     name, lazily loaded from ``directory`` if a saved snapshot exists."""
 
-    def __init__(self, spark: SparkSession | None, directory: str = "."):
-        self._spark = spark
+    def __init__(self, directory: str = "."):
         self._dir = directory
         self._maps: dict[str, Map] = {}
 
@@ -392,13 +386,13 @@ class MapGroup:
         if name not in self._maps:
             path = self._path(name)
             if os.path.exists(os.path.join(path, "_SUCCESS")):
-                self._maps[name] = Map.load(self._spark, path)
+                self._maps[name] = Map.load(path)
             else:
-                self._maps[name] = Map(self._spark)
+                self._maps[name] = Map()
         return self._maps[name]
 
     def clear(self, name: str) -> Map:
-        self._maps[name] = Map(self._spark)
+        self._maps[name] = Map()
         return self._maps[name]
 
     def save_all(self) -> None:

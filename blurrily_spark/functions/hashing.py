@@ -63,11 +63,11 @@ def chunk_bounds(n_chunks: int, total_bits: int) -> list[tuple[int, int]]:
     return [(bounds[i], bounds[i + 1]) for i in range(n_chunks)]
 
 
-def poly_hash_sql(expr: str, base: int = POLY_BASE_A, mod: int = MERSENNE) -> str:
+def poly_hash_sql(expr: str, base: int = POLY_BASE_A) -> str:
     """The DuckDB twin of :func:`poly_hash` over SQL expression ``expr``."""
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(range(1, length({expr}) + 1), "
         f"i -> CAST(ascii(substr({expr}, CAST(i AS INT), 1)) AS BIGINT))), "
-        f"(acc, x) -> (acc * {base} + x) % {mod})"
+        f"(acc, x) -> (acc * {base} + x) % {MERSENNE})"
     )

@@ -60,11 +60,11 @@ def trigram_ctes(alias: str) -> str:
 )"""
 
 
-def postings_sql(table_sql: str, ref: str, text: str, alias: str = "hay") -> str:
+def postings_sql(table_sql: str, ref: str, text: str) -> str:
     """Full postings query: (trigram, ref, weight)."""
-    return f"""WITH {norm_cte(alias, table_sql, ref, text)},
-{trigram_ctes(alias)}
-SELECT trigram, ref, weight FROM {alias}_tg"""
+    return f"""WITH {norm_cte('hay', table_sql, ref, text)},
+{trigram_ctes('hay')}
+SELECT trigram, ref, weight FROM hay_tg"""
 
 
 def queries_values(needles: list[tuple[int, str]]) -> str:
@@ -155,11 +155,12 @@ def simhash_ctes(alias: str) -> str:
 )"""
 
 
-def minhash_ctes(alias: str, params: list[tuple[int, int]], w: int = 3) -> str:
+def minhash_ctes(alias: str, params: list[tuple[int, int]]) -> str:
     """CTEs from ``{alias}_norm`` to ``{alias}_sig(ref, sig)``.
 
-    Bit-for-bit twin of operators.dedup.minhash_signatures (portable hash):
-    word w-shingles -> polynomial shingle hash -> per-permutation list_min.
+    Bit-for-bit twin of operators.dedup.minhash_signatures (portable hash,
+    ``w=3``): word 3-shingles -> polynomial shingle hash -> per-permutation
+    list_min.
     """
     hs = poly_hash_sql("s")
     sig_items = ",\n    ".join(
@@ -170,9 +171,9 @@ def minhash_ctes(alias: str, params: list[tuple[int, int]], w: int = 3) -> str:
   SELECT ref, string_split(norm, ' ') AS w FROM {alias}_norm
 ),
 {alias}_sh AS (
-  SELECT ref, CASE WHEN len(w) >= {w} THEN
-      list_distinct(list_transform(range(1, len(w) - {w - 2}),
-        i -> array_to_string(w[CAST(i AS INT):CAST(i + {w - 1} AS INT)], ' ')))
+  SELECT ref, CASE WHEN len(w) >= 3 THEN
+      list_distinct(list_transform(range(1, len(w) - 1),
+        i -> array_to_string(w[CAST(i AS INT):CAST(i + 2 AS INT)], ' ')))
     ELSE [array_to_string(w, ' ')] END AS shingles
   FROM {alias}_ws
 ),
@@ -204,14 +205,13 @@ def _band_match_exprs(num_hashes: int, bands: int) -> tuple[str, str]:
     return band_eq, matches
 
 
-def lsh_pairs_sql(
-    alias: str, num_hashes: int, bands: int, round_to: int = 6
-) -> str:
+def lsh_pairs_sql(alias: str, num_hashes: int, bands: int) -> str:
     """SELECT over ``{alias}_sig``: pairs where some band matches exactly,
-    with est_jaccard = fraction of matching signature positions."""
+    with est_jaccard = fraction of matching signature positions, rounded
+    to 6 places."""
     band_eq, matches = _band_match_exprs(num_hashes, bands)
     return f"""SELECT id_a, id_b,
-  round(({matches}) / {float(num_hashes)}, {round_to}) AS est_jaccard
+  round(({matches}) / {float(num_hashes)}, 6) AS est_jaccard
 FROM (
   SELECT a.ref AS id_a, b.ref AS id_b, a.sig AS sa, b.sig AS sb
   FROM {alias}_sig a JOIN {alias}_sig b ON a.ref < b.ref
@@ -219,20 +219,14 @@ FROM (
 WHERE {band_eq}"""
 
 
-def lsh_cross_pairs_sql(
-    new_alias: str,
-    ref_alias: str,
-    num_hashes: int,
-    bands: int,
-    round_to: int = 6,
-) -> str:
+def lsh_cross_pairs_sql(new_alias: str, ref_alias: str, num_hashes: int, bands: int) -> str:
     """SELECT over ``{new_alias}_sig`` x ``{ref_alias}_sig``: oriented
     ``(new_id, ref_id, est_jaccard)`` pairs where some band matches exactly
     (the cross-corpus twin of :func:`lsh_pairs_sql` -- no id ordering, the
     two id spaces are independent)."""
     band_eq, matches = _band_match_exprs(num_hashes, bands)
     return f"""SELECT new_id, ref_id,
-  round(({matches}) / {float(num_hashes)}, {round_to}) AS est_jaccard
+  round(({matches}) / {float(num_hashes)}, 6) AS est_jaccard
 FROM (
   SELECT a.ref AS new_id, b.ref AS ref_id, a.sig AS sa, b.sig AS sb
   FROM {new_alias}_sig a CROSS JOIN {ref_alias}_sig b

@@ -6,7 +6,6 @@ from blurrily_spark.operators.find import (  # noqa: F401
     mutual_knn_pairs,
 )
 from blurrily_spark.operators.index import (  # noqa: F401
-    append_postings,
     build_postings,
     delete_refs,
     prepare_needles,

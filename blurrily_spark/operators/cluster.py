@@ -20,10 +20,14 @@ table write per iteration, which also gives checkpoint-resume).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from blurrily_spark.config import shuffle_partitions
+
+log = logging.getLogger(__name__)
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -97,6 +101,8 @@ def _fingerprint_metrics() -> list:
 # the bound the large-star/small-star loop runs unchanged; 0 disables the
 # driver path entirely.
 CC_DRIVER_MAX_EDGES = 100_000
+# The loop converges in O(log^2 n) rounds; past this many it raises.
+CC_MAX_ROUNDS = 50
 
 
 def _driver_components(rows) -> tuple[list[int], list[int]]:
@@ -127,15 +133,9 @@ def _driver_components(rows) -> tuple[list[int], list[int]]:
     return refs, [mins[find(node)] for node in refs]
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-    stats: dict | None = None,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """Label every node reachable through ``edges`` with its component min.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Label every node reachable through ``edges`` (columns ``src``,
+    ``dst``) with its component min.
 
     Returns ``(ref long, entity_id long)`` -- one row per distinct node,
     ``entity_id`` = smallest ref in the component (deterministic labels).
@@ -145,20 +145,18 @@ def connected_components(
     Each iteration runs exactly ONE Spark job: the eager ``localCheckpoint``
     that materializes the round's edges, with the convergence fingerprint
     (edge count + order-insensitive hash) collected by ``observe()`` on
-    that same job. ``stats``, when given, receives ``{"rounds": r}`` for
-    callers/tests that pin the per-round job count.
+    that same job. Each call logs its path at INFO: the driver path with
+    its edge count, or the loop with its round count.
     """
     canon = _canonical(
         edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
         )
     )
     spark = edges.sparkSession
 
-    if driver_max_edges is None:
-        driver_max_edges = CC_DRIVER_MAX_EDGES
-    if driver_max_edges > 0:
+    if CC_DRIVER_MAX_EDGES > 0:
         # Small graph: one collect, cut at one row past the bound, then
         # union-find on the driver -- same (ref, entity_id=component min)
         # rows as the loop below, without its per-round jobs. The labels go
@@ -166,14 +164,12 @@ def connected_components(
         # with no Python-worker task (a list of tuples would run one per
         # partition through a Python RDD). A graph past the bound falls
         # through to the loop.
-        rows = canon.limit(driver_max_edges + 1).collect()
-        if len(rows) <= driver_max_edges:
+        rows = canon.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+        if len(rows) <= CC_DRIVER_MAX_EDGES:
             import pyarrow as pa
 
             refs, ids = _driver_components(rows)
-            if stats is not None:
-                stats["rounds"] = 0
-                stats["driver_path"] = True
+            log.info("connected_components: driver path, %d edges", len(rows))
             return spark.createDataFrame(
                 pa.table(
                     {"ref": pa.array(refs, pa.int64()), "entity_id": pa.array(ids, pa.int64())}
@@ -198,7 +194,7 @@ def connected_components(
         e = e.coalesce(target0)
         cur_parts = target0
     rounds = 0
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         # one fresh Observation per round (an Observation is single-use);
         # the eager localCheckpoint below is the action that fires it, so
         # the fingerprint costs zero extra jobs
@@ -233,9 +229,8 @@ def connected_components(
             e = e.coalesce(target)
             cur_parts = target
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} rounds")
-    if stats is not None:
-        stats["rounds"] = rounds
+        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ROUNDS} rounds")
+    log.info("connected_components: loop, %d rounds", rounds)
 
     # Converged state: every edge is (node, component-min). Roots appear only
     # on the dst side; give each a self-label.
@@ -249,10 +244,9 @@ def assign_entities(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "ref",
-    **cc_kwargs,
 ) -> DataFrame:
     """Entity id for *every* node: component min, or self for singletons."""
-    comp = connected_components(edges, **cc_kwargs)
+    comp = connected_components(edges)
     n = nodes.select(F.col(node_col).cast("long").alias("ref")).distinct()
     return n.join(comp, "ref", "left").select(
         "ref", F.coalesce("entity_id", "ref").alias("entity_id")
@@ -309,23 +303,18 @@ def golden_records(
     )
 
 
-def incremental_entities(
-    prev: DataFrame,
-    new_edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    **cc_kwargs,
-) -> DataFrame:
+def incremental_entities(prev: DataFrame, new_edges: DataFrame) -> DataFrame:
     """Fold a delta batch of match edges into an existing entity assignment
     WITHOUT re-clustering history.
 
-    ``prev`` is a prior :func:`connected_components` /
-    :func:`assign_entities` output ``(ref, entity_id)`` whose labels are
-    component minima (both functions guarantee that). Each delta edge
-    endpoint is contracted to its previous entity id (identity for unseen
-    nodes), connected components runs over the CONTRACTED graph only --
-    O(delta) edges, never O(history) -- and the resulting supernode labels
-    are painted back over the previous assignment with one equi-join.
+    ``new_edges`` has columns ``src`` and ``dst``. ``prev`` is a prior
+    :func:`connected_components` / :func:`assign_entities` output
+    ``(ref, entity_id)`` whose labels are component minima (both functions
+    guarantee that). Each delta edge endpoint is contracted to its
+    previous entity id (identity for unseen nodes), connected components
+    runs over the CONTRACTED graph only -- O(delta) edges, never
+    O(history) -- and the resulting supernode labels are painted back over
+    the previous assignment with one equi-join.
 
     Output ``(ref, entity_id)`` covers every previously-assigned ref plus
     every delta endpoint, and is EXACTLY equal to recomputing
@@ -339,7 +328,7 @@ def incremental_entities(
         F.col("entity_id").cast("long").alias("entity_id"),
     )
     e = new_edges.select(
-        F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
+        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
     )
     # contract endpoints through the previous labels (identity when unseen)
     contracted = (
@@ -354,7 +343,7 @@ def incremental_entities(
             F.coalesce("entity_id", "dst").alias("dst"),
         )
     )
-    comp = connected_components(contracted, **cc_kwargs).withColumnsRenamed(
+    comp = connected_components(contracted).withColumnsRenamed(
         {"ref": "_super", "entity_id": "_new"}
     )
     # universe = previously assigned refs + raw delta endpoints

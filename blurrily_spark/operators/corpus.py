@@ -21,7 +21,7 @@ ext/blurrily/tokeniser.rl:52-60's normalize -> window pattern):
   frequencies are two equi-key aggregations; the per-document top-k is a
   rank window partitioned by document (WindowGroupLimit pushes the k cut
   below the sort).
-* :func:`lm_score` -- CCNet-style LM quality scoring: an add-k bigram
+* :func:`lm_score` -- CCNet-style LM quality scoring: an add-one bigram
   model trained corpus-side (one bigram aggregation and its per-word
   sum), per-document mean
   token log-probability + OOV counts via three equi-joins of the doc
@@ -64,7 +64,6 @@ def ngram_contamination(
     n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_hits: int = 1,
     hash_fn: str = "exact",
 ) -> DataFrame:
     """Benchmark decontamination: per TRAIN document, how many of its
@@ -74,9 +73,9 @@ def ngram_contamination(
     Returns one row per train document:
     ``(id, n_grams, n_contaminated, contamination, is_contaminated)``
     where ``contamination = n_contaminated / n_grams`` and
-    ``is_contaminated = 1`` when ``n_contaminated >= min_hits`` (the
-    standard decontamination rule is min_hits=1 at n in [8, 13]: any
-    verbatim overlap disqualifies).
+    ``is_contaminated = 1`` when ``n_contaminated >= 1`` (the standard
+    decontamination rule at n in [8, 13]: any verbatim overlap
+    disqualifies).
 
     Plan: distinct grams per train doc (explode), the DISTINCT holdout
     gram set (explode + aggregate -- benchmark-sized, so it broadcasts),
@@ -104,7 +103,7 @@ def ngram_contamination(
         "n_grams",
         n_hit.alias("n_contaminated"),
         F.round(n_hit / F.col("n_grams"), 6).alias("contamination"),
-        (n_hit >= min_hits).cast("int").alias("is_contaminated"),
+        (n_hit >= 1).cast("int").alias("is_contaminated"),
     )
 
 
@@ -232,35 +231,27 @@ def _threshold(fraction: float) -> int:
 
 def sample_corpus(
     df: DataFrame,
-    fraction: float | None = None,
     *,
-    by: dict[str, float] | None = None,
+    by: dict[str, float],
     stratum_col: str = "source",
     key_col: str = "doc_id",
     seed: int = 1,
 ) -> DataFrame:
-    """Deterministic corpus (sub)sampling: keep a row iff its key's
-    :func:`_lcg_u` value falls under ``floor(fraction * (2^31-1))``.
-
-    Exactly one of ``fraction`` (uniform) or ``by`` (stratified mixture:
-    ``{stratum value -> fraction}``, rows whose stratum is absent are
-    DROPPED -- ``by`` IS the mixture spec) must be given. The decision is
+    """Deterministic stratified corpus sampling: keep a row iff its key's
+    :func:`_lcg_u` value falls under ``floor(fraction * (2^31-1))``, where
+    ``by`` maps each stratum value to its fraction. Rows whose stratum is
+    absent are DROPPED -- ``by`` IS the mixture spec. The decision is
     a pure function of ``(key, seed)``: stable under repartitioning,
     re-runs, engine changes, and corpus growth (a row's fate never
     depends on other rows), which is what makes ablation and mixture
     experiments comparable across pipeline versions. Plan shape: one
     codegen'd Filter over the scan -- no shuffle, no UDF (pinned in
     tests/test_plans.py)."""
-    if (fraction is None) == (by is None):
-        raise ValueError("pass exactly one of fraction= or by=")
-    if fraction is not None:
-        thr = F.lit(_threshold(fraction))
-    else:
-        if not by:
-            raise ValueError("by= must name at least one stratum")
-        thr = F.lit(0)
-        for value, frac in by.items():
-            thr = F.when(F.col(stratum_col) == value, F.lit(_threshold(frac))).otherwise(thr)
+    if not by:
+        raise ValueError("by= must name at least one stratum")
+    thr = F.lit(0)
+    for value, frac in by.items():
+        thr = F.when(F.col(stratum_col) == value, F.lit(_threshold(frac))).otherwise(thr)
     return df.where(_lcg_u(F.col(key_col), seed) < thr)
 
 
@@ -334,10 +325,9 @@ def lm_score(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: float = 1.0,
 ) -> DataFrame:
     """CCNet-style n-gram language-model quality scoring (Wenzek et al.
-    2020, arXiv:1911.00359 -- there a KenLM 5-gram; here an add-k bigram
+    2020, arXiv:1911.00359 -- there a KenLM 5-gram; here an add-one bigram
     model, the engine-friendly member of the same family): train token
     statistics on ``train``, score every ``docs`` row by mean token
     log-probability. Low ``avg_logp`` (high perplexity) flags gibberish,
@@ -345,11 +335,11 @@ def lm_score(
     it alongside :func:`blurrily_spark.operators.textstats.quality_score`'s
     surface heuristics.
 
-    Model: ``p(w_0) = (c1(w_0)+k) / (N+kV)`` and
-    ``p(w_i | w_{i-1}) = (c2(w_{i-1},w_i)+k) / (c1(w_{i-1})+kV)`` with
+    Model: ``p(w_0) = (c1(w_0)+1) / (N+V)`` and
+    ``p(w_i | w_{i-1}) = (c2(w_{i-1},w_i)+1) / (c1(w_{i-1})+V)`` with
     unigram counts ``c1``, bigram counts ``c2``, corpus token count ``N``
-    and vocabulary size ``V`` from ``train``; add-k smoothing keeps every
-    probability finite for OOV tokens.
+    and vocabulary size ``V`` from ``train``; add-one smoothing keeps
+    every probability finite for OOV tokens.
 
     Returns one row per ``docs`` row -- ``(id, n_tokens, n_oov,
     avg_logp, perplexity)`` -- where ``n_oov`` counts tokens whose
@@ -367,8 +357,6 @@ def lm_score(
     at cluster scale AQE skew-join splitting covers it (the count side is
     one row per key, so replication is free).
     """
-    if k <= 0:
-        raise ValueError(f"smoothing k must be > 0, got {k}")
     t_toks = _token_rows(train, id_col, text_col)
     # One train-side pass: c2 is one (w_prev, w) aggregate and c1 its
     # per-word sum, so every count table derives from one explode and
@@ -384,7 +372,7 @@ def lm_score(
         F.sum("c1").alias("_n"), F.count(F.lit(1)).alias("_v")
     )
     d_toks = _token_rows(docs, id_col, text_col)
-    kk = F.lit(float(k))
+    kk = F.lit(1.0)
     scored = (
         d_toks.join(F.broadcast(stats))
         .join(uni.select(F.col("w"), F.col("c1").alias("_cw")), "w", "left")

@@ -190,17 +190,16 @@ def minhash_signatures(
     text_col: str = "text",
     w: int = 3,
     num_hashes: int = 32,
-    seed: int = 7,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """MinHash signatures: (id, sig array<long> of length num_hashes).
 
     sig_j = min over shingles s of ((a_j * h(s) + b_j) mod p) with
-    h(s) in [0, p). Modular arithmetic keeps every product < 2^62
-    (ANSI-safe). All JVM-side: one hash per shingle, then ``num_hashes``
+    h(s) in [0, p) and (a_j, b_j) drawn with seed 7. Modular arithmetic
+    keeps every product < 2^62 (ANSI-safe). All JVM-side: one hash per shingle, then ``num_hashes``
     array_min(transform(...)).
     """
-    params = _permutation_params(num_hashes, seed)
+    params = _permutation_params(num_hashes)
     base = with_normalized(df, text_col, "_norm", spread=True).select(
         F.col(id_col).alias("id"),
         F.transform(
@@ -231,7 +230,8 @@ def banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame
     shuffle; joins must re-compare the actual slices afterwards (see
     :func:`lsh_pairs_between`).
     """
-    assert num_hashes % bands == 0
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(f"bands must divide num_hashes={num_hashes}, got bands={bands}")
     rows_per_band = num_hashes // bands
     return sigs.select(
         "id",
@@ -330,21 +330,20 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    seed: int = 7,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """Approximate near-dup candidate pairs via LSH banding (self-dedup).
 
-    Signatures are cut into ``bands`` bands of ``num_hashes/bands`` rows;
-    a pair collides iff some band matches exactly. Returns
+    :func:`minhash_signatures` over word 3-grams are cut into ``bands``
+    bands of ``num_hashes/bands`` rows; a pair collides iff some band
+    matches exactly. Returns
     ``(id_a, id_b, est_jaccard)`` where est_jaccard is the fraction of
     matching signature positions. The pair-generation join is an equi-join
     on (band_idx, band_hash) -- linear in colliding docs, never all-pairs.
     """
-    sigs = minhash_signatures(df, id_col, text_col, w, num_hashes, seed, hash_fn)
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes, hash_fn=hash_fn)
     banded = banded_signatures(sigs, num_hashes, bands)
     return lsh_pairs_between(banded, banded, num_hashes, bands)
 
@@ -369,15 +368,12 @@ def near_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
-    seed: int = 7,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """End-to-end near-duplicate corpus dedup -- the retained-corpus face
-    of MinHash LSH: candidate pairs from banded signatures, filtered at
+    of MinHash LSH: candidate pairs from banded signatures (32 hashes in
+    8 bands: the :func:`minhash_lsh_pairs` defaults), filtered at
     ``est_jaccard >= threshold``, connected components over the resulting
     dup graph, smallest id per component elected canonical.
 
@@ -394,9 +390,7 @@ def near_dedup(
     from blurrily_spark.operators.cluster import connected_components
 
     _require_integral_id(df, id_col, "near_dedup")
-    pairs = minhash_lsh_pairs(
-        df, id_col, text_col, w, num_hashes, bands, seed, hash_fn
-    )
+    pairs = minhash_lsh_pairs(df, id_col, text_col, hash_fn=hash_fn)
     edges = pairs.where(F.col("est_jaccard") >= threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
@@ -415,16 +409,12 @@ def near_dedup_against(
     ref_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
-    seed: int = 7,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """Cross-corpus near-dedup: flag documents of ``new_df`` that
     near-duplicate any document of ``ref_df`` (a fresh crawl against the
-    retained training corpus).
+    retained training corpus), on the signatures of :func:`near_dedup`.
 
     Returns one row per new document:
     ``(id, matched_ref_id, est_jaccard, is_dup)`` where ``matched_ref_id``
@@ -441,12 +431,12 @@ def near_dedup_against(
     absorbs them.
     """
 
+    num_hashes, bands = 32, 8
+
     def banded(df: DataFrame) -> DataFrame:
         _require_integral_id(df, id_col, "near_dedup_against")
         return banded_signatures(
-            minhash_signatures(df, id_col, text_col, w, num_hashes, seed, hash_fn),
-            num_hashes,
-            bands,
+            minhash_signatures(df, id_col, text_col, hash_fn=hash_fn), num_hashes, bands
         ).withColumn("id", F.col("id").cast("long"))
 
     sn, sr = banded(new_df), banded(ref_df)
@@ -487,35 +477,25 @@ def near_dedup_against(
 
 
 def _span_occurrences(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    w: int,
-    min_docs: int,
-    hash_fn: str,
-    stride: int,
-    keep_win: bool,
+    df: DataFrame, id_col: str, text_col: str, w: int, hash_fn: str, keep_win: bool
 ) -> DataFrame:
     """One row per window occurrence: ``(id, start_word[, win], _dup)``
-    over rolling ``w``-word windows of the normalized text, one every
-    ``stride`` words. ``_dup`` is true iff the window occurs in >=
-    ``min_docs`` distinct documents (non-NULL ids, as ``count_distinct``
-    counts them).
+    over rolling ``w``-word windows of the normalized text, one at every
+    word. ``_dup`` is true iff the window occurs in two or more distinct
+    documents (non-NULL ids, as ``count_distinct`` counts them).
 
     One pass: the windows are built once and the document count is a
     window over the window key -- ``dense_rank`` by id, then its ``max``
     per key -- so the occurrence stream is never re-read by a separate
     frequency aggregation and a join back; the plan stays lazy.
     """
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
     d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     n = F.size(words)
     # slice() clamps past the end, so short docs (n < w) fall out of the
     # same expression as one whole-text window -- no special case
     wins = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0)), F.lit(stride)),
+        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0))),
         lambda i: F.struct(
             i.cast("int").alias("start"),
             F.concat_ws(" ", F.slice(words, i + F.lit(1), w)).alias("win"),
@@ -539,7 +519,7 @@ def _span_occurrences(
         "id",
         "start_word",
         *(["win"] if keep_win else []),
-        (n_docs >= min_docs).alias("_dup"),
+        (n_docs >= 2).alias("_dup"),
     )
 
 
@@ -564,19 +544,11 @@ def duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 8,
-    min_docs: int = 2,
     hash_fn: str = "exact",
-    stride: int = 1,
 ) -> DataFrame:
     """Span-level duplicate statistics: rolling ``w``-word windows over the
-    normalized text; a window appearing verbatim in >= ``min_docs``
-    distinct documents is a duplicated span.
-
-    ``stride`` is the 100 TB cost lever: windows start every ``stride``
-    words instead of every word, dividing the exploded row count by
-    ``stride`` at the cost of alignment sensitivity (a shared span is
-    still caught as long as both sides sample some common start offset;
-    ``stride=1`` is exhaustive and is what the oracle checks).
+    normalized text; a window appearing verbatim in two or more distinct
+    documents is a duplicated span.
 
     The DataFrame-expressible face of substring dedup (the suffix-array
     method of Lee et al., "Deduplicating Training Data Makes Language
@@ -599,9 +571,7 @@ def duplicate_spans(
     their whole text as one window. At most one document may have a NULL
     id; with two or more the query fails.
     """
-    occ = _span_occurrences(
-        df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
-    )
+    occ = _span_occurrences(df, id_col, text_col, w, hash_fn, keep_win=False)
     return occ.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum(F.col("_dup").cast("long")).alias("n_dup_windows"),
@@ -622,9 +592,6 @@ def duplicate_span_positions(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 8,
-    min_docs: int = 2,
-    hash_fn: str = "exact",
-    stride: int = 1,
 ) -> DataFrame:
     """Per-span cut points for :func:`duplicate_spans` (round-3 verdict
     #7): one row per OCCURRENCE of a duplicated window --
@@ -634,17 +601,13 @@ def duplicate_span_positions(
     (:func:`cut_duplicate_spans`), completing the Lee et al. ACL 2022
     substring-dedup story beyond per-doc statistics.
 
-    Same scale shape as :func:`duplicate_spans`: explode (~n_words/stride
-    rows per doc), one shuffle by window key that flags duplicated
-    windows, then a filter -- equi-key, never pairwise, lazy.
-    ``hash_fn='fast'`` shuffles 8-byte keys (the win string still rides
-    along to the output); 'exact' keys by the raw window so the DuckDB
-    oracle reproduces rows bit-for-bit.
+    Same scale shape as :func:`duplicate_spans`: explode (~n_words rows
+    per doc), one shuffle by window key that flags duplicated windows,
+    then a filter -- equi-key, never pairwise, lazy. The key is the raw
+    window, so the DuckDB oracle reproduces rows bit-for-bit.
     """
     return (
-        _span_occurrences(
-            df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=True
-        )
+        _span_occurrences(df, id_col, text_col, w, "exact", keep_win=True)
         .where("_dup")
         .drop("_dup")
     )
@@ -655,9 +618,7 @@ def cut_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     w: int = 8,
-    min_docs: int = 2,
     hash_fn: str = "fast",
-    stride: int = 1,
 ) -> DataFrame:
     """Cut-and-keep pass: remove every word covered by a duplicated
     ``w``-word window and reassemble the remaining text in order.
@@ -678,9 +639,8 @@ def cut_duplicate_spans(
     by the document length, which the input row already holds). No
     pairwise work anywhere, and no job before the action.
     """
-    positions = _span_occurrences(
-        df, id_col, text_col, w, min_docs, hash_fn, stride, keep_win=False
-    ).where("_dup")
+    occ = _span_occurrences(df, id_col, text_col, w, hash_fn, keep_win=False)
+    positions = occ.where("_dup")
     d = with_normalized(df, text_col, "_norm", spread=True)
     words = F.split(F.col("_norm"), " ")
     # outer: a NULL-text document keeps one row, with NULL pos and word

@@ -174,7 +174,6 @@ def find_idf(
     query_text_col: str = "needle",
     query_id_col: str = "query_id",
     k: int = LIMIT_DEFAULT,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Rarity-weighted FIND: rank by summed trigram idf instead of raw count.
 
@@ -187,7 +186,7 @@ def find_idf(
     0.5) / (df + 0.5)`` scaled to int64 -- the same engine-exact weighting
     as :func:`~blurrily_spark.operators.pairs.idf_weighted_pairs` (integer
     sums are order-independent, so the score is bit-identical across
-    engines; see that docstring for the ``scale`` headroom rule). Ties
+    engines; see that docstring for the ``IDF_SCALE`` headroom rule). Ties
     break like F5: weight ASC, then ref ASC.
 
     Returns ``(query_id, ref, matches, idf_score, weight, rank)``, at most
@@ -199,26 +198,10 @@ def find_idf(
     is map-side combined and driver-small, the gather join and the
     WindowGroupLimit top-k are unchanged.
     """
-    from blurrily_spark.operators.pairs import trigram_df_counts
+    from blurrily_spark.operators.pairs import _idf_weights
 
     p = postings.select("trigram", "ref", "weight")
-    nn = p.agg(F.count_distinct("ref").alias("_n"))
-    w = (
-        trigram_df_counts(p)
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "trigram",
-            F.floor(
-                (F.col("_n") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                * F.lit(float(scale))
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("_w"),
-        )
-    )
-    pw = p.join(F.broadcast(w), "trigram")
+    pw = p.join(F.broadcast(_idf_weights(p)), "trigram")
 
     q = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
@@ -292,17 +275,13 @@ def mutual_knn_pairs(
     )
 
 
-def find_one(
-    postings: DataFrame,
-    needle: str,
-    limit: int = LIMIT_DEFAULT,
-) -> DataFrame:
-    """Single-needle FIND (the reference's ``Map#find`` signature).
+def find_one(postings: DataFrame, needle: str) -> DataFrame:
+    """Single-needle FIND with the reference's default limit of 10.
 
     Compiles to TakeOrderedAndProject (no window) -- the single-query fast
     path. Returns ``(ref, matches, weight)`` ordered like F5.
     """
     spark = postings.sparkSession
     q = spark.createDataFrame([(0, needle)], "query_id long, needle string")
-    res = find(postings, q, limit=limit)
+    res = find(postings, q)
     return res.orderBy("rank").select("ref", "matches", "weight")

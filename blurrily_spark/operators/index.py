@@ -1,4 +1,4 @@
-"""Write-path operators: index build / append / delete / stats.
+"""Write-path operators: index build / delete / stats.
 
 Reference semantics (SURVEY.md §2.2, §2.3-F7):
 
@@ -6,8 +6,9 @@ Reference semantics (SURVEY.md §2.2, §2.3-F7):
   Duplicate ref => no-op (NOT an upsert, storage.c:408); weight <= 0 =>
   default to length of the *normalized* needle (storage.c:409); one posting
   row per unique trigram of the needle.
-* W2 ref-membership test -- storage.c:404-408; for incremental appends a
-  left-anti join against existing refs replaces the Ruby hash.
+* W2 ref-membership test -- storage.c:404-408; a batch build keeps one
+  row per ref (the first by ``order_col``), and ``api.Map.put`` answers a
+  put of a stored ref with the reference's no-op.
 * W4 ``delete(ref)`` -- storage.c:584-612: drop every posting of a ref.
 * F7 ``stats`` -- storage.c:616-621: {references, trigrams} where
   ``trigrams`` counts posting rows (unique trigrams per stored needle).
@@ -88,28 +89,6 @@ def build_postings(
         .select(F.explode("_tg").alias("trigram"), "ref", "weight")
         .select(*POSTINGS_COLS)
     )
-
-
-def append_postings(
-    postings: DataFrame,
-    new_df: DataFrame,
-    text_col: str = "needle",
-    ref_col: str = "ref",
-    weight_col: str | None = "weight",
-) -> DataFrame:
-    """W2 incremental append: refs already present are skipped (no-op).
-
-    Mirrors storage.c:404-408 -- the ref-membership hash becomes a
-    left-anti join against the existing index's distinct refs. Returns the
-    unioned postings; at scale this is an Iceberg/Delta append of only the
-    new rows.
-    """
-    existing_refs = postings.select("ref").distinct()
-    fresh = new_df.withColumn("ref", F.col(ref_col).cast("long")).join(
-        existing_refs, "ref", "left_anti"
-    )
-    added = build_postings(fresh, text_col, "ref", weight_col)
-    return postings.select(*POSTINGS_COLS).unionByName(added)
 
 
 def delete_refs(postings: DataFrame, refs: DataFrame | list[int]) -> DataFrame:

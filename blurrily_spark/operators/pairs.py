@@ -337,7 +337,32 @@ def token_blocking_pairs(
 # -- idf-weighted cosine scoring -----------------------------------------------
 
 
-def idf_weighted_pairs(postings: DataFrame, scale: int = 1_000_000) -> DataFrame:
+# idf weights are scaled to int64 by this factor; see idf_weighted_pairs
+IDF_SCALE = 1_000_000
+
+
+def _idf_weights(p: DataFrame) -> DataFrame:
+    """``(trigram, _w)``: the RSJ-style rational idf of each trigram of the
+    postings ``p``, scaled by :data:`IDF_SCALE` and rounded to int64."""
+    nn = p.agg(F.count_distinct("ref").alias("_n"))
+    return (
+        trigram_df_counts(p)
+        .crossJoin(F.broadcast(nn))
+        .select(
+            "trigram",
+            F.floor(
+                (F.col("_n") - F.col("df") + F.lit(0.5))
+                / (F.col("df") + F.lit(0.5))
+                * F.lit(float(IDF_SCALE))
+                + F.lit(0.5)
+            )
+            .cast("long")
+            .alias("_w"),
+        )
+    )
+
+
+def idf_weighted_pairs(postings: DataFrame) -> DataFrame:
     """Candidate pairs scored by df-weighted (idf) cosine over shared keys.
 
     The TF-IDF-family linkage scorer (Cohen et al.'s soft-TFIDF lineage,
@@ -354,12 +379,12 @@ def idf_weighted_pairs(postings: DataFrame, scale: int = 1_000_000) -> DataFrame
     reducing to plain set cosine at w == 1.
 
     Exactness machinery: weights are scaled to int64
-    (``floor(w * scale + 0.5)``), so every sum is order-independent
+    (``floor(w * IDF_SCALE + 0.5)``), so every sum is order-independent
     integer math -- no float-summation nondeterminism anywhere; floats
-    appear only in the final division. ``scale`` trades precision for
-    headroom: the per-record sum must fit int64, so with the default 1e6
-    keep ``N * scale * keys_per_record < 2^63`` (corpora beyond ~10^8
-    records: drop to 1e3).
+    appear only in the final division. The scale trades precision for
+    headroom: the per-record sum must fit int64, so with 1e6 keep
+    ``N * IDF_SCALE * keys_per_record < 2^63`` (corpora beyond ~10^8
+    records need a smaller scale).
 
     Scale shape: the same trigram self-join as :func:`candidate_pairs`
     (the dot product rides the existing pair aggregation -- ``sum(w)``
@@ -368,23 +393,7 @@ def idf_weighted_pairs(postings: DataFrame, scale: int = 1_000_000) -> DataFrame
     :func:`with_jaccard`'s count joins.
     """
     p = postings.select("trigram", "ref")
-    nn = p.agg(F.count_distinct("ref").alias("_n"))
-    w = (
-        trigram_df_counts(p)
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "trigram",
-            F.floor(
-                (F.col("_n") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                * F.lit(float(scale))
-                + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("_w"),
-        )
-    )
-    pw = p.join(F.broadcast(w), "trigram")
+    pw = p.join(F.broadcast(_idf_weights(p)), "trigram")
     wsums = pw.groupBy("ref").agg(F.sum("_w").alias("_wsum"))
     left = pw.select("trigram", F.col("ref").alias("ref_a"), F.col("_w"))
     right = pw.select("trigram", F.col("ref").alias("ref_b"))

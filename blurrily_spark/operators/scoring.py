@@ -59,17 +59,18 @@ def _jaro(a: str, b: str) -> float:
     return (m / la + m / lb + (m - t) / m) / 3.0
 
 
-def jaro_winkler_py(a: str | None, b: str | None, p: float = 0.1, max_prefix: int = 4) -> float | None:
-    """Plain-Python Jaro-Winkler (golden model + UDF kernel)."""
+def jaro_winkler_py(a: str | None, b: str | None) -> float | None:
+    """Plain-Python Jaro-Winkler (golden model + UDF kernel): Winkler's
+    prefix scale 0.1 over a common prefix of at most 4 characters."""
     if a is None or b is None:
         return None
     j = _jaro(a, b)
     prefix = 0
-    for ca, cb in zip(a[:max_prefix], b[:max_prefix]):
+    for ca, cb in zip(a[:4], b[:4]):
         if ca != cb:
             break
         prefix += 1
-    return j + prefix * p * (1.0 - j)
+    return j + prefix * 0.1 * (1.0 - j)
 
 
 @F.pandas_udf(DoubleType())

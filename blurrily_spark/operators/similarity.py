@@ -71,14 +71,6 @@ def _dlit(x) -> str:
     return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
 
 
-def _lit_vec(vec):
-    """Literal ``array<double>`` built in ONE ``F.expr`` py4j call instead
-    of one ``F.lit`` round-trip per element (a 64-dim codebook of 16
-    centroids otherwise costs ~1000 driver round-trips per operator call);
-    element-exact per :func:`_dlit`."""
-    return F.expr("array(%s)" % ", ".join(_dlit(x) for x in vec))
-
-
 def _quote_name(col_name: str) -> str:
     """SQL identifier for the column ``F.col(col_name)`` names: each
     dot-separated part backticked, embedded backticks doubled, so a nested
@@ -101,7 +93,10 @@ def _dot_sql(col_name: str, vec) -> str:
 
 
 def _lit_mat(vecs):
-    """Literal ``array<array<double>>`` in one py4j call (see _lit_vec)."""
+    """Literal ``array<array<double>>`` built in ONE ``F.expr`` py4j call
+    instead of one ``F.lit`` round-trip per element (a 64-dim codebook of
+    16 centroids otherwise costs ~1000 driver round-trips per operator
+    call); element-exact per :func:`_dlit`."""
     inner = ", ".join(
         "array(%s)" % ", ".join(_dlit(x) for x in v)
         for v in vecs
@@ -282,12 +277,15 @@ def assign_buckets_df(
     )
 
 
+# maxmin_centroids scans a hash-sample of about this many vectors
+MAXMIN_SEED_SCAN = 100_000
+
+
 def maxmin_centroids(
     corpus: DataFrame,
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_seed_scan: int = 100_000,
 ) -> list[list[float]]:
     """Deterministic farthest-first (maxmin) seeding: start from the
     lowest-id vector, then repeatedly take the vector with the smallest
@@ -297,15 +295,15 @@ def maxmin_centroids(
 
     Seeding quality does not need the full corpus, and k full scans would
     dominate codebook training at 100 TB: when the corpus exceeds
-    ``max_seed_scan`` rows, the k argmin scans run over a deterministic
-    hash-sample of ~max_seed_scan vectors (``pmod(xxhash64(id), m) = 0`` --
+    ``MAXMIN_SEED_SCAN`` rows, the k argmin scans run over a deterministic
+    hash-sample of ~MAXMIN_SEED_SCAN vectors (``pmod(xxhash64(id), m) = 0`` --
     partitioning-independent, so every run and parallelism level draws the
     SAME sample, unlike ``DataFrame.sample``). Lloyd iterations in
     :func:`kmeans_centroids` (the quality driver) stay full-corpus.
     """
     n = corpus.count()
-    if n > max_seed_scan:
-        m = n // max_seed_scan + 1
+    if n > MAXMIN_SEED_SCAN:
+        m = n // MAXMIN_SEED_SCAN + 1
         corpus = corpus.where(F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)) == 0)
     first = (
         corpus.orderBy(F.col(id_col).asc()).limit(1).select(vec_col).collect()[0][0]
@@ -406,34 +404,24 @@ def random_hyperplanes(n_bits: int, dim: int, seed: int = 11) -> list[list[float
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
 
 
-def rp_signature(vec_col, planes: list[list[float]]):
+def rp_signature(vec_col: str, planes: list[list[float]]):
     """Sign-bit sketch of a vector: bit_j = 1 iff dot(v, plane_j) > 0.
 
     Packed into one BIGINT (n_bits <= 62). Charikar's angular LSH:
     P[bit differs] = angle(u, v) / pi, so near-duplicate vectors share
-    almost every bit and Hamming-chunk blocking applies unchanged.
+    almost every bit and Hamming-chunk blocking applies unchanged. One
+    generated-SQL expression (one py4j call for all n_bits plane dots; a
+    Column loop cost ~1.5s of driver time per operator call).
     """
-    assert len(planes) <= 62
-    if isinstance(vec_col, str):
-        # generated-SQL path (one py4j call for all n_bits plane dots --
-        # the Column loop cost ~1.5s of driver time per operator call);
-        # term-for-term the same expressions as the Column path below
-        return F.expr(
-            " + ".join(  # disjoint bits: + == OR
-                f"shiftleft(CASE WHEN {_dot_sql(vec_col, p)} > 0 "
-                f"THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END, {j})"
-                for j, p in enumerate(planes)
-            )
+    if len(planes) > 62:
+        raise ValueError(f"planes: at most 62 fit a BIGINT signature, got {len(planes)}")
+    return F.expr(
+        " + ".join(  # disjoint bits: + == OR
+            f"shiftleft(CASE WHEN {_dot_sql(vec_col, p)} > 0 "
+            f"THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END, {j})"
+            for j, p in enumerate(planes)
         )
-    sig = None
-    for j, p in enumerate(planes):
-        plane = _lit_vec(p)
-        bit = F.when(dot(vec_col, plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, j)
-        sig = term if sig is None else sig + term  # disjoint bits: + == OR
-    return sig
+    )
 
 
 def rp_lsh_near_dup_pairs(
@@ -523,7 +511,6 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep: str = "min_id",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster embeddings against a coarse codebook, call members of the same
@@ -533,17 +520,9 @@ def semantic_dedup(
     Returns one row per input vector: ``(id, keep_id, is_dup)`` -- the same
     retained-corpus face as :func:`blurrily_spark.operators.dedup.near_dedup`,
     so the two compose (lexical MinHash pass, then a semantic pass over the
-    survivors' embeddings).
-
-    ``keep`` elects the representative inside each duplicate group:
-
-    - ``'min_id'`` -- smallest id (deterministic; consistent with every
-      other dedup operator here, and what the DuckDB oracle re-derives);
-    - ``'far_from_centroid'`` -- the paper's rule: keep the member with the
-      LOWEST cosine to its cluster centroid (the one adding most diversity
-      to the retained set); ties break to the lowest id. A group that CC
-      merged across buckets still elects exactly one keeper (each member's
-      centroid cosine is measured against its own bucket).
+    survivors' embeddings). Each duplicate group keeps its smallest id
+    (deterministic, as in every other dedup operator here, and what the
+    DuckDB oracle re-derives); ids must be integral.
 
     Scale shape: pairwise work happens only INSIDE a cluster -- the paper
     sizes k ~ sqrt(n) precisely so clusters stay small -- and it is an
@@ -552,12 +531,11 @@ def semantic_dedup(
     (tiny relative to the corpus); one final left join paints keepers back.
     Nothing lives driver-side but the codebook itself.
     """
-    from blurrily_spark.operators.cluster import connected_components
-
-    if keep not in ("min_id", "far_from_centroid"):
-        raise ValueError(f"keep must be 'min_id' or 'far_from_centroid', got {keep!r}")
-
     from blurrily_spark.config import spread_small_input
+    from blurrily_spark.operators.cluster import connected_components
+    from blurrily_spark.operators.dedup import _require_integral_id
+
+    _require_integral_id(emb, id_col, "semantic_dedup")
 
     assigned = assign_buckets(spread_small_input(emb), centroids, id_col, vec_col)
     # Row norms materialized BELOW the pair join (bit-identical cosine, see
@@ -585,35 +563,11 @@ def semantic_dedup(
     )
     comps = connected_components(edges).withColumnRenamed("ref", "id")
     ids = assigned.select(F.col("vec_id").cast("long").alias("id"))
-    if keep == "min_id":
-        keep_col = F.coalesce("entity_id", F.col("id"))
-        return ids.join(comps, "id", "left").select(
-            "id",
-            keep_col.alias("keep_id"),
-            (keep_col != F.col("id")).cast("int").alias("is_dup"),
-        )
-    # far_from_centroid: keeper = argmin (centroid cosine, id) per component.
-    # min(struct(...)) is one partial-aggregating shuffle over dup-group
-    # members only -- no window, no id negation (ANSI-safe tie-break).
-    cents = _lit_mat(centroids)
-    ccos = cosine(F.col("_v"), F.element_at(cents, F.col("bucket") + 1))
-    members = assigned.select(
-        F.col("vec_id").cast("long").alias("id"), ccos.alias("_ccos")
-    ).join(comps, "id")
-    keepers = (
-        members.groupBy("entity_id")
-        .agg(F.min(F.struct(F.col("_ccos"), F.col("id"))).alias("_k"))
-        .select("entity_id", F.col("_k.id").alias("_keeper"))
-    )
-    keep_col = F.coalesce("_keeper", F.col("id"))
-    return (
-        ids.join(comps, "id", "left")
-        .join(keepers, "entity_id", "left")
-        .select(
-            "id",
-            keep_col.alias("keep_id"),
-            (keep_col != F.col("id")).cast("int").alias("is_dup"),
-        )
+    keep_col = F.coalesce("entity_id", F.col("id"))
+    return ids.join(comps, "id", "left").select(
+        "id",
+        keep_col.alias("keep_id"),
+        (keep_col != F.col("id")).cast("int").alias("is_dup"),
     )
 
 

@@ -55,7 +55,11 @@ from blurrily_spark.operators.pairs import candidate_pairs, rescore_pairs_exact
 from blurrily_spark.operators.scoring import match_edges, score_pairs
 
 
-def partition_lineage(path: str, cap: int = 4096) -> dict:
+# partition_lineage lists at most this many part files per stage
+LINEAGE_MAX_FILES = 4096
+
+
+def partition_lineage(path: str) -> dict:
     """Per-partition lineage of one stage output: ``{n_files, rows,
     truncated, files: [{file, bytes, rows}, ...]}`` with one entry per
     parquet part file under ``path`` (relative paths, so hive-style
@@ -63,8 +67,8 @@ def partition_lineage(path: str, cap: int = 4096) -> dict:
 
     Row counts come from the parquet footer (``num_rows``) -- a driver-side
     metadata read, no data pages touched, so this is O(files) small IO even
-    for a wide stage. ``cap`` bounds the per-file list so a huge stage
-    cannot bloat the run manifest; the aggregate ``n_files``/``rows`` always
+    for a wide stage. ``LINEAGE_MAX_FILES`` bounds the per-file list so a
+    huge stage cannot bloat the run manifest; the aggregate ``n_files``/``rows`` always
     cover every file and ``truncated`` records that the list was cut. On a
     real cluster, read the same facts from the table format's commit
     metadata instead of re-listing the directory (Iceberg manifests carry
@@ -83,7 +87,7 @@ def partition_lineage(path: str, cap: int = 4096) -> dict:
     for full in files:
         rows = pq.ParquetFile(full).metadata.num_rows
         total_rows += rows
-        if len(entries) < cap:
+        if len(entries) < LINEAGE_MAX_FILES:
             entries.append(
                 {
                     "file": os.path.relpath(full, path),
@@ -94,7 +98,7 @@ def partition_lineage(path: str, cap: int = 4096) -> dict:
     return {
         "n_files": len(files),
         "rows": total_rows,
-        "truncated": len(files) > cap,
+        "truncated": len(files) > LINEAGE_MAX_FILES,
         "files": entries,
     }
 

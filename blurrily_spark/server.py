@@ -97,8 +97,9 @@ class BlurrilyServer:
 
     ``port=0`` binds an ephemeral port (exposed via ``.port`` after
     ``start()``), which is how the reference's own specs run it
-    (spec/spec_helper.rb ``find_free_port``). ``spark`` keeps the
-    signature of the facade and may be ``None``: the maps never use it.
+    (spec/spec_helper.rb ``find_free_port``). ``spark`` is unused and
+    may be ``None``: the maps are in-process indexes. It stays positional
+    because perfbench's ``serve`` workload passes its session.
     """
 
     def __init__(
@@ -112,7 +113,7 @@ class BlurrilyServer:
         self._host = host
         self._requested_port = port
         self._save_interval = save_interval
-        self.map_group = MapGroup(spark, directory)
+        self.map_group = MapGroup(directory)
         self.processor = CommandProcessor(self.map_group)
         self._server: _TCPServer | None = None
         self._serve_thread: threading.Thread | None = None
@@ -302,7 +303,7 @@ class BlurrilyClient:
         raise ClientError("Server did not respect protocol")
 
 
-def main(argv: list[str] | None = None) -> None:
+def main() -> None:
     """CLI entry point (bin/blurrily:1-43)."""
     import signal
 
@@ -313,7 +314,7 @@ def main(argv: list[str] | None = None) -> None:
                         help="Work in DIRECTORY, defaults to .")
     parser.add_argument("-b", "--bind", default="0.0.0.0",
                         help="Bind to ADDRESS, defaults to 0.0.0.0")
-    args = parser.parse_args(argv)
+    args = parser.parse_args()
 
     # the served maps are in-process indexes: no Spark session is started
     server = BlurrilyServer(

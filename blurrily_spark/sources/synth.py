@@ -93,18 +93,11 @@ def generate_transcripts_pdf(
     words_per_turn: int = 10,
     n_perturbations: int = 2,
     seed: int = 42,
-    entity_offset: int = 0,
 ) -> pd.DataFrame:
-    """Pandas frame of transcripts + ground-truth entity ids.
-
-    ``entity_offset`` shifts the entity id space (conv_id encodes it), so
-    successive batches can be made ref-disjoint -- without it two batches
-    with the same n_entities share conv_ids and the index's W1 dup-ref
-    no-op rightly skips the second batch.
-    """
+    """Pandas frame of transcripts + ground-truth entity ids."""
     rng = random.Random(seed)
     rows = []
-    for e in range(entity_offset, entity_offset + n_entities):
+    for e in range(n_entities):
         templates = [
             _template_text(rng, max(2, words_per_turn + rng.randint(-2, 2)))
             for _ in range(turns_per_conv)
@@ -139,10 +132,9 @@ def generate_transcripts(
     words_per_turn: int = 10,
     n_perturbations: int = 2,
     seed: int = 42,
-    with_truth: bool = False,
-    entity_offset: int = 0,
 ) -> DataFrame:
-    """Spark DataFrame in the input-hint schema (+ entity_true if asked)."""
+    """Spark DataFrame in the input-hint schema. The ground-truth entity of
+    a row is the number its ``conv_id`` encodes."""
     pdf = generate_transcripts_pdf(
         n_entities,
         variants_per_entity,
@@ -150,14 +142,5 @@ def generate_transcripts(
         words_per_turn,
         n_perturbations,
         seed,
-        entity_offset,
     )
-    schema = TRANSCRIPTS_SCHEMA
-    if with_truth:
-        schema = T.StructType(
-            list(TRANSCRIPTS_SCHEMA.fields)
-            + [T.StructField("entity_true", T.LongType(), False)]
-        )
-    else:
-        pdf = pdf.drop(columns=["entity_true"])
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(pdf.drop(columns=["entity_true"]), schema=TRANSCRIPTS_SCHEMA)

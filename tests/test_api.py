@@ -15,18 +15,18 @@ from blurrily_spark.operators.find import find
 from blurrily_spark.operators.index import build_postings
 
 
-def test_put_returns_trigram_count(spark):
+def test_put_returns_trigram_count():
     # spec/blurrily/map_spec.rb:32-41: 'foobar' -> 7; dup ref -> 0
-    m = Map(spark)
+    m = Map()
     assert m.put("foobar", 1) == 7
     assert m.put("anything", 1) == 0
     assert m.put("", 2) == 1  # map_spec.rb:49-53
     assert m.put("@€%é", 3) == 2  # map_spec.rb:55-59
 
 
-def test_find_golden_integration(spark):
+def test_find_golden_integration():
     # spec/integration_spec.rb:31-42
-    m = Map(spark)
+    m = Map()
     m.put("paris", 123)
     assert m.find("paris") == [(123, 6, 5)]
     assert m.find("pariis") == [(123, 5, 5)]
@@ -34,9 +34,9 @@ def test_find_golden_integration(spark):
     assert [r[0] for r in m.find("paris")] == [123, 456]
 
 
-def test_delete_and_readd(spark):
+def test_delete_and_readd():
     # spec/integration_spec.rb:44-49 + map_spec.rb:109-114
-    m = Map(spark)
+    m = Map()
     m.put("paris", 123)
     m.put("paris", 456)
     m.delete(456)
@@ -46,30 +46,30 @@ def test_delete_and_readd(spark):
     assert [r[0] for r in m.find("paris")] == [123]
 
 
-def test_stats(spark):
-    m = Map(spark)
+def test_stats():
+    m = Map()
     m.put("foobar", 1)
     m.put("paris", 2)
     assert m.stats() == {"references": 2, "trigrams": 13}
 
 
-def test_save_load_roundtrip(spark, tmp_path):
+def test_save_load_roundtrip(tmp_path):
     path = str(tmp_path / "db.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("london", 123)
     m.save(path)
-    m2 = Map.load(spark, path)
+    m2 = Map.load(path)
     assert m2.find("london") == [(123, 7, 6)]
     # dup-ref no-op survives save/load (map_spec.rb:61-67)
     assert m2.put("paris", 123) == 0
     assert m2.find("paris") == []
 
 
-def test_save_memoized_clean_path(spark, tmp_path):
+def test_save_memoized_clean_path(tmp_path):
     import os
 
     path = str(tmp_path / "db.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("london", 1)
     m.save(path)
     mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
@@ -80,9 +80,9 @@ def test_save_memoized_clean_path(spark, tmp_path):
     assert os.path.getmtime(os.path.join(path, "_SUCCESS")) >= mtime
 
 
-def test_closed_map_raises(spark):
+def test_closed_map_raises():
     # spec/blurrily/map_spec.rb:332-353
-    m = Map(spark)
+    m = Map()
     m.put("x", 1)
     m.close()
     for op in [lambda: m.put("y", 2), lambda: m.find("x"), lambda: m.delete(1),
@@ -91,9 +91,9 @@ def test_closed_map_raises(spark):
             op()
 
 
-def test_map_group_isolation_and_persistence(spark, tmp_path):
+def test_map_group_isolation_and_persistence(tmp_path):
     # spec/integration_spec.rb:51-60 (multi-db isolation) + map_group load
-    g = MapGroup(spark, str(tmp_path))
+    g = MapGroup(str(tmp_path))
     g.map("cities").put("paris", 1)
     g.map("foods").put("pizza", 2)
     assert [r[0] for r in g.map("cities").find("paris")] == [1]
@@ -103,56 +103,56 @@ def test_map_group_isolation_and_persistence(spark, tmp_path):
     assert g.map("foods").find("pizza") == [(2, 6, 5)]
     g.save_all()
 
-    g2 = MapGroup(spark, str(tmp_path))
+    g2 = MapGroup(str(tmp_path))
     assert [r[0] for r in g2.map("cities").find("paris")] == [1]
     # CLEAR db (command_processor.rb:48-51)
     g2.clear("cities")
     assert g2.map("cities").find("paris") == []
 
 
-def test_load_delete_save_same_path(spark, tmp_path):
+def test_load_delete_save_same_path(tmp_path):
     """Round-2 ADVICE: load(path) -> delete(ref) -> save(path) used to hit
     Spark's 'cannot overwrite a path that is also being read from' because
     the filtered postings lineage still read the target. save() must
     materialize first (the reference's write-then-rename atomic save)."""
     path = str(tmp_path / "db.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("paris", 123)
     m.put("london", 456)
     m.save(path)
 
-    m2 = Map.load(spark, path)
+    m2 = Map.load(path)
     m2.delete(123)
     m2.save(path)  # same path: must not raise
 
-    m3 = Map.load(spark, path)
+    m3 = Map.load(path)
     assert m3.find("paris") == []  # deleted ref is gone from the snapshot
     assert [r[0] for r in m3.find("london")] == [456]
 
 
-def test_load_above_bound_points_at_batch_find(spark, tmp_path, monkeypatch):
+def test_load_above_bound_points_at_batch_find(tmp_path, monkeypatch):
     """A snapshot whose in-memory size is above Map.MAX_LOAD_BYTES is not
     loaded into the driver: the error names the batch operators.find."""
     path = str(tmp_path / "big.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("paris", 1)
     m.put("london", 2)
     m.save(path)  # 13 posting rows
 
     monkeypatch.setattr(Map, "MAX_LOAD_BYTES", 100)
     with pytest.raises(RuntimeError, match=r"operators\.find"):
-        Map.load(spark, path)
+        Map.load(path)
     monkeypatch.undo()
-    assert Map.load(spark, path).stats() == {"references": 2, "trigrams": 13}
+    assert Map.load(path).stats() == {"references": 2, "trigrams": 13}
 
 
-def test_failed_save_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
+def test_failed_save_keeps_previous_snapshot(tmp_path, monkeypatch):
     """save writes a sibling directory and renames it into place: a write
     that fails partway leaves the old snapshot loadable and no debris."""
     import pyarrow.parquet as pq
 
     path = str(tmp_path / "db.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("paris", 1)
     m.save(path)
     m.put("london", 2)
@@ -168,11 +168,11 @@ def test_failed_save_keeps_previous_snapshot(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
     assert os.listdir(tmp_path) == ["db.trigrams"]
-    old = Map.load(spark, path)
+    old = Map.load(path)
     assert old.find("paris") == [(1, 6, 5)]
     assert old.find("london") == []
     m.save(path)  # the map stayed dirty: a retry writes the new state
-    assert Map.load(spark, path).find("london") == [(2, 7, 6)]
+    assert Map.load(path).find("london") == [(2, 7, 6)]
 
 
 # -- parity with the batch operators ------------------------------------------
@@ -209,7 +209,7 @@ def test_randomized_parity_with_batch_find(spark, tmp_path):
     batch operators.find.find over the map's saved snapshot."""
     rng = random.Random(20261017)
     path = str(tmp_path / "parity.trigrams")
-    m = Map(spark)
+    m = Map()
     live: set[int] = set()
     deleted: set[int] = set()
     seen: set[str] = set()
@@ -253,7 +253,7 @@ def test_spark_written_snapshot_loads(spark, tmp_path):
     postings = build_postings(put_rows(spark, rows), order_col="seq")
     postings.write.parquet(path)
 
-    m = MapGroup(spark, str(tmp_path)).map("cities")
+    m = MapGroup(str(tmp_path)).map("cities")
     queries = [(n, 0) for n in ["paris", "pariis", "london", "finance", "@€%",
                                 "cafe", "zzz"]]
     assert [m.find(n, limit) for n, limit in queries] == _batch_find(

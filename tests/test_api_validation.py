@@ -20,38 +20,38 @@ from blurrily_spark.api import (
 
 # -- Map.load guards (EPROTO / ENOENT analogues) --------------------------
 
-def test_load_missing_path_raises(spark, tmp_path):
+def test_load_missing_path_raises(tmp_path):
     with pytest.raises(FileNotFoundError):
-        Map.load(spark, str(tmp_path / "nope.trigrams"))
+        Map.load(str(tmp_path / "nope.trigrams"))
 
 
 def test_load_wrong_schema_raises_protocol_error(spark, tmp_path):
     path = str(tmp_path / "foreign.parquet")
     spark.range(5).selectExpr("id AS a", "id AS b").write.parquet(path)
     with pytest.raises(ProtocolError):
-        Map.load(spark, path)
+        Map.load(path)
 
 
-def test_load_garbage_file_raises_protocol_error(spark, tmp_path):
+def test_load_garbage_file_raises_protocol_error(tmp_path):
     path = tmp_path / "garbage"
     path.mkdir()
     (path / "part-0000.parquet").write_bytes(b"zoidberg" * 1024)
     with pytest.raises(ProtocolError):
-        Map.load(spark, str(path))
+        Map.load(str(path))
 
 
 def test_map_runs_no_spark_job(spark, tmp_path):
     """load, put, find, delete and save answer in-process: none of them
     launches a Spark job, and the dup-ref no-op holds after a load."""
     path = str(tmp_path / "db.trigrams")
-    m = Map(spark)
+    m = Map()
     m.put("london", 123)
     m.save(path)
 
     sc = spark.sparkContext
     sc.setJobGroup("map-no-jobs", "Map must not launch jobs")
     try:
-        m2 = Map.load(spark, path)
+        m2 = Map.load(path)
         assert m2.put("paris", 123) == 0  # dup ref survives the load
         assert m2.put("paris", 456) == 6
         assert m2.find("london") == [(123, 7, 6)]
@@ -64,13 +64,13 @@ def test_map_runs_no_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert Map.load(spark, path).find("paris") == [(456, 6, 5)]
+    assert Map.load(path).find("paris") == [(456, 6, 5)]
 
 
 # -- find limit envelope ----------------------------------------------------
 
-def test_find_limit_above_range_rejected(spark):
-    m = Map(spark)
+def test_find_limit_above_range_rejected():
+    m = Map()
     m.put("paris", 1)
     with pytest.raises(ValueError):
         m.find("paris", limit=1025)
@@ -98,8 +98,8 @@ def test_validate_ref():
 # -- CommandProcessor goldens (command_processor_spec.rb) -------------------
 
 @pytest.fixture()
-def proc(spark, tmp_path):
-    return CommandProcessor(MapGroup(spark, str(tmp_path)))
+def proc(tmp_path):
+    return CommandProcessor(MapGroup(str(tmp_path)))
 
 
 def test_put_and_find_finds_something(proc):

@@ -2,9 +2,28 @@
 
 from __future__ import annotations
 
+import logging
 import random
 
+import pytest
+
+from blurrily_spark.operators import cluster
 from blurrily_spark.operators.cluster import assign_entities, connected_components
+
+
+@pytest.fixture
+def cc_log(caplog):
+    """Returns a function that gives ``(path, count)`` of the last
+    connected_components log line: ``("driver path", edges)`` or
+    ``("loop", rounds)``."""
+    caplog.set_level(logging.INFO, logger=cluster.__name__)
+
+    def last() -> tuple[str, int]:
+        msg = [r.getMessage() for r in caplog.records if r.name == cluster.__name__][-1]
+        path, count = msg.removeprefix("connected_components: ").split(", ")
+        return path, int(count.split()[0])
+
+    return last
 
 
 def union_find_components(edges: list[tuple[int, int]], nodes: set[int]) -> dict[int, int]:
@@ -69,7 +88,7 @@ def test_assign_entities_includes_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 5}
 
 
-def test_iteration_checkpoints_are_freed(spark):
+def test_iteration_checkpoints_are_freed(spark, monkeypatch):
     """Superseded per-round localCheckpoints must be unpersisted as the loop
     advances -- leaked blocks sit in the unified memory pool until the next
     periodic JVM GC and measurably slow every subsequent job in the session
@@ -81,16 +100,17 @@ def test_iteration_checkpoints_are_freed(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
-    # driver_max_edges=0: this test pins the DISTRIBUTED loop's checkpoint
+    # CC_DRIVER_MAX_EDGES=0: this test pins the DISTRIBUTED loop's checkpoint
     # hygiene, so the small-graph driver path must not short-circuit it
-    labels = connected_components(edges, driver_max_edges=0)
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
+    labels = connected_components(edges)
     after = jsc.getPersistentRDDs().size()
     assert after - before <= 1, f"leaked {after - before} checkpoint RDDs"
     got = {r["ref"]: r["entity_id"] for r in labels.collect()}
     assert set(got.values()) == {0} and len(got) == 65
 
 
-def test_one_job_per_iteration(spark):
+def test_one_job_per_iteration(spark, monkeypatch, cc_log):
     """Round-3 verdict #2: the convergence fingerprint rides on the
     checkpoint materialization via observe() -- each large-star/small-star
     round costs exactly ONE job (previously two: checkpoint + a separate
@@ -100,7 +120,6 @@ def test_one_job_per_iteration(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
-    stats: dict = {}
     sc = spark.sparkContext
     # AQE splits one action into one job per shuffle stage, which would make
     # the job count measure plan depth, not action count -- switch it off so
@@ -109,13 +128,15 @@ def test_one_job_per_iteration(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("cc-jobs-pin", "count jobs per CC round")
     try:
-        # driver_max_edges=0 pins the distributed loop (the driver path
-        # would make rounds == 0 and run no per-round jobs at all)
-        labels = connected_components(edges, stats=stats, driver_max_edges=0)
+        # CC_DRIVER_MAX_EDGES=0 pins the distributed loop (the driver path
+        # runs no per-round jobs at all)
+        monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
+        labels = connected_components(edges)
     finally:
         sc.setJobGroup(None, None)
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    rounds = stats["rounds"]
+    path, rounds = cc_log()
+    assert path == "loop"
     assert rounds >= 3  # a 64-chain takes several rounds; sanity
     jobs = len(sc.statusTracker().getJobIdsForGroup("cc-jobs-pin"))
     assert jobs <= rounds + 1, (
@@ -127,25 +148,19 @@ def test_one_job_per_iteration(spark):
     assert set(got.values()) == {0} and len(got) == 65
 
 
-def test_driver_path_equals_distributed(spark):
+def test_driver_path_equals_distributed(spark, monkeypatch, cc_log):
     """The small-graph driver union-find must produce EXACTLY the labels of
     the large-star/small-star loop (and of the Python oracle above)."""
     rng = random.Random(13)
     nodes = list(range(200))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(180)]
     edf = spark.createDataFrame(edges, "src long, dst long")
-    stats_d: dict = {}
-    drv = {
-        (r["ref"], r["entity_id"])
-        for r in connected_components(edf, stats=stats_d).collect()
-    }
-    assert stats_d.get("driver_path") is True and stats_d["rounds"] == 0
-    stats_x: dict = {}
-    dist = {
-        (r["ref"], r["entity_id"])
-        for r in connected_components(edf, stats=stats_x, driver_max_edges=0).collect()
-    }
-    assert stats_x.get("driver_path") is None and stats_x["rounds"] >= 1
+    drv = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
+    assert cc_log()[0] == "driver path"
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
+    dist = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
+    path, rounds = cc_log()
+    assert path == "loop" and rounds >= 1
     assert drv == dist
     expected = union_find_components(edges, {n for e in edges for n in e})
     assert {r: e for r, e in drv} == expected
@@ -352,7 +367,7 @@ def test_cluster_metrics_exact_scale_guard(spark):
         cluster_metrics(df, exact_scale=10**6)
 
 
-def test_driver_path_builds_labels_without_python_workers(spark):
+def test_driver_path_builds_labels_without_python_workers(spark, monkeypatch, cc_log):
     """The driver path collects the canonical edges once, cut one row past
     the bound, and returns its labels as a local relation: no Python-RDD
     scan, no checkpoint left behind, and reading the labels runs no job.
@@ -368,9 +383,9 @@ def test_driver_path_builds_labels_without_python_workers(spark):
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    stats: dict = {}
-    labels = connected_components(edf, stats=stats, driver_max_edges=n_canonical)
-    assert stats.get("driver_path") is True
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_canonical)
+    labels = connected_components(edf)
+    assert cc_log() == ("driver path", n_canonical)
     assert jsc.getPersistentRDDs().size() == before
     plan = labels._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
@@ -383,9 +398,10 @@ def test_driver_path_builds_labels_without_python_workers(spark):
     assert sc.statusTracker().getJobIdsForGroup("cc-driver-labels") == []
     assert got == expected
 
-    stats_x: dict = {}
-    past = connected_components(edf, stats=stats_x, driver_max_edges=n_canonical - 1)
-    assert stats_x.get("driver_path") is None and stats_x["rounds"] >= 1
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_canonical - 1)
+    past = connected_components(edf)
+    path, rounds = cc_log()
+    assert path == "loop" and rounds >= 1
     assert {r["ref"]: r["entity_id"] for r in past.collect()} == expected
 
 

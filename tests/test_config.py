@@ -47,15 +47,17 @@ def test_hot_trigrams_falls_back_to_default_parallelism(spark, auto_partitions):
     assert {r["trigram"]: r["_hot"] for r in flags.collect()} == {t: t == 1 for t in range(1, 12)}
 
 
-def test_connected_components_loop_on_non_integer_partitions(spark, auto_partitions):
+def test_connected_components_loop_on_non_integer_partitions(spark, auto_partitions, monkeypatch):
+    from blurrily_spark.operators import cluster
     from blurrily_spark.operators.cluster import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(8)] + [(20, 21)], "src long, dst long"
     )
-    # driver_max_edges=0 forces the distributed loop, which sizes its rounds
-    # from the partition count
-    labels = connected_components(edges, driver_max_edges=0)
+    # CC_DRIVER_MAX_EDGES=0 forces the distributed loop, which sizes its
+    # rounds from the partition count
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
+    labels = connected_components(edges)
     got = {r["ref"]: r["entity_id"] for r in labels.collect()}
     assert got == {**{i: 0 for i in range(9)}, 20: 20, 21: 20}
 

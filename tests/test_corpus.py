@@ -63,18 +63,6 @@ def test_contamination_matches_python_model(spark, hash_fn):
     assert got[1][3] == 1 and got[3][3] == 1 and got[2][3] == 0
 
 
-def test_contamination_min_hits_threshold(spark):
-    out = {
-        r["id"]: r["is_contaminated"]
-        for r in ngram_contamination(
-            _df(spark, TRAIN), _df(spark, HOLDOUT), n=8, min_hits=2
-        ).collect()
-    }
-    # doc 1 shares two 8-grams with the holdout (>= min_hits); doc 3's one
-    # whole-text overlap falls below the threshold
-    assert out[3] == 0 and out[1] == 1
-
-
 def test_frequent_ngrams_model(spark):
     n, min_df = 2, 2
     per_doc = [(ref, normalize_py(t).split(" ")) for ref, t in TRAIN]
@@ -158,14 +146,15 @@ def test_sample_corpus_matches_python_model_exactly(spark):
     """The keep set is the EXACT pure-function set, not a statistical
     approximation -- and therefore identical across engines and runs."""
     df = _keyed(spark)
-    got = {r["doc_id"] for r in sample_corpus(df, 0.3, seed=9).collect()}
+    every = {f"src{i}": 0.3 for i in range(4)}  # one rate over every stratum
+    got = {r["doc_id"] for r in sample_corpus(df, by=every, seed=9).collect()}
     thr = int(0.3 * _MINSTD_MOD)
     expected = {k for k in range(4000) if _lcg_py(k, 9) < thr}
     assert got == expected
     # unbiased enough at n=4000: rate within 2 points of the target
     assert abs(len(got) / 4000 - 0.3) < 0.02
     # a different seed draws a genuinely different (but same-rate) set
-    other = {r["doc_id"] for r in sample_corpus(df, 0.3, seed=10).collect()}
+    other = {r["doc_id"] for r in sample_corpus(df, by=every, seed=10).collect()}
     assert other != expected
 
 
@@ -185,12 +174,8 @@ def test_sample_corpus_stratified_mixture(spark):
 
 def test_sample_corpus_validation(spark):
     df = _keyed(spark, 4)
-    with pytest.raises(ValueError, match="exactly one"):
-        sample_corpus(df)
-    with pytest.raises(ValueError, match="exactly one"):
-        sample_corpus(df, 0.5, by={"src0": 1.0})
     with pytest.raises(ValueError, match=r"\[0, 1\]"):
-        sample_corpus(df, 1.5)
+        sample_corpus(df, by={"src0": 1.5})
     with pytest.raises(ValueError, match="at least one stratum"):
         sample_corpus(df, by={})
 
@@ -289,10 +274,3 @@ def test_lm_score_matches_python_model(spark):
     }
     assert row[7]["perplexity"] == pytest.approx(math.exp(-row[7]["avg_logp"]))
     assert row[6]["perplexity"] is None
-
-
-def test_lm_score_validation(spark):
-    from blurrily_spark.operators.corpus import lm_score
-
-    with pytest.raises(ValueError, match="smoothing k"):
-        lm_score(_df(spark, TRAIN), _df(spark, TRAIN), k=0.0)

@@ -121,15 +121,11 @@ def test_near_dedup_against_tie_breaks_to_smallest_ref(spark):
     assert row["matched_ref_id"] == 20 and row["est_jaccard"] == 1.0
 
 
-def test_duplicate_spans_stride_subsamples_windows(spark):
-    text = " ".join(f"w{i}" for i in range(20))  # 20 words -> 13 windows at w=8
-    df = spark.createDataFrame([(1, text), (2, text)], "doc_id long, text string")
-    full = {r["id"]: r for r in dedup.duplicate_spans(df, w=8).collect()}
-    strided = {r["id"]: r for r in dedup.duplicate_spans(df, w=8, stride=4).collect()}
-    assert full[1]["n_windows"] == 13
-    # starts 0,4,8,12 -> 4 windows; identical docs still fully flagged
-    assert strided[1]["n_windows"] == 4
-    assert strided[1]["dup_fraction"] == 1.0
+def test_minhash_lsh_pairs_refuses_bands_that_do_not_divide_num_hashes(spark):
+    # a ValueError, not an assert: under python -O, bands=7 of 32 hashes
+    # ran and banded only the first 28 of them
+    with pytest.raises(ValueError, match="bands must divide num_hashes=32, got bands=7"):
+        dedup.minhash_lsh_pairs(_corpus(spark), num_hashes=32, bands=7)
 
 
 def test_near_dedup_rejects_string_ids(spark):
@@ -158,12 +154,12 @@ def test_duplicate_spans_randomized_python_oracle(spark):
     docs = {
         i: [rng.choice(vocab) for _ in range(rng.randint(2, 30))] for i in range(40)
     }
-    w, stride = 5, 2
+    w = 5
 
     def windows(ws):
         if len(ws) < w:
             return [" ".join(ws)]
-        return [" ".join(ws[i : i + w]) for i in range(0, len(ws) - w + 1, stride)]
+        return [" ".join(ws[i : i + w]) for i in range(len(ws) - w + 1)]
 
     per_doc = {i: windows(ws) for i, ws in docs.items()}
     from collections import Counter
@@ -182,7 +178,7 @@ def test_duplicate_spans_randomized_python_oracle(spark):
     )
     got = {
         r["id"]: (r["n_windows"], r["n_dup_windows"])
-        for r in dedup.duplicate_spans(df, w=w, stride=stride, hash_fn="fast").collect()
+        for r in dedup.duplicate_spans(df, w=w, hash_fn="fast").collect()
     }
     assert got == expected
 
@@ -216,8 +212,9 @@ def test_near_dedup_randomized_planted_groups(spark):
         assert r["is_dup"] == (1 if expected_keeper[i] != i else 0)
 
 
-def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
-    """Pure-Python oracle: windows per doc (with offsets), dup-window set,
+def _span_oracle(texts: dict[int, str], w: int):
+    """Pure-Python oracle: windows per doc (with offsets), dup-window set
+    (windows in two or more documents),
     covered positions, kept text and per-doc ``(n_windows,
     n_dup_windows)`` -- mirrors normalize + clamp rules. A ``None`` id
     has windows but, as in ``count_distinct``, counts as no document."""
@@ -227,7 +224,7 @@ def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
     for i, t in texts.items():
         ws = normalize_py(t).split(" ")
         n = len(ws)
-        starts = list(range(0, max(n - w, 0) + 1, stride))
+        starts = list(range(max(n - w, 0) + 1))
         wins[i] = [(s, " ".join(ws[s : s + w])) for s in starts]
     from collections import Counter
 
@@ -235,7 +232,7 @@ def _span_oracle(texts: dict[int, str], w: int, min_docs: int, stride: int = 1):
     for i, lst in wins.items():
         for win in {win for _, win in lst} if i is not None else ():
             docs_per_win[win] += 1
-    dup = {win for win, c in docs_per_win.items() if c >= min_docs}
+    dup = {win for win, c in docs_per_win.items() if c >= 2}
     positions = {
         (i, s, win) for i, lst in wins.items() for (s, win) in lst if win in dup
     }
@@ -260,7 +257,7 @@ def test_span_positions_and_cut_golden(spark):
         3: "no overlap with anyone at all in this document text",
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    exp_pos, exp_kept, _ = _span_oracle(texts, w=8, min_docs=2)
+    exp_pos, exp_kept, _ = _span_oracle(texts, w=8)
     got_pos = {
         (r["id"], r["start_word"], r["win"])
         for r in dedup.duplicate_span_positions(df, w=8).collect()
@@ -286,27 +283,21 @@ def test_span_cut_randomized_python_oracle(spark):
             for i in [*range(14), None]
         }
         df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-        w, stride = rng.choice([(4, 1), (5, 2), (3, 1)])
-        exp_pos, exp_kept, exp_stats = _span_oracle(
-            texts, w=w, min_docs=2, stride=stride
-        )
+        w = rng.choice([4, 5, 3])
+        exp_pos, exp_kept, exp_stats = _span_oracle(texts, w=w)
         got_stats = {
             r["id"]: (r["n_windows"], r["n_dup_windows"])
-            for r in dedup.duplicate_spans(df, w=w, stride=stride).collect()
+            for r in dedup.duplicate_spans(df, w=w).collect()
         }
         assert got_stats == exp_stats, f"stats mismatch (trial {trial}, w={w})"
         got_pos = {
             (r["id"], r["start_word"], r["win"])
-            for r in dedup.duplicate_span_positions(
-                df, w=w, stride=stride
-            ).collect()
+            for r in dedup.duplicate_span_positions(df, w=w).collect()
         }
         assert got_pos == exp_pos, f"positions mismatch (trial {trial}, w={w})"
         got_kept = {
             r["id"]: (r["kept_text"], r["n_words"], r["n_kept_words"])
-            for r in dedup.cut_duplicate_spans(
-                df, w=w, stride=stride, hash_fn="fast"
-            ).collect()
+            for r in dedup.cut_duplicate_spans(df, w=w, hash_fn="fast").collect()
         }
         assert got_kept == exp_kept, f"kept-text mismatch (trial {trial}, w={w})"
 

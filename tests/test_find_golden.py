@@ -18,7 +18,6 @@ from blurrily_spark.operators.find import (
     mutual_knn_pairs,
 )
 from blurrily_spark.operators.index import (
-    append_postings,
     build_postings,
     delete_refs,
     stats,
@@ -27,6 +26,10 @@ from blurrily_spark.operators.index import (
 
 def _postings(spark, rows):
     return build_postings(put_rows(spark, rows), order_col="seq")
+
+
+def _needle(spark, needle):
+    return spark.createDataFrame([(0, needle)], "query_id long, needle string")
 
 
 def _triples(df):
@@ -109,14 +112,14 @@ def test_not_found_empty_haystack(spark):
 def test_limit(spark):
     # spec/blurrily/map_spec.rb:136-142: limit=2 -> exactly 2 rows
     p = _postings(spark, [("london", r) for r in range(5)])
-    assert find_one(p, "london", limit=2).count() == 2
+    assert find(p, _needle(spark, "london"), limit=2).count() == 2
 
 
 def test_limit_default_10(spark):
     p = _postings(spark, [("london", r) for r in range(15)])
     assert find_one(p, "london").count() == 10
     # limit <= 0 falls back to default (ext/blurrily/map_ext.c:142-146)
-    assert find_one(p, "london", limit=0).count() == 10
+    assert find(p, _needle(spark, "london"), limit=0).count() == 10
 
 
 def test_dup_ref_noop(spark):
@@ -126,12 +129,16 @@ def test_dup_ref_noop(spark):
     assert [t[0] for t in _triples(find_one(p, "london"))] == [123]
 
 
-def test_dup_ref_noop_incremental(spark):
-    # same semantics across an incremental append (W2 anti-join)
-    base = _postings(spark, [("london", 123)])
-    appended = append_postings(base, put_rows(spark, [("paris", 123), ("rome", 7)]))
-    assert find_one(appended, "paris").count() == 0
-    assert [t[0] for t in _triples(find_one(appended, "rome"))] == [7]
+def test_dup_ref_noop_incremental():
+    # same semantics across an incremental put: api.Map carries W2
+    from blurrily_spark.api import Map
+
+    m = Map()
+    m.put("london", 123)
+    assert m.put("paris", 123) == 0
+    m.put("rome", 7)
+    assert m.find("paris") == []
+    assert [t[0] for t in m.find("rome")] == [7]
 
 
 def test_multi_ref_order(spark):
@@ -152,7 +159,7 @@ def test_readd_after_delete(spark):
     # spec/blurrily/map_spec.rb:109-114: delete then re-put same ref works
     p = _postings(spark, [("london", 1337)])
     p = delete_refs(p, [1337])
-    p = append_postings(p, put_rows(spark, [("paris", 1337)]))
+    p = p.unionByName(_postings(spark, [("paris", 1337)]))
     assert [t[0] for t in _triples(find_one(p, "paris"))] == [1337]
 
 

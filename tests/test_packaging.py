@@ -125,34 +125,37 @@ def _reached_modules(root: str) -> set[str]:
     return seen
 
 
+def _package_files(root: str) -> list[str]:
+    """Repo-relative paths of every module under ``blurrily_spark/``."""
+    import glob
+
+    pattern = os.path.join(root, "blurrily_spark", "**", "*.py")
+    return sorted(os.path.relpath(p, root) for p in glob.glob(pattern, recursive=True))
+
+
 def test_every_package_module_is_reached_from_a_non_test_root():
     """Code that only tests import is not part of the engine: every module
     under ``blurrily_spark/`` must be imported, directly or transitively,
     by the benchmark, the entry point, perfbench or a script."""
-    import glob
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     reached = _reached_modules(root)
-    package = {
-        os.path.relpath(p, root)
-        for p in glob.glob(os.path.join(root, "blurrily_spark", "**", "*.py"), recursive=True)
-    }
     assert "blurrily_spark/plans/pipeline.py" in reached
-    assert sorted(package - reached) == []
+    assert sorted(set(_package_files(root)) - reached) == []
 
 
-def _pipeline_options_passed(root: str, params: list[str]) -> set[str]:
-    """Names of the ``LinkagePipeline`` parameters (``params``, in order)
-    some non-test root passes: keywords, positional arguments, and the
-    keys of a ``**name`` whose ``name`` (or ``self.name``) is assigned a
-    ``dict(...)`` call or a dict literal in the same file."""
+def _call_sites(root: str, files: list[str]) -> dict[str, list[tuple[int, set[str]]]]:
+    """Every call in ``files``, by callee name (the called name, or the
+    attribute of a dotted call): ``(positional argument count, keyword
+    names)`` per call. The keys of a ``**name`` whose ``name`` (or
+    ``self.name``) is assigned a ``dict(...)`` call or a dict literal in
+    the same file count as keywords."""
     import ast
 
     def name_of(node) -> str | None:
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
 
-    passed: set[str] = set()
-    for rel in _root_files(root):
+    sites: dict[str, list[tuple[int, set[str]]]] = {}
+    for rel in files:
         with open(os.path.join(root, rel), encoding="utf-8") as f:
             nodes = list(ast.walk(ast.parse(f.read())))
         dicts: dict[str, list[str]] = {}
@@ -166,10 +169,22 @@ def _pipeline_options_passed(root: str, params: list[str]) -> set[str]:
                         k.value for k in v.keys if isinstance(k, ast.Constant)
                     ]
         for node in nodes:
-            if isinstance(node, ast.Call) and name_of(node.func) == "LinkagePipeline":
-                passed.update(params[: len(node.args)])
+            if isinstance(node, ast.Call):
+                keywords: set[str] = set()
                 for k in node.keywords:
-                    passed.update([k.arg] if k.arg else dicts.get(name_of(k.value), []))
+                    keywords.update([k.arg] if k.arg else dicts.get(name_of(k.value), []))
+                sites.setdefault(name_of(node.func), []).append((len(node.args), keywords))
+    return sites
+
+
+def _passed(calls: list[tuple[int, set[str]]], positional: list[str]) -> set[str]:
+    """Parameter names some of ``calls`` (from :func:`_call_sites`) pass:
+    the first ``n`` of ``positional`` for ``n`` positional arguments, and
+    every keyword."""
+    passed: set[str] = set()
+    for n_args, keywords in calls:
+        passed.update(positional[:n_args])
+        passed.update(keywords)
     return passed
 
 
@@ -184,4 +199,64 @@ def test_every_pipeline_option_is_passed_by_a_non_test_root():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     params = list(inspect.signature(LinkagePipeline).parameters)
     options = set(params) - {"spark", "workdir"}
-    assert sorted(options - _pipeline_options_passed(root, params)) == []
+    calls = _call_sites(root, _root_files(root)).get("LinkagePipeline", [])
+    assert sorted(options - _passed(calls, params)) == []
+
+
+def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], list[str]]]:
+    """``(module, callee, positional, named, options)`` of every public
+    module-level function and public class ``__init__`` under
+    ``blurrily_spark/``: its positional parameters in order (``self``
+    left out), every parameter it names, and its options -- each
+    parameter with a default, each keyword-only parameter and a
+    ``**kwargs`` (as ``**name``), without the ``*_col`` parameters."""
+    import ast
+
+    out = []
+    for rel in _package_files(root):
+        with open(os.path.join(root, rel), encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        module = rel[: -len(".py")].replace(os.sep, ".")
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                fn, skip = node, 0
+            elif isinstance(node, ast.ClassDef):
+                fn = next(
+                    (b for b in node.body if isinstance(b, ast.FunctionDef) and b.name == "__init__"),
+                    None,
+                )
+                skip = 1  # self
+            else:
+                continue
+            if fn is None or node.name.startswith("_"):
+                continue
+            a = fn.args
+            positional = [p.arg for p in a.posonlyargs + a.args][skip:]
+            keyword_only = [p.arg for p in a.kwonlyargs]
+            options = positional[len(positional) - len(a.defaults) :] if a.defaults else []
+            options += keyword_only + ([f"**{a.kwarg.arg}"] if a.kwarg else [])
+            options = [o for o in options if not o.endswith("_col")]
+            out.append((module, node.name, positional, positional + keyword_only, options))
+    return out
+
+
+def test_every_operator_option_is_passed_by_a_non_test_root():
+    """The package-wide form of the pipeline gate: every option of a
+    public function or class under ``blurrily_spark/`` (see
+    :func:`_operator_options`) must be passed by some call in a non-test
+    root or a package module -- by keyword, by position, or through a
+    resolved ``**dict``; a ``**kwargs`` option by a keyword the callee
+    does not name. Calls match by callee name, so a name collision can
+    only make a dead option look live and the gate never fails falsely.
+    ``*_col`` parameters name a column of the caller's table and are
+    exempt."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sites = _call_sites(root, _root_files(root) + _package_files(root))
+    dead = []
+    for module, callee, positional, named, options in _operator_options(root):
+        passed = _passed(sites.get(callee, []), positional)
+        for option in options:
+            live = bool(passed - set(named)) if option.startswith("**") else option in passed
+            if not live:
+                dead.append(f"{module}:{callee}({option})")
+    assert not dead, "options no non-test root or package module passes: " + ", ".join(dead)

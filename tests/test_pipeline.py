@@ -17,6 +17,12 @@ from blurrily_spark.plans.pipeline import LinkagePipeline, build_turns
 from blurrily_spark.sources.synth import generate_transcripts
 
 
+def entity_of(conv_id: str) -> int:
+    """Ground-truth entity of a synthetic ``conv_id``
+    (``e{entity:06d}_v{variant:02d}``)."""
+    return int(conv_id[1:7])
+
+
 def pairwise_f1(pred: dict[int, int], truth: dict[int, int]) -> float:
     refs = sorted(truth)
     tp = fp = fn = 0
@@ -39,30 +45,30 @@ def pairwise_f1(pred: dict[int, int], truth: dict[int, int]) -> float:
 def test_pipeline_end_to_end(spark, tmp_path):
     transcripts = generate_transcripts(
         spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
-        words_per_turn=8, n_perturbations=1, seed=11, with_truth=True,
+        words_per_turn=8, n_perturbations=1, seed=11,
     )
     transcripts.cache()
 
     pipe = LinkagePipeline(
         spark, str(tmp_path), jaccard_threshold=0.55, min_matches=2
     )
-    entities = pipe.run(transcripts.drop("entity_true"))
+    entities = pipe.run(transcripts)
 
     # --- conversation-level clustering quality (same-entity turns share
     # templates; turn texts of the same turn_idx across variants are near-dups)
     truth_rows = transcripts.select(
         F.xxhash64("conv_id", "turn_idx").alias("ref"),
-        "entity_true",
+        "conv_id",
         "turn_idx",
     ).collect()
-    truth = {(r["ref"]): (r["entity_true"], r["turn_idx"]) for r in truth_rows}
+    truth = {(r["ref"]): (entity_of(r["conv_id"]), r["turn_idx"]) for r in truth_rows}
     pred = {r["ref"]: r["entity_id"] for r in entities.collect()}
 
     f1 = pairwise_f1(pred, truth)
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99"
 
     # --- per-turn text equality under stable (conv_id, turn_idx) ordering
-    turns = build_turns(transcripts.drop("entity_true"))
+    turns = build_turns(transcripts)
     orig = transcripts.select("conv_id", "turn_idx", "text").orderBy("conv_id", "turn_idx").collect()
     kept = turns.select("conv_id", "turn_idx", "text").orderBy("conv_id", "turn_idx").collect()
     assert [tuple(r) for r in orig] == [tuple(r) for r in kept]
@@ -136,16 +142,16 @@ def test_pipeline_two_phase_blocking_f1(spark, tmp_path):
     """max_df capped blocking + exact rescoring keeps F1 >= 0.99."""
     transcripts = generate_transcripts(
         spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
-        words_per_turn=8, n_perturbations=1, seed=11, with_truth=True,
+        words_per_turn=8, n_perturbations=1, seed=11,
     )
     pipe = LinkagePipeline(
         spark, str(tmp_path), jaccard_threshold=0.55, min_matches=3, max_df=16
     )
-    entities = pipe.run(transcripts.drop("entity_true"))
+    entities = pipe.run(transcripts)
     truth_rows = transcripts.select(
-        F.xxhash64("conv_id", "turn_idx").alias("ref"), "entity_true", "turn_idx"
+        F.xxhash64("conv_id", "turn_idx").alias("ref"), "conv_id", "turn_idx"
     ).collect()
-    truth = {r["ref"]: (r["entity_true"], r["turn_idx"]) for r in truth_rows}
+    truth = {r["ref"]: (entity_of(r["conv_id"]), r["turn_idx"]) for r in truth_rows}
     pred = {r["ref"]: r["entity_id"] for r in entities.collect()}
     f1 = pairwise_f1(pred, truth)
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99 with capped blocking"
@@ -267,9 +273,9 @@ def test_knn_candidates_rescored_keep_f1(spark):
 
     transcripts = generate_transcripts(
         spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
-        words_per_turn=8, n_perturbations=1, seed=11, with_truth=True,
+        words_per_turn=8, n_perturbations=1, seed=11,
     )
-    turns = add_trigrams(build_turns(transcripts.drop("entity_true")), "norm", "trigrams")
+    turns = add_trigrams(build_turns(transcripts), "norm", "trigrams")
     knn = knn_join(turns_to_postings(turns), k=10)
     cand = knn.select(
         F.least("query_ref", "ref").alias("ref_a"),
@@ -280,9 +286,9 @@ def test_knn_candidates_rescored_keep_f1(spark):
     entities = assign_entities(turns.select("ref"), edges)
 
     truth_rows = transcripts.select(
-        F.xxhash64("conv_id", "turn_idx").alias("ref"), "entity_true", "turn_idx"
+        F.xxhash64("conv_id", "turn_idx").alias("ref"), "conv_id", "turn_idx"
     ).collect()
-    truth = {r["ref"]: (r["entity_true"], r["turn_idx"]) for r in truth_rows}
+    truth = {r["ref"]: (entity_of(r["conv_id"]), r["turn_idx"]) for r in truth_rows}
     pred = {r["ref"]: r["entity_id"] for r in entities.collect()}
     f1 = pairwise_f1(pred, truth)
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99 with kNN candidates"

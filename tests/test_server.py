@@ -131,10 +131,10 @@ def test_request_save_runs_on_saver_thread(server, tmp_path):
     assert os.path.exists(path), "deferred save never ran"
 
 
-def test_uses_existing_maps(spark, server, tmp_path):
+def test_uses_existing_maps(server, tmp_path):
     # integration_spec.rb:68-75: a pre-seeded snapshot in the server's
     # directory is served without any PUT
-    m = Map(spark)
+    m = Map()
     m.put("london", 1337)
     m.save(str(tmp_path / "preseeded.trigrams"))
     with client_for(server, "preseeded") as c:
@@ -218,7 +218,7 @@ def test_restarted_server_autosave_still_works(spark, tmp_path):
             if not marker.exists():
                 return False
             try:
-                m = Map.load(spark, str(tmp_path / "foobar.trigrams"))
+                m = Map.load(str(tmp_path / "foobar.trigrams"))
                 return [r[0] for r in m.find("oslo")] == [2]
             except Exception:
                 return False  # snapshot overwrite in flight; retry

@@ -122,9 +122,9 @@ def test_maxmin_seeding_deterministic(spark, emb):
     assert len(a) == 4 and len(set(map(tuple, a))) == 4  # distinct seeds
 
 
-def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb):
+def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb, monkeypatch):
     """Sample-first seeding: forcing the hash-sample path (tiny
-    max_seed_scan) must stay deterministic across invocations and keep the
+    MAXMIN_SEED_SCAN) must stay deterministic across invocations and keep the
     shipped recall gate -- seeding quality, not seeding coverage, drives
     codebook quality (the Lloyd iterations stay full-corpus)."""
     import __spark_entry__ as em
@@ -134,8 +134,9 @@ def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb):
     q = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    seeds1 = similarity.maxmin_centroids(corpus, k=em.ANN_K, max_seed_scan=50)
-    seeds2 = similarity.maxmin_centroids(corpus, k=em.ANN_K, max_seed_scan=50)
+    monkeypatch.setattr(similarity, "MAXMIN_SEED_SCAN", 50)
+    seeds1 = similarity.maxmin_centroids(corpus, k=em.ANN_K)
+    seeds2 = similarity.maxmin_centroids(corpus, k=em.ANN_K)
     assert seeds1 == seeds2  # hash-sample is partitioning-independent
 
     # full kmeans (shipped iteration count) with the sampled seeding still
@@ -196,26 +197,21 @@ def test_semantic_dedup_planted_groups_min_id(spark):
     }
 
 
-def test_semantic_dedup_far_from_centroid_keeper(spark):
-    """The paper's keeper rule: within a dup group, retain the member
-    LEAST similar to its cluster centroid (most diversity kept). Here 2
-    and 11 are the perturbed members, so they win over the exemplars."""
-    out = similarity.semantic_dedup(
-        _sem_df(spark), SEM_CENTS, threshold=0.95, keep="far_from_centroid"
+def test_rp_lsh_refuses_signatures_past_62_bits(spark):
+    # a ValueError, not an assert, so python -O cannot skip the check
+    with pytest.raises(ValueError, match="planes: at most 62 fit a BIGINT signature, got 63"):
+        similarity.rp_lsh_near_dup_pairs(_sem_df(spark), dim=4, n_bits=63)
+
+
+def test_semantic_dedup_refuses_non_integral_ids(spark):
+    """Ids 1.2 and 1.7 would both be cast to keeper id 1 and merged; the
+    operator refuses them as near_dedup does."""
+    df = spark.createDataFrame(
+        [(1.2, [1.0, 0.0, 0.0, 0.0]), (1.7, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id double, embedding array<double>",
     )
-    got = {r["id"]: (r["keep_id"], r["is_dup"]) for r in out.collect()}
-    assert got == {
-        1: (2, 1),
-        2: (2, 0),
-        3: (3, 0),
-        10: (11, 1),
-        11: (11, 0),
-    }
-
-
-def test_semantic_dedup_invalid_keep_raises(spark):
-    with pytest.raises(ValueError, match="far_from_centroid"):
-        similarity.semantic_dedup(_sem_df(spark), SEM_CENTS, keep="nope")
+    with pytest.raises(ValueError, match="semantic_dedup requires an integral 'vec_id'"):
+        similarity.semantic_dedup(df, SEM_CENTS, threshold=0.95)
 
 
 def test_semantic_dedup_single_cluster_matches_brute_cc(spark, emb):
