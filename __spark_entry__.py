@@ -622,7 +622,7 @@ def q_golden_records(spark, sf_dir):
     # ER survivorship over the resolved entities: longest text wins, ties
     # to the lowest ref -- one join + one min(struct) aggregate, no window
     d = _docs_subset(spark, sf_dir)
-    assign = assign_entities(d, q_match_edges(spark, sf_dir), node_col="doc_id")
+    assign = assign_entities(d.select("doc_id"), q_match_edges(spark, sf_dir), node_col="doc_id")
     return golden_records(d, assign, ref_col="doc_id")
 
 

@@ -9,9 +9,12 @@ the 32-bit bound is an implementation limit of the C engine, not a behavior
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 LIMIT_DEFAULT = 10      # lib/blurrily/defaults.rb:6
 LIMIT_RANGE = (1, 1024)  # lib/blurrily/defaults.rb:7
@@ -58,7 +61,9 @@ def spread_small_input(df):
     the default size-only estimator never shrinks through filters, so a
     big corpus can't masquerade as small. Measured: spreading the 10k-doc
     bench corpus to 32 partitions takes the MinHash-LSH pass 5.3s -> 2.1s
-    warm (the signature stage was 2 tasks); identity at corpus scale."""
+    warm (the signature stage was 2 tasks); identity at corpus scale.
+    Each call that reads an estimate logs its choice at INFO, with the
+    estimate; reading it launches no job."""
     try:
         if df.isStreaming:
             return df
@@ -68,7 +73,9 @@ def spread_small_input(df):
     # a non-integer partition count (``auto``) leaves the input as it is
     n = shuffle_partitions(df.sparkSession)
     if n is None or size >= SPREAD_MAX_BYTES:
+        log.info("spread_small_input: left as is, estimate %d bytes", size)
         return df
+    log.info("spread_small_input: spread to %d partitions, estimate %d bytes", n, size)
     return df.repartition(n)
 
 

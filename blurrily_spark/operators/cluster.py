@@ -245,11 +245,25 @@ def assign_entities(
     edges: DataFrame,
     node_col: str = "ref",
 ) -> DataFrame:
-    """Entity id for *every* node: component min, or self for singletons."""
+    """Entity id for *every* node row: component min, or self for singletons.
+
+    Returns one row per row of ``nodes`` -- ``node_col`` as ``ref`` (long),
+    then the node table's other columns as they are, then ``entity_id`` --
+    so a caller that needs more than the label (the pipeline's
+    ``conv_id, turn_idx``) passes those columns in, rather than joining
+    them back. Duplicate node rows stay duplicates. The plan is one left
+    join of the labels onto the nodes, which CC's driver path builds as a
+    local relation small enough to broadcast: no shuffle of the nodes."""
+    names = [c for c in nodes.columns if c != node_col]
+    clash = {"ref", "entity_id"} & set(names)
+    if clash:
+        raise ValueError(f"assign_entities: node columns {sorted(clash)} would be overwritten")
+    # quoted, so a carried column named ``a.b`` is not read as a field
+    others = [F.col("`" + c.replace("`", "``") + "`") for c in names]
     comp = connected_components(edges)
-    n = nodes.select(F.col(node_col).cast("long").alias("ref")).distinct()
+    n = nodes.select(F.col(node_col).cast("long").alias("ref"), *others)
     return n.join(comp, "ref", "left").select(
-        "ref", F.coalesce("entity_id", "ref").alias("entity_id")
+        "ref", *others, F.coalesce("entity_id", "ref").alias("entity_id")
     )
 
 

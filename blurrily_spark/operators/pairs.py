@@ -34,10 +34,14 @@ Scale design (the part the single-node reference never had to solve):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blurrily_spark.config import shuffle_partitions
+
+log = logging.getLogger(__name__)
 
 
 def trigram_df_counts(postings: DataFrame) -> DataFrame:
@@ -104,7 +108,8 @@ def candidate_pairs(
     join plainly with zero replication, hot ones spread over B salted
     tasks, and the two branches union into the same pair multiset (each
     posting row lands in exactly one branch, so each (trigram, pair) match
-    is produced exactly once)."""
+    is produced exactly once). Each call logs its layout at INFO: salted
+    with its bucket count and threshold (``hot_df`` or auto), or plain."""
     if keys_only and min_matches > 1:
         raise ValueError("keys_only candidate generation cannot apply min_matches")
     cols = ["trigram", "ref"] if keys_only else ["trigram", "ref", "weight"]
@@ -125,6 +130,10 @@ def candidate_pairs(
 
     if salt_buckets and salt_buckets > 1:
         b = int(salt_buckets)
+        log.info(
+            "candidate_pairs: salted with %d buckets, hot_df %s",
+            b, "auto" if hot_df is None else hot_df,
+        )
         flagged = p.join(F.broadcast(_hot_flags(df, b, hot_df)), "trigram")
         cold, hot = flagged.where(~F.col("_hot")), flagged.where(F.col("_hot"))
         hot_l = side(hot, "a").withColumn(
@@ -141,6 +150,7 @@ def candidate_pairs(
             .where(F.col("ref_a") < F.col("ref_b"))
         )
     else:
+        log.info("candidate_pairs: plain")
         joined = side(p, "a").join(side(p, "b"), ["trigram"]).where(
             F.col("ref_a") < F.col("ref_b")
         )

@@ -88,6 +88,24 @@ def test_assign_entities_includes_singletons(spark):
     assert got == {0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 5}
 
 
+def test_assign_entities_one_row_per_node_row(spark):
+    """Every node row comes back once, its other columns carried through
+    (a dotted name included): a duplicated row stays duplicated (no
+    distinct), and a node column that the output would overwrite is
+    refused."""
+    nodes = spark.createDataFrame(
+        [(0, "a"), (1, "b"), (1, "b"), (4, "c")], "doc long, `t.ag` string"
+    )
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    got = assign_entities(nodes, edges, node_col="doc")
+    assert got.columns == ["ref", "t.ag", "entity_id"]
+    assert sorted(map(tuple, got.collect())) == [
+        (0, "a", 0), (1, "b", 0), (1, "b", 0), (4, "c", 4)
+    ]
+    with pytest.raises(ValueError, match="ref"):
+        assign_entities(nodes.withColumnRenamed("t.ag", "ref"), edges, node_col="doc")
+
+
 def test_iteration_checkpoints_are_freed(spark, monkeypatch):
     """Superseded per-round localCheckpoints must be unpersisted as the loop
     advances -- leaked blocks sit in the unified memory pool until the next

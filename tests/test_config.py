@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import math
 
 import pytest
@@ -33,6 +34,26 @@ def test_spread_small_input_keeps_input_on_non_integer_partitions(spark, request
     request.getfixturevalue("auto_partitions")
     assert shuffle_partitions(spark) is None
     assert spread_small_input(df) is df
+
+
+def test_spread_small_input_logs_its_choice(spark, caplog):
+    """Each call logs whether it spread the input, with the plan's byte
+    estimate; reading the estimate launches no job."""
+    caplog.set_level(logging.INFO, logger="blurrily_spark.config")
+    sc = spark.sparkContext
+    sc.setJobGroup("spread-log", "construction only")
+    try:
+        spread_small_input(spark.range(10))  # 8 bytes a row
+        spread_small_input(spark.range(10**10))
+        assert list(sc.statusTracker().getJobIdsForGroup("spread-log")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    msgs = [r.getMessage() for r in caplog.records if r.name == "blurrily_spark.config"]
+    assert msgs == [
+        f"spread_small_input: spread to {shuffle_partitions(spark)} partitions,"
+        " estimate 80 bytes",
+        "spread_small_input: left as is, estimate 80000000000 bytes",
+    ]
 
 
 def test_hot_trigrams_falls_back_to_default_parallelism(spark, auto_partitions):

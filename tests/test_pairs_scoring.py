@@ -69,6 +69,33 @@ def _hot_set(flags) -> set:
     return {r["trigram"] for r in flags.where("_hot").collect()}
 
 
+def test_candidate_pairs_logs_its_layout(spark, caplog):
+    """Each call logs its layout -- plain, or salted with its bucket count
+    and threshold -- while building the plan, which launches no job."""
+    import logging
+
+    from blurrily_spark.operators import pairs
+
+    caplog.set_level(logging.INFO, logger=pairs.__name__)
+    postings = spark.createDataFrame(
+        [(1, 1, 5), (1, 2, 5), (2, 2, 5)], "trigram int, ref long, weight int"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("pairs-log", "construction only")
+    try:
+        candidate_pairs(postings)
+        candidate_pairs(postings, salt_buckets=8)
+        candidate_pairs(postings, salt_buckets=4, hot_df=3)
+        assert list(sc.statusTracker().getJobIdsForGroup("pairs-log")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r.getMessage() for r in caplog.records if r.name == pairs.__name__] == [
+        "candidate_pairs: plain",
+        "candidate_pairs: salted with 8 buckets, hot_df auto",
+        "candidate_pairs: salted with 4 buckets, hot_df 3",
+    ]
+
+
 def test_hot_trigrams_threshold(spark):
     from blurrily_spark.operators.pairs import _hot_flags, trigram_df_counts
 

@@ -11,6 +11,7 @@ import itertools
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from blurrily_spark.plans.pipeline import LinkagePipeline, build_turns
@@ -203,6 +204,26 @@ def test_input_identity_tracks_file_contents(spark, tmp_path):
     assert "semantic_hash" in ident3
 
 
+@pytest.mark.parametrize("dirname", ["with space", "pct%41x"])
+def test_input_identity_decodes_escaped_paths(spark, tmp_path, dirname):
+    """The input URI percent-encodes a space or ``%`` in the path; identity
+    still stats the file, so rewriting it in place changes the identity."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from blurrily_spark.plans.pipeline import input_identity
+
+    d = tmp_path / dirname
+    d.mkdir()
+    part = d / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    ident1 = input_identity(spark.read.parquet(str(d)))
+    assert [len(sig) for sig in ident1["files"]] == [3]  # (uri, size, mtime)
+
+    pq.write_table(pa.table({"a": [1, 2, 3, 4], "b": ["x", "y", "z", "w"]}), part)
+    assert input_identity(spark.read.parquet(str(d))) != ident1
+
+
 def _word(rng):
     return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(5))
 
@@ -371,3 +392,45 @@ def test_resume_from_previous_turns_layout_reruns(spark, tmp_path):
     ent3 = pipe3.run(t)
     assert all(pipe3.metrics[s]["skipped"] for s in LinkagePipeline.STAGES)
     assert ent3.schema == ent2.schema == ent1.schema
+
+
+def _labelled_transcripts(spark):
+    """The end-to-end test's labelled corpus: 108 turns with near-duplicate
+    variants, so the Jaccard cut keeps pairs."""
+    return generate_transcripts(
+        spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
+        words_per_turn=8, n_perturbations=1, seed=11,
+    )
+
+
+def test_scores_partitions_follow_survivor_bytes(spark, tmp_path):
+    """AQE sizes the tail from the survivors' bytes; nothing pins it to
+    one partition. With the coalescing floor lowered, the same run that
+    writes one scores file at the default floor writes several."""
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        pipe = LinkagePipeline(spark, str(tmp_path), jaccard_threshold=0.55, min_matches=2)
+        pipe.run(_labelled_transcripts(spark))
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert pipe.metrics["scores"]["partitions"]["n_files"] > 1
+
+
+def test_zero_survivors_label_every_turn_with_itself(spark, tmp_path):
+    """A threshold no pair reaches leaves the tail empty: every stage table
+    is still written and readable, and every turn is its own entity."""
+    pipe = LinkagePipeline(spark, str(tmp_path), jaccard_threshold=1.5, min_matches=2)
+    entities = pipe.run(_labelled_transcripts(spark)).collect()
+    m = pipe.metrics
+    assert m["pairs"]["rows"] > 0
+    assert m["scores"]["rows"] == m["edges"]["rows"] == 0
+    for s in LinkagePipeline.STAGES:
+        assert m[s]["partitions"]["n_files"] >= 1, s
+        assert spark.read.parquet(os.path.join(str(tmp_path), s)).count() == m[s]["rows"], s
+    assert len(entities) == m["turns"]["rows"] == 108
+    assert all(r["entity_id"] == r["ref"] for r in entities)

@@ -15,7 +15,9 @@ or degrades a join strategy fails CI instead of shipping:
   sorted-neighborhood operators launches no Spark job and keeps a
   streaming input streaming;
 * ``global_sort_ranks`` reads its one range exchange twice, the second
-  time as a ``ReusedExchange``.
+  time as a ``ReusedExchange``;
+* the linkage tail is survivor-sized: one rebalance exchange below the
+  Jaro-Winkler eval node, and an entities stage without an aggregate.
 """
 
 from __future__ import annotations
@@ -269,3 +271,37 @@ def test_global_sort_ranks_reuses_its_range_exchange(spark):
     fresh = [line for line in final if by_key.search(line) and line not in reused]
     assert len(fresh) == 1, plan
     assert len(reused) == 1 and by_key.search(reused[0]), plan
+
+
+def test_linkage_tail_is_survivor_sized(spark, tmp_path, monkeypatch):
+    """After the Jaccard cut the scores plan holds exactly one rebalance
+    exchange, below the Jaro-Winkler eval node, so a toy run writes one
+    scores file and one edges file. The entities stage is one left join of
+    CC's labels onto the turns: no aggregate over refs, one row per turn."""
+    from blurrily_spark.plans.pipeline import LinkagePipeline
+    from blurrily_spark.sources.synth import generate_transcripts
+
+    plans = {}
+    write = LinkagePipeline._write
+
+    def spy(self, stage, df):
+        plans[stage] = df._jdf.queryExecution().executedPlan().toString()
+        return write(self, stage, df)
+
+    monkeypatch.setattr(LinkagePipeline, "_write", spy)
+    t = generate_transcripts(
+        spark, n_entities=12, variants_per_entity=3, turns_per_conv=3,
+        words_per_turn=8, n_perturbations=1, seed=11,
+    )
+    pipe = LinkagePipeline(spark, str(tmp_path), jaccard_threshold=0.55, min_matches=2)
+    pipe.run(t)
+
+    rebalance = "REBALANCE_PARTITIONS_BY_NONE"
+    assert plans["scores"].count(rebalance) == 1, plans["scores"]
+    assert rebalance in plans["scores"].split("ArrowEvalPython", 1)[1], plans["scores"]
+    m = pipe.metrics
+    assert m["scores"]["rows"] > 0
+    assert m["scores"]["partitions"]["n_files"] == 1
+    assert m["edges"]["partitions"]["n_files"] == 1
+    assert "Aggregate" not in plans["entities"], plans["entities"]
+    assert m["entities"]["rows"] == m["turns"]["rows"]
