@@ -40,6 +40,7 @@ from blurrily_spark.operators.pairs import (
     block_filtering,
     candidate_pairs,
     idf_weighted_pairs,
+    join_pair_ends,
     multipass_candidates,
     token_blocking_pairs,
     with_set_similarity,
@@ -626,32 +627,22 @@ def q_golden_records(spark, sf_dir):
     return golden_records(d, assign, ref_col="doc_id")
 
 
-def _fs_levels(spark, sf_dir):
-    """Candidate pairs with per-field agreement levels (shared input for
-    the FS scoring query): trigram-jaccard band + lang/source equality."""
-    docs = _docs_subset(spark, sf_dir).select("doc_id", "lang", "source")
-    p = _postings(spark, sf_dir, subset=True).cache()
-    pairs = with_jaccard(candidate_pairs(p), p)
-    a = docs.select(
-        F.col("doc_id").alias("ref_a"), F.col("lang").alias("_la"), F.col("source").alias("_sa")
-    )
-    b = docs.select(
-        F.col("doc_id").alias("ref_b"), F.col("lang").alias("_lb"), F.col("source").alias("_sb")
-    )
-    return (
-        pairs.join(a, "ref_a")
-        .join(b, "ref_b")
-        .select(
-            "ref_a",
-            "ref_b",
-            F.when(F.col("jaccard") >= 0.8, 2)
-            .when(F.col("jaccard") >= 0.4, 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("jacc_level"),
-            (F.col("_la") == F.col("_lb")).cast("int").alias("lang_level"),
-            (F.col("_sa") == F.col("_sb")).cast("int").alias("source_level"),
-        )
+def _fs_levels(pairs, docs):
+    """Per-field agreement levels of jaccard-scored candidate pairs (the
+    input of FS scoring, here and in bench.py): the trigram-jaccard band
+    and lang/source equality, with ``docs``' (doc_id, lang, source) on
+    both ends."""
+    meta = docs.select(F.col("doc_id").alias("ref"), "lang", "source")
+    return join_pair_ends(pairs, meta, "ref", ["lang", "source"]).select(
+        "ref_a",
+        "ref_b",
+        F.when(F.col("jaccard") >= 0.8, 2)
+        .when(F.col("jaccard") >= 0.4, 1)
+        .otherwise(0)
+        .cast("int")
+        .alias("jacc_level"),
+        (F.col("lang_a") == F.col("lang_b")).cast("int").alias("lang_level"),
+        (F.col("source_a") == F.col("source_b")).cast("int").alias("source_level"),
     )
 
 
@@ -659,7 +650,10 @@ def q_fs_match_weights(spark, sf_dir):
     # Fellegi-Sunter probabilistic linkage: per-field agreement levels ->
     # log2 Bayes-factor match weight + posterior, all literal arithmetic
     # (a single codegen'd projection over the candidate pairs)
-    out = fs_score(_fs_levels(spark, sf_dir), [FS_JACC, FS_LANG, FS_SOURCE], prior=FS_PRIOR)
+    docs = _docs_subset(spark, sf_dir)
+    p = _postings(spark, sf_dir, subset=True).cache()
+    levels = _fs_levels(with_jaccard(candidate_pairs(p), p), docs)
+    out = fs_score(levels, [FS_JACC, FS_LANG, FS_SOURCE], prior=FS_PRIOR)
     return out.select(
         "ref_a",
         "ref_b",

@@ -322,29 +322,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ).cache()
         try:
             pairs = _with_jacc(_cand_pairs(p, max_df=CAP_DF), p)
-            a = docs_meta.select(
-                F.col("doc_id").alias("ref_a"),
-                F.col("lang").alias("_la"),
-                F.col("source").alias("_sa"),
-            )
-            b = docs_meta.select(
-                F.col("doc_id").alias("ref_b"),
-                F.col("lang").alias("_lb"),
-                F.col("source").alias("_sb"),
-            )
-            lev = (
-                pairs.join(a, "ref_a")
-                .join(b, "ref_b")
-                .select(
-                    F.when(F.col("jaccard") >= 0.8, 2)
-                    .when(F.col("jaccard") >= 0.4, 1)
-                    .otherwise(0)
-                    .cast("int")
-                    .alias("jacc_level"),
-                    (F.col("_la") == F.col("_lb")).cast("int").alias("lang_level"),
-                    (F.col("_sa") == F.col("_sb")).cast("int").alias("source_level"),
-                )
-            )
+            lev = em._fs_levels(pairs, docs_meta)
             row = _fs_score(
                 lev, [em.FS_JACC, em.FS_LANG, em.FS_SOURCE], prior=em.FS_PRIOR
             ).selectExpr("count(*) AS c", "avg(match_weight)").collect()[0]

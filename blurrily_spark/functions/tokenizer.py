@@ -141,21 +141,15 @@ def normalize(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(base, "\\s+", " "))
 
 
-def with_normalized(df, text_col: str, out_col: str = "norm", spread: bool = False):
+def with_normalized(df, text_col: str, out_col: str = "norm"):
     """``df`` plus ``out_col`` = :func:`normalize` of ``text_col``: one lazy
     projection, so it launches no Spark job and works on streaming input.
-
-    ``spread=True`` re-spreads a tiny file-backed scan across the session's
-    shuffle parallelism (:func:`blurrily_spark.config.spread_small_input`)
-    before the projection, so the normalization and everything stacked on
-    top of it parallelize instead of running on the 1-2 tasks a
-    single-row-group file yields; a no-op at real corpus sizes.
+    Callers that tokenize a possibly tiny file-backed scan pass it through
+    :func:`blurrily_spark.config.spread_small_input` first.
     """
-    from blurrily_spark.config import spread_small_input, tune_session
+    from blurrily_spark.config import tune_session
 
     tune_session(df.sparkSession)
-    if spread:
-        df = spread_small_input(df)
     return df.withColumn(out_col, normalize(F.col(text_col)))
 
 

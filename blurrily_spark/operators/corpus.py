@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import spread_small_input
 from blurrily_spark.functions.tokenizer import with_normalized
 from blurrily_spark.operators.dedup import word_shingles
 
@@ -50,7 +51,7 @@ from blurrily_spark.operators.dedup import word_shingles
 def _exploded_grams(
     df: DataFrame, id_col: str, text_col: str, n: int, distinct: bool
 ) -> DataFrame:
-    d = with_normalized(df, text_col, "_norm", spread=True)
+    d = with_normalized(spread_small_input(df), text_col, "_norm")
     grams = word_shingles(F.col("_norm"), n)
     return d.select(
         F.col(id_col).cast("long").alias("id"),
@@ -167,7 +168,7 @@ def tfidf_top_terms(
     filter Spark pushes into WindowGroupLimit (per-partition top-k before
     the full sort).
     """
-    words = with_normalized(df, text_col, "_norm", spread=True).select(
+    words = with_normalized(spread_small_input(df), text_col, "_norm").select(
         F.col(id_col).cast("long").alias("id"),
         F.explode(F.split(F.col("_norm"), " ")).alias("term"),
     )
@@ -305,7 +306,7 @@ def _token_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ``transform`` over the word array), so there is no per-document
     ``lag`` window and the only cost is the explode itself. ``w`` is
     non-nullable (split yields no NULL element)."""
-    d = with_normalized(df, text_col, "_norm", spread=True)
+    d = with_normalized(spread_small_input(df), text_col, "_norm")
     words = F.filter(F.split(F.col("_norm"), " "), lambda w: w != F.lit(""))
     toks = F.transform(
         words,

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import spread_small_input
 from blurrily_spark.functions.hashing import (
     MERSENNE,
     POLY_BASE_A,
@@ -35,6 +36,7 @@ from blurrily_spark.functions.hashing import (
     poly_hash,
 )
 from blurrily_spark.functions.tokenizer import with_normalized
+from blurrily_spark.operators.pairs import join_pair_ends, self_join_pairs
 
 SIMHASH_BITS = 62  # 2 x 31-bit portable hashes; fits a positive int64
 
@@ -53,7 +55,7 @@ def exact_duplicates(
     """
     win = Window.partitionBy(F.xxhash64("_norm"), "_norm")
     return (
-        with_normalized(df, text_col, "_norm", spread=True)
+        with_normalized(spread_small_input(df), text_col, "_norm")
         .withColumn("canonical_id", F.min(id_col).over(win))
         .withColumn("is_dup", F.col(id_col) != F.col("canonical_id"))
         .select(F.col(id_col), "canonical_id", "is_dup")
@@ -109,12 +111,12 @@ def jaccard_join_exact(
     mass; compare :func:`minhash_lsh_pairs` (approximate, constant-factor
     candidates). Equality with a brute all-pairs join is pinned in tests.
 
-    Returns ``(id_a, id_b, inter, jaccard)``, ``id_a < id_b``.
+    Returns ``(id_a, id_b, inter, jaccard)``.
     """
     if not (0 < threshold <= 1):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = (
-        with_normalized(df, text_col, "_norm", spread=True)
+        with_normalized(spread_small_input(df), text_col, "_norm")
         .select(
             F.col(id_col).alias("id"),
             F.explode(word_shingles(F.col("_norm"), w)).alias("sh"),
@@ -132,29 +134,19 @@ def jaccard_join_exact(
         .where(F.col("_pos") <= prefix_len)
         .select("id", "sh", "n_sh")
     )
-    a = prefix.select(F.col("id").alias("id_a"), "sh", F.col("n_sh").alias("n_a"))
-    b = prefix.select(F.col("id").alias("id_b"), "sh", F.col("n_sh").alias("n_b"))
     cand = (
-        a.join(b, "sh")
-        .where(F.col("id_a") < F.col("id_b"))
+        self_join_pairs(prefix, "sh", "id", ["n_sh"])
         # size filter: J >= t needs t*max <= min (slack admits, never drops)
         .where(
-            F.least("n_a", "n_b") + F.lit(1e-9)
-            >= threshold * F.greatest("n_a", "n_b")
+            F.least("n_sh_a", "n_sh_b") + F.lit(1e-9)
+            >= threshold * F.greatest("n_sh_a", "n_sh_b")
         )
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     arrs = sh.groupBy("id").agg(F.sort_array(F.collect_set("sh")).alias("_arr"))
     return (
-        cand.join(
-            arrs.select(F.col("id").alias("id_a"), F.col("_arr").alias("_arr_a")),
-            "id_a",
-        )
-        .join(
-            arrs.select(F.col("id").alias("id_b"), F.col("_arr").alias("_arr_b")),
-            "id_b",
-        )
+        join_pair_ends(cand, arrs, "id", ["_arr"])
         .withColumn("inter", F.size(F.array_intersect("_arr_a", "_arr_b")).cast("long"))
         .withColumn(
             "jaccard",
@@ -200,7 +192,7 @@ def minhash_signatures(
     array_min(transform(...)).
     """
     params = _permutation_params(num_hashes)
-    base = with_normalized(df, text_col, "_norm", spread=True).select(
+    base = with_normalized(spread_small_input(df), text_col, "_norm").select(
         F.col(id_col).alias("id"),
         F.transform(
             word_shingles(F.col("_norm"), w),
@@ -387,20 +379,23 @@ def near_dedup(
     (tiny relative to the corpus); one final left join paints keepers back
     over the full corpus. Nothing is materialized on the driver.
     """
-    from blurrily_spark.operators.cluster import connected_components
+    from blurrily_spark.operators.cluster import assign_entities
 
     _require_integral_id(df, id_col, "near_dedup")
     pairs = minhash_lsh_pairs(df, id_col, text_col, hash_fn=hash_fn)
     edges = pairs.where(F.col("est_jaccard") >= threshold).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    comps = connected_components(edges).withColumnRenamed("ref", "id")
-    ids = df.select(F.col(id_col).cast("long").alias("id"))
-    keep = F.coalesce("entity_id", F.col("id"))
-    return ids.join(comps, "id", "left").select(
-        "id",
-        keep.alias("keep_id"),
-        (keep != F.col("id")).cast("int").alias("is_dup"),
+    return _keepers(assign_entities(df.select(id_col), edges, node_col=id_col))
+
+
+def _keepers(entities: DataFrame) -> DataFrame:
+    """``(id, keep_id, is_dup)`` of :func:`assign_entities` output: every
+    record keeps its component's smallest id."""
+    return entities.select(
+        F.col("ref").alias("id"),
+        F.col("entity_id").alias("keep_id"),
+        (F.col("entity_id") != F.col("ref")).cast("int").alias("is_dup"),
     )
 
 
@@ -489,7 +484,7 @@ def _span_occurrences(
     per key -- so the occurrence stream is never re-read by a separate
     frequency aggregation and a join back; the plan stays lazy.
     """
-    d = with_normalized(df, text_col, "_norm", spread=True)
+    d = with_normalized(spread_small_input(df), text_col, "_norm")
     words = F.split(F.col("_norm"), " ")
     n = F.size(words)
     # slice() clamps past the end, so short docs (n < w) fall out of the
@@ -641,7 +636,7 @@ def cut_duplicate_spans(
     """
     occ = _span_occurrences(df, id_col, text_col, w, hash_fn, keep_win=False)
     positions = occ.where("_dup")
-    d = with_normalized(df, text_col, "_norm", spread=True)
+    d = with_normalized(spread_small_input(df), text_col, "_norm")
     words = F.split(F.col("_norm"), " ")
     # outer: a NULL-text document keeps one row, with NULL pos and word
     wordpos = d.select(
@@ -726,7 +721,7 @@ def simhash62(
     tokens; the fingerprint projection raises (F.raise_error, evaluated
     once per document) rather than silently corrupting past the bound.
     """
-    toks = with_normalized(df, text_col, "_norm", spread=True).select(
+    toks = with_normalized(spread_small_input(df), text_col, "_norm").select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.col("_norm"), " ")).alias("tok"),
     )
@@ -809,9 +804,7 @@ def simhash_near_dups(
         "simhash",
         F.explode(F.array(*chunk_structs)).alias("ck"),
     ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
-    a = chunks.select(F.col("id").alias("id_a"), F.col("simhash").alias("fp_a"), "chunk", "ckey")
-    b = chunks.select(F.col("id").alias("id_b"), F.col("simhash").alias("fp_b"), "chunk", "ckey")
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int")
     # Hamming filter BEFORE the pair dedup: bit_count is a pure function of
     # the joined row, and SimHash bits of same-language corpora are heavily
     # correlated, so chunk buckets are fat -- on the sf0.1 bench corpus the
@@ -820,8 +813,7 @@ def simhash_near_dups(
     # fingerprints as payload) through the aggregate; filtering first cuts
     # that shuffle ~270x with an identical result set (measured 48s -> 10s).
     return (
-        a.join(b, ["chunk", "ckey"])
-        .where(F.col("id_a") < F.col("id_b"))
+        self_join_pairs(chunks, ["chunk", "ckey"], "id", ["simhash"])
         .select("id_a", "id_b", hamming.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])

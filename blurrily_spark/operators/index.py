@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import spread_small_input
 from blurrily_spark.functions.tokenizer import add_trigrams, with_normalized
 
 POSTINGS_COLS = ("trigram", "ref", "weight")
@@ -45,9 +46,9 @@ def prepare_needles(
     single row per ref is kept (sufficient for batch builds, which have no
     arrival order).
     """
-    # spread=True: a tiny file-backed batch is re-spread so tokenization
-    # parallelizes past the scan's 1-2 partitions (no-op at corpus scale).
-    out = with_normalized(df, text_col, "norm", spread=True)
+    # a tiny file-backed batch is re-spread so tokenization parallelizes
+    # past the scan's 1-2 partitions (no-op at corpus scale)
+    out = with_normalized(spread_small_input(df), text_col, "norm")
     if weight_col is not None and weight_col in df.columns:
         w = F.col(weight_col).cast("int")
         out = out.withColumn(

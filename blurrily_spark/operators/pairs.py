@@ -29,7 +29,13 @@ Scale design (the part the single-node reference never had to solve):
     Salting every key (the naive form) replicates the whole right side B
     times -- at 100 TB the cold 99% of the corpus would pay B x shuffle
     volume to fix a straggler caused by a handful of keys.
-* **Half-matrix.** ``ref_a < ref_b`` keeps each unordered pair once.
+* **Pair convention.** A pair set names its two records ``<id>_a`` and
+  ``<id>_b`` with ``<id>_a < <id>_b``: each unordered pair appears once,
+  no record pairs with itself, and a NULL id pairs with nothing. A
+  per-record column ``c`` carried onto a pair is ``c_a`` / ``c_b``.
+  :func:`self_join_pairs` builds such a set from the rows that share a key
+  and :func:`join_pair_ends` attaches a per-record table to both ends;
+  every blocker and scorer in the package goes through the two.
 """
 
 from __future__ import annotations
@@ -42,6 +48,56 @@ from pyspark.sql import functions as F
 from blurrily_spark.config import shuffle_partitions
 
 log = logging.getLogger(__name__)
+
+
+def _pair_ends(
+    rows: DataFrame, keys: list[str], id_col: str, carry: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """The ``_a`` and ``_b`` copies of ``rows`` for a self-join: the keys,
+    then ``id_col`` and each carried column suffixed by the side."""
+
+    def end(s: str) -> DataFrame:
+        return rows.select(
+            *keys,
+            F.col(id_col).alias(f"{id_col}_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return end("a"), end("b")
+
+
+def _half(joined: DataFrame, id_col: str) -> DataFrame:
+    return joined.where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
+
+
+def self_join_pairs(
+    rows: DataFrame, keys: str | list[str], id_col: str, carry: list[str]
+) -> DataFrame:
+    """Every pair of ``rows`` that share ``keys``, once per shared key, in
+    the pair convention: ``(keys..., <id>_a, <c>_a..., <id>_b, <c>_b...)``
+    for each carried column ``c`` of ``carry``. An empty ``keys`` pairs
+    every two rows (a cross join); a NULL key joins nothing."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    a, b = _pair_ends(rows, keys, id_col, carry)
+    return _half(a.join(b, keys) if keys else a.crossJoin(b), id_col)
+
+
+def join_pair_ends(
+    pairs: DataFrame, table: DataFrame, key: str, cols: list[str]
+) -> DataFrame:
+    """``pairs`` with each column ``c`` of ``cols`` of ``table`` attached to
+    both ends as ``c_a`` / ``c_b``: two inner joins, ``table.<key>`` on
+    ``<key>_a`` and then on ``<key>_b``. A pair whose end is missing from
+    ``table`` drops out and duplicate pairs stay duplicates; ``table`` is
+    meant to hold one row per record (k rows of a record repeat each of its
+    pairs k times)."""
+
+    def end(s: str) -> DataFrame:
+        return table.select(
+            F.col(key).alias(f"{key}_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in cols]
+        )
+
+    return pairs.join(end("a"), f"{key}_a").join(end("b"), f"{key}_b")
 
 
 def trigram_df_counts(postings: DataFrame) -> DataFrame:
@@ -88,11 +144,10 @@ def candidate_pairs(
 ) -> DataFrame:
     """All candidate pairs sharing >= min_matches trigrams.
 
-    Returns ``(ref_a, ref_b, matches, weight_a, weight_b)`` with
-    ``ref_a < ref_b``. ``matches`` is the shared-unique-trigram count --
-    identical to what FIND would report for either record queried against
-    the other (modulo the query side's own tokenization, which for stored
-    records is the same tokenizer).
+    Returns ``(ref_a, ref_b, matches, weight_a, weight_b)``. ``matches`` is
+    the shared-unique-trigram count -- identical to what FIND would report
+    for either record queried against the other (modulo the query side's
+    own tokenization, which for stored records is the same tokenizer).
 
     ``keys_only=True`` returns just the DISTINCT ``(ref_a, ref_b)`` set --
     the two-phase blocking contract, where :func:`rescore_pairs_exact`
@@ -112,21 +167,14 @@ def candidate_pairs(
     with its bucket count and threshold (``hot_df`` or auto), or plain."""
     if keys_only and min_matches > 1:
         raise ValueError("keys_only candidate generation cannot apply min_matches")
-    cols = ["trigram", "ref"] if keys_only else ["trigram", "ref", "weight"]
-    p = postings.select(*cols)
+    carry = [] if keys_only else ["weight"]
+    p = postings.select("trigram", "ref", *carry)
     df = trigram_df_counts(p)
     if max_df is not None:
         # the cap drops whole trigrams, so the kept ones keep their df
         df = df.where(F.col("df") <= max_df)
         # keep is bounded by the 28^3 key space -> broadcast, never a shuffle
         p = p.join(F.broadcast(df.select("trigram")), "trigram")
-
-    def side(rows: DataFrame, s: str) -> DataFrame:
-        return rows.select(
-            "trigram",
-            F.col("ref").alias(f"ref_{s}"),
-            *([] if keys_only else [F.col("weight").alias(f"weight_{s}")]),
-        )
 
     if salt_buckets and salt_buckets > 1:
         b = int(salt_buckets)
@@ -136,24 +184,18 @@ def candidate_pairs(
         )
         flagged = p.join(F.broadcast(_hot_flags(df, b, hot_df)), "trigram")
         cold, hot = flagged.where(~F.col("_hot")), flagged.where(F.col("_hot"))
-        hot_l = side(hot, "a").withColumn(
-            "salt", F.pmod(F.xxhash64("ref_a"), F.lit(b))
-        )
-        hot_r = side(hot, "b").withColumn(
+        hot_l, hot_r = _pair_ends(hot, ["trigram"], "ref", carry)
+        hot_l = hot_l.withColumn("salt", F.pmod(F.xxhash64("ref_a"), F.lit(b)))
+        hot_r = hot_r.withColumn(
             "salt",
             F.explode(F.sequence(F.lit(0).cast("long"), F.lit(b - 1).cast("long"))),
         )
-        joined = (
-            side(cold, "a")
-            .join(side(cold, "b"), ["trigram"])
-            .unionByName(hot_l.join(hot_r, ["trigram", "salt"]).drop("salt"))
-            .where(F.col("ref_a") < F.col("ref_b"))
+        joined = self_join_pairs(cold, "trigram", "ref", carry).unionByName(
+            _half(hot_l.join(hot_r, ["trigram", "salt"]).drop("salt"), "ref")
         )
     else:
         log.info("candidate_pairs: plain")
-        joined = side(p, "a").join(side(p, "b"), ["trigram"]).where(
-            F.col("ref_a") < F.col("ref_b")
-        )
+        joined = self_join_pairs(p, "trigram", "ref", carry)
 
     if keys_only:
         return joined.select("ref_a", "ref_b").dropDuplicates(["ref_a", "ref_b"])
@@ -190,17 +232,7 @@ def rescore_pairs_exact(
     recs = records_with_trigrams.select(
         F.col(ref_col).alias("ref"),
         F.col(tg_col).alias("_tg"),
-        F.col(weight_col).alias("_w"),
-    )
-    a = recs.select(
-        F.col("ref").alias("ref_a"),
-        F.col("_tg").alias("_tg_a"),
-        F.col("_w").alias("weight_a"),
-    )
-    b = recs.select(
-        F.col("ref").alias("ref_b"),
-        F.col("_tg").alias("_tg_b"),
-        F.col("_w").alias("weight_b"),
+        F.col(weight_col).alias("weight"),
     )
     # ``matches`` comes out of a one-element explode: a filter on it (the
     # pipeline's min_matches) cannot be pushed below a generator, so the
@@ -208,9 +240,7 @@ def rescore_pairs_exact(
     # each candidate pays for one array_intersect, not two.
     matches = F.explode(F.array(F.size(F.array_intersect("_tg_a", "_tg_b")).cast("long")))
     return (
-        candidates.select("ref_a", "ref_b")
-        .join(a, "ref_a")
-        .join(b, "ref_b")
+        join_pair_ends(candidates.select("ref_a", "ref_b"), recs, "ref", ["_tg", "weight"])
         .select("*", matches.alias("matches"))
         .withColumn(
             "jaccard",
@@ -233,21 +263,10 @@ def with_jaccard(pairs: DataFrame, postings: DataFrame) -> DataFrame:
     sides are pre-partitioned by ref, and the counts table is ~1 row per
     record (broadcastable for dimension-sized corpora).
     """
-    counts = ref_trigram_counts(postings)
-    return (
-        pairs.join(counts.withColumnRenamed("ref", "ref_a"), "ref_a")
-        .withColumnRenamed("n_trigrams", "tg_a")
-        .join(
-            counts.withColumnRenamed("ref", "ref_b").withColumnRenamed(
-                "n_trigrams", "tg_b"
-            ),
-            "ref_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("matches")
-            / (F.col("tg_a") + F.col("tg_b") - F.col("matches")).cast("double"),
-        )
+    counts = ref_trigram_counts(postings).select("ref", F.col("n_trigrams").alias("tg"))
+    return join_pair_ends(pairs, counts, "ref", ["tg"]).withColumn(
+        "jaccard",
+        F.col("matches") / (F.col("tg_a") + F.col("tg_b") - F.col("matches")).cast("double"),
     )
 
 
@@ -331,11 +350,8 @@ def token_blocking_pairs(
             .select("token")
         )
         toks = toks.join(keep, "token")
-    a = toks.select("token", F.col("ref").alias("ref_a"))
-    b = toks.select("token", F.col("ref").alias("ref_b"))
     pairs = (
-        a.join(b, "token")
-        .where(F.col("ref_a") < F.col("ref_b"))
+        self_join_pairs(toks, "token", "ref", [])
         .groupBy("ref_a", "ref_b")
         .agg(F.count(F.lit(1)).alias("matches"))
     )
@@ -405,32 +421,18 @@ def idf_weighted_pairs(postings: DataFrame) -> DataFrame:
     p = postings.select("trigram", "ref")
     pw = p.join(F.broadcast(_idf_weights(p)), "trigram")
     wsums = pw.groupBy("ref").agg(F.sum("_w").alias("_wsum"))
-    left = pw.select("trigram", F.col("ref").alias("ref_a"), F.col("_w"))
-    right = pw.select("trigram", F.col("ref").alias("ref_b"))
+    # the unread ``_w_b`` is pruned below the join
     dots = (
-        left.join(right, "trigram")
-        .where(F.col("ref_a") < F.col("ref_b"))
+        self_join_pairs(pw, "trigram", "ref", ["_w"])
         .groupBy("ref_a", "ref_b")
-        .agg(F.count(F.lit(1)).alias("matches"), F.sum("_w").alias("_dot"))
+        .agg(F.count(F.lit(1)).alias("matches"), F.sum("_w_a").alias("_dot"))
     )
-    return (
-        dots.join(
-            wsums.select(F.col("ref").alias("ref_a"), F.col("_wsum").alias("_wa")),
-            "ref_a",
-        )
-        .join(
-            wsums.select(F.col("ref").alias("ref_b"), F.col("_wsum").alias("_wb")),
-            "ref_b",
-        )
-        .select(
-            "ref_a",
-            "ref_b",
-            "matches",
-            (
-                F.col("_dot")
-                / F.sqrt(F.col("_wa").cast("double") * F.col("_wb").cast("double"))
-            ).alias("idf_cos"),
-        )
+    wa, wb = F.col("_wsum_a").cast("double"), F.col("_wsum_b").cast("double")
+    return join_pair_ends(dots, wsums, "ref", ["_wsum"]).select(
+        "ref_a",
+        "ref_b",
+        "matches",
+        (F.col("_dot") / F.sqrt(wa * wb)).alias("idf_cos"),
     )
 
 
@@ -706,8 +708,8 @@ def phonetic_pairs(
     shares a Soundex-class key (functions/phonetic.py) -- the classic
     record-linkage first block, catching spelling variants ("Smith" /
     "Smyth" -> S530) that trigram blocking also finds but at higher pair
-    cost. Returns ``(ref_a, ref_b, pkey)`` with ``ref_a < ref_b``;
-    letter-free / NULL names produce no key and join nothing.
+    cost. Returns ``(ref_a, ref_b, pkey)``; letter-free / NULL names
+    produce no key and join nothing.
 
     Scale shape: one equi-self-join on the key, same class as
     :func:`candidate_pairs`. Phonetic keys are FEW (max 26 * 7^3 distinct)
@@ -723,7 +725,7 @@ def phonetic_pairs(
     from blurrily_spark.functions.phonetic import phonetic_key
 
     keyed = df.select(
-        F.col(id_col).cast("long").alias("_ref"),
+        F.col(id_col).cast("long").alias("ref"),
         phonetic_key(F.col(name_col)).alias("pkey"),
     ).where(F.col("pkey").isNotNull())
     if max_block is not None:
@@ -733,8 +735,4 @@ def phonetic_pairs(
         keyed = keyed.join(
             sizes.where(F.col("_n") <= max_block).select("pkey"), "pkey"
         )
-    a = keyed.select(F.col("_ref").alias("ref_a"), "pkey")
-    b = keyed.select(F.col("_ref").alias("ref_b"), "pkey")
-    return a.join(b, "pkey").where(F.col("ref_a") < F.col("ref_b")).select(
-        "ref_a", "ref_b", "pkey"
-    )
+    return self_join_pairs(keyed, "pkey", "ref", []).select("ref_a", "ref_b", "pkey")

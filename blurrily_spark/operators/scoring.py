@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from blurrily_spark.operators.pairs import join_pair_ends
+
 
 def _jaro(a: str, b: str) -> float:
     if a == b:
@@ -84,7 +86,7 @@ def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
 def score_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
     """Attach score components to candidate pairs.
 
-    ``records`` is ``(ref, norm)`` (+ optionally ``n_trigrams``) -- the
+    ``records`` is ``(ref, norm)``, one row per record -- the
     normalized-text side table kept alongside the postings (the reference
     never stores strings, README.md:125-127, so text-based tie-breaking is
     an extension that needs this side table).
@@ -93,17 +95,10 @@ def score_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
     consumers: (matches DESC, weight_delta ASC, jw DESC, ref_a ASC,
     ref_b ASC).
     """
-    texts = records.select(F.col("ref"), F.col("norm"))
+    texts = records.select("ref", F.col("norm").alias("_norm"))
+    delta = pairs.withColumn("weight_delta", F.abs(F.col("weight_a") - F.col("weight_b")))
     return (
-        pairs.withColumn("weight_delta", F.abs(F.col("weight_a") - F.col("weight_b")))
-        .join(
-            texts.withColumnRenamed("ref", "ref_a").withColumnRenamed("norm", "_norm_a"),
-            "ref_a",
-        )
-        .join(
-            texts.withColumnRenamed("ref", "ref_b").withColumnRenamed("norm", "_norm_b"),
-            "ref_b",
-        )
+        join_pair_ends(delta, texts, "ref", ["_norm"])
         .withColumn("jw", jaro_winkler("_norm_a", "_norm_b"))
         .drop("_norm_a", "_norm_b")
     )
@@ -139,13 +134,9 @@ def with_edit_distance(
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     texts = records.select(F.col("ref"), F.col(text_col).alias("_t"))
     if max_dist is None:
-        out = pairs.join(
-            texts.select(F.col("ref").alias("ref_a"), F.col("_t").alias("_ta")), "ref_a"
-        ).join(
-            texts.select(F.col("ref").alias("ref_b"), F.col("_t").alias("_tb")), "ref_b"
-        )
-        return out.withColumn("edit_dist", F.levenshtein("_ta", "_tb")).drop(
-            "_ta", "_tb"
+        out = join_pair_ends(pairs, texts, "ref", ["_t"])
+        return out.withColumn("edit_dist", F.levenshtein("_t_a", "_t_b")).drop(
+            "_t_a", "_t_b"
         )
     # Decide with small rows, move big rows once (guide §8): the length-gap
     # prune needs only LENGTHS, so a per-ref aggregated (ref, min_len,
@@ -166,39 +157,19 @@ def with_edit_distance(
         F.lit(0),
     )
     pruned = (
-        pairs.join(
-            lens.select(
-                F.col("ref").alias("ref_a"),
-                F.col("_lmin").alias("_lmin_a"),
-                F.col("_lmax").alias("_lmax_a"),
-            ),
-            "ref_a",
-        )
-        .join(
-            lens.select(
-                F.col("ref").alias("ref_b"),
-                F.col("_lmin").alias("_lmin_b"),
-                F.col("_lmax").alias("_lmax_b"),
-            ),
-            "ref_b",
-        )
+        join_pair_ends(pairs, lens, "ref", ["_lmin", "_lmax"])
         .where(gap <= F.lit(int(max_dist)))
         .drop("_lmin_a", "_lmax_a", "_lmin_b", "_lmax_b")
     )
     out = (
-        pruned.join(
-            texts.select(F.col("ref").alias("ref_a"), F.col("_t").alias("_ta")), "ref_a"
-        )
-        .join(
-            texts.select(F.col("ref").alias("ref_b"), F.col("_t").alias("_tb")), "ref_b"
-        )
-        .where(F.abs(F.length("_ta") - F.length("_tb")) <= F.lit(int(max_dist)))
+        join_pair_ends(pruned, texts, "ref", ["_t"])
+        .where(F.abs(F.length("_t_a") - F.length("_t_b")) <= F.lit(int(max_dist)))
         .withColumn(
-            "edit_dist", F.levenshtein(F.col("_ta"), F.col("_tb"), int(max_dist))
+            "edit_dist", F.levenshtein(F.col("_t_a"), F.col("_t_b"), int(max_dist))
         )
         .where(F.col("edit_dist") >= 0)
     )
-    return out.drop("_ta", "_tb")
+    return out.drop("_t_a", "_t_b")
 
 
 def match_edges(

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from blurrily_spark.config import spread_small_input
+from blurrily_spark.operators.pairs import self_join_pairs
+
 
 def dot(a, b):
     """Ordered-fold dot product of two array<numeric> columns, as double."""
@@ -104,6 +107,11 @@ def _lit_mat(vecs):
     return F.expr(f"array({inner})")
 
 
+def _pair_cos():
+    """:func:`_cos_pre` over a pair's carried ``_v`` and ``_n`` columns."""
+    return _cos_pre(F.col("_v_a"), F.col("_v_b"), F.col("_n_a"), F.col("_n_b"))
+
+
 def _cos_pre(a, b, na, nb):
     """``cosine(a, b)`` with both row norms already materialized as
     columns: ``dot/(na*nb)`` is the same expression tree in the same
@@ -127,8 +135,6 @@ def cosine_topk(
     The query side is broadcast (ANN query batches are dimension-sized);
     ties broken by vec_id ASC for determinism.
     """
-    from blurrily_spark.config import spread_small_input
-
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -213,8 +219,6 @@ def ivf_topk(
     broadcast query probes on bucket id, so each query scores only the
     vectors of its ``nprobe`` buckets.
     """
-    from blurrily_spark.config import spread_small_input
-
     bucketed = assign_buckets(spread_small_input(corpus), centroids, id_col, vec_col)
 
     cents = _lit_mat(centroids)
@@ -368,30 +372,16 @@ def cosine_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact brute force.
 
-    All-pairs cosine with ``id_a < id_b`` -- the O(n^2) correctness
-    baseline that validates :func:`rp_lsh_near_dup_pairs` (the scale path).
-    Returns (id_a, id_b, cos).
+    All-pairs cosine -- the O(n^2) correctness baseline that validates
+    :func:`rp_lsh_near_dup_pairs` (the scale path). Returns (id_a, id_b, cos).
     """
-    from blurrily_spark.config import spread_small_input
-
     withn = spread_small_input(emb).select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("_v"),
         l2_norm(F.col(vec_col)).alias("_n"),
     )
-    a = withn.select(
-        F.col("id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")
-    )
-    b = withn.select(
-        F.col("id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")
-    )
     return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            _cos_pre(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")).alias("cos"),
-        )
+        self_join_pairs(withn, [], "id", ["_v", "_n"])
+        .select("id_a", "id_b", _pair_cos().alias("cos"))
         .where(F.col("cos") >= threshold)
     )
 
@@ -455,8 +445,6 @@ def rp_lsh_near_dup_pairs(
     """
     from blurrily_spark.functions.hashing import chunk_bounds
 
-    from blurrily_spark.config import spread_small_input
-
     planes = random_hyperplanes(n_bits, dim, seed)
     sigs = spread_small_input(emb).select(
         F.col(id_col).alias("id"),
@@ -477,14 +465,6 @@ def rp_lsh_near_dup_pairs(
         "id", "_v", "_n",
         F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"),
     )
-    a = chunks.select(
-        F.col("id").alias("id_a"), F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"), "chunk", "ckey",
-    )
-    b = chunks.select(
-        F.col("id").alias("id_b"), F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"), "chunk", "ckey",
-    )
     # cosine rescore + threshold BEFORE the pair dedup: the cosine is a pure
     # function of the pair (identical on every chunk collision of the same
     # pair, so filter/dedup commute), and scoring per collision row is a few
@@ -493,13 +473,8 @@ def rp_lsh_near_dup_pairs(
     # QUALIFYING pair instead of ~2*dim*4 bytes per raw collision (the same
     # shuffle-narrowing as dedup.simhash_near_dups).
     return (
-        a.join(b, ["chunk", "ckey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            _cos_pre(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")).alias("cos"),
-        )
+        self_join_pairs(chunks, ["chunk", "ckey"], "id", ["_v", "_n"])
+        .select("id_a", "id_b", _pair_cos().alias("cos"))
         .where(F.col("cos") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -531,9 +506,8 @@ def semantic_dedup(
     (tiny relative to the corpus); one final left join paints keepers back.
     Nothing lives driver-side but the codebook itself.
     """
-    from blurrily_spark.config import spread_small_input
-    from blurrily_spark.operators.cluster import connected_components
-    from blurrily_spark.operators.dedup import _require_integral_id
+    from blurrily_spark.operators.cluster import assign_entities
+    from blurrily_spark.operators.dedup import _keepers, _require_integral_id
 
     _require_integral_id(emb, id_col, "semantic_dedup")
 
@@ -543,32 +517,12 @@ def semantic_dedup(
     # computing each norm once per row instead of once per pair removes
     # ~2/3 of the fold work in the dominant stage; assign_buckets already
     # staged the norm as _n.
-    withn = assigned.select("vec_id", "_v", "bucket", "_n")
-    a = withn.select(
-        F.col("vec_id").alias("id_a"), F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"), "bucket",
-    )
-    b = withn.select(
-        F.col("vec_id").alias("id_b"), F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"), "bucket",
-    )
     edges = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            _cos_pre(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb"))
-            >= threshold
-        )
-        .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        self_join_pairs(assigned, "bucket", "vec_id", ["_v", "_n"])
+        .where(_pair_cos() >= threshold)
+        .select(F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst"))
     )
-    comps = connected_components(edges).withColumnRenamed("ref", "id")
-    ids = assigned.select(F.col("vec_id").cast("long").alias("id"))
-    keep_col = F.coalesce("entity_id", F.col("id"))
-    return ids.join(comps, "id", "left").select(
-        "id",
-        keep_col.alias("keep_id"),
-        (keep_col != F.col("id")).cast("int").alias("is_dup"),
-    )
+    return _keepers(assign_entities(assigned.select("vec_id"), edges, node_col="vec_id"))
 
 
 def take_centroids(

@@ -1,16 +1,11 @@
-"""Distributed clustering-quality metrics (the correctness-gate math at scale).
+"""Distributed blocking and clustering-quality metrics (the correctness-gate
+math at scale), each a lazy DataFrame.
 
 The pytest harness computes pairwise F1 with driver-side itertools -- fine
-for spec corpora, O(n^2) death at 10^12 turns. This module computes the same
-metric with joins:
-
-* same-cluster pair counts per labeling are Σ c*(c-1)/2 over cluster sizes
-  (one groupBy each);
-* true positives are pairs co-clustered in BOTH labelings, i.e. the
-  cluster-size aggregation of the (pred_label, true_label) contingency
-  table -- again one groupBy.
-
-No pair materialization anywhere; three aggregations total.
+for spec corpora, O(n^2) death at 10^12 turns. Here same-cluster pair
+counts are sums of c*(c-1)/2 over cluster sizes, and true positives come
+from the (pred_label, true_label) contingency table, so no same-cluster
+pair is ever materialized (:func:`cluster_metrics`).
 """
 
 from __future__ import annotations
@@ -18,55 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _same_pairs(df: DataFrame, label_col: str) -> int:
-    row = (
-        df.groupBy(label_col)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("p"))
-        .collect()[0]
-    )
-    return int(row["p"] or 0)
-
-
-def pairwise_f1(
-    pred: DataFrame,
-    truth: DataFrame,
-    id_col: str = "ref",
-    pred_col: str = "entity_id",
-    truth_col: str = "entity_true",
-) -> dict[str, float]:
-    """Pairwise precision/recall/F1 of ``pred`` clusters against ``truth``.
-
-    Both inputs are (id, label); ids joined inner (ids missing from either
-    side are excluded -- callers align universes first).
-    """
-    joined = pred.select(F.col(id_col).alias("_id"), F.col(pred_col).alias("_p")).join(
-        truth.select(F.col(id_col).alias("_id"), F.col(truth_col).alias("_t")), "_id"
-    ).cache()
-    try:
-        pred_pairs = _same_pairs(joined, "_p")
-        true_pairs = _same_pairs(joined, "_t")
-        tp = int(
-            joined.groupBy("_p", "_t")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("p"))
-            .collect()[0]["p"]
-            or 0
-        )
-    finally:
-        joined.unpersist()
-    precision = tp / pred_pairs if pred_pairs else 0.0
-    recall = tp / true_pairs if true_pairs else 0.0
-    f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
-    return {
-        "precision": precision,
-        "recall": recall,
-        "f1": f1,
-        "tp_pairs": tp,
-        "pred_pairs": pred_pairs,
-        "true_pairs": true_pairs,
-    }
+from blurrily_spark.operators.pairs import join_pair_ends
 
 
 def blocking_metrics(
@@ -94,8 +41,9 @@ def blocking_metrics(
     the bottleneck, cluster_metrics whether scoring/clustering is.
 
     ``candidates`` is (ref_a, ref_b) — extra columns ignored, each unordered
-    pair expected once (callers produce ref_a < ref_b; enforced here by a
-    canonical reorder + distinct so double-counted input can't inflate PQ).
+    pair expected once (the pair convention of ``operators/pairs.py``;
+    enforced here by a canonical reorder + distinct so double-counted
+    input can't inflate PQ).
     ``truth`` is (id_col, truth_col), one row per record in the *blocked
     universe* (n comes from it).
 
@@ -106,7 +54,7 @@ def blocking_metrics(
     result is bit-identical across engines (DuckDB oracle `blocking_metrics`
     in the driver contract).
     """
-    t = truth.select(F.col(id_col).alias("_id"), F.col(truth_col).alias("_t"))
+    t = truth.select(F.col(id_col).alias("ref"), F.col(truth_col).alias("_t"))
     sizes = t.groupBy("_t").agg(F.count(F.lit(1)).alias("c"))
     totals = sizes.agg(
         F.sum("c").alias("n_items"),
@@ -115,20 +63,16 @@ def blocking_metrics(
 
     cand = (
         candidates.select(
-            F.least("ref_a", "ref_b").alias("_a"),
-            F.greatest("ref_a", "ref_b").alias("_b"),
+            F.least("ref_a", "ref_b").alias("ref_a"),
+            F.greatest("ref_a", "ref_b").alias("ref_b"),
         )
-        .where(F.col("_a") < F.col("_b"))
-        .dropDuplicates(["_a", "_b"])
+        .where(F.col("ref_a") < F.col("ref_b"))
+        .dropDuplicates(["ref_a", "ref_b"])
     )
-    labeled = (
-        cand.join(t.select(F.col("_id").alias("_a"), F.col("_t").alias("_ta")), "_a")
-        .join(t.select(F.col("_id").alias("_b"), F.col("_t").alias("_tb")), "_b")
-    )
-    cstats = labeled.agg(
+    cstats = join_pair_ends(cand, t, "ref", ["_t"]).agg(
         F.count(F.lit(1)).alias("n_candidates"),
         F.coalesce(
-            F.sum((F.col("_ta") == F.col("_tb")).cast("long")), F.lit(0)
+            F.sum((F.col("_t_a") == F.col("_t_b")).cast("long")), F.lit(0)
         ).alias("tp_candidates"),
     )
 
@@ -193,23 +137,16 @@ def threshold_sweep(
     ts = sorted({float(t) for t in thresholds})
     if not ts:
         raise ValueError("thresholds must be non-empty")
-    t = truth.select(F.col(id_col).alias("_id"), F.col(truth_col).alias("_t"))
+    t = truth.select(F.col(id_col).alias("ref"), F.col(truth_col).alias("_t"))
     totals = (
         t.groupBy("_t")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(F.expr("sum((c * (c - 1)) DIV 2)").alias("true_matches"))
     )
 
-    lab = (
-        scored.select(
-            F.col("ref_a").alias("_a"),
-            F.col("ref_b").alias("_b"),
-            F.col(score_col).alias("_s"),
-        )
-        .join(t.select(F.col("_id").alias("_a"), F.col("_t").alias("_ta")), "_a")
-        .join(t.select(F.col("_id").alias("_b"), F.col("_t").alias("_tb")), "_b")
-        .select("_s", (F.col("_ta") == F.col("_tb")).cast("long").alias("_m"))
-    )
+    lab = join_pair_ends(
+        scored.select("ref_a", "ref_b", F.col(score_col).alias("_s")), t, "ref", ["_t"]
+    ).select("_s", (F.col("_t_a") == F.col("_t_b")).cast("long").alias("_m"))
     aggs = []
     for i, th in enumerate(ts):
         keep = (F.col("_s") >= F.lit(th)).cast("long")

@@ -1082,3 +1082,77 @@ def test_idf_weights_rare_evidence_higher(spark):
     # (3,5): shared 'aaab' trigrams are common across 5..8 -> scores below
     # a pair sharing the same trigrams exclusively
     assert s[(3, 5)] < s[(3, 4)]
+
+
+# -- the pair convention: self_join_pairs / join_pair_ends --------------------
+
+# (id, k1, k2, p): a duplicate row (id 2), a NULL id, a NULL k1, and ids
+# that share k1 but not k2
+CONVENTION_ROWS = [
+    (1, "x", 1, "a"),
+    (2, "x", 1, "b"),
+    (2, "x", 1, "b"),
+    (3, "x", 2, "c"),
+    (None, "x", 1, "n"),
+    (4, None, 1, "d"),
+    (5, "y", 1, "e"),
+    (6, "y", 1, "f"),
+]
+CONVENTION_SCHEMA = "id long, k1 string, k2 int, p string"
+
+
+def _self_join_model(rows, keys):
+    """Every two rows with equal non-NULL ``keys`` (column indexes) and
+    ``id_a < id_b``, as ``(keys..., id_a, p_a, id_b, p_b)``, sorted."""
+    out = []
+    for ra, rb in itertools.product(rows, repeat=2):
+        ka, kb = tuple(ra[i] for i in keys), tuple(rb[i] for i in keys)
+        if None in ka or ka != kb or ra[0] is None or rb[0] is None:
+            continue
+        if ra[0] < rb[0]:
+            out.append((*ka, ra[0], ra[3], rb[0], rb[3]))
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize(
+    "keys,idx", [("k1", [1]), (["k1", "k2"], [1, 2]), ([], [])]
+)
+def test_self_join_pairs_matches_python_model(spark, keys, idx):
+    from blurrily_spark.operators.pairs import self_join_pairs
+
+    rows = spark.createDataFrame(CONVENTION_ROWS, CONVENTION_SCHEMA)
+    out = self_join_pairs(rows, keys, "id", ["p"])
+    names = [keys] if isinstance(keys, str) else keys
+    assert out.columns == [*names, "id_a", "p_a", "id_b", "p_b"]
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == _self_join_model(CONVENTION_ROWS, idx)
+    # never a self-pair, and id 2's duplicate rows pair with id 1 twice
+    assert all(r[-4] < r[-2] for r in got)
+    assert sum(1 for r in got if (r[-4], r[-2]) == (1, 2)) == 2
+
+
+def test_join_pair_ends_matches_python_model(spark):
+    from blurrily_spark.operators.pairs import join_pair_ends
+
+    # a duplicated pair, an end missing from the table, a NULL end
+    pairs = [(1, 2, 0.5), (1, 2, 0.5), (2, 3, 0.25), (1, 9, 1.0), (None, 1, 1.0)]
+    table = [(1, "a", 10), (2, "b", 20), (3, "c", 30), (None, "n", 0)]
+    out = join_pair_ends(
+        spark.createDataFrame(pairs, "id_a long, id_b long, s double"),
+        spark.createDataFrame(table, "id long, p string, q int"),
+        "id",
+        ["p", "q"],
+    )
+    assert sorted(out.columns) == sorted(["id_a", "id_b", "s", "p_a", "q_a", "p_b", "q_b"])
+    by_id = {r[0]: r[1:] for r in table if r[0] is not None}
+    exp = sorted(
+        (a, b, s, *by_id[a], *by_id[b])
+        for a, b, s in pairs
+        if a in by_id and b in by_id
+    )
+    got = sorted(
+        tuple(r[c] for c in ("id_a", "id_b", "s", "p_a", "q_a", "p_b", "q_b"))
+        for r in out.collect()
+    )
+    assert got == exp
+    assert got.count((1, 2, 0.5, "a", 10, "b", 20)) == 2

@@ -158,30 +158,6 @@ def test_pipeline_two_phase_blocking_f1(spark, tmp_path):
     assert f1 >= 0.99, f"pairwise F1 {f1:.4f} < 0.99 with capped blocking"
 
 
-def test_distributed_pairwise_f1_matches_itertools(spark):
-    """quality.pairwise_f1 (join-based) == the itertools oracle."""
-    import random
-
-    from blurrily_spark.quality import pairwise_f1 as dist_f1
-
-    rng = random.Random(5)
-    ids = list(range(200))
-    pred = {i: rng.randrange(12) for i in ids}
-    truth = {i: (rng.randrange(10), 0) for i in ids}
-
-    expected = pairwise_f1(pred, {k: v for k, v in truth.items()})
-    pdf = spark.createDataFrame([(i, pred[i]) for i in ids], "ref long, entity_id long")
-    tdf = spark.createDataFrame(
-        [(i, truth[i][0] * 1000 + truth[i][1]) for i in ids],
-        "ref long, entity_true long",
-    )
-    # recompute the oracle against the same combined-key truth
-    truth_combined = {i: truth[i][0] * 1000 + truth[i][1] for i in ids}
-    expected = pairwise_f1(pred, {k: (v,) for k, v in truth_combined.items()})
-    got = dist_f1(pdf, tdf)
-    assert abs(got["f1"] - expected) < 1e-12
-
-
 def test_input_identity_tracks_file_contents(spark, tmp_path):
     """Round-2 ADVICE: rewriting the same input files in place must change
     the stage-cache fingerprint -- identity folds (path, size, mtime), not

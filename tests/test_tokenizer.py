@@ -189,6 +189,7 @@ def test_with_normalized_is_one_lazy_jvm_projection(spark, tmp_path, kind):
     """S1 is one JVM expression: for file-backed, computed and streaming
     mixed-script inputs the plan has no Python eval node and no union,
     construction launches no job, and streaming input stays streaming."""
+    from blurrily_spark.config import spread_small_input
     from blurrily_spark.functions.tokenizer import with_normalized
     from blurrily_spark.operators.dedup import exact_duplicates
     from blurrily_spark.plans.pipeline import build_turns
@@ -209,7 +210,7 @@ def test_with_normalized_is_one_lazy_jvm_projection(spark, tmp_path, kind):
     try:
         built = [
             with_normalized(df, "text", "norm"),
-            with_normalized(df, "text", "norm", spread=True),
+            with_normalized(spread_small_input(df), "text", "norm"),
             build_turns(df),
             exact_duplicates(df, id_col="turn_idx", text_col="text"),
         ]
