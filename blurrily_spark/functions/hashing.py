@@ -63,6 +63,25 @@ def chunk_bounds(n_chunks: int, total_bits: int) -> list[tuple[int, int]]:
     return [(bounds[i], bounds[i + 1]) for i in range(n_chunks)]
 
 
+def hamming_chunks(sketch: Column, max_hamming: int, n_bits: int) -> Column:
+    """``array<struct<chunk, ckey>>``: the ``max_hamming + 1`` disjoint
+    :func:`chunk_bounds` chunks of an ``n_bits``-bit BIGINT sketch, each
+    with its index. ``F.inline`` it into one row per chunk and self-join on
+    ``(chunk, ckey)``: a pair within Hamming distance ``max_hamming``
+    shares at least one row."""
+    if not 0 <= max_hamming < n_bits:
+        raise ValueError(f"max_hamming must be in [0, {n_bits}), got {max_hamming}")
+    return F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("chunk"),
+                F.shiftright(sketch, lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1)).alias("ckey"),
+            )
+            for c, (lo, hi) in enumerate(chunk_bounds(max_hamming + 1, n_bits))
+        ]
+    )
+
+
 def poly_hash_sql(expr: str, base: int = POLY_BASE_A) -> str:
     """The DuckDB twin of :func:`poly_hash` over SQL expression ``expr``."""
     return (

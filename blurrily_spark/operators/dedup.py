@@ -32,7 +32,7 @@ from blurrily_spark.functions.hashing import (
     MERSENNE,
     POLY_BASE_A,
     POLY_BASE_B,
-    chunk_bounds,
+    hamming_chunks,
     poly_hash,
 )
 from blurrily_spark.functions.tokenizer import with_normalized
@@ -220,7 +220,7 @@ def banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame
 
     The band key is a 64-bit hash of the band's signature slice -- cheap to
     shuffle; joins must re-compare the actual slices afterwards (see
-    :func:`lsh_pairs_between`).
+    :func:`_banded_candidates`).
     """
     if bands < 1 or num_hashes % bands:
         raise ValueError(f"bands must divide num_hashes={num_hashes}, got bands={bands}")
@@ -248,31 +248,18 @@ def banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame
     ).select("id", "sig", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
 
 
-def _banded_candidates(
-    left_banded: DataFrame,
-    right_banded: DataFrame,
-    num_hashes: int,
-    bands: int,
-    left_id: str = "id_a",
-    right_id: str = "id_b",
-) -> DataFrame:
-    """Raw oriented band-collision candidates between two banded signature
-    sets: ``(left_id, right_id, est_jaccard)``, one row per matching band
-    occurrence (callers dedup or aggregate). The join is an equi-join on
-    (band, bhash); the matched band's actual values are re-compared after
-    the join, so a 64-bit band-hash collision can never fabricate a
-    candidate (exact "some band equal" semantics, which is what the
-    oracle checks). est_jaccard is computed here, BEFORE any downstream
-    dedup, so dedup shuffles carry one double instead of two full
-    signature arrays per candidate row.
-    """
+def _banded_candidates(joined: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """The rows of a band-key join that really match: ``joined`` holds the
+    matched ``band`` and the two signatures ``sig_a``/``sig_b``; a row is
+    kept when the two slices of that band are equal, so a 64-bit band-hash
+    collision can never fabricate a candidate (exact "some band equal"
+    semantics, which is what the oracle checks). The join's other columns
+    (the two ids) come out with ``est_jaccard``, the fraction of equal
+    signature positions, in place of ``band``, ``bhash`` and the
+    signatures -- computed BEFORE any downstream dedup, so dedup shuffles
+    carry one double instead of two full signature arrays per row. One row
+    per matching band occurrence: callers dedup or aggregate."""
     rows_per_band = num_hashes // bands
-    a = left_banded.select(
-        F.col("id").alias(left_id), F.col("sig").alias("sig_a"), "band", "bhash"
-    )
-    b = right_banded.select(
-        F.col("id").alias(right_id), F.col("sig").alias("sig_b"), "band", "bhash"
-    )
     band_start = F.col("band") * rows_per_band + 1
     est = F.size(
         F.filter(
@@ -281,40 +268,12 @@ def _banded_candidates(
         )
     ) / F.lit(float(num_hashes))
     return (
-        a.join(b, ["band", "bhash"])
-        .where(
+        joined.where(
             F.slice(F.col("sig_a"), band_start, F.lit(rows_per_band))
             == F.slice(F.col("sig_b"), band_start, F.lit(rows_per_band))
         )
-        .select(left_id, right_id, est.alias("est_jaccard"))
-    )
-
-
-def lsh_pairs_between(
-    left_banded: DataFrame,
-    right_banded: DataFrame,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
-    """Banded-join candidate pairs between two banded signature sets.
-
-    Returns ``(id_a, id_b, est_jaccard)`` with ``id_a < id_b``, one row per
-    unordered pair whose signatures match exactly on some band. For
-    self-dedup pass the same frame twice; for incremental dedup pass
-    (new-batch, all-seen) -- linear in the batch, never a full self-join
-    of history. Assumes one shared id space (pairs are canonicalized
-    ``least/greatest``); for independent id spaces use
-    :func:`near_dedup_against`, which keeps orientation.
-    """
-    return (
-        _banded_candidates(left_banded, right_banded, num_hashes, bands)
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "est_jaccard",
-        )
-        .dropDuplicates(["id_a", "id_b"])
+        .select("*", est.alias("est_jaccard"))
+        .drop("band", "bhash", "sig_a", "sig_b")
     )
 
 
@@ -332,12 +291,17 @@ def minhash_lsh_pairs(
     bands of ``num_hashes/bands`` rows; a pair collides iff some band
     matches exactly. Returns
     ``(id_a, id_b, est_jaccard)`` where est_jaccard is the fraction of
-    matching signature positions. The pair-generation join is an equi-join
-    on (band_idx, band_hash) -- linear in colliding docs, never all-pairs.
+    matching signature positions. The pair-generation join is a half-matrix
+    self-join on (band, bhash) in the pair convention (``id_a < id_b``, so
+    no document meets itself and a NULL id pairs with nothing) -- linear in
+    colliding docs, never all-pairs; a pair sharing several bands is
+    deduplicated after the band re-check.
     """
     sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes, hash_fn=hash_fn)
     banded = banded_signatures(sigs, num_hashes, bands)
-    return lsh_pairs_between(banded, banded, num_hashes, bands)
+    return _banded_candidates(
+        self_join_pairs(banded, ["band", "bhash"], "id", ["sig"]), num_hashes, bands
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 _INTEGRAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
@@ -428,16 +392,20 @@ def near_dedup_against(
 
     num_hashes, bands = 32, 8
 
-    def banded(df: DataFrame) -> DataFrame:
+    def banded(df: DataFrame, name: str, s: str) -> DataFrame:
         _require_integral_id(df, id_col, "near_dedup_against")
         return banded_signatures(
             minhash_signatures(df, id_col, text_col, hash_fn=hash_fn), num_hashes, bands
-        ).withColumn("id", F.col("id").cast("long"))
+        ).select(
+            F.col("id").cast("long").alias(name), F.col("sig").alias(f"sig_{s}"), "band", "bhash"
+        )
 
-    sn, sr = banded(new_df), banded(ref_df)
-    cand = _banded_candidates(
-        sn, sr, num_hashes, bands, left_id="new_id", right_id="ref_id"
-    ).where(F.col("est_jaccard") >= threshold)
+    joined = banded(new_df, "new_id", "a").join(
+        banded(ref_df, "ref_id", "b"), ["band", "bhash"]
+    )
+    cand = _banded_candidates(joined, num_hashes, bands).where(
+        F.col("est_jaccard") >= threshold
+    )
     # min(struct(1-e, ref_id, e)): max est_jaccard, ties to the SMALLEST
     # ref id, via one partial-aggregating min -- no window (a row_number
     # would lose map-side combine) and no id negation (-ref_id raises
@@ -788,22 +756,9 @@ def simhash_near_dups(
     derived from the threshold; a fixed chunking silently misses pairs the
     moment the caller raises the threshold).
     """
-    if not 0 <= max_hamming < SIMHASH_BITS:
-        raise ValueError(f"max_hamming must be in [0, {SIMHASH_BITS})")
-    n_chunks = max_hamming + 1
-    fps = simhash62(df, id_col, text_col, hash_fn)
-    chunk_structs = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright("simhash", lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1)).alias("ckey"),
-        )
-        for c, (lo, hi) in enumerate(chunk_bounds(n_chunks, SIMHASH_BITS))
-    ]
-    chunks = fps.select(
-        "id",
-        "simhash",
-        F.explode(F.array(*chunk_structs)).alias("ck"),
-    ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"))
+    chunks = simhash62(df, id_col, text_col, hash_fn).select(
+        "id", "simhash", F.inline(hamming_chunks(F.col("simhash"), max_hamming, SIMHASH_BITS))
+    )
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int")
     # Hamming filter BEFORE the pair dedup: bit_count is a pure function of
     # the joined row, and SimHash bits of same-language corpora are heavily

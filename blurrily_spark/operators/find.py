@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from blurrily_spark.config import LIMIT_DEFAULT
 from blurrily_spark.functions.tokenizer import add_trigrams, normalize
+from blurrily_spark.operators.pairs import _idf_weights, purge_blocks
 
 
 def find(
@@ -134,20 +135,17 @@ def knn_join(
     caps blocking exactly like pg_trgm's common-key guard (a trigram shared
     by more than max_df records carries no ranking information worth d^2
     work; unlike thresholded pairs the top-k CONTRACT survives capping,
-    only the matches counts of very-common-trigram ties shift). The
+    only the matches counts of very-common-trigram ties shift; the purge is
+    :func:`~blurrily_spark.operators.pairs.purge_blocks`). The
     per-query top-k compiles to WindowGroupLimit (rank-limit pushdown:
     partial top-k map-side before the window shuffle), never a global sort,
     and the window key (query_ref) is uniform by construction.
     """
     p = postings.select("trigram", "ref", "weight")
     if max_df is not None:
-        counts = p.groupBy("trigram").agg(F.count(F.lit(1)).alias("df"))
-        keep = counts.where(F.col("df") <= max_df).select("trigram")
-        # bounded by the 28^3 code space -> broadcast, never a shuffle
-        p = p.join(F.broadcast(keep), "trigram")
-    # no query-side df-cap join: the inner join against the already-capped
-    # postings side p restricts to kept trigrams anyway (an explicit keep
-    # join here added a redundant broadcast join with no semantic effect)
+        p = purge_blocks(p, "trigram", max_df, "max_df")
+    # no query-side purge: the inner join against the already-purged
+    # postings side p restricts to kept trigrams anyway
     q = (query_postings if query_postings is not None else postings).select(
         "trigram", F.col("ref").alias("query_ref")
     )
@@ -198,8 +196,6 @@ def find_idf(
     is map-side combined and driver-small, the gather join and the
     WindowGroupLimit top-k are unchanged.
     """
-    from blurrily_spark.operators.pairs import _idf_weights
-
     p = postings.select("trigram", "ref", "weight")
     pw = p.join(F.broadcast(_idf_weights(p)), "trigram")
 

@@ -36,6 +36,9 @@ Scale design (the part the single-node reference never had to solve):
   :func:`self_join_pairs` builds such a set from the rows that share a key
   and :func:`join_pair_ends` attaches a per-record table to both ends;
   every blocker and scorer in the package goes through the two.
+* **Block purge.** Every key cap (``max_df``, ``max_block``) goes through
+  :func:`purge_blocks`: an anti-join against the broadcast list of the
+  keys whose block exceeds the cap.
 """
 
 from __future__ import annotations
@@ -98,6 +101,27 @@ def join_pair_ends(
         )
 
     return pairs.join(end("a"), f"{key}_a").join(end("b"), f"{key}_b")
+
+
+def purge_blocks(rows: DataFrame, key: str, cap: int, cap_name: str) -> DataFrame:
+    """``rows`` without the rows whose ``key`` occurs more than ``cap``
+    times: block purging, the pg_trgm-style cost guard of a key-blocked
+    self-join. ``cap_name`` is the caller's keyword, named in the error for
+    a cap below 2 (a cap of 1 leaves no block that pairs anything).
+
+    The hot list is broadcast, whatever the key space: at most
+    ``rows / (cap + 1)`` keys can exceed the cap, so it is the small side of
+    a left-anti join that adds no exchange below the self-join. A NULL key
+    survives the purge and still joins nothing after it."""
+    if cap < 2:
+        raise ValueError(f"{cap_name} must be >= 2, got {cap}")
+    hot = (
+        rows.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > cap)
+        .select(key)
+    )
+    return rows.join(F.broadcast(hot), key, "left_anti")
 
 
 def trigram_df_counts(postings: DataFrame) -> DataFrame:
@@ -169,12 +193,8 @@ def candidate_pairs(
         raise ValueError("keys_only candidate generation cannot apply min_matches")
     carry = [] if keys_only else ["weight"]
     p = postings.select("trigram", "ref", *carry)
-    df = trigram_df_counts(p)
     if max_df is not None:
-        # the cap drops whole trigrams, so the kept ones keep their df
-        df = df.where(F.col("df") <= max_df)
-        # keep is bounded by the 28^3 key space -> broadcast, never a shuffle
-        p = p.join(F.broadcast(df.select("trigram")), "trigram")
+        p = purge_blocks(p, "trigram", max_df, "max_df")
 
     if salt_buckets and salt_buckets > 1:
         b = int(salt_buckets)
@@ -182,7 +202,9 @@ def candidate_pairs(
             "candidate_pairs: salted with %d buckets, hot_df %s",
             b, "auto" if hot_df is None else hot_df,
         )
-        flagged = p.join(F.broadcast(_hot_flags(df, b, hot_df)), "trigram")
+        # the purge drops whole trigrams, so the kept ones keep their df
+        flags = _hot_flags(trigram_df_counts(p), b, hot_df)
+        flagged = p.join(F.broadcast(flags), "trigram")
         cold, hot = flagged.where(~F.col("_hot")), flagged.where(F.col("_hot"))
         hot_l, hot_r = _pair_ends(hot, ["trigram"], "ref", carry)
         hot_l = hot_l.withColumn("salt", F.pmod(F.xxhash64("ref_a"), F.lit(b)))
@@ -324,10 +346,10 @@ def token_blocking_pairs(
     the ``max_df`` purge is load-bearing here, not optional hygiene.
 
     Scale shape: one token-keyed equi-self-join, same class as
-    :func:`candidate_pairs`; the df purge rides one group-by of the keyed
-    projection. Unlike trigram keys the token vocabulary is unbounded, so
-    the purge list is NOT forced to broadcast -- Spark picks the join
-    strategy from its actual size.
+    :func:`candidate_pairs`; the df purge (:func:`purge_blocks`) rides one
+    group-by of the keyed projection. The token vocabulary is unbounded,
+    but the purge broadcasts only the hot tokens, of which there are at
+    most ``rows / (max_df + 1)``.
     """
     from blurrily_spark.functions.tokenizer import with_normalized
 
@@ -341,15 +363,7 @@ def token_blocking_pairs(
         .distinct()
     )
     if max_df is not None:
-        if max_df < 2:
-            raise ValueError(f"max_df must be >= 2, got {max_df}")
-        keep = (
-            toks.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") <= max_df)
-            .select("token")
-        )
-        toks = toks.join(keep, "token")
+        toks = purge_blocks(toks, "token", max_df, "max_df")
     pairs = (
         self_join_pairs(toks, "token", "ref", [])
         .groupBy("ref_a", "ref_b")
@@ -719,8 +733,8 @@ def phonetic_pairs(
     members are dropped from pair generation entirely (a block that large
     carries no discriminating signal; recover its true matches from the
     other blocking passes, exactly the two-phase argument in
-    plans/pipeline.py). The count rides one group-by of the keyed
-    projection -- no second scan of ``df``.
+    plans/pipeline.py). The purge (:func:`purge_blocks`) rides one
+    group-by of the keyed projection -- no second scan of ``df``.
     """
     from blurrily_spark.functions.phonetic import phonetic_key
 
@@ -729,10 +743,5 @@ def phonetic_pairs(
         phonetic_key(F.col(name_col)).alias("pkey"),
     ).where(F.col("pkey").isNotNull())
     if max_block is not None:
-        if max_block < 2:
-            raise ValueError(f"max_block must be >= 2, got {max_block}")
-        sizes = keyed.groupBy("pkey").agg(F.count(F.lit(1)).alias("_n"))
-        keyed = keyed.join(
-            sizes.where(F.col("_n") <= max_block).select("pkey"), "pkey"
-        )
+        keyed = purge_blocks(keyed, "pkey", max_block, "max_block")
     return self_join_pairs(keyed, "pkey", "ref", []).select("ref_a", "ref_b", "pkey")

@@ -443,7 +443,7 @@ def rp_lsh_near_dup_pairs(
     ``dim`` is the vector length; the caller knows it, so building the
     plan reads no row.
     """
-    from blurrily_spark.functions.hashing import chunk_bounds
+    from blurrily_spark.functions.hashing import hamming_chunks
 
     planes = random_hyperplanes(n_bits, dim, seed)
     sigs = spread_small_input(emb).select(
@@ -452,18 +452,8 @@ def rp_lsh_near_dup_pairs(
         l2_norm(F.col(vec_col)).alias("_n"),
         rp_signature(vec_col, planes).alias("sig"),
     )
-    chunk_structs = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright("sig", lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1)).alias("ckey"),
-        )
-        for c, (lo, hi) in enumerate(chunk_bounds(max_hamming + 1, n_bits))
-    ]
     chunks = sigs.select(
-        "id", "_v", "_n", F.explode(F.array(*chunk_structs)).alias("ck")
-    ).select(
-        "id", "_v", "_n",
-        F.col("ck.chunk").alias("chunk"), F.col("ck.ckey").alias("ckey"),
+        "id", "_v", "_n", F.inline(hamming_chunks(F.col("sig"), max_hamming, n_bits))
     )
     # cosine rescore + threshold BEFORE the pair dedup: the cosine is a pure
     # function of the pair (identical on every chunk collision of the same

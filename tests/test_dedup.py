@@ -128,6 +128,40 @@ def test_minhash_lsh_pairs_refuses_bands_that_do_not_divide_num_hashes(spark):
         dedup.minhash_lsh_pairs(_corpus(spark), num_hashes=32, bands=7)
 
 
+def test_minhash_lsh_pairs_follow_the_pair_convention(spark):
+    """Against a Python model over the operator's own signatures: every
+    pair that matches on some band comes out once, ``id_a < id_b``, with
+    the fraction of equal signature positions; identical documents share
+    all 8 bands, and a NULL id pairs with nothing, not even its twin."""
+    import itertools
+
+    rows = [
+        (3, BASE), (1, BASE), (2, BASE),              # identical
+        (4, BASE[: int(len(BASE) * 0.9)]),
+        (5, UNIQUE), (6, UNIQUE),
+        (None, BASE), (7, "short unrelated words about nothing at all"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    num_hashes, bands = 32, 8
+    sigs = {r["id"]: r["sig"] for r in dedup.minhash_signatures(df).collect()}
+    rpb = num_hashes // bands
+    expected = {}
+    for a, b in itertools.combinations(sorted(i for i in sigs if i is not None), 2):
+        sa, sb = sigs[a], sigs[b]
+        if any(sa[k * rpb:(k + 1) * rpb] == sb[k * rpb:(k + 1) * rpb] for k in range(bands)):
+            expected[(a, b)] = sum(x == y for x, y in zip(sa, sb)) / num_hashes
+    got = [(r["id_a"], r["id_b"], r["est_jaccard"]) for r in dedup.minhash_lsh_pairs(df).collect()]
+    assert len({(a, b) for a, b, _ in got}) == len(got)  # once per pair
+    assert all(a is not None and b is not None and a < b for a, b, _ in got)
+    assert {(a, b): e for a, b, e in got} == expected
+    assert {(1, 2), (1, 3), (2, 3), (5, 6)} <= expected.keys()
+
+
+def test_simhash_near_dups_refuses_max_hamming_outside_the_fingerprint(spark):
+    with pytest.raises(ValueError, match=r"max_hamming must be in \[0, 62\), got 62"):
+        dedup.simhash_near_dups(_corpus(spark), max_hamming=62)
+
+
 def test_near_dedup_rejects_string_ids(spark):
     df = spark.createDataFrame([("a", BASE)], "doc_id string, text string")
     import pytest

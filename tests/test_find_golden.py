@@ -8,6 +8,7 @@ and rank order.
 
 from __future__ import annotations
 
+import pytest
 from conftest import put_rows
 
 from blurrily_spark.operators.find import (
@@ -266,6 +267,13 @@ def test_knn_join_max_df_caps_blocking(spark):
     assert capped == []  # df=3 for every trigram -> all capped away
     uncapped = _knn_rows(knn_join(p, k=1))
     assert [(q, ref) for q, ref, *_ in uncapped] == [(1, 2), (2, 1), (3, 1)]
+
+
+def test_knn_join_refuses_max_df_below_two(spark):
+    # max_df=1 would purge every shared trigram and silently return nothing
+    p = _postings(spark, [("london", 1), ("london", 2)])
+    with pytest.raises(ValueError, match="max_df must be >= 2, got 1"):
+        knn_join(p, k=1, max_df=1)
 
 
 def test_knn_join_plan_rank_limit_pushdown(spark):

@@ -128,6 +128,14 @@ def test_max_df_drops_hot_trigrams(spark):
         assert r["matches"] <= plain[(r["ref_a"], r["ref_b"])]
 
 
+@pytest.mark.parametrize("max_df", [1, 0])
+def test_max_df_below_two_is_refused(spark, max_df):
+    # a cap of 1 drops every trigram a pair could share: no pair at all
+    postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
+    with pytest.raises(ValueError, match=f"max_df must be >= 2, got {max_df}"):
+        candidate_pairs(postings, max_df=max_df)
+
+
 def test_jaccard(spark):
     pairs, postings = _spark_pairs(spark)
     got = {

@@ -17,7 +17,9 @@ or degrades a join strategy fails CI instead of shipping:
 * ``global_sort_ranks`` reads its one range exchange twice, the second
   time as a ``ReusedExchange``;
 * the linkage tail is survivor-sized: one rebalance exchange below the
-  Jaro-Winkler eval node, and an entities stage without an aggregate.
+  Jaro-Winkler eval node, and an entities stage without an aggregate;
+* each capped blocker purges its hot keys with a broadcast anti-join and
+  no shuffle exchange outside the broadcast side.
 """
 
 from __future__ import annotations
@@ -305,3 +307,78 @@ def test_linkage_tail_is_survivor_sized(spark, tmp_path, monkeypatch):
     assert m["edges"]["partitions"]["n_files"] == 1
     assert "Aggregate" not in plans["entities"], plans["entities"]
     assert m["entities"]["rows"] == m["turns"]["rows"]
+
+
+def _purge_cases():
+    from blurrily_spark.operators import pairs
+    from blurrily_spark.operators.find import knn_join
+
+    def postings(spark):
+        return spark.sql(
+            "SELECT * FROM VALUES (1, 1L, 0), (1, 2L, 0), (1, 3L, 0), (2, 1L, 0),"
+            " (2, 2L, 0) AS t(trigram, ref, weight)"
+        )
+
+    def docs(spark):
+        return spark.sql(
+            "SELECT * FROM VALUES (1L, 'smith a b'), (2L, 'smyth a b'), (3L, 'a q')"
+            " AS t(doc_id, text)"
+        )
+
+    return {
+        "candidate_pairs": lambda s, cap: pairs.candidate_pairs(postings(s), max_df=cap),
+        "knn_join": lambda s, cap: knn_join(postings(s), k=3, max_df=cap),
+        "token_blocking_pairs": lambda s, cap: pairs.token_blocking_pairs(
+            docs(s), max_df=cap
+        ),
+        "phonetic_pairs": lambda s, cap: pairs.phonetic_pairs(
+            docs(s), "text", id_col="doc_id", max_block=cap
+        ),
+    }
+
+
+def _walk(node, under_broadcast=False):
+    """(node, under a BroadcastExchange?) over a physical plan tree."""
+    yield node, under_broadcast
+    under_broadcast = under_broadcast or node.nodeName() == "BroadcastExchange"
+    children = node.children()
+    for i in range(children.size()):
+        yield from _walk(children.apply(i), under_broadcast)
+
+
+@pytest.mark.parametrize("name", sorted(_purge_cases()))
+def test_block_purge_is_a_broadcast_anti_join(spark, name):
+    """Every key cap purges through pairs.purge_blocks: a BroadcastHashJoin
+    LeftAnti against the hot keys, and the shuffle exchanges outside the
+    broadcast side are those of the uncapped plan. Planned with AQE and
+    size-based broadcasts off, so only the operator's own hint broadcasts."""
+    saved = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        build = _purge_cases()[name]
+        plans = {
+            cap: list(_walk(build(spark, cap)._jdf.queryExecution().executedPlan()))
+            for cap in (None, 2)
+        }
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    def shuffles(nodes):
+        return sorted(
+            n.nodeName()
+            for n, under in nodes
+            if not under and n.nodeName() in ("Exchange", "ReusedExchange")
+        )
+
+    joins = [n for n, _ in plans[2] if "Join" in n.nodeName()]
+    anti = [n for n in joins if n.joinType().toString() == "LeftAnti"]
+    assert anti and all(n.nodeName() == "BroadcastHashJoin" for n in anti), [
+        (n.nodeName(), n.joinType().toString()) for n in joins
+    ]
+    assert not [n for n, _ in plans[None] if n.nodeName() == "BroadcastExchange"]
+    assert shuffles(plans[2]) == shuffles(plans[None])

@@ -203,6 +203,13 @@ def test_rp_lsh_refuses_signatures_past_62_bits(spark):
         similarity.rp_lsh_near_dup_pairs(_sem_df(spark), dim=4, n_bits=63)
 
 
+@pytest.mark.parametrize("max_hamming", [-1, 32])
+def test_rp_lsh_refuses_max_hamming_outside_the_signature(spark, max_hamming):
+    # the error names the caller's keyword and the signature's bit range
+    with pytest.raises(ValueError, match=rf"max_hamming must be in \[0, 32\), got {max_hamming}"):
+        similarity.rp_lsh_near_dup_pairs(_sem_df(spark), dim=4, max_hamming=max_hamming)
+
+
 def test_semantic_dedup_refuses_non_integral_ids(spark):
     """Ids 1.2 and 1.7 would both be cast to keeper id 1 and merged; the
     operator refuses them as near_dedup does."""
