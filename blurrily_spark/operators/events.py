@@ -23,10 +23,6 @@ Scale design:
 * **Deterministic total order.** Events are ordered by ``(ts, id)`` within
   a user, so ties on timestamp cannot flip session boundaries between
   runs or engines.
-* **Streaming twin.** The same rule in Structured Streaming is
-  ``applyInPandasWithState`` with a per-user open-session row and an event-
-  time watermark evicting idle state; this batch op is the backfill /
-  reprocessing face and the correctness oracle for that stateful form.
 """
 
 from __future__ import annotations

@@ -46,14 +46,12 @@ def find(
     query_text_col: str = "needle",
     query_id_col: str = "query_id",
     limit: int | None = None,
-    limit_col: str | None = None,
 ) -> DataFrame:
     """Batch FIND: one ranked result set per query row.
 
     Returns ``(query_id, ref, matches, weight, rank)`` with at most
-    ``limit`` rows per query, ordered by (matches DESC, weight ASC,
-    ref ASC). ``limit_col`` (per-query limit) takes precedence over the
-    scalar ``limit``; both default to LIMIT_DEFAULT=10.
+    ``limit`` rows per query (default LIMIT_DEFAULT=10), ordered by
+    (matches DESC, weight ASC, ref ASC).
     """
     # normalize in its own projection: add_trigrams reads it twice (the
     # padded text and its length), and Catalyst does not de-duplicate
@@ -62,47 +60,22 @@ def find(
     q = queries.select(
         F.col(query_id_col).cast("long").alias("query_id"),
         normalize(F.col(query_text_col)).alias("_norm"),
-        *(
-            [
-                # coalesce: a NULL per-query limit means "missing" and falls
-                # back to the default (a bare when().otherwise() would
-                # propagate NULL and `rank <= NULL` drops every row).
-                F.coalesce(
-                    F.when(F.col(limit_col).cast("int") <= 0, F.lit(LIMIT_DEFAULT))
-                    .otherwise(F.col(limit_col).cast("int")),
-                    F.lit(LIMIT_DEFAULT),
-                ).alias("_limit")
-            ]
-            if limit_col
-            else []
-        ),
     )
-    q = add_trigrams(q, "_norm", "_tg").select(
-        "query_id",
-        F.explode("_tg").alias("trigram"),
-        *(["_limit"] if limit_col else []),
-    )
+    q = add_trigrams(q, "_norm", "_tg").select("query_id", F.explode("_tg").alias("trigram"))
     joined = F.broadcast(q).join(postings, "trigram")
 
-    aggs = [
+    scored = joined.groupBy("query_id", "ref").agg(
         F.count(F.lit(1)).alias("matches"),
         F.min("weight").alias("weight"),  # all postings of a ref share one weight
-    ]
-    if limit_col:
-        aggs.append(F.min("_limit").alias("_limit"))
-    scored = joined.groupBy("query_id", "ref").agg(*aggs)
+    )
 
     win = Window.partitionBy("query_id").orderBy(
         F.col("matches").desc(), F.col("weight").asc(), F.col("ref").asc()
     )
     ranked = scored.withColumn("rank", F.row_number().over(win))
 
-    if limit_col:
-        k = F.col("_limit")
-    else:
-        eff = LIMIT_DEFAULT if limit is None or limit <= 0 else int(limit)
-        k = F.lit(eff)
-    return ranked.where(F.col("rank") <= k).select(
+    k = LIMIT_DEFAULT if limit is None or limit <= 0 else int(limit)
+    return ranked.where(F.col("rank") <= F.lit(k)).select(
         "query_id", "ref", "matches", "weight", "rank"
     )
 

@@ -14,21 +14,12 @@ Scale design (the part the single-node reference never had to solve):
   always fit in a broadcast -- heavy-key decisions are cheap, and they
   stay in the plan instead of passing through the driver.
 * **Skew.** Trigram DF is Zipf-like; a trigram with df=d contributes
-  d*(d-1)/2 pairs. Three levers, composable:
+  d*(d-1)/2 pairs. Two levers, composable:
   - ``max_df``: drop trigrams with df > max_df from *blocking* (the
     pg_trgm-style cost guard; off by default because the reference has no
     cap and capping changes ``matches`` counts).
   - AQE skew-join (enabled in get_spark): splits oversized partitions at
     runtime.
-  - ``salt_buckets``: explicit salted self-join over the HOT keys only --
-    the bounded key space makes the hot flag cheap (one map-side-combined
-    agg to <= 21952 rows, broadcast back onto the postings), so the split
-    is exact: cold trigrams take the plain join, hot trigrams take a
-    salted join (left side split into B salt buckets by ref hash, right
-    side replicated B times), and the union is the same pair multiset.
-    Salting every key (the naive form) replicates the whole right side B
-    times -- at 100 TB the cold 99% of the corpus would pay B x shuffle
-    volume to fix a straggler caused by a handful of keys.
 * **Pair convention.** A pair set names its two records ``<id>_a`` and
   ``<id>_b`` with ``<id>_a < <id>_b``: each unordered pair appears once,
   no record pairs with itself, and a NULL id pairs with nothing. A
@@ -43,34 +34,10 @@ Scale design (the part the single-node reference never had to solve):
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blurrily_spark.config import shuffle_partitions
-
-log = logging.getLogger(__name__)
-
-
-def _pair_ends(
-    rows: DataFrame, keys: list[str], id_col: str, carry: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """The ``_a`` and ``_b`` copies of ``rows`` for a self-join: the keys,
-    then ``id_col`` and each carried column suffixed by the side."""
-
-    def end(s: str) -> DataFrame:
-        return rows.select(
-            *keys,
-            F.col(id_col).alias(f"{id_col}_{s}"),
-            *[F.col(c).alias(f"{c}_{s}") for c in carry],
-        )
-
-    return end("a"), end("b")
-
-
-def _half(joined: DataFrame, id_col: str) -> DataFrame:
-    return joined.where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
 
 
 def self_join_pairs(
@@ -81,8 +48,17 @@ def self_join_pairs(
     for each carried column ``c`` of ``carry``. An empty ``keys`` pairs
     every two rows (a cross join); a NULL key joins nothing."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    a, b = _pair_ends(rows, keys, id_col, carry)
-    return _half(a.join(b, keys) if keys else a.crossJoin(b), id_col)
+
+    def end(s: str) -> DataFrame:
+        return rows.select(
+            *keys,
+            F.col(id_col).alias(f"{id_col}_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    a, b = end("a"), end("b")
+    joined = a.join(b, keys) if keys else a.crossJoin(b)
+    return joined.where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
 
 
 def join_pair_ends(
@@ -129,42 +105,11 @@ def trigram_df_counts(postings: DataFrame) -> DataFrame:
     return postings.groupBy("trigram").agg(F.count(F.lit(1)).alias("df"))
 
 
-def _hot_flags(df: DataFrame, salt_buckets: int, hot_df: int | None) -> DataFrame:
-    """``(trigram, _hot)`` over a ``(trigram, df)`` table, for skew salting,
-    as a plan: no job runs here.
-
-    ``hot_df`` flags ``df > hot_df`` (``hot_df=0`` marks every key hot: the
-    naive salt-everything plan, kept measurable for the skew bench).
-    ``hot_df=None`` derives the threshold from the work model: a trigram
-    with df = d contributes d*(d-1)/2 ~ d^2/2 pairs, so a key deserves
-    salting only when its own pair output exceeds a task's fair share of
-    the total -- ``d > sqrt(sum(df^2) / P)``, floored at ``2 *
-    salt_buckets`` (below that, splitting d rows B ways buys nothing). The
-    one-row threshold is cross-joined onto the <= 28^3-row df table. The
-    sum is taken in double so no df overflows it under ANSI mode; the
-    threshold moves only the layout, never the pairs."""
-    if hot_df is not None:
-        return df.select("trigram", (F.col("df") > F.lit(int(hot_df))).alias("_hot"))
-    spark = df.sparkSession
-    n_part = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
-    thr = df.agg(
-        F.greatest(
-            F.lit(2 * int(salt_buckets)).cast("long"),
-            F.floor(F.sqrt(F.sum(F.col("df").cast("double") ** 2) / F.lit(n_part))),
-        ).alias("_thr")
-    )
-    return df.crossJoin(F.broadcast(thr)).select(
-        "trigram", (F.col("df") > F.col("_thr")).alias("_hot")
-    )
-
-
 def candidate_pairs(
     postings: DataFrame,
     min_matches: int = 1,
     max_df: int | None = None,
-    salt_buckets: int | None = None,
     keys_only: bool = False,
-    hot_df: int | None = None,
 ) -> DataFrame:
     """All candidate pairs sharing >= min_matches trigrams.
 
@@ -179,16 +124,7 @@ def candidate_pairs(
     shuffle (the dominant shuffle of the linkage pipeline) then carries two
     longs per collision instead of two longs plus a count and two weight
     aggregation buffers. Requires ``min_matches == 1`` (phase 1 cannot
-    threshold a count it does not compute).
-
-    ``salt_buckets`` salts ONLY the hot keys (see :func:`_hot_flags`;
-    ``hot_df`` overrides the auto threshold): the flag table is broadcast
-    onto the postings, cold trigrams -- the vast majority at any scale --
-    join plainly with zero replication, hot ones spread over B salted
-    tasks, and the two branches union into the same pair multiset (each
-    posting row lands in exactly one branch, so each (trigram, pair) match
-    is produced exactly once). Each call logs its layout at INFO: salted
-    with its bucket count and threshold (``hot_df`` or auto), or plain."""
+    threshold a count it does not compute)."""
     if keys_only and min_matches > 1:
         raise ValueError("keys_only candidate generation cannot apply min_matches")
     carry = [] if keys_only else ["weight"]
@@ -196,29 +132,7 @@ def candidate_pairs(
     if max_df is not None:
         p = purge_blocks(p, "trigram", max_df, "max_df")
 
-    if salt_buckets and salt_buckets > 1:
-        b = int(salt_buckets)
-        log.info(
-            "candidate_pairs: salted with %d buckets, hot_df %s",
-            b, "auto" if hot_df is None else hot_df,
-        )
-        # the purge drops whole trigrams, so the kept ones keep their df
-        flags = _hot_flags(trigram_df_counts(p), b, hot_df)
-        flagged = p.join(F.broadcast(flags), "trigram")
-        cold, hot = flagged.where(~F.col("_hot")), flagged.where(F.col("_hot"))
-        hot_l, hot_r = _pair_ends(hot, ["trigram"], "ref", carry)
-        hot_l = hot_l.withColumn("salt", F.pmod(F.xxhash64("ref_a"), F.lit(b)))
-        hot_r = hot_r.withColumn(
-            "salt",
-            F.explode(F.sequence(F.lit(0).cast("long"), F.lit(b - 1).cast("long"))),
-        )
-        joined = self_join_pairs(cold, "trigram", "ref", carry).unionByName(
-            _half(hot_l.join(hot_r, ["trigram", "salt"]).drop("salt"), "ref")
-        )
-    else:
-        log.info("candidate_pairs: plain")
-        joined = self_join_pairs(p, "trigram", "ref", carry)
-
+    joined = self_join_pairs(p, "trigram", "ref", carry)
     if keys_only:
         return joined.select("ref_a", "ref_b").dropDuplicates(["ref_a", "ref_b"])
 

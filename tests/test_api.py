@@ -194,13 +194,14 @@ def _batch_find(spark, path: str, queries: list[tuple[str, int]]):
     """operators.find.find over the parquet snapshot at ``path``: one
     [(ref, matches, weight), ...] list per (needle, limit) query."""
     postings = spark.read.parquet(path)
-    q = spark.createDataFrame(
-        [(i, needle, limit) for i, (needle, limit) in enumerate(queries)],
-        "query_id long, needle string, lim int",
-    )
     out = [[] for _ in queries]
-    for r in find(postings, q, limit_col="lim").orderBy("query_id", "rank").collect():
-        out[r["query_id"]].append((r["ref"], r["matches"], r["weight"]))
+    for limit in sorted({limit for _, limit in queries}):
+        q = spark.createDataFrame(
+            [(i, needle) for i, (needle, lim) in enumerate(queries) if lim == limit],
+            "query_id long, needle string",
+        )
+        for r in find(postings, q, limit=limit).orderBy("query_id", "rank").collect():
+            out[r["query_id"]].append((r["ref"], r["matches"], r["weight"]))
     return out
 
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import logging
-import math
 
 import pytest
 from pyspark.sql.conf import RuntimeConfig
@@ -54,18 +53,6 @@ def test_spread_small_input_logs_its_choice(spark, caplog):
         " estimate 80 bytes",
         "spread_small_input: left as is, estimate 80000000000 bytes",
     ]
-
-
-def test_hot_trigrams_falls_back_to_default_parallelism(spark, auto_partitions):
-    from blurrily_spark.operators.pairs import _hot_flags, trigram_df_counts
-
-    rows = [(1, r) for r in range(40)] + [(t, 0) for t in range(2, 12)]
-    postings = spark.createDataFrame(rows, "trigram int, ref long")
-    # df 40 against sqrt((40^2 + 10) / 4) = 20 on local[4]: only key 1 is hot
-    total_sq = 40 * 40 + 10
-    assert 1 < math.isqrt(total_sq // spark.sparkContext.defaultParallelism) < 40
-    flags = _hot_flags(trigram_df_counts(postings), 2, None)
-    assert {r["trigram"]: r["_hot"] for r in flags.collect()} == {t: t == 1 for t in range(1, 12)}
 
 
 def test_connected_components_loop_on_non_integer_partitions(spark, auto_partitions, monkeypatch):

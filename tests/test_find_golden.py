@@ -187,20 +187,6 @@ def test_batch_find_multiple_queries(spark):
     assert 30 not in by_q
 
 
-def test_per_query_limit_col(spark):
-    p = _postings(spark, [("london", r) for r in range(5)])
-    q = spark.createDataFrame(
-        [(1, "london", 2), (2, "london", 0)],
-        "query_id long, needle string, lim int",
-    )
-    res = find(p, q, limit_col="lim")
-    counts = {r["query_id"]: r["n"] for r in res.groupBy("query_id").agg(
-        __import__("pyspark.sql.functions", fromlist=["count"]).count("*").alias("n")
-    ).collect()}
-    assert counts[1] == 2
-    assert counts[2] == 5  # limit 0 -> default 10, capped by 5 stored refs
-
-
 # ---------------------------------------------------------------------------
 # knn_join: per-record top-k batch FIND (self-similarity join)
 # ---------------------------------------------------------------------------

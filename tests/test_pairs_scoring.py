@@ -46,72 +46,6 @@ def test_pair_matches_equal_python_model(spark):
     assert got == exp
 
 
-def test_pair_matches_salted_identical(spark):
-    # salting must not change results, only task layout. hot_df=1 splits
-    # this corpus into BOTH branches (shared trigrams salted, unique ones
-    # plain-joined); hot_df=0 forces the all-hot salted branch; the auto
-    # threshold on a tiny skew-free corpus finds nothing hot and
-    # degenerates to the plain join. All three must match.
-    plain = sorted(map(tuple, _spark_pairs(spark)[0].collect()))
-    for kw in (dict(hot_df=1), dict(hot_df=0), dict()):
-        salted, _ = _spark_pairs(spark, salt_buckets=4, **kw)
-        assert sorted(map(tuple, salted.collect())) == plain, kw
-
-
-def test_salted_keys_only_identical(spark):
-    plain = sorted(map(tuple, _spark_pairs(spark, keys_only=True)[0].collect()))
-    for kw in (dict(hot_df=1), dict(hot_df=0), dict()):
-        salted, _ = _spark_pairs(spark, keys_only=True, salt_buckets=4, **kw)
-        assert sorted(map(tuple, salted.collect())) == plain, kw
-
-
-def _hot_set(flags) -> set:
-    return {r["trigram"] for r in flags.where("_hot").collect()}
-
-
-def test_candidate_pairs_logs_its_layout(spark, caplog):
-    """Each call logs its layout -- plain, or salted with its bucket count
-    and threshold -- while building the plan, which launches no job."""
-    import logging
-
-    from blurrily_spark.operators import pairs
-
-    caplog.set_level(logging.INFO, logger=pairs.__name__)
-    postings = spark.createDataFrame(
-        [(1, 1, 5), (1, 2, 5), (2, 2, 5)], "trigram int, ref long, weight int"
-    )
-    sc = spark.sparkContext
-    sc.setJobGroup("pairs-log", "construction only")
-    try:
-        candidate_pairs(postings)
-        candidate_pairs(postings, salt_buckets=8)
-        candidate_pairs(postings, salt_buckets=4, hot_df=3)
-        assert list(sc.statusTracker().getJobIdsForGroup("pairs-log")) == []
-    finally:
-        sc.setJobGroup(None, None)
-    assert [r.getMessage() for r in caplog.records if r.name == pairs.__name__] == [
-        "candidate_pairs: plain",
-        "candidate_pairs: salted with 8 buckets, hot_df auto",
-        "candidate_pairs: salted with 4 buckets, hot_df 3",
-    ]
-
-
-def test_hot_trigrams_threshold(spark):
-    from blurrily_spark.operators.pairs import _hot_flags, trigram_df_counts
-
-    postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
-    counts = trigram_df_counts(postings)
-    df = {r["trigram"]: r["df"] for r in counts.collect()}
-    # explicit threshold: exactly the trigrams with df > 1; every key flagged
-    flags = _hot_flags(counts, salt_buckets=4, hot_df=1)
-    assert {r["trigram"] for r in flags.collect()} == set(df)
-    assert _hot_set(flags) == {t for t, d in df.items() if d > 1}
-    assert _hot_set(_hot_flags(counts, salt_buckets=4, hot_df=0)) == set(df)
-    # auto threshold never goes below 2 * salt_buckets (splitting tiny keys
-    # buys nothing) -- on this corpus nothing clears it
-    assert _hot_set(_hot_flags(counts, salt_buckets=4, hot_df=None)) == set()
-
-
 def test_min_matches_filter(spark):
     pairs, _ = _spark_pairs(spark, min_matches=4)
     exp = {k for k, v in expected_pairs(HAYSTACK, min_matches=4).items()}

@@ -204,56 +204,16 @@ def _word(rng):
     return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(5))
 
 
-def _toy_transcripts(spark, n_docs, hot_docs=0, seed=7):
-    """One-turn conversations of random 5-letter words; the first
-    ``hot_docs`` docs additionally carry the shared 2-letter word "zq"
-    (surrounded by varying words), whose two interior trigrams " zq"/"zq "
-    get df = hot_docs while every other trigram stays rare."""
+def _toy_transcripts(spark, n_docs, seed=7):
+    """One-turn conversations of eight random 5-letter words."""
     import random
 
     rng = random.Random(seed)
     rows = []
     for i in range(n_docs):
         words = [_word(rng) for _ in range(8)]
-        if i < hot_docs:
-            words.insert(4, "zq")
         rows.append((f"c{i:05d}", 0, " ".join(words)))
     return spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-
-
-def test_hot_key_salting_on_skewed_postings(spark):
-    """Hot-key salting is a df-driven skew decision: on postings with a
-    dominant trigram the salted plan is a UNION of the plain cold join and
-    the salted hot join, on uniform postings nothing is hot, and salting
-    never changes the pair multiset."""
-    import re
-
-    from blurrily_spark.operators.pairs import (
-        _hot_flags,
-        candidate_pairs,
-        trigram_df_counts,
-    )
-    from blurrily_spark.plans.pipeline import turns_to_postings
-
-    def hot(postings):
-        flags = _hot_flags(trigram_df_counts(postings), 8, None)
-        return [r["trigram"] for r in flags.where("_hot").collect()]
-
-    uniform = turns_to_postings(build_turns(_toy_transcripts(spark, 120)))
-    assert hot(uniform) == []
-
-    # 200/500 docs share the word: its two trigrams reach df=205 against a
-    # fair-share threshold of ~155 (the 100-doc variant's df=105 correctly
-    # stays UNDER the ~127 threshold -- two keys at 105 are not a straggler)
-    postings = turns_to_postings(build_turns(_toy_transcripts(spark, 500, hot_docs=200)))
-    assert 1 <= len(hot(postings)) <= 8
-    salted = candidate_pairs(postings, salt_buckets=8)
-    salted_plan = salted._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" in salted_plan and re.search(r"\bsalt#", salted_plan)
-    plain = candidate_pairs(postings)
-    plain_plan = plain._jdf.queryExecution().optimizedPlan().toString()
-    assert not re.search(r"\bsalt#", plain_plan)
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
 
 
 def test_knn_candidates_rescored_keep_f1(spark):

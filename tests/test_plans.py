@@ -11,7 +11,7 @@ or degrades a join strategy fails CI instead of shipping:
   pushdown), its gather join broadcasts the needle side;
 * brute-force cosine scoring broadcasts the query batch -- never a
   CartesianProduct;
-* building the span, meta-blocking, LM-scoring, RP-LSH, salted-pairs and
+* building the span, meta-blocking, LM-scoring, RP-LSH, candidate-pairs and
   sorted-neighborhood operators launches no Spark job and keeps a
   streaming input streaming;
 * ``global_sort_ranks`` reads its one range exchange twice, the second
@@ -205,11 +205,11 @@ def _lazy_operator_cases():
         "rp_lsh_near_dup_pairs": lambda d, e: similarity.rp_lsh_near_dup_pairs(
             vectors(d), dim=2
         ),
-        "candidate_pairs_salted_hot_df": lambda d, e: pairs.candidate_pairs(
-            postings(d), salt_buckets=8, hot_df=1
+        "candidate_pairs_capped": lambda d, e: pairs.candidate_pairs(
+            postings(d), max_df=2, keys_only=True
         ),
-        "candidate_pairs_salted_auto": lambda d, e: pairs.candidate_pairs(
-            postings(d), salt_buckets=8
+        "candidate_pairs_scored": lambda d, e: pairs.candidate_pairs(
+            postings(d), max_df=2
         ),
         "sorted_neighborhood_pairs": lambda d, e: pairs.sorted_neighborhood_pairs(
             d, "text", id_col="doc_id", window=3
