@@ -177,7 +177,7 @@ def q_find(spark, sf_dir):
 def q_find_idf(spark, sf_dir):
     # rarity-weighted FIND: same gather join, ranked by summed trigram idf
     # (engine-exact int64 RSJ weights) with F5's weight/ref tie-break
-    return find_idf(_postings(spark, sf_dir), _queries_df(spark), k=10)
+    return find_idf(_postings(spark, sf_dir), _queries_df(spark))
 
 
 def q_knn_join(spark, sf_dir):
@@ -239,19 +239,19 @@ def q_jaccard_join_exact(spark, sf_dir):
     # family): it equals the brute all-pairs relation, so it serves both
     # ngram_jaccard_pairs and jaccard_join_exact under one oracle SQL
     return dedup.jaccard_join_exact(
-        _docs_with_dups(spark, sf_dir), w=3, threshold=NGRAM_THRESHOLD
+        _docs_with_dups(spark, sf_dir), threshold=NGRAM_THRESHOLD
     ).select("id_a", "id_b", "inter", F.round("jaccard", 6).alias("jaccard"))
 
 
 def q_minhash_sigs(spark, sf_dir):
-    sigs = dedup.minhash_signatures(_docs_with_dups(spark, sf_dir), w=3, num_hashes=32)
+    sigs = dedup.minhash_signatures(_docs_with_dups(spark, sf_dir))
     return sigs.select("id", F.posexplode("sig").alias("pos", "sig_v")).select(
         "id", (F.col("pos") + 1).cast("int").alias("j"), "sig_v"
     )
 
 
 def q_minhash_lsh(spark, sf_dir):
-    out = dedup.minhash_lsh_pairs(_docs_with_dups(spark, sf_dir), num_hashes=32, bands=8)
+    out = dedup.minhash_lsh_pairs(_docs_with_dups(spark, sf_dir))
     return out.select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
 
 
@@ -317,11 +317,11 @@ def q_ngram_contamination(spark, sf_dir):
 
 
 def q_frequent_ngrams(spark, sf_dir):
-    return corpus.frequent_ngrams(_docs(spark, sf_dir), n=3, k=50, min_df=2)
+    return corpus.frequent_ngrams(_docs(spark, sf_dir))
 
 
 def q_tfidf_top_terms(spark, sf_dir):
-    return corpus.tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    return corpus.tfidf_top_terms(_docs(spark, sf_dir))
 
 
 def q_phonetic_keys(spark, sf_dir):
@@ -348,7 +348,7 @@ def q_phonetic_pairs(spark, sf_dir):
     named = d.select(
         "doc_id", F.element_at(F.split(F.col("_norm"), " "), 1).alias("name")
     )
-    return phonetic_pairs(named, "name", id_col="doc_id", max_block=50)
+    return phonetic_pairs(named, "name", id_col="doc_id")
 
 
 def q_token_sort_score(spark, sf_dir):
@@ -463,7 +463,7 @@ def q_cosine_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     corpus = emb.where(F.col("vec_id") >= 8)
-    out = similarity.cosine_topk(corpus, q, k=5)
+    out = similarity.cosine_topk(corpus, q)
     return out.select("query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank")
 
 
@@ -484,7 +484,7 @@ def q_ann_ivf(spark, sf_dir):
     corpus, q = _emb_split(spark, sf_dir)
     corpus = corpus.cache()
     cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
-    out = similarity.ivf_topk(corpus, q, cents, k=5, nprobe=ANN_NPROBE)
+    out = similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE)
     return out.select("query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank")
 
 
@@ -495,7 +495,7 @@ def q_ann_ivf_fixed(spark, sf_dir):
     # exactness proof of the IVF machinery itself.
     corpus, q = _emb_split(spark, sf_dir)
     cents = similarity.take_centroids(corpus, IVF_FIXED_K)
-    out = similarity.ivf_topk(corpus, q, cents, k=5, nprobe=IVF_FIXED_NPROBE)
+    out = similarity.ivf_topk(corpus, q, cents, nprobe=IVF_FIXED_NPROBE)
     return out.select("query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank")
 
 
@@ -513,7 +513,7 @@ def q_ann_ivf_invariant(spark, sf_dir):
     corpus, q = _emb_split(spark, sf_dir)
     corpus = corpus.cache()
     cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
-    ivf = similarity.ivf_topk(corpus, q, cents, k=5, nprobe=ANN_NPROBE).select(
+    ivf = similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE).select(
         "query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank"
     )
 
@@ -684,7 +684,7 @@ def q_fs_estimate_mu(spark, sf_dir):
         .cast("int")
         .alias("is_match"),
     )
-    out = estimate_m_u(lab, ["jacc_level", "matches_level"], smoothing=0.5, n_levels=3)
+    out = estimate_m_u(lab, ["jacc_level", "matches_level"])
     return out.select(
         "field", "level", F.round("m", 6).alias("m"), F.round("u", 6).alias("u")
     )
@@ -711,7 +711,7 @@ def q_meta_blocking(spark, sf_dir):
     edges = candidate_pairs(_postings(spark, sf_dir, subset=True)).select(
         "ref_a", "ref_b", "matches"
     )
-    return meta_blocking_prune(edges, weight_col="matches", scheme="wnp")
+    return meta_blocking_prune(edges, weight_col="matches")
 
 
 def q_blocking_metrics(spark, sf_dir):
@@ -734,7 +734,7 @@ def q_block_filtering(spark, sf_dir):
     # crowded blocking keys (keeps the smallest 60% by df) before pairing;
     # returned as the candidate pairs the filtered postings generate so the
     # pruning is visible end-to-end
-    p = block_filtering(_postings(spark, sf_dir, subset=True), ratio=0.6)
+    p = block_filtering(_postings(spark, sf_dir, subset=True))
     return candidate_pairs(p).select("ref_a", "ref_b", "matches")
 
 
@@ -798,7 +798,7 @@ def q_multipass_blocking(spark, sf_dir):
     p = _postings(spark, sf_dir, subset=True)
     return multipass_candidates({
         "trigram": candidate_pairs(p, keys_only=True),
-        "token": token_blocking_pairs(docs, max_df=TOKEN_BLOCK_MAX_DF, min_matches=3),
+        "token": token_blocking_pairs(docs, max_df=TOKEN_BLOCK_MAX_DF),
     })
 
 
@@ -826,9 +826,7 @@ def q_token_blocking(spark, sf_dir):
     # (df > 80 of the 100-doc subset) -- the synthetic corpus has a tiny,
     # hot vocabulary, so the purge threshold sits above the median df to
     # keep the oracle check non-vacuous while still exercising the purge
-    return token_blocking_pairs(
-        _docs_subset(spark, sf_dir), max_df=TOKEN_BLOCK_MAX_DF, min_matches=3
-    )
+    return token_blocking_pairs(_docs_subset(spark, sf_dir), max_df=TOKEN_BLOCK_MAX_DF)
 
 
 def q_incremental_entities(spark, sf_dir):

@@ -253,7 +253,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
     corpus.count()
     bf = {
         (r["query_id"], r["vec_id"])
-        for r in similarity.cosine_topk(corpus, qv, k=5).collect()
+        for r in similarity.cosine_topk(corpus, qv).collect()
     }
     cents = similarity.kmeans_centroids(corpus, k=em.ANN_K, iterations=em.ANN_ITERS)
     got: set = set()
@@ -360,7 +360,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ).cache()
         try:
             edges = _cand_pairs(p, max_df=CAP_DF).select("ref_a", "ref_b", "matches")
-            kept = _mb_prune(edges, scheme="wnp").count()
+            kept = _mb_prune(edges).count()
             extras["meta_blocking_kept"] = kept
         finally:
             p.unpersist()
@@ -424,9 +424,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         # overlay (one <= 28^3-row weight broadcast + sum agg) vs plain FIND
         Query(
             "q_find_idf",
-            plan=lambda: find_idf_op(
-                spark.table(INDEX_TABLE), em._queries_df(spark), k=10
-            ),
+            plan=lambda: find_idf_op(spark.table(INDEX_TABLE), em._queries_df(spark)),
             act=count,
         ),
         Query(
@@ -440,9 +438,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ),
         Query(
             "q_minhash_lsh",
-            plan=lambda: dedup.minhash_lsh_pairs(
-                sketch_corpus, num_hashes=32, bands=8, hash_fn="fast"
-            ),
+            plan=lambda: dedup.minhash_lsh_pairs(sketch_corpus, hash_fn="fast"),
             act=count,
         ),
         Query(
@@ -525,9 +521,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ),
         Query(
             "q_ann_ivf",
-            plan=lambda: similarity.ivf_topk(
-                corpus, qv, cents, k=5, nprobe=em.ANN_NPROBE
-            ),
+            plan=lambda: similarity.ivf_topk(corpus, qv, cents, nprobe=em.ANN_NPROBE),
             act=record_ivf,
         ),
         Query(

@@ -148,23 +148,25 @@ def connected_components(edges: DataFrame) -> DataFrame:
     that same job. Each call logs its path at INFO: the driver path with
     its edge count, or the loop with its round count.
     """
-    canon = _canonical(
-        edges.select(
-            F.col("src").cast("long").alias("src"),
-            F.col("dst").cast("long").alias("dst"),
-        )
+    typed = edges.select(
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
     )
     spark = edges.sparkSession
 
     if CC_DRIVER_MAX_EDGES > 0:
         # Small graph: one collect, cut at one row past the bound, then
         # union-find on the driver -- same (ref, entity_id=component min)
-        # rows as the loop below, without its per-round jobs. The labels go
-        # back as an Arrow table, which Spark turns into a local relation
-        # with no Python-worker task (a list of tuples would run one per
-        # partition through a Python RDD). A graph past the bound falls
-        # through to the loop.
-        rows = canon.limit(CC_DRIVER_MAX_EDGES + 1).collect()
+        # rows as the loop below, without its per-round jobs. Union-find
+        # takes duplicate and reversed edges as they come, so the collect
+        # drops only self-loops (and, as NULL != x is NULL, NULL
+        # endpoints) and pays no dedup shuffle. The labels go back as an
+        # Arrow table, which Spark turns into a local relation with no
+        # Python-worker task (a list of tuples would run one per partition
+        # through a Python RDD). A graph past the bound falls through to
+        # the loop.
+        loops_out = typed.where(F.col("src") != F.col("dst"))
+        rows = loops_out.limit(CC_DRIVER_MAX_EDGES + 1).collect()
         if len(rows) <= CC_DRIVER_MAX_EDGES:
             import pyarrow as pa
 
@@ -177,7 +179,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
             )
 
     obs0 = Observation()
-    e = canon.observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    e = _canonical(typed).observe(obs0, F.count(F.lit(1)).alias("n")).localCheckpoint()
     held_rdd = _checkpoint_rdd(e)
     default_parts = shuffle_partitions(spark) or spark.sparkContext.defaultParallelism
     n_init = int(obs0.get["n"])

@@ -108,21 +108,22 @@ def ngram_contamination(
     )
 
 
+# frequent_ngrams: the top FREQUENT_K word FREQUENT_N-grams found in at
+# least FREQUENT_MIN_DF documents
+FREQUENT_N, FREQUENT_K, FREQUENT_MIN_DF = 3, 50, 2
+
+
 def frequent_ngrams(
-    df: DataFrame,
-    n: int = 3,
-    k: int = 50,
-    min_df: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Corpus-wide boilerplate mining: the top ``k`` word ``n``-grams by
-    document frequency (``n_docs``), with total occurrence counts.
+    """Corpus-wide boilerplate mining: the top 50 word 3-grams by document
+    frequency (``n_docs``), with total occurrence counts.
 
     Returns ``(gram, n_docs, n_occurrences)`` for grams appearing in at
-    least ``min_df`` documents, ordered ``n_docs DESC, n_occurrences
-    DESC, gram ASC`` (a total order -- ties cannot reshuffle between
-    engines or runs) and limited to ``k``.
+    least 2 documents, ordered ``n_docs DESC, n_occurrences DESC, gram
+    ASC`` (a total order -- ties cannot reshuffle between engines or runs)
+    and limited to 50 (:data:`FREQUENT_N`, :data:`FREQUENT_K`,
+    :data:`FREQUENT_MIN_DF`).
 
     Plan: one explode of RAW (non-distinct) grams so occurrence counts
     are true totals, one hash aggregation keyed by gram (map-side
@@ -131,28 +132,29 @@ def frequent_ngrams(
     TakeOrderedAndProject -- each partition keeps only its local top k,
     so no full sort and no single-node sort bottleneck at any scale.
     """
-    grams = _exploded_grams(df, id_col, text_col, n, distinct=False)
+    grams = _exploded_grams(df, id_col, text_col, FREQUENT_N, distinct=False)
     return (
         grams.groupBy("gram")
         .agg(
             F.count_distinct("id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
         )
-        .where(F.col("n_docs") >= min_df)
+        .where(F.col("n_docs") >= FREQUENT_MIN_DF)
         .orderBy(
             F.col("n_docs").desc(), F.col("n_occurrences").desc(), F.col("gram").asc()
         )
-        .limit(k)
+        .limit(FREQUENT_K)
     )
 
 
+TFIDF_K = 3  # terms tfidf_top_terms keeps per document
+
+
 def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Per-document top-``k`` terms by TF-IDF over normalized words.
+    """Per-document top-3 terms (:data:`TFIDF_K`) by TF-IDF over
+    normalized words.
 
     Returns ``(id, rank, term, tf, df_term, tfidf)`` with
     ``tfidf = round(tf * ln(n_docs / df_term), 6)`` and ``rank`` the
@@ -164,7 +166,7 @@ def tfidf_top_terms(
     Plan: one explode -> (doc, term) count aggregation; document
     frequency is a second aggregation of the SAME (doc, term) rows (no
     re-scan of the corpus); the corpus size joins in as a broadcast
-    one-row literal; the per-doc rank is a window whose ``rank <= k``
+    one-row literal; the per-doc rank is a window whose ``rank <= 3``
     filter Spark pushes into WindowGroupLimit (per-partition top-k before
     the full sort).
     """
@@ -190,7 +192,7 @@ def tfidf_top_terms(
     win = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_K)
         .select("id", "rank", "term", "tf", "df_term", "tfidf")
     )
 

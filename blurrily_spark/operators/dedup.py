@@ -39,6 +39,9 @@ from blurrily_spark.functions.tokenizer import with_normalized
 from blurrily_spark.operators.pairs import join_pair_ends, self_join_pairs
 
 SIMHASH_BITS = 62  # 2 x 31-bit portable hashes; fits a positive int64
+SHINGLE_WORDS = 3  # word n-gram of the exact Jaccard join and of MinHash
+MINHASH_HASHES = 32  # signature length
+MINHASH_BANDS = 8  # LSH bands of MINHASH_HASHES // MINHASH_BANDS rows each
 
 
 def exact_duplicates(
@@ -80,11 +83,11 @@ def jaccard_join_exact(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT threshold Jaccard self-join via prefix filtering: every pair
-    with shingle-set Jaccard >= ``threshold``, no misses, no approximation,
+    whose sets of word 3-grams (:data:`SHINGLE_WORDS`) have Jaccard >=
+    ``threshold``, no misses, no approximation,
     without the all-pairs blowup (AllPairs / PPJoin family: Bayardo et
     al., WWW 2007; Xiao et al., WWW 2008).
 
@@ -119,7 +122,7 @@ def jaccard_join_exact(
         with_normalized(spread_small_input(df), text_col, "_norm")
         .select(
             F.col(id_col).alias("id"),
-            F.explode(word_shingles(F.col("_norm"), w)).alias("sh"),
+            F.explode(word_shingles(F.col("_norm"), SHINGLE_WORDS)).alias("sh"),
         )
         .distinct()
     )
@@ -180,26 +183,25 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 3,
-    num_hashes: int = 32,
     hash_fn: str = "portable",
 ) -> DataFrame:
-    """MinHash signatures: (id, sig array<long> of length num_hashes).
+    """MinHash signatures: (id, sig array<long> of length 32,
+    :data:`MINHASH_HASHES`) over word 3-grams (:data:`SHINGLE_WORDS`).
 
     sig_j = min over shingles s of ((a_j * h(s) + b_j) mod p) with
     h(s) in [0, p) and (a_j, b_j) drawn with seed 7. Modular arithmetic
-    keeps every product < 2^62 (ANSI-safe). All JVM-side: one hash per shingle, then ``num_hashes``
-    array_min(transform(...)).
+    keeps every product < 2^62 (ANSI-safe). All JVM-side: one hash per
+    shingle, then one array_min(transform(...)) per signature position.
     """
-    params = _permutation_params(num_hashes)
+    params = _permutation_params(MINHASH_HASHES)
     base = with_normalized(spread_small_input(df), text_col, "_norm").select(
         F.col(id_col).alias("id"),
         F.transform(
-            word_shingles(F.col("_norm"), w),
+            word_shingles(F.col("_norm"), SHINGLE_WORDS),
             lambda s: _shingle_hash(s, hash_fn),
         ).alias("_h"),
     )
-    # One F.expr over a generated SQL string instead of num_hashes * ~8
+    # One F.expr over a generated SQL string instead of MINHASH_HASHES * ~8
     # Column calls: each Column op is a py4j round-trip, and building the
     # 32-permutation array cost ~0.5s of DRIVER time per operator call --
     # paid per bench trial, not per row (guide §1.1: measure where the time
@@ -215,22 +217,21 @@ def minhash_signatures(
     return base.select("id", sig.alias("sig"))
 
 
-def banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, sig) -> one row per band: (id, sig, band, bhash).
+def banded_signatures(sigs: DataFrame) -> DataFrame:
+    """(id, sig) -> one row per band: (id, sig, band, bhash), 8 bands
+    (:data:`MINHASH_BANDS`) of 4 signature positions.
 
     The band key is a 64-bit hash of the band's signature slice -- cheap to
     shuffle; joins must re-compare the actual slices afterwards (see
     :func:`_banded_candidates`).
     """
-    if bands < 1 or num_hashes % bands:
-        raise ValueError(f"bands must divide num_hashes={num_hashes}, got bands={bands}")
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     return sigs.select(
         "id",
         "sig",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(MINHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.xxhash64(
@@ -248,7 +249,7 @@ def banded_signatures(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame
     ).select("id", "sig", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
 
 
-def _banded_candidates(joined: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _banded_candidates(joined: DataFrame) -> DataFrame:
     """The rows of a band-key join that really match: ``joined`` holds the
     matched ``band`` and the two signatures ``sig_a``/``sig_b``; a row is
     kept when the two slices of that band are equal, so a 64-bit band-hash
@@ -259,14 +260,14 @@ def _banded_candidates(joined: DataFrame, num_hashes: int, bands: int) -> DataFr
     signatures -- computed BEFORE any downstream dedup, so dedup shuffles
     carry one double instead of two full signature arrays per row. One row
     per matching band occurrence: callers dedup or aggregate."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = MINHASH_HASHES // MINHASH_BANDS
     band_start = F.col("band") * rows_per_band + 1
     est = F.size(
         F.filter(
             F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
             lambda m: m,
         )
-    ) / F.lit(float(num_hashes))
+    ) / F.lit(float(MINHASH_HASHES))
     return (
         joined.where(
             F.slice(F.col("sig_a"), band_start, F.lit(rows_per_band))
@@ -281,15 +282,13 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """Approximate near-dup candidate pairs via LSH banding (self-dedup).
 
-    :func:`minhash_signatures` over word 3-grams are cut into ``bands``
-    bands of ``num_hashes/bands`` rows; a pair collides iff some band
-    matches exactly. Returns
+    :func:`minhash_signatures` over word 3-grams (32 hashes) are cut into
+    8 bands of 4 rows (:data:`MINHASH_BANDS`); a pair collides iff some
+    band matches exactly. Returns
     ``(id_a, id_b, est_jaccard)`` where est_jaccard is the fraction of
     matching signature positions. The pair-generation join is a half-matrix
     self-join on (band, bhash) in the pair convention (``id_a < id_b``, so
@@ -297,10 +296,9 @@ def minhash_lsh_pairs(
     colliding docs, never all-pairs; a pair sharing several bands is
     deduplicated after the band re-check.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes=num_hashes, hash_fn=hash_fn)
-    banded = banded_signatures(sigs, num_hashes, bands)
+    banded = banded_signatures(minhash_signatures(df, id_col, text_col, hash_fn=hash_fn))
     return _banded_candidates(
-        self_join_pairs(banded, ["band", "bhash"], "id", ["sig"]), num_hashes, bands
+        self_join_pairs(banded, ["band", "bhash"], "id", ["sig"])
     ).dropDuplicates(["id_a", "id_b"])
 
 
@@ -329,7 +327,7 @@ def near_dedup(
 ) -> DataFrame:
     """End-to-end near-duplicate corpus dedup -- the retained-corpus face
     of MinHash LSH: candidate pairs from banded signatures (32 hashes in
-    8 bands: the :func:`minhash_lsh_pairs` defaults), filtered at
+    8 bands, as in :func:`minhash_lsh_pairs`), filtered at
     ``est_jaccard >= threshold``, connected components over the resulting
     dup graph, smallest id per component elected canonical.
 
@@ -389,13 +387,10 @@ def near_dedup_against(
     -- duplicate band hits for one pair need no dedup shuffle, the max
     absorbs them.
     """
-
-    num_hashes, bands = 32, 8
-
     def banded(df: DataFrame, name: str, s: str) -> DataFrame:
         _require_integral_id(df, id_col, "near_dedup_against")
         return banded_signatures(
-            minhash_signatures(df, id_col, text_col, hash_fn=hash_fn), num_hashes, bands
+            minhash_signatures(df, id_col, text_col, hash_fn=hash_fn)
         ).select(
             F.col("id").cast("long").alias(name), F.col("sig").alias(f"sig_{s}"), "band", "bhash"
         )
@@ -403,9 +398,7 @@ def near_dedup_against(
     joined = banded(new_df, "new_id", "a").join(
         banded(ref_df, "ref_id", "b"), ["band", "bhash"]
     )
-    cand = _banded_candidates(joined, num_hashes, bands).where(
-        F.col("est_jaccard") >= threshold
-    )
+    cand = _banded_candidates(joined).where(F.col("est_jaccard") >= threshold)
     # min(struct(1-e, ref_id, e)): max est_jaccard, ties to the SMALLEST
     # ref id, via one partial-aggregating min -- no window (a row_number
     # would lose map-side combine) and no id negation (-ref_id raises
@@ -453,20 +446,11 @@ def _span_occurrences(
     frequency aggregation and a join back; the plan stays lazy.
     """
     d = with_normalized(spread_small_input(df), text_col, "_norm")
-    words = F.split(F.col("_norm"), " ")
-    n = F.size(words)
-    # slice() clamps past the end, so short docs (n < w) fall out of the
-    # same expression as one whole-text window -- no special case
-    wins = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - w, F.lit(0))),
-        lambda i: F.struct(
-            i.cast("int").alias("start"),
-            F.concat_ws(" ", F.slice(words, i + F.lit(1), w)).alias("win"),
-        ),
-    )
+    # a short doc (fewer than w words) is one whole-text window at word 0
     occ = d.select(
-        F.col(id_col).cast("long").alias("id"), F.explode(wins).alias("s")
-    ).select("id", F.col("s.start").alias("start_word"), F.col("s.win").alias("win"))
+        F.col(id_col).cast("long").alias("id"),
+        F.posexplode(word_shingles(F.col("_norm"), w)).alias("start_word", "win"),
+    )
     key = "win"
     if hash_fn == "fast":
         # a column, not a partitionBy expression: each of the two windows

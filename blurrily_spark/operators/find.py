@@ -144,7 +144,6 @@ def find_idf(
     queries: DataFrame,
     query_text_col: str = "needle",
     query_id_col: str = "query_id",
-    k: int = LIMIT_DEFAULT,
 ) -> DataFrame:
     """Rarity-weighted FIND: rank by summed trigram idf instead of raw count.
 
@@ -161,8 +160,9 @@ def find_idf(
     break like F5: weight ASC, then ref ASC.
 
     Returns ``(query_id, ref, matches, idf_score, weight, rank)``, at most
-    ``k`` rows per query. ``matches`` is still reported, so callers can
-    threshold on raw evidence while ranking by rarity.
+    ``LIMIT_DEFAULT`` (10) rows per query, FIND's default limit.
+    ``matches`` is still reported, so callers can threshold on raw
+    evidence while ranking by rarity.
 
     Scale shape: identical to :func:`find` plus one broadcast of the
     <= 28^3-row weight table onto the postings side -- the df aggregation
@@ -191,10 +191,9 @@ def find_idf(
     win = Window.partitionBy("query_id").orderBy(
         F.col("idf_score").desc(), F.col("weight").asc(), F.col("ref").asc()
     )
-    eff = LIMIT_DEFAULT if k is None or k <= 0 else int(k)
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= F.lit(eff))
+        .where(F.col("rank") <= F.lit(LIMIT_DEFAULT))
         .select("query_id", "ref", "matches", "idf_score", "weight", "rank")
     )
 

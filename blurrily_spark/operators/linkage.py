@@ -112,21 +112,23 @@ def fs_score(
     )
 
 
+# estimate_m_u: agreement levels per field and the Laplace pseudo-count
+M_U_LEVELS = 3
+M_U_SMOOTHING = 0.5
+
+
 def estimate_m_u(
     labeled_pairs: DataFrame,
     level_cols: list[str],
     label_col: str = "is_match",
-    smoothing: float = 0.5,
-    n_levels: int | None = None,
 ) -> DataFrame:
     """Estimate per-(field, level) m/u probabilities from labeled pairs.
 
     ``labeled_pairs`` carries one int level column per field plus a 0/1
     ``label_col``. Returns ``(field string, level int, m double, u double)``
-    with add-``smoothing`` (Laplace) regularization over ``n_levels``
-    buckets per field (default: the max observed level + 1 per field), so
-    unseen levels never yield the zero probabilities :class:`FieldModel`
-    rejects.
+    with add-0.5 (Laplace, :data:`M_U_SMOOTHING`) regularization over 3
+    levels per field (:data:`M_U_LEVELS`, levels 0-2), so unseen levels
+    never yield the zero probabilities :class:`FieldModel` rejects.
 
     One pass over the pairs: the level columns ride a single tagged explode
     (corpus scanned once however many fields there are), then one
@@ -137,8 +139,6 @@ def estimate_m_u(
     """
     if not level_cols:
         raise ValueError("estimate_m_u needs at least one level column")
-    if smoothing <= 0:
-        raise ValueError("smoothing must be > 0 (zero mass breaks log weights)")
     tagged = labeled_pairs.select(
         F.col(label_col).cast("int").alias("_y"),
         F.explode(
@@ -158,22 +158,14 @@ def estimate_m_u(
         F.sum("_y").alias("_cm"),
         F.sum(F.lit(1) - F.col("_y")).alias("_cu"),
     )
-    # per-field level universe: observed max + 1 unless pinned by caller
-    if n_levels is None:
-        universe = counts.groupBy("field").agg(
-            (F.max("level") + 1).alias("_k"),
-            F.sum("_cm").alias("_nm"),
-            F.sum("_cu").alias("_nu"),
-        )
-    else:
-        universe = counts.groupBy("field").agg(
-            F.sum("_cm").alias("_nm"), F.sum("_cu").alias("_nu")
-        ).withColumn("_k", F.lit(int(n_levels)))
+    universe = counts.groupBy("field").agg(
+        F.sum("_cm").alias("_nm"), F.sum("_cu").alias("_nu")
+    ).withColumn("_k", F.lit(M_U_LEVELS))
     # dense level grid so unseen levels get the smoothed floor
     grid = universe.select(
         "field", "_k", "_nm", "_nu", F.explode(F.sequence(F.lit(0), F.col("_k") - 1)).alias("level")
     )
-    s = float(smoothing)
+    s = M_U_SMOOTHING
     out = (
         grid.join(counts, ["field", "level"], "left")
         .select(

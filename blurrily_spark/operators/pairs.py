@@ -27,9 +27,9 @@ Scale design (the part the single-node reference never had to solve):
   :func:`self_join_pairs` builds such a set from the rows that share a key
   and :func:`join_pair_ends` attaches a per-record table to both ends;
   every blocker and scorer in the package goes through the two.
-* **Block purge.** Every key cap (``max_df``, ``max_block``) goes through
-  :func:`purge_blocks`: an anti-join against the broadcast list of the
-  keys whose block exceeds the cap.
+* **Block purge.** Every key cap (``max_df``, ``PHONETIC_MAX_BLOCK``) goes
+  through :func:`purge_blocks`: an anti-join against the broadcast list of
+  the keys whose block exceeds the cap.
 """
 
 from __future__ import annotations
@@ -82,8 +82,9 @@ def join_pair_ends(
 def purge_blocks(rows: DataFrame, key: str, cap: int, cap_name: str) -> DataFrame:
     """``rows`` without the rows whose ``key`` occurs more than ``cap``
     times: block purging, the pg_trgm-style cost guard of a key-blocked
-    self-join. ``cap_name`` is the caller's keyword, named in the error for
-    a cap below 2 (a cap of 1 leaves no block that pairs anything).
+    self-join. ``cap_name`` names the cap (the caller's keyword or
+    constant) in the error for a cap below 2 (a cap of 1 leaves no block
+    that pairs anything).
 
     The hot list is broadcast, whatever the key space: at most
     ``rows / (cap + 1)`` keys can exceed the cap, so it is the small side of
@@ -240,14 +241,18 @@ def with_set_similarity(pairs: DataFrame, postings: DataFrame) -> DataFrame:
 # -- token blocking ------------------------------------------------------------
 
 
+# shared distinct words a token-blocking pair needs
+TOKEN_BLOCK_MIN_MATCHES = 3
+
+
 def token_blocking_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: int | None = None,
-    min_matches: int = 1,
 ) -> DataFrame:
-    """Token blocking: candidate pairs sharing >= ``min_matches`` words.
+    """Token blocking: candidate pairs sharing at least
+    :data:`TOKEN_BLOCK_MIN_MATCHES` (3) distinct words.
 
     The schema-agnostic baseline blocker of the meta-blocking literature
     (Papadakis et al.: every record pair co-occurring in at least one
@@ -278,14 +283,12 @@ def token_blocking_pairs(
     )
     if max_df is not None:
         toks = purge_blocks(toks, "token", max_df, "max_df")
-    pairs = (
+    return (
         self_join_pairs(toks, "token", "ref", [])
         .groupBy("ref_a", "ref_b")
         .agg(F.count(F.lit(1)).alias("matches"))
+        .where(F.col("matches") >= TOKEN_BLOCK_MIN_MATCHES)
     )
-    if min_matches > 1:
-        pairs = pairs.where(F.col("matches") >= min_matches)
-    return pairs
 
 
 # -- idf-weighted cosine scoring -----------------------------------------------
@@ -414,18 +417,23 @@ def multipass_candidates(schemes: dict[str, DataFrame]) -> DataFrame:
 # -- block filtering (per-record block cleaning) -------------------------------
 
 
-def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
-    """Keep each record's smallest ``ceil(ratio * |blocks|)`` blocks.
+# the share of its blocks a record keeps (the EDBT 2016 paper keeps 0.8)
+BLOCK_FILTER_RATIO = 0.6
+
+
+def block_filtering(postings: DataFrame) -> DataFrame:
+    """Keep each record's smallest ``ceil(0.6 * |blocks|)`` blocks
+    (:data:`BLOCK_FILTER_RATIO`).
 
     Block filtering (Papadakis, Papastefanatos, Palpanas & Koubarakis,
     "Scaling Entity Resolution to Large, Heterogeneous Data with Enhanced
     Meta-blocking", EDBT 2016 §3): before any pairing, each record retains
-    only the fraction ``ratio`` of its blocking keys with the SMALLEST
-    document frequency -- its most discriminative blocks. This is the
-    per-record complement to the global ``max_df`` cap (block purging):
-    purging drops a stopword-like block for everyone, filtering lets a
-    record with many keys shed its crowded ones while a short record keeps
-    all it has. Output is a filtered postings DataFrame (same columns), fed
+    only the fraction :data:`BLOCK_FILTER_RATIO` of its blocking keys with
+    the SMALLEST document frequency -- its most discriminative blocks
+    (0.6 here where the paper keeps 0.8). This is the per-record
+    complement to the global ``max_df`` cap (block purging): purging drops
+    a stopword-like block for everyone, filtering lets a record with many
+    keys shed its crowded ones while a short record keeps all it has. Output is a filtered postings DataFrame (same columns), fed
     straight into :func:`candidate_pairs` / :func:`meta_blocking_prune`.
 
     Distributed shape: block sizes are the bounded <= 28^3-row
@@ -435,8 +443,6 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
     is a total order because postings are per-record deduped, so the kept
     set is deterministic and bit-identical to the SQL oracle.
     """
-    if not (0.0 < float(ratio) <= 1.0):
-        raise ValueError(f"ratio must be in (0, 1], got {ratio!r}")
     sizes = trigram_df_counts(postings.select("trigram"))
     p = postings.join(F.broadcast(sizes), "trigram")
     by_ref = Window.partitionBy("ref")
@@ -444,7 +450,7 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
     return (
         p.withColumn("_rn", F.row_number().over(ordered))
         .withColumn("_cnt", F.count(F.lit(1)).over(by_ref))
-        .where(F.col("_rn") <= F.ceil(F.lit(float(ratio)) * F.col("_cnt")))
+        .where(F.col("_rn") <= F.ceil(F.lit(BLOCK_FILTER_RATIO) * F.col("_cnt")))
         .select(*postings.columns)
     )
 
@@ -456,52 +462,34 @@ def block_filtering(postings: DataFrame, ratio: float = 0.8) -> DataFrame:
 # graph and prune low-evidence edges BEFORE pairwise scoring. The classic
 # weight is CBS (common-blocks scheme) = number of shared blocking keys --
 # exactly the ``matches`` column candidate_pairs already computes, so
-# meta-blocking composes with the existing blocker for free. Pruning
-# schemes:
+# meta-blocking composes with the existing blocker for free. The pruning
+# scheme is WNP (weighted-node pruning): per-node mean of incident-edge
+# weights; an edge survives if its weight clears the mean of EITHER
+# endpoint (the paper's redefined/union WNP -- guarantees every
+# non-isolated node retains its max-weight edge, so no record is orphaned
+# by pruning).
 #
-# * WEP (weighted-edge pruning): keep edges whose weight >= the global mean
-#   edge weight.
-# * WNP (weighted-node pruning): per-node mean of incident-edge weights;
-#   an edge survives if its weight clears the mean of EITHER endpoint
-#   (the paper's redefined/union WNP -- guarantees every non-isolated node
-#   retains its max-weight edge, so no record is orphaned by pruning).
-#
-# Distributed shape: WNP explodes each edge into its two endpoint rows
-# and reads the node statistics off a window partitioned by node; the
-# edge-level OR is a second window over the edge's own key -- so the
-# input is read once and nothing is joined back or re-paired (pruning is
-# a filter). WEP broadcasts a one-row global aggregate. Mean comparisons
-# are evaluated as ``w * cnt >= sum_w`` so integer weights (CBS/matches)
-# stay exact integer math end-to-end -- bit-identical to the DuckDB oracle.
+# Distributed shape: each edge explodes into its two endpoint rows and the
+# node statistics come off a window partitioned by node; the edge-level OR
+# is a second window over the edge's own key -- so the input is read once
+# and nothing is joined back or re-paired (pruning is a filter). Mean
+# comparisons are evaluated as ``w * cnt >= sum_w`` so integer weights
+# (CBS/matches) stay exact integer math end-to-end -- bit-identical to the
+# DuckDB oracle.
 
 
-def meta_blocking_prune(
-    edges: DataFrame, weight_col: str = "matches", scheme: str = "wnp"
-) -> DataFrame:
+def meta_blocking_prune(edges: DataFrame, weight_col: str = "matches") -> DataFrame:
     """Prune the candidate-pair graph by edge-weight evidence (meta-blocking).
 
     ``edges`` is any (ref_a, ref_b, <weight_col>, ...) candidate set --
     typically :func:`candidate_pairs` output with CBS weights in
     ``matches``. Returns the surviving edges with all input columns.
 
-    ``scheme='wnp'``: weighted-node pruning, union semantics -- keep an
-    edge iff ``w >= mean(incident weights of ref_a)`` OR the same for
-    ``ref_b``. ``scheme='wep'``: keep iff ``w >= global mean edge weight``.
+    Weighted-node pruning, union semantics: keep an edge iff
+    ``w >= mean(incident weights of ref_a)`` OR the same for ``ref_b``.
     Ties keep (>=), so WNP provably retains each node's max-weight edge.
     """
-    if scheme not in ("wnp", "wep"):
-        raise ValueError(f"unknown meta-blocking scheme: {scheme!r}")
     w = F.col(weight_col)
-    if scheme == "wep":
-        # one-row global stats; crossJoin broadcasts it to every partition
-        totals = edges.agg(
-            F.sum(weight_col).alias("_tw"), F.count(F.lit(1)).alias("_tc")
-        )
-        return (
-            edges.crossJoin(F.broadcast(totals))
-            .where(w * F.col("_tc") >= F.col("_tw"))
-            .drop("_tw", "_tc")
-        )
     # one row per (edge, endpoint): _side 0 is ref_a's row, 1 is ref_b's
     ends = edges.select(
         "*", F.posexplode(F.array("ref_a", "ref_b")).alias("_side", "_node")
@@ -626,12 +614,11 @@ def sorted_neighborhood_pairs(
     )
 
 
-def phonetic_pairs(
-    df: DataFrame,
-    name_col: str,
-    id_col: str = "ref",
-    max_block: int | None = None,
-) -> DataFrame:
+# members above which a phonetic block is purged
+PHONETIC_MAX_BLOCK = 50
+
+
+def phonetic_pairs(df: DataFrame, name_col: str, id_col: str = "ref") -> DataFrame:
     """Phonetic blocking: candidate pairs of records whose ``name_col``
     shares a Soundex-class key (functions/phonetic.py) -- the classic
     record-linkage first block, catching spelling variants ("Smith" /
@@ -642,9 +629,9 @@ def phonetic_pairs(
     Scale shape: one equi-self-join on the key, same class as
     :func:`candidate_pairs`. Phonetic keys are FEW (max 26 * 7^3 distinct)
     and Zipf-hot (S530-class names), so a raw self-join is quadratic in
-    the hottest block; ``max_block`` is the same guardrail as
-    candidate_pairs' ``max_df`` -- blocks with more than ``max_block``
-    members are dropped from pair generation entirely (a block that large
+    the hottest block; :data:`PHONETIC_MAX_BLOCK` (50) is the same guardrail
+    as candidate_pairs' ``max_df`` -- blocks with more than 50 members are
+    dropped from pair generation entirely (a block that large
     carries no discriminating signal; recover its true matches from the
     other blocking passes, exactly the two-phase argument in
     plans/pipeline.py). The purge (:func:`purge_blocks`) rides one
@@ -656,6 +643,5 @@ def phonetic_pairs(
         F.col(id_col).cast("long").alias("ref"),
         phonetic_key(F.col(name_col)).alias("pkey"),
     ).where(F.col("pkey").isNotNull())
-    if max_block is not None:
-        keyed = purge_blocks(keyed, "pkey", max_block, "max_block")
+    keyed = purge_blocks(keyed, "pkey", PHONETIC_MAX_BLOCK, "PHONETIC_MAX_BLOCK")
     return self_join_pairs(keyed, "pkey", "ref", []).select("ref_a", "ref_b", "pkey")

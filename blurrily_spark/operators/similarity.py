@@ -121,16 +121,18 @@ def _cos_pre(a, b, na, nb):
     return dot(a, b) / (na * nb)
 
 
+TOPK = 5  # rows per query of cosine_topk and ivf_topk
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """Exact top-k by cosine: (query_id, vec_id, cos, rank).
+    """Exact top-5 (:data:`TOPK`) by cosine: (query_id, vec_id, cos, rank).
 
     The query side is broadcast (ANN query batches are dimension-sized);
     ties broken by vec_id ASC for determinism.
@@ -154,7 +156,7 @@ def cosine_topk(
     win = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select("query_id", "vec_id", "cos", "rank")
     )
 
@@ -206,14 +208,14 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: list[list[float]],
-    k: int = 10,
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """ANN top-k probing the nprobe nearest centroid buckets per query.
+    """ANN top-5 (:data:`TOPK`) probing the nprobe nearest centroid buckets
+    per query.
 
     The corpus is bucketed by its nearest centroid and joins the
     broadcast query probes on bucket id, so each query scores only the
@@ -244,7 +246,7 @@ def ivf_topk(
     win = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK)
         .select("query_id", "vec_id", "cos", "rank")
     )
 

@@ -168,20 +168,30 @@ def test_one_job_per_iteration(spark, monkeypatch, cc_log):
 
 def test_driver_path_equals_distributed(spark, monkeypatch, cc_log):
     """The small-graph driver union-find must produce EXACTLY the labels of
-    the large-star/small-star loop (and of the Python oracle above)."""
+    the large-star/small-star loop (and of the Python oracle above), also
+    on duplicate, reversed, self-loop and NULL-endpoint edges, which the
+    driver path collects without canonicalizing them."""
     rng = random.Random(13)
     nodes = list(range(200))
-    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(180)]
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    drv = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
-    assert cc_log()[0] == "driver path"
-    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
-    dist = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
-    path, rounds = cc_log()
-    assert path == "loop" and rounds >= 1
-    assert drv == dist
-    expected = union_find_components(edges, {n for e in edges for n in e})
-    assert {r: e for r, e in drv} == expected
+    random_edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(180)]
+    # 3 (self-loop only), 4 and 5 (NULL other end) are in no component
+    awkward = [(1, 2), (1, 2), (2, 1), (3, 3), (4, None), (None, 5), (2, 6), (6, 2), (8, 7)]
+    cases = [
+        (random_edges, union_find_components(random_edges, {n for e in random_edges for n in e})),
+        (awkward, {1: 1, 2: 1, 6: 1, 7: 7, 8: 7}),
+    ]
+    bound = cluster.CC_DRIVER_MAX_EDGES
+    for edges, expected in cases:
+        edf = spark.createDataFrame(edges, "src long, dst long")
+        monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", bound)
+        drv = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
+        assert cc_log()[0] == "driver path"
+        monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", 0)
+        dist = {(r["ref"], r["entity_id"]) for r in connected_components(edf).collect()}
+        path, rounds = cc_log()
+        assert path == "loop" and rounds >= 1
+        assert drv == dist
+        assert {r: e for r, e in drv} == expected
 
 
 def test_golden_records_survivorship(spark):
@@ -386,8 +396,8 @@ def test_cluster_metrics_exact_scale_guard(spark):
 
 
 def test_driver_path_builds_labels_without_python_workers(spark, monkeypatch, cc_log):
-    """The driver path collects the canonical edges once, cut one row past
-    the bound, and returns its labels as a local relation: no Python-RDD
+    """The driver path collects the edges once, self-loops out and
+    duplicates kept, cut one row past the bound, and returns its labels as a local relation: no Python-RDD
     scan, no checkpoint left behind, and reading the labels runs no job.
     One edge past the bound takes the distributed loop, with equal labels."""
     rng = random.Random(17)
@@ -395,15 +405,15 @@ def test_driver_path_builds_labels_without_python_workers(spark, monkeypatch, cc
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(90)]
     edges = [(a, b) for a, b in edges if a != b]
     edf = spark.createDataFrame(edges, "src long, dst long")
-    n_canonical = len({(max(a, b), min(a, b)) for a, b in edges})
+    n_edges = len(edges)
     expected = union_find_components(edges, {n for e in edges for n in e})
 
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_canonical)
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_edges)
     labels = connected_components(edf)
-    assert cc_log() == ("driver path", n_canonical)
+    assert cc_log() == ("driver path", n_edges)
     assert jsc.getPersistentRDDs().size() == before
     plan = labels._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
@@ -416,7 +426,7 @@ def test_driver_path_builds_labels_without_python_workers(spark, monkeypatch, cc
     assert sc.statusTracker().getJobIdsForGroup("cc-driver-labels") == []
     assert got == expected
 
-    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_canonical - 1)
+    monkeypatch.setattr(cluster, "CC_DRIVER_MAX_EDGES", n_edges - 1)
     past = connected_components(edf)
     path, rounds = cc_log()
     assert path == "loop" and rounds >= 1

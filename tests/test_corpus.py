@@ -64,7 +64,7 @@ def test_contamination_matches_python_model(spark, hash_fn):
 
 
 def test_frequent_ngrams_model(spark):
-    n, min_df = 2, 2
+    n, k, min_df = 3, 50, 2  # FREQUENT_N, FREQUENT_K, FREQUENT_MIN_DF
     per_doc = [(ref, normalize_py(t).split(" ")) for ref, t in TRAIN]
     occ: dict[str, int] = {}
     docs: dict[str, set] = {}
@@ -76,14 +76,14 @@ def test_frequent_ngrams_model(spark):
     exp = sorted(
         ((g, len(docs[g]), occ[g]) for g in occ if len(docs[g]) >= min_df),
         key=lambda x: (-x[1], -x[2], x[0]),
-    )[:5]
+    )[:k]
     got = [
         (r["gram"], r["n_docs"], r["n_occurrences"])
-        for r in frequent_ngrams(_df(spark, TRAIN), n=n, k=5, min_df=min_df).collect()
+        for r in frequent_ngrams(_df(spark, TRAIN)).collect()
     ]
     assert got == exp
-    assert got[0][0] in {"the quick", "quick brown", "brown fox", "fox jumps",
-                         "jumps over", "over the", "the lazy", "lazy dog"}
+    # the grams docs 1 and 4 share, in gram order at equal counts
+    assert [g for g, _, _ in got] == sorted(_grams(TRAIN[0][1], n))
 
 
 def test_tfidf_top_terms_model(spark):
@@ -91,22 +91,27 @@ def test_tfidf_top_terms_model(spark):
         (1, "apple banana apple"),
         (2, "banana cherry"),
         (3, "cherry banana date"),
+        (4, "banana fig grape kiwi"),
     ]
-    got = tfidf_top_terms(_df(spark, rows), k=2).collect()
+    got = tfidf_top_terms(_df(spark, rows)).collect()
     by_doc = {}
     for r in got:
         by_doc.setdefault(r["id"], []).append(r)
-    # doc 1: apple (tf=2, df=1) dominates; banana (df=3) scores ln(1)=0
+    # doc 1: apple (tf=2, df=1) dominates; banana (df=4) scores ln(1)=0
     d1 = sorted(by_doc[1], key=lambda r: r["rank"])
     assert [r["term"] for r in d1] == ["apple", "banana"]
     assert d1[0]["tf"] == 2 and d1[0]["df_term"] == 1
-    assert d1[0]["tfidf"] == pytest.approx(round(2 * math.log(3 / 1), 6))
+    assert d1[0]["tfidf"] == pytest.approx(round(2 * math.log(4 / 1), 6))
     assert d1[1]["tfidf"] == 0.0
     # ties on tfidf break by term ASC -> deterministic ranks everywhere
     d2 = sorted(by_doc[2], key=lambda r: r["rank"])
     assert [r["term"] for r in d2] == ["cherry", "banana"]
+    # doc 4 has four terms: the top 3 (TFIDF_K) keep the three ln(4) ties
+    # in term order and cut banana
+    d4 = sorted(by_doc[4], key=lambda r: r["rank"])
+    assert [r["term"] for r in d4] == ["fig", "grape", "kiwi"]
     # every doc emits at most k rows with ranks 1..k
-    assert all(len(v) <= 2 for v in by_doc.values())
+    assert all(len(v) <= 3 for v in by_doc.values())
     assert all([r["rank"] for r in sorted(v, key=lambda r: r["rank"])]
                == list(range(1, len(v) + 1)) for v in by_doc.values())
 
@@ -115,7 +120,7 @@ def test_tfidf_window_group_limit_plan(spark):
     """The per-doc top-k must push below the window sort
     (WindowGroupLimit), not rank the full term list and filter after."""
     rows = [(i, f"w{i} common word") for i in range(20)]
-    plan = tfidf_top_terms(_df(spark, rows), k=3)._jdf.queryExecution().executedPlan().toString()
+    plan = tfidf_top_terms(_df(spark, rows))._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
 
 

@@ -121,13 +121,6 @@ def test_near_dedup_against_tie_breaks_to_smallest_ref(spark):
     assert row["matched_ref_id"] == 20 and row["est_jaccard"] == 1.0
 
 
-def test_minhash_lsh_pairs_refuses_bands_that_do_not_divide_num_hashes(spark):
-    # a ValueError, not an assert: under python -O, bands=7 of 32 hashes
-    # ran and banded only the first 28 of them
-    with pytest.raises(ValueError, match="bands must divide num_hashes=32, got bands=7"):
-        dedup.minhash_lsh_pairs(_corpus(spark), num_hashes=32, bands=7)
-
-
 def test_minhash_lsh_pairs_follow_the_pair_convention(spark):
     """Against a Python model over the operator's own signatures: every
     pair that matches on some band comes out once, ``id_a < id_b``, with

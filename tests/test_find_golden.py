@@ -314,7 +314,7 @@ def test_find_idf_rare_evidence_outranks_common(spark):
     p = _postings(spark, rows)
     q = spark.createDataFrame([(0, "zyxw london")], "query_id long, needle string")
     plain = {r["ref"]: r["rank"] for r in find(p, q, limit=20).collect()}
-    idf = {r["ref"]: r["rank"] for r in find_idf(p, q, k=20).collect()}
+    idf = {r["ref"]: r["rank"] for r in find_idf(p, q).collect()}
     # plain count ranking: doc 50 ('london', 7 shared trigrams incl. edges)
     # beats doc 99 ('zyxw', fewer shared trigrams)
     assert plain[50] < plain[99]
@@ -327,7 +327,7 @@ def test_find_idf_tie_break_matches_f5(spark):
     p = _postings(spark, [("paris", 3), ("paris", 1), ("paris", 2)])
     q = spark.createDataFrame([(0, "paris")], "query_id long, needle string")
     got = [(r["ref"], r["rank"]) for r in
-           find_idf(p, q, k=10).orderBy("rank").collect()]
+           find_idf(p, q).orderBy("rank").collect()]
     assert got == [(1, 1), (2, 2), (3, 3)]
 
 

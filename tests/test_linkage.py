@@ -70,16 +70,17 @@ def test_estimate_m_u_matches_hand_counts(spark):
         (0, 0, 2), (0, 0, 0), (1, 0, 2), (0, 1, 0),
     ]
     df = spark.createDataFrame(rows, "is_match int, f1 int, f2 int")
-    s = 0.5
+    s = 0.5  # M_U_SMOOTHING, over M_U_LEVELS = 3 levels per field
     got = {
         (r["field"], r["level"]): (r["m"], r["u"])
-        for r in estimate_m_u(df, ["f1", "f2"], smoothing=s).collect()
+        for r in estimate_m_u(df, ["f1", "f2"]).collect()
     }
-    # hand counts -- f1: matches {0:1, 1:2} of 3, non {0:2, 1:2} of 4, k=2
-    assert got[("f1", 0)][0] == pytest.approx((1 + s) / (3 + s * 2))
-    assert got[("f1", 1)][0] == pytest.approx((2 + s) / (3 + s * 2))
-    assert got[("f1", 0)][1] == pytest.approx((2 + s) / (4 + s * 2))
-    # f2: k = max level + 1 = 3; matches {0:1, 1:1, 2:1}, non {0:2, 1:1, 2:1}
+    # hand counts -- f1: matches {0:1, 1:2, 2:0} of 3, non {0:2, 1:2, 2:0} of 4
+    assert got[("f1", 0)][0] == pytest.approx((1 + s) / (3 + s * 3))
+    assert got[("f1", 1)][0] == pytest.approx((2 + s) / (3 + s * 3))
+    assert got[("f1", 2)][0] == pytest.approx((0 + s) / (3 + s * 3))
+    assert got[("f1", 0)][1] == pytest.approx((2 + s) / (4 + s * 3))
+    # f2: matches {0:1, 1:1, 2:1}, non {0:2, 1:1, 2:1}
     assert got[("f2", 2)][0] == pytest.approx((1 + s) / (3 + s * 3))
     assert got[("f2", 1)][1] == pytest.approx((1 + s) / (4 + s * 3))
     # every probability column sums to ~1 per field
@@ -90,9 +91,9 @@ def test_estimate_m_u_matches_hand_counts(spark):
 
 
 def test_estimate_m_u_fills_unseen_levels(spark):
-    # level 2 never observed for f1 but pinned via n_levels=3
+    # level 2 never observed for f1, but every field has 3 levels
     df = spark.createDataFrame([(1, 0), (0, 1)], "is_match int, f1 int")
-    got = {r["level"]: (r["m"], r["u"]) for r in estimate_m_u(df, ["f1"], n_levels=3).collect()}
+    got = {r["level"]: (r["m"], r["u"]) for r in estimate_m_u(df, ["f1"]).collect()}
     assert set(got) == {0, 1, 2}
     assert got[2][0] > 0 and got[2][1] > 0  # smoothed floor, usable in FieldModel
 
@@ -101,8 +102,6 @@ def test_estimate_m_u_validation(spark):
     df = spark.createDataFrame([(1, 0)], "is_match int, f1 int")
     with pytest.raises(ValueError, match="at least one"):
         estimate_m_u(df, [])
-    with pytest.raises(ValueError, match="smoothing"):
-        estimate_m_u(df, ["f1"], smoothing=0)
 
 
 def test_estimated_params_feed_scoring(spark):

@@ -143,47 +143,55 @@ def test_every_package_module_is_reached_from_a_non_test_root():
     assert sorted(set(_package_files(root)) - reached) == []
 
 
-def _call_sites(root: str, files: list[str]) -> dict[str, list[tuple[int, set[str]]]]:
+def _call_sites(root: str, files: list[str]) -> dict[str, list[tuple[list, dict]]]:
     """Every call in ``files``, by callee name (the called name, or the
-    attribute of a dotted call): ``(positional argument count, keyword
-    names)`` per call. The keys of a ``**name`` whose ``name`` (or
-    ``self.name``) is assigned a ``dict(...)`` call or a dict literal in
-    the same file count as keywords."""
+    attribute of a dotted call; a name bound by ``from ... import name as
+    alias`` counts under ``name``): ``(positional argument nodes,
+    {keyword: value node})`` per call. The keys of a ``**name`` whose
+    ``name`` (or ``self.name``) is assigned a ``dict(...)`` call or a dict
+    literal in the same file count as keywords, with that dict's value
+    nodes."""
     import ast
 
     def name_of(node) -> str | None:
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
 
-    sites: dict[str, list[tuple[int, set[str]]]] = {}
+    sites: dict[str, list[tuple[list, dict]]] = {}
     for rel in files:
         with open(os.path.join(root, rel), encoding="utf-8") as f:
             nodes = list(ast.walk(ast.parse(f.read())))
-        dicts: dict[str, list[str]] = {}
+        dicts: dict[str, dict] = {}
+        aliases: dict[str, str] = {}
         for node in nodes:
+            if isinstance(node, ast.ImportFrom):
+                aliases.update((a.asname, a.name) for a in node.names if a.asname)
             if isinstance(node, ast.Assign) and len(node.targets) == 1:
                 v = node.value
                 if isinstance(v, ast.Call) and name_of(v.func) == "dict":
-                    dicts[name_of(node.targets[0])] = [k.arg for k in v.keywords]
+                    dicts[name_of(node.targets[0])] = {k.arg: k.value for k in v.keywords}
                 elif isinstance(v, ast.Dict):
-                    dicts[name_of(node.targets[0])] = [
-                        k.value for k in v.keys if isinstance(k, ast.Constant)
-                    ]
+                    dicts[name_of(node.targets[0])] = {
+                        k.value: val
+                        for k, val in zip(v.keys, v.values)
+                        if isinstance(k, ast.Constant)
+                    }
         for node in nodes:
             if isinstance(node, ast.Call):
-                keywords: set[str] = set()
+                keywords: dict = {}
                 for k in node.keywords:
-                    keywords.update([k.arg] if k.arg else dicts.get(name_of(k.value), []))
-                sites.setdefault(name_of(node.func), []).append((len(node.args), keywords))
+                    keywords.update({k.arg: k.value} if k.arg else dicts.get(name_of(k.value), {}))
+                callee = name_of(node.func)
+                sites.setdefault(aliases.get(callee, callee), []).append((node.args, keywords))
     return sites
 
 
-def _passed(calls: list[tuple[int, set[str]]], positional: list[str]) -> set[str]:
+def _passed(calls: list[tuple[list, dict]], positional: list[str]) -> set[str]:
     """Parameter names some of ``calls`` (from :func:`_call_sites`) pass:
     the first ``n`` of ``positional`` for ``n`` positional arguments, and
     every keyword."""
     passed: set[str] = set()
-    for n_args, keywords in calls:
-        passed.update(positional[:n_args])
+    for args, keywords in calls:
+        passed.update(positional[: len(args)])
         passed.update(keywords)
     return passed
 
@@ -203,13 +211,14 @@ def test_every_pipeline_option_is_passed_by_a_non_test_root():
     assert sorted(options - _passed(calls, params)) == []
 
 
-def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], list[str]]]:
-    """``(module, callee, positional, named, options)`` of every public
-    module-level function and public class ``__init__`` under
+def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], list[str], dict]]:
+    """``(module, callee, positional, named, options, defaults)`` of every
+    public module-level function and public class ``__init__`` under
     ``blurrily_spark/``: its positional parameters in order (``self``
-    left out), every parameter it names, and its options -- each
-    parameter with a default, each keyword-only parameter and a
-    ``**kwargs`` (as ``**name``), without the ``*_col`` parameters."""
+    left out), every parameter it names, its options -- each parameter
+    with a default, each keyword-only parameter and a ``**kwargs`` (as
+    ``**name``), without the ``*_col`` parameters -- and the default
+    value node of each option that has one."""
     import ast
 
     out = []
@@ -234,9 +243,11 @@ def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], l
             positional = [p.arg for p in a.posonlyargs + a.args][skip:]
             keyword_only = [p.arg for p in a.kwonlyargs]
             options = positional[len(positional) - len(a.defaults) :] if a.defaults else []
+            defaults = dict(zip(options, a.defaults))
+            defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d)
             options += keyword_only + ([f"**{a.kwarg.arg}"] if a.kwarg else [])
             options = [o for o in options if not o.endswith("_col")]
-            out.append((module, node.name, positional, positional + keyword_only, options))
+            out.append((module, node.name, positional, positional + keyword_only, options, defaults))
     return out
 
 
@@ -253,10 +264,73 @@ def test_every_operator_option_is_passed_by_a_non_test_root():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sites = _call_sites(root, _root_files(root) + _package_files(root))
     dead = []
-    for module, callee, positional, named, options in _operator_options(root):
+    for module, callee, positional, named, options, _ in _operator_options(root):
         passed = _passed(sites.get(callee, []), positional)
         for option in options:
             live = bool(passed - set(named)) if option.startswith("**") else option in passed
             if not live:
                 dead.append(f"{module}:{callee}({option})")
     assert not dead, "options no non-test root or package module passes: " + ", ".join(dead)
+
+
+# Options that every non-test caller sets to one value but that stay
+# options, by ``module:callee(option)``, with the reason.
+_PERFBENCH = "perfbench passes it, and only a benchmark change may edit perfbench"
+_ORACLE = "reference SQL that tests compare against"
+_ONE_VALUE_EXEMPT = {
+    "blurrily_spark.server:BlurrilyClient(host)": "a deployment address",
+    "blurrily_spark.functions.oracle:find_sql(limit)": _ORACLE,
+    "blurrily_spark.functions.oracle:pairs_ctes(alias)": _ORACLE,
+    "blurrily_spark.functions.oracle:cc_walk_ctes(edges)": _ORACLE,
+    "blurrily_spark.plans.pipeline:LinkagePipeline(jaccard_threshold)": _PERFBENCH,
+    "blurrily_spark.plans.pipeline:LinkagePipeline(min_matches)": _PERFBENCH,
+    "blurrily_spark.operators.pairs:candidate_pairs(min_matches)": _PERFBENCH,
+    **{
+        f"blurrily_spark.sources.synth:generate_transcripts({opt})": (
+            "the shape perfbench passes to generate_transcripts_pdf, and only"
+            " a benchmark change may edit perfbench"
+        )
+        for opt in ("variants_per_entity", "turns_per_conv", "words_per_turn", "n_perturbations")
+    },
+}
+
+
+def _values(node) -> set:
+    """The values an argument node can take: one literal by
+    ``ast.literal_eval``, or two distinct markers for anything else, as
+    a name or an expression may take many."""
+    import ast
+
+    try:
+        return {repr(ast.literal_eval(node))}
+    except ValueError:
+        return {"<expr>", "<expr'>"}
+
+
+def test_every_operator_option_takes_two_values():
+    """An option every non-test caller sets to one value is a constant:
+    each option of a public function or class under ``blurrily_spark/``
+    (see :func:`_operator_options`; ``**kwargs`` aside) must take two or
+    more values over the calls of the non-test roots and the package
+    modules -- each literal a call passes, any non-literal argument as
+    many values, and the default when some call leaves the option out.
+    ``_ONE_VALUE_EXEMPT`` names the exceptions with their reasons, and
+    names only options the gate flags."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sites = _call_sites(root, _root_files(root) + _package_files(root))
+    single = []
+    for module, callee, positional, _, options, defaults in _operator_options(root):
+        for option in options:
+            if option.startswith("**"):
+                continue
+            values: set = set()
+            for args, keywords in sites.get(callee, []):
+                i = positional.index(option) if option in positional else len(args)
+                node = args[i] if i < len(args) else keywords.get(option, defaults.get(option))
+                values |= _values(node) if node is not None else set()
+            if len(values) < 2:
+                single.append(f"{module}:{callee}({option})")
+    constant = sorted(set(single) - set(_ONE_VALUE_EXEMPT))
+    assert not constant, "options every non-test caller sets to one value: " + ", ".join(constant)
+    stale = sorted(set(_ONE_VALUE_EXEMPT) - set(single))
+    assert not stale, "exemptions for options that take two values: " + ", ".join(stale)

@@ -337,32 +337,26 @@ def test_phonetic_key_goldens_all_three_impls(spark):
 
 
 def test_phonetic_pairs_blocks_and_guardrail(spark):
-    from blurrily_spark.operators.pairs import phonetic_pairs
+    from blurrily_spark.operators.pairs import PHONETIC_MAX_BLOCK, phonetic_pairs
 
-    import pytest as _pytest
-
+    assert PHONETIC_MAX_BLOCK == 50
     rows = [
         (1, "smith"), (2, "smyth"), (3, "smithe"),   # S530 block of 3
         (4, "robert"), (5, "rupert"),                # R163 block of 2
         (6, "unique"),                               # singleton -> no pair
         (7, "123"),                                  # keyless -> dropped
     ]
+    rows += [(100 + i, "kay") for i in range(50)]   # K000 block of 50: kept
+    rows += [(200 + i, "lee") for i in range(51)]   # L000 block of 51: purged
     df = spark.createDataFrame(rows, "ref long, name string")
     got = {
         (r["ref_a"], r["ref_b"]): r["pkey"]
         for r in phonetic_pairs(df, "name").collect()
     }
+    kay = {(100 + i, 100 + j): "K000" for i in range(50) for j in range(i + 1, 50)}
     assert got == {
-        (1, 2): "S530", (1, 3): "S530", (2, 3): "S530", (4, 5): "R163",
+        (1, 2): "S530", (1, 3): "S530", (2, 3): "S530", (4, 5): "R163", **kay,
     }
-    # max_block=2 drops the 3-member S530 block entirely, keeps R163
-    capped = {
-        (r["ref_a"], r["ref_b"])
-        for r in phonetic_pairs(df, "name", max_block=2).collect()
-    }
-    assert capped == {(4, 5)}
-    with _pytest.raises(ValueError, match="max_block"):
-        phonetic_pairs(df, "name", max_block=1)
 
 
 # --- token-sort ratio -------------------------------------------------------
@@ -425,19 +419,10 @@ def test_meta_blocking_wnp_hand_case(spark):
     # node means: 1 -> (5+1)/2 = 3; 2 -> (5+3)/2 = 4; 3 -> (1+3+1)/3 = 5/3;
     # 4 -> 1. Union-WNP keeps: 1-2 (5 >= 3), 2-3 (3 >= 5/3 at node 3),
     # 3-4 (1 >= 1 at node 4); drops 1-3 (1 < 3 and 1 < 5/3).
-    kept = meta_blocking_prune(_mb_edges(spark), scheme="wnp")
+    kept = meta_blocking_prune(_mb_edges(spark))
     got = sorted((r["ref_a"], r["ref_b"]) for r in kept.collect())
     assert got == [(1, 2), (2, 3), (3, 4)]
     assert kept.columns == ["ref_a", "ref_b", "matches"]
-
-
-def test_meta_blocking_wep_hand_case(spark):
-    from blurrily_spark.operators.pairs import meta_blocking_prune
-
-    # global mean = 10/4 = 2.5 -> keep w in {5, 3}
-    kept = meta_blocking_prune(_mb_edges(spark), scheme="wep")
-    got = sorted((r["ref_a"], r["ref_b"]) for r in kept.collect())
-    assert got == [(1, 2), (2, 3)]
 
 
 def test_meta_blocking_wnp_keeps_every_nodes_max_edge(spark):
@@ -447,7 +432,7 @@ def test_meta_blocking_wnp_keeps_every_nodes_max_edge(spark):
 
     postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
     edges = candidate_pairs(postings)
-    kept = meta_blocking_prune(edges, scheme="wnp")
+    kept = meta_blocking_prune(edges)
     nodes_before = {
         n for r in edges.collect() for n in (r["ref_a"], r["ref_b"])
     }
@@ -461,14 +446,11 @@ def test_meta_blocking_wnp_keeps_every_nodes_max_edge(spark):
     assert after <= before
 
 
-def _mb_model(rows, scheme):
-    """Pure-Python meta-blocking over ``(tag, ref_b, ref_a, w)`` rows: every
-    input row is judged on its own (duplicates stay), NULL weights never
-    pass, and WNP drops an edge with a NULL endpoint while its weight
-    still counts for the other endpoint's mean."""
-    if scheme == "wep":
-        tw = sum(r[3] for r in rows if r[3] is not None)
-        return [r for r in rows if r[3] is not None and r[3] * len(rows) >= tw]
+def _mb_model(rows):
+    """Pure-Python WNP meta-blocking over ``(tag, ref_b, ref_a, w)`` rows:
+    every input row is judged on its own (duplicates stay), NULL weights
+    never pass, and an edge with a NULL endpoint is dropped while its
+    weight still counts for the other endpoint's mean."""
     sums, cnts = {}, {}
     for _, b, a, w in rows:
         for n in (a, b):
@@ -484,8 +466,7 @@ def _mb_model(rows, scheme):
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-@pytest.mark.parametrize("scheme", ["wnp", "wep"])
-def test_meta_blocking_matches_python_model(spark, scheme, seed):
+def test_meta_blocking_matches_python_model(spark, seed):
     """Seeded graphs with weight ties, repeated (ref_a, ref_b) rows, NULL
     weights, a NULL endpoint and a payload column, in a column order the
     output must keep."""
@@ -501,20 +482,9 @@ def test_meta_blocking_matches_python_model(spark, scheme, seed):
         rows.append((f"p{i}", max(a, b), min(a, b), w))
     rows += [(f"p{len(rows)}", *rows[0][1:]), ("p_null", None, 3, 2)]
     df = spark.createDataFrame(rows, "tag string, ref_b long, ref_a long, matches int")
-    kept = meta_blocking_prune(df, scheme=scheme)
+    kept = meta_blocking_prune(df)
     assert kept.columns == df.columns
-    assert sorted(r["tag"] for r in kept.collect()) == sorted(
-        r[0] for r in _mb_model(rows, scheme)
-    )
-
-
-def test_meta_blocking_rejects_unknown_scheme(spark):
-    import pytest as _pytest
-
-    from blurrily_spark.operators.pairs import meta_blocking_prune
-
-    with _pytest.raises(ValueError, match="scheme"):
-        meta_blocking_prune(_mb_edges(spark), scheme="cnp")
+    assert sorted(r["tag"] for r in kept.collect()) == sorted(r[0] for r in _mb_model(rows))
 
 
 # -- blocking metrics ----------------------------------------------------------
@@ -566,12 +536,14 @@ def test_blocking_metrics_empty_candidates(spark):
 def test_block_filtering_hand_case(spark):
     # postings with known per-block dfs:
     #   block 10 df=3, block 20 df=2, block 30 df=1, block 40 df=1
-    # record 1 has blocks {10, 20, 30, 40}; at ratio=0.5 it keeps
-    # ceil(0.5*4)=2 smallest-(df, trigram): 30 (df=1), 40 (df=1)
-    # record 2 has {10, 20}; keeps ceil(0.5*2)=1: 20 (df=2 < 10's df=3... no:
-    # order is df asc -> 20 (df=2) before 10 (df=3)
-    # record 3 has {10}; keeps ceil(0.5*1)=1: 10
-    from blurrily_spark.operators.pairs import block_filtering
+    # record 1 has blocks {10, 20, 30, 40}; at ratio 0.6 it keeps
+    # ceil(0.6*4)=3 smallest-(df, trigram): 30, 40 (df=1), 20 (df=2),
+    # and sheds its most crowded block 10 (df=3)
+    # record 2 has {10, 20}; keeps ceil(0.6*2)=2: both
+    # record 3 has {10}; keeps ceil(0.6*1)=1: 10
+    from blurrily_spark.operators.pairs import BLOCK_FILTER_RATIO, block_filtering
+
+    assert BLOCK_FILTER_RATIO == 0.6
 
     rows = [
         (10, 1), (20, 1), (30, 1), (40, 1),
@@ -579,43 +551,21 @@ def test_block_filtering_hand_case(spark):
         (10, 3),
     ]
     p = spark.createDataFrame(rows, "trigram int, ref long")
-    kept = {(r["ref"], r["trigram"]) for r in block_filtering(p, 0.5).collect()}
-    assert kept == {(1, 30), (1, 40), (2, 20), (3, 10)}
-
-
-def test_block_filtering_ratio_one_is_identity(spark):
-    from blurrily_spark.operators.pairs import block_filtering
-
-    postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
-    before = {(r["ref"], r["trigram"]) for r in postings.collect()}
-    after = {
-        (r["ref"], r["trigram"]) for r in block_filtering(postings, 1.0).collect()
-    }
-    assert after == before
-    # and columns pass through untouched
-    assert block_filtering(postings, 0.5).columns == postings.columns
+    kept = {(r["ref"], r["trigram"]) for r in block_filtering(p).collect()}
+    assert kept == {(1, 20), (1, 30), (1, 40), (2, 10), (2, 20), (3, 10)}
 
 
 def test_block_filtering_is_subset_and_deterministic(spark):
     from blurrily_spark.operators.pairs import block_filtering
 
     postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
-    a = {(r["ref"], r["trigram"]) for r in block_filtering(postings, 0.6).collect()}
-    b = {(r["ref"], r["trigram"]) for r in block_filtering(postings, 0.6).collect()}
+    a = {(r["ref"], r["trigram"]) for r in block_filtering(postings).collect()}
+    b = {(r["ref"], r["trigram"]) for r in block_filtering(postings).collect()}
     full = {(r["ref"], r["trigram"]) for r in postings.collect()}
     assert a == b
     assert a < full
-
-
-def test_block_filtering_rejects_bad_ratio(spark):
-    import pytest as _pytest
-
-    from blurrily_spark.operators.pairs import block_filtering
-
-    postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
-    for bad in (0.0, -0.1, 1.5):
-        with _pytest.raises(ValueError, match="ratio"):
-            block_filtering(postings, bad)
+    # and columns pass through untouched
+    assert block_filtering(postings).columns == postings.columns
 
 
 # -- threshold sweep -----------------------------------------------------------
@@ -729,51 +679,51 @@ def test_token_blocking_hand_case(spark):
 
     docs = spark.createDataFrame(
         [
-            (1, "red cat sat"),
-            (2, "red cat ran"),
-            (3, "blue dog sat"),
-            (4, "green bird"),
+            (1, "red cat sat on mat"),
+            (2, "red cat sat by door"),
+            (3, "red cat ran"),
+            (4, "blue dog sat on mat"),
+            (5, "green bird"),
         ],
         "doc_id long, text string",
     )
-    # shared distinct tokens: (1,2) {red,cat}=2; (1,3) {sat}=1; others 0
+    # shared distinct tokens: (1,2) {red,cat,sat}=3; (1,4) {sat,on,mat}=3;
+    # (1,3) and (2,3) {red,cat}=2 and (2,4) {sat}=1 fall below the 3 that
+    # TOKEN_BLOCK_MIN_MATCHES asks for
     got = {
         (r["ref_a"], r["ref_b"]): r["matches"]
         for r in token_blocking_pairs(docs).collect()
     }
-    assert got == {(1, 2): 2, (1, 3): 1}
-    # min_matches thresholds the count
-    got2 = {
-        (r["ref_a"], r["ref_b"])
-        for r in token_blocking_pairs(docs, min_matches=2).collect()
-    }
-    assert got2 == {(1, 2)}
+    assert got == {(1, 2): 3, (1, 4): 3}
 
 
 def test_token_blocking_dedupes_repeated_tokens(spark):
     from blurrily_spark.operators.pairs import token_blocking_pairs
 
-    # "cat cat cat" shares ONE distinct token with "cat", not three
+    # "cat cat cat" shares ONE distinct token with "cat", not three, so
+    # (3, 4) stays below the 3 shared tokens a pair needs
     docs = spark.createDataFrame(
-        [(1, "cat cat cat"), (2, "cat")], "doc_id long, text string"
+        [(1, "cat cat cat dog bird"), (2, "cat dog bird"), (3, "cat cat cat"), (4, "cat")],
+        "doc_id long, text string",
     )
     rows = token_blocking_pairs(docs).collect()
-    assert [(r["ref_a"], r["ref_b"], r["matches"]) for r in rows] == [(1, 2, 1)]
+    assert [(r["ref_a"], r["ref_b"], r["matches"]) for r in rows] == [(1, 2, 3)]
 
 
 def test_token_blocking_max_df_purges_stopwords(spark):
     from blurrily_spark.operators.pairs import token_blocking_pairs
 
-    # "the" appears in all 3 docs -> purged at max_df=2; only (1,2) share "cat"
+    # "the" appears in all 4 docs -> purged at max_df=3, so (1,3) and (2,3)
+    # keep only {big,red}=2 and drop out; (1,2) keep {big,red,cat}=3
     docs = spark.createDataFrame(
-        [(1, "the cat"), (2, "the cat"), (3, "the dog")],
+        [(1, "the big red cat"), (2, "the big red cat"), (3, "the big red dog"), (4, "the end")],
         "doc_id long, text string",
     )
     got = {
         (r["ref_a"], r["ref_b"]): r["matches"]
-        for r in token_blocking_pairs(docs, max_df=2).collect()
+        for r in token_blocking_pairs(docs, max_df=3).collect()
     }
-    assert got == {(1, 2): 1}
+    assert got == {(1, 2): 3}
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="max_df"):
@@ -783,12 +733,12 @@ def test_token_blocking_max_df_purges_stopwords(spark):
 def test_token_blocking_normalizes_before_splitting(spark):
     from blurrily_spark.operators.pairs import token_blocking_pairs
 
-    # punctuation/case fold through the S1 pipeline: "Red, CAT!" == "red cat"
+    # punctuation/case fold through the S1 pipeline: "Red, CAT! Sat." == "red cat sat"
     docs = spark.createDataFrame(
-        [(1, "Red, CAT!"), (2, "red cat")], "doc_id long, text string"
+        [(1, "Red, CAT! Sat."), (2, "red cat sat")], "doc_id long, text string"
     )
     rows = token_blocking_pairs(docs).collect()
-    assert [(r["ref_a"], r["ref_b"], r["matches"]) for r in rows] == [(1, 2, 2)]
+    assert [(r["ref_a"], r["ref_b"], r["matches"]) for r in rows] == [(1, 2, 3)]
 
 
 # -- edit-distance join --------------------------------------------------------
@@ -951,12 +901,13 @@ def test_multipass_superset_of_each_pass(spark):
     )
 
     docs = spark.createDataFrame(
-        [(1, "red cat sat"), (2, "red cat ran"), (3, "blue dog sat")],
+        [(1, "red cat sat"), (2, "red cat sat ran"), (3, "blue dog sat")],
         "doc_id long, text string",
     )
     postings = build_postings(docs, text_col="text", ref_col="doc_id", weight_col=None)
     tri = candidate_pairs(postings, keys_only=True)
     tok = token_blocking_pairs(docs)
+    assert {(r["ref_a"], r["ref_b"]) for r in tok.collect()} == {(1, 2)}
     multi = multipass_candidates({"trigram": tri, "token": tok})
     mset = {(r["ref_a"], r["ref_b"]) for r in multi.collect()}
     for df in (tri, tok):

@@ -200,8 +200,7 @@ def _lazy_operator_cases():
         ),
         "cut_duplicate_spans": lambda d, e: dedup.cut_duplicate_spans(d, w=3),
         "lm_score": lambda d, e: corpus.lm_score(d, d),
-        "meta_blocking_wnp": lambda d, e: pairs.meta_blocking_prune(e, scheme="wnp"),
-        "meta_blocking_wep": lambda d, e: pairs.meta_blocking_prune(e, scheme="wep"),
+        "meta_blocking_wnp": lambda d, e: pairs.meta_blocking_prune(e),
         "rp_lsh_near_dup_pairs": lambda d, e: similarity.rp_lsh_near_dup_pairs(
             vectors(d), dim=2
         ),
@@ -330,9 +329,6 @@ def _purge_cases():
         "knn_join": lambda s, cap: knn_join(postings(s), k=3, max_df=cap),
         "token_blocking_pairs": lambda s, cap: pairs.token_blocking_pairs(
             docs(s), max_df=cap
-        ),
-        "phonetic_pairs": lambda s, cap: pairs.phonetic_pairs(
-            docs(s), "text", id_col="doc_id", max_block=cap
         ),
     }
 

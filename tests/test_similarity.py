@@ -40,10 +40,10 @@ def test_ivf_recall_at_shipped_params(spark, emb):
     """
     corpus, q = _split(emb)
     bf = {(r["query_id"], r["vec_id"])
-          for r in similarity.cosine_topk(corpus, q, k=5).collect()}
+          for r in similarity.cosine_topk(corpus, q).collect()}
     cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
     got = {(r["query_id"], r["vec_id"])
-           for r in similarity.ivf_topk(corpus, q, cents, k=5, nprobe=ANN_NPROBE).collect()}
+           for r in similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE).collect()}
     recall = len(got & bf) / len(bf)
     assert recall >= 0.9, f"recall {recall}"
 
@@ -54,8 +54,8 @@ def test_ivf_results_subset_of_probed_brute_force(spark, emb):
     and cos values match the exact scorer."""
     corpus, q = _split(emb)
     cents = similarity.take_centroids(corpus, 8)
-    ivf = similarity.ivf_topk(corpus, q, cents, k=5, nprobe=8)  # probe all
-    bf = similarity.cosine_topk(corpus, q, k=5)
+    ivf = similarity.ivf_topk(corpus, q, cents, nprobe=8)  # probe all
+    bf = similarity.cosine_topk(corpus, q)
     a = {(r["query_id"], r["vec_id"], round(r["cos"], 9), r["rank"]) for r in ivf.collect()}
     b = {(r["query_id"], r["vec_id"], round(r["cos"], 9), r["rank"]) for r in bf.collect()}
     assert a == b  # nprobe = k buckets => IVF degenerates to brute force
@@ -156,9 +156,9 @@ def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb, monkeypatch
             for b, old in enumerate(cents)
         ]
     bf = {(r["query_id"], r["vec_id"])
-          for r in similarity.cosine_topk(corpus, q, k=5).collect()}
+          for r in similarity.cosine_topk(corpus, q).collect()}
     got = {(r["query_id"], r["vec_id"])
-           for r in similarity.ivf_topk(corpus, q, cents, k=5, nprobe=em.ANN_NPROBE).collect()}
+           for r in similarity.ivf_topk(corpus, q, cents, nprobe=em.ANN_NPROBE).collect()}
     assert len(got & bf) / len(bf) >= 0.9
 
 
