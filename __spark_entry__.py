@@ -26,9 +26,9 @@ from blurrily_spark.operators.cluster import (
     connected_components,
     golden_records,
 )
-from blurrily_spark.operators.events import session_stats, sessionize
+from blurrily_spark.operators.events import SESSION_GAP_S, session_stats, sessionize
 from blurrily_spark.operators.find import find, find_idf, knn_join, mutual_knn_pairs
-from blurrily_spark.operators.linkage import FieldModel, estimate_m_u, fs_score
+from blurrily_spark.operators.linkage import FS_PRIOR, FieldModel, estimate_m_u, fs_score
 from blurrily_spark.quality import (
     blocking_metrics,
     cluster_metrics,
@@ -37,6 +37,8 @@ from blurrily_spark.quality import (
 )
 from blurrily_spark.operators.index import build_postings, delete_refs, stats
 from blurrily_spark.operators.pairs import (
+    SNM_WINDOW,
+    TOKEN_BLOCK_MAX_DF,
     block_filtering,
     candidate_pairs,
     idf_weighted_pairs,
@@ -48,7 +50,7 @@ from blurrily_spark.operators.pairs import (
     sorted_neighborhood_pairs,
     with_jaccard,
 )
-from blurrily_spark.operators.scoring import match_edges, with_edit_distance
+from blurrily_spark.operators.scoring import EDIT_MAX_DIST, match_edges, with_edit_distance
 
 # Fixed query workload for FIND (typos over the documents vocabulary).
 NEEDLES = [
@@ -61,41 +63,27 @@ NEEDLES = [
 PAIR_SUBSET = 100  # doc_id < 100 for quadratic pair oracles
 CC_THRESHOLD = 0.6
 SWEEP_THRESHOLDS = [0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8]
-TOKEN_BLOCK_MAX_DF = 80
-EDIT_MAX = 40
 DUP_OFFSET = 1_000_000  # synthetic near-dup ids = doc_id + offset
-NGRAM_THRESHOLD = 0.5
-NEARDUP_EST_J = 0.5
-SPAN_W = 8          # duplicate_spans rolling-window width (words)
-SIMHASH_MAX_HAMMING = 6
-MINHASH_PARAMS = dedup._permutation_params(32, seed=7)
+MINHASH_PARAMS = dedup._permutation_params()
 IVF_FIXED_K = 8     # fixed-codebook IVF (take_centroids): full DuckDB oracle
 IVF_FIXED_NPROBE = 3
-ANN_K = 16          # trained-kmeans IVF: measured recall >= 0.9 (rows-only)
 ANN_NPROBE = 11
 ANN_ITERS = 4
 EMB_SUBSET = 200    # embedding near-dup corpus: vec_id < 200 + injected dups
 EMB_DUP_OFFSET = 10_000
 EMB_DIM = 64
-NEARDUP_COS = 0.95
 SEM_K = 6           # semantic_dedup coarse codebook (take_centroids): exact oracle
-RP_BITS = 32
-RP_MAX_HAMMING = 6
-RP_SEED = 11
 LANGS = sorted(textstats.STOPWORDS)  # de, en, fr
-SNM_WINDOW = 4      # sorted-neighborhood: pair with the 3 sort successors
 # Fellegi-Sunter model over the pairs workload: per-(field, level) m/u
 # probabilities; the log2 weights are derived ONCE in Python and embedded
 # as identical double literals in the Spark plan and the DuckDB oracle.
 FS_JACC = FieldModel("jacc", "jacc_level", m=(0.05, 0.20, 0.75), u=(0.85, 0.12, 0.03))
 FS_LANG = FieldModel("lang", "lang_level", m=(0.10, 0.90), u=(0.60, 0.40))
 FS_SOURCE = FieldModel("source", "source_level", m=(0.15, 0.85), u=(0.70, 0.30))
-FS_PRIOR = 0.05
 FS_MATCHES_MIN = 10   # matches_level threshold for m/u estimation
 INCR_STRONG_J = 0.7   # incremental CC: history edges at >= 0.7, delta 0.6..0.7
 METRIC_SCALE = 10**9  # cluster_metrics scaled-integer B-cubed arithmetic
 SNM_KEYLEN = 12     # blocking key = first 12 chars of raw text
-SESSION_GAP_S = 28800  # sessionization gap (8h; median inter-event gap ~7.3h)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,9 +226,9 @@ def q_jaccard_join_exact(spark, sf_dir):
     # prefix-filtered EXACT threshold jaccard join (AllPairs/PPJoin
     # family): it equals the brute all-pairs relation, so it serves both
     # ngram_jaccard_pairs and jaccard_join_exact under one oracle SQL
-    return dedup.jaccard_join_exact(
-        _docs_with_dups(spark, sf_dir), threshold=NGRAM_THRESHOLD
-    ).select("id_a", "id_b", "inter", F.round("jaccard", 6).alias("jaccard"))
+    return dedup.jaccard_join_exact(_docs_with_dups(spark, sf_dir)).select(
+        "id_a", "id_b", "inter", F.round("jaccard", 6).alias("jaccard")
+    )
 
 
 def q_minhash_sigs(spark, sf_dir):
@@ -257,16 +245,14 @@ def q_minhash_lsh(spark, sf_dir):
 
 def q_near_dedup(spark, sf_dir):
     # LSH candidates -> CC over the dup graph -> canonical keeper per doc
-    return dedup.near_dedup(_docs_with_dups(spark, sf_dir), threshold=NEARDUP_EST_J)
+    return dedup.near_dedup(_docs_with_dups(spark, sf_dir))
 
 
 def q_near_dedup_cross(spark, sf_dir):
     # new corpus (the synthetic truncated dups) deduped AGAINST the
     # original subset: every new doc should match its source document
     base = _docs_subset(spark, sf_dir).select("doc_id", "text")
-    out = dedup.near_dedup_against(
-        _truncated_dups(base), base, threshold=NEARDUP_EST_J
-    )
+    out = dedup.near_dedup_against(_truncated_dups(base), base)
     # the API keeps NULLs for unmatched docs; the driver comparator sorts
     # row tuples, so coalesce to sentinels here (-1 / 0.0)
     return out.select(
@@ -279,19 +265,17 @@ def q_near_dedup_cross(spark, sf_dir):
 
 def q_duplicate_spans(spark, sf_dir):
     # rolling 8-word window fingerprints; cross-doc spans flagged per doc
-    return dedup.duplicate_spans(_docs_with_dups(spark, sf_dir), w=SPAN_W)
+    return dedup.duplicate_spans(_docs_with_dups(spark, sf_dir))
 
 
 def q_duplicate_span_positions(spark, sf_dir):
     # per-occurrence cut points (id, start_word, win) of duplicated spans
-    return dedup.duplicate_span_positions(_docs_with_dups(spark, sf_dir), w=SPAN_W)
+    return dedup.duplicate_span_positions(_docs_with_dups(spark, sf_dir))
 
 
 def q_cut_duplicate_spans(spark, sf_dir):
     # the cut-and-keep pass: duplicated spans removed, remainder reassembled
-    return dedup.cut_duplicate_spans(
-        _docs_with_dups(spark, sf_dir), w=SPAN_W, hash_fn="exact"
-    )
+    return dedup.cut_duplicate_spans(_docs_with_dups(spark, sf_dir), hash_fn="exact")
 
 
 def q_simhash_fp(spark, sf_dir):
@@ -300,7 +284,7 @@ def q_simhash_fp(spark, sf_dir):
 
 def q_simhash(spark, sf_dir):
     # chunk count derives from max_hamming (7 chunks for <=6): exact recall
-    return dedup.simhash_near_dups(_docs_with_dups(spark, sf_dir), max_hamming=SIMHASH_MAX_HAMMING)
+    return dedup.simhash_near_dups(_docs_with_dups(spark, sf_dir))
 
 
 def q_token_count(spark, sf_dir):
@@ -313,7 +297,7 @@ def q_ngram_contamination(spark, sf_dir):
     # flags the train doc
     train = _docs(spark, sf_dir).select("doc_id", "text")
     holdout = _truncated_dups(train.where(F.col("doc_id") % 5 == 0))
-    return corpus.ngram_contamination(train, holdout, n=SPAN_W)
+    return corpus.ngram_contamination(train, holdout)
 
 
 def q_frequent_ngrams(spark, sf_dir):
@@ -390,20 +374,18 @@ def q_lm_score(spark, sf_dir):
 # corpus-mixture spec for q_sample_stratified: four sources at distinct
 # rates, every other source dropped (the `by` map IS the mixture)
 SAMPLE_MIX = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-SAMPLE_SEED = 7
 SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
-SPLIT_SEED = 11
 
 
 def q_sample_stratified(spark, sf_dir):
     # reproducible mixture downsampling: row fate is a pure function of
     # (doc_id, seed) -- stable across engines, runs, and repartitioning
-    return corpus.sample_corpus(_docs(spark, sf_dir), by=SAMPLE_MIX, seed=SAMPLE_SEED)
+    return corpus.sample_corpus(_docs(spark, sf_dir), SAMPLE_MIX)
 
 
 def q_split_corpus(spark, sf_dir):
     return corpus.split_corpus(
-        _docs(spark, sf_dir), SPLIT_WEIGHTS, seed=SPLIT_SEED
+        _docs(spark, sf_dir), SPLIT_WEIGHTS
     ).select("doc_id", "source", "split")
 
 
@@ -483,7 +465,7 @@ def q_ann_ivf(spark, sf_dir):
     # prune far deeper at equal recall).
     corpus, q = _emb_split(spark, sf_dir)
     corpus = corpus.cache()
-    cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
+    cents = similarity.kmeans_centroids(corpus, iterations=ANN_ITERS)
     out = similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE)
     return out.select("query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank")
 
@@ -512,7 +494,7 @@ def q_ann_ivf_invariant(spark, sf_dir):
     probe choice, scoring, or ranking drift) fails the row-count gate."""
     corpus, q = _emb_split(spark, sf_dir)
     corpus = corpus.cache()
-    cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
+    cents = similarity.kmeans_centroids(corpus, iterations=ANN_ITERS)
     ivf = similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE).select(
         "query_id", "vec_id", F.round("cos", 5).alias("cos"), "rank"
     )
@@ -574,19 +556,13 @@ def _emb_with_dups(spark, sf_dir):
 
 
 def q_cosine_near_dups(spark, sf_dir):
-    out = similarity.cosine_near_dup_pairs(
-        _emb_with_dups(spark, sf_dir), threshold=NEARDUP_COS, vec_col="vec"
-    )
+    out = similarity.cosine_near_dup_pairs(_emb_with_dups(spark, sf_dir), vec_col="vec")
     return out.select("id_a", "id_b", F.round("cos", 5).alias("cos"))
 
 
 def q_rp_lsh_near_dups(spark, sf_dir):
     out = similarity.rp_lsh_near_dup_pairs(
         _emb_with_dups(spark, sf_dir),
-        threshold=NEARDUP_COS,
-        n_bits=RP_BITS,
-        max_hamming=RP_MAX_HAMMING,
-        seed=RP_SEED,
         dim=EMB_DIM,
         vec_col="vec",
     )
@@ -599,9 +575,7 @@ def q_semantic_dedup(spark, sf_dir):
     # within-cluster dup graph, CC, and the min-id keeper bit-for-bit.
     corpus = _emb_with_dups(spark, sf_dir)
     cents = similarity.take_centroids(corpus, SEM_K, vec_col="vec")
-    return similarity.semantic_dedup(
-        corpus, cents, threshold=NEARDUP_COS, vec_col="vec"
-    )
+    return similarity.semantic_dedup(corpus, cents, vec_col="vec")
 
 
 def q_sorted_neighborhood(spark, sf_dir):
@@ -613,7 +587,6 @@ def q_sorted_neighborhood(spark, sf_dir):
         _docs(spark, sf_dir).withColumn("snm_key", F.substring("text", 1, SNM_KEYLEN)),
         "snm_key",
         id_col="doc_id",
-        window=SNM_WINDOW,
     ).select(
         F.col("ref_a").alias("id_a"), F.col("ref_b").alias("id_b"), "rank_gap"
     )
@@ -653,7 +626,7 @@ def q_fs_match_weights(spark, sf_dir):
     docs = _docs_subset(spark, sf_dir)
     p = _postings(spark, sf_dir, subset=True).cache()
     levels = _fs_levels(with_jaccard(candidate_pairs(p), p), docs)
-    out = fs_score(levels, [FS_JACC, FS_LANG, FS_SOURCE], prior=FS_PRIOR)
+    out = fs_score(levels, [FS_JACC, FS_LANG, FS_SOURCE])
     return out.select(
         "ref_a",
         "ref_b",
@@ -694,7 +667,7 @@ def q_cluster_metrics(spark, sf_dir):
     # the evaluation half of ER: near-dedup clusters scored against the
     # planted truth (base doc id) -- pairwise P/R/F1 + B-cubed, one row,
     # everything reduced over the contingency table (no pair materialized)
-    nd = dedup.near_dedup(_docs_with_dups(spark, sf_dir), threshold=NEARDUP_EST_J)
+    nd = dedup.near_dedup(_docs_with_dups(spark, sf_dir))
     assign = nd.select(
         F.col("id").alias("ref"),
         F.col("keep_id").alias("entity_id"),
@@ -798,7 +771,7 @@ def q_multipass_blocking(spark, sf_dir):
     p = _postings(spark, sf_dir, subset=True)
     return multipass_candidates({
         "trigram": candidate_pairs(p, keys_only=True),
-        "token": token_blocking_pairs(docs, max_df=TOKEN_BLOCK_MAX_DF),
+        "token": token_blocking_pairs(docs),
     })
 
 
@@ -807,7 +780,7 @@ def q_edit_distance_join(spark, sf_dir):
     # candidates over the planted-dup corpus, then a length-gap prefilter
     # (free, sound: edit distance >= length difference) and the JVM's
     # THRESHOLDED levenshtein (banded DP, early exit past k) -- truncated
-    # dups sit within k=EDIT_MAX of their base doc, random pairs do not
+    # dups sit within k=EDIT_MAX_DIST of their base doc, random pairs do not
     from blurrily_spark.functions.tokenizer import with_normalized
 
     docs = _docs_with_dups(spark, sf_dir)
@@ -816,7 +789,7 @@ def q_edit_distance_join(spark, sf_dir):
     recs = with_normalized(docs, "text", "norm").select(
         F.col("doc_id").alias("ref"), "norm"
     )
-    out = with_edit_distance(cand, recs, max_dist=EDIT_MAX)
+    out = with_edit_distance(cand, recs)
     return out.select("ref_a", "ref_b", F.col("edit_dist").cast("int").alias("edit_dist"))
 
 
@@ -826,7 +799,7 @@ def q_token_blocking(spark, sf_dir):
     # (df > 80 of the 100-doc subset) -- the synthetic corpus has a tiny,
     # hot vocabulary, so the purge threshold sits above the median df to
     # keep the oracle check non-vacuous while still exercising the purge
-    return token_blocking_pairs(_docs_subset(spark, sf_dir), max_df=TOKEN_BLOCK_MAX_DF)
+    return token_blocking_pairs(_docs_subset(spark, sf_dir))
 
 
 def q_incremental_entities(spark, sf_dir):
@@ -849,7 +822,7 @@ def q_incremental_entities(spark, sf_dir):
 
 def q_sessionize(spark, sf_dir):
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return sessionize(ev, gap_seconds=SESSION_GAP_S).select(
+    return sessionize(ev).select(
         "event_id", "user_id", "session_seq"
     )
 
@@ -857,7 +830,7 @@ def q_sessionize(spark, sf_dir):
 def q_session_stats(spark, sf_dir):
     ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return session_stats(ev, gap_seconds=SESSION_GAP_S).select(
+    return session_stats(ev).select(
         "user_id",
         "session_seq",
         "n_events",
@@ -1109,7 +1082,7 @@ inter AS (
 SELECT id_a, id_b, inter,
        round(inter / CAST(ca.n + cb.n - inter AS DOUBLE), 6) AS jaccard
 FROM inter JOIN counts ca ON ca.ref = id_a JOIN counts cb ON cb.ref = id_b
-WHERE inter / CAST(ca.n + cb.n - inter AS DOUBLE) >= {NGRAM_THRESHOLD}"""
+WHERE inter / CAST(ca.n + cb.n - inter AS DOUBLE) >= {dedup.NEAR_DUP_JACCARD}"""
     # both names run the prefix-filtered exact join: one oracle
     out["jaccard_join_exact"] = out["ngram_jaccard_pairs"]
 
@@ -1125,7 +1098,7 @@ FROM hay_sig, (SELECT unnest(range(1, 33)) AS j) t"""
     out["near_dedup"] = f"""WITH RECURSIVE {oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},
 {oracle.minhash_ctes('hay', MINHASH_PARAMS)},
 cand AS ({oracle.lsh_pairs_sql('hay', num_hashes=32, bands=8)}),
-edges AS (SELECT id_a AS src, id_b AS dst FROM cand WHERE est_jaccard >= {NEARDUP_EST_J}),
+edges AS (SELECT id_a AS src, id_b AS dst FROM cand WHERE est_jaccard >= {dedup.NEAR_DUP_JACCARD}),
 {oracle.cc_walk_ctes('edges')},
 comp AS (SELECT node, CAST(min(label) AS BIGINT) AS keep FROM walk GROUP BY node)
 SELECT n.ref AS id,
@@ -1142,7 +1115,7 @@ FROM hay_norm n LEFT JOIN comp c ON c.node = n.ref"""
 {oracle.norm_cte('newc', new_corpus, 'doc_id', 'text')},
 {oracle.minhash_ctes('newc', MINHASH_PARAMS)},
 cand AS ({oracle.lsh_cross_pairs_sql('newc', 'refc', num_hashes=32, bands=8)}),
-qual AS (SELECT * FROM cand WHERE est_jaccard >= {NEARDUP_EST_J}),
+qual AS (SELECT * FROM cand WHERE est_jaccard >= {dedup.NEAR_DUP_JACCARD}),
 best AS (
   SELECT new_id, ref_id, est_jaccard FROM (
     SELECT new_id, ref_id, est_jaccard,
@@ -1180,9 +1153,9 @@ SELECT query_ref, ref, matches, weight, rank FROM ranked WHERE rank <= 3"""
     out["duplicate_spans"] = f"""WITH {oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},
 words AS (SELECT ref, string_split(norm, ' ') AS ws FROM hay_norm),
 wins AS (
-  SELECT w.ref, array_to_string(w.ws[t.i : t.i + {SPAN_W - 1}], ' ') AS win
+  SELECT w.ref, array_to_string(w.ws[t.i : t.i + {dedup.SPAN_WORDS - 1}], ' ') AS win
   FROM words w,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {SPAN_W} + 1, 1))) AS i) t
+       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {dedup.SPAN_WORDS} + 1, 1))) AS i) t
 ),
 dupw AS (SELECT win FROM wins GROUP BY win HAVING count(DISTINCT ref) >= 2),
 tot AS (SELECT ref, count(*) AS n_windows FROM wins GROUP BY ref),
@@ -1201,9 +1174,9 @@ FROM tot t LEFT JOIN dup d ON d.ref = t.ref"""
     span_pos_ctes = f"""{oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},
 words AS (SELECT ref, string_split(norm, ' ') AS ws FROM hay_norm),
 wins AS (
-  SELECT w.ref, t.i, array_to_string(w.ws[t.i : t.i + {SPAN_W - 1}], ' ') AS win
+  SELECT w.ref, t.i, array_to_string(w.ws[t.i : t.i + {dedup.SPAN_WORDS - 1}], ' ') AS win
   FROM words w,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {SPAN_W} + 1, 1))) AS i) t
+       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {dedup.SPAN_WORDS} + 1, 1))) AS i) t
 ),
 dupw AS (SELECT win FROM wins GROUP BY win HAVING count(DISTINCT ref) >= 2),
 pos AS (SELECT w.ref, w.i, w.win FROM wins w WHERE w.win IN (SELECT win FROM dupw))"""
@@ -1214,7 +1187,7 @@ SELECT ref AS id, CAST(i - 1 AS INT) AS start_word, win FROM pos"""
     out["cut_duplicate_spans"] = f"""WITH {span_pos_ctes},
 cov AS (
   SELECT DISTINCT p.ref, t.p
-  FROM pos p, LATERAL (SELECT unnest(generate_series(p.i, p.i + {SPAN_W - 1})) AS p) t
+  FROM pos p, LATERAL (SELECT unnest(generate_series(p.i, p.i + {dedup.SPAN_WORDS - 1})) AS p) t
 ),
 covlist AS (SELECT ref, list(p) AS ps FROM cov GROUP BY ref)
 SELECT wd.ref AS id,
@@ -1232,7 +1205,7 @@ SELECT ref AS id, simhash FROM hay_fp"""
 SELECT a.ref AS id_a, b.ref AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM hay_fp a JOIN hay_fp b ON a.ref < b.ref
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}"""
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {dedup.SIMHASH_MAX_HAMMING}"""
 
     # staged scrub: each count is taken on the text the NEXT replacement
     # runs on, mirroring textstats.scrub_pii's fold order (URL > email > IP)
@@ -1312,15 +1285,15 @@ LEFT JOIN w2 ON w2.ref = l.ref LEFT JOIN w3 ON w3.ref = l.ref"""
 {oracle.norm_cte('ho', holdout_corpus, 'doc_id', 'text')},
 tw AS (SELECT ref, string_split(norm, ' ') AS ws FROM tr_norm),
 tg AS (
-  SELECT DISTINCT w.ref, array_to_string(w.ws[t.i : t.i + {SPAN_W - 1}], ' ') AS g
+  SELECT DISTINCT w.ref, array_to_string(w.ws[t.i : t.i + {corpus.CONTAMINATION_WORDS - 1}], ' ') AS g
   FROM tw w,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {SPAN_W} + 1, 1))) AS i) t
+       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {corpus.CONTAMINATION_WORDS} + 1, 1))) AS i) t
 ),
 hw AS (SELECT ref, string_split(norm, ' ') AS ws FROM ho_norm),
 hg AS (
-  SELECT DISTINCT array_to_string(w.ws[t.i : t.i + {SPAN_W - 1}], ' ') AS g
+  SELECT DISTINCT array_to_string(w.ws[t.i : t.i + {corpus.CONTAMINATION_WORDS - 1}], ' ') AS g
   FROM hw w,
-       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {SPAN_W} + 1, 1))) AS i) t
+       LATERAL (SELECT unnest(generate_series(1, greatest(len(w.ws) - {corpus.CONTAMINATION_WORDS} + 1, 1))) AS i) t
 ),
 tot AS (SELECT ref, count(*) AS n_grams FROM tg GROUP BY ref),
 hit AS (SELECT ref, count(*) AS c FROM tg WHERE g IN (SELECT g FROM hg) GROUP BY ref)
@@ -1451,12 +1424,12 @@ FROM j"""
         for src, frac in SAMPLE_MIX.items()
     )
     out["sample_stratified"] = f"""SELECT * FROM documents
-WHERE {lcg.format(seed=SAMPLE_SEED)} < CASE source {mix_case} ELSE 0 END"""
+WHERE {lcg.format(seed=corpus.SAMPLE_SEED)} < CASE source {mix_case} ELSE 0 END"""
 
     uppers, remainder = corpus.split_thresholds(SPLIT_WEIGHTS)
     split_case = " ".join(f"WHEN u < {t} THEN '{name}'" for name, t in uppers)
     out["split_corpus"] = f"""WITH u AS (
-  SELECT doc_id, source, {lcg.format(seed=SPLIT_SEED)} AS u FROM documents
+  SELECT doc_id, source, {lcg.format(seed=corpus.SPLIT_SEED)} AS u FROM documents
 )
 SELECT doc_id, source, CASE {split_case} ELSE '{remainder}' END AS split
 FROM u"""
@@ -1625,11 +1598,11 @@ vcorpus AS (SELECT * FROM ve UNION ALL SELECT * FROM vdups)"""
 SELECT id_a, id_b, round(cos, 5) AS cos FROM (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos('a.vec', 'b.vec')} AS cos
   FROM vcorpus a, vcorpus b WHERE a.vec_id < b.vec_id
-) WHERE cos >= {NEARDUP_COS}"""
+) WHERE cos >= {similarity.NEAR_DUP_COSINE}"""
 
     # random-hyperplane LSH: same planes/blocking as the Spark operator,
     # re-derived entirely in SQL (sign-bit sketch -> chunk match -> rescore)
-    planes = similarity.random_hyperplanes(RP_BITS, EMB_DIM, RP_SEED)
+    planes = similarity.random_hyperplanes(EMB_DIM)
     from blurrily_spark.functions.hashing import chunk_bounds
 
     def _plane_lit(p: list[float]) -> str:
@@ -1643,7 +1616,7 @@ SELECT id_a, id_b, round(cos, 5) AS cos FROM (
     chunk_eq = " OR ".join(
         f"((a.sig >> {lo}) & {(1 << (hi - lo)) - 1}) = "
         f"((b.sig >> {lo}) & {(1 << (hi - lo)) - 1})"
-        for lo, hi in chunk_bounds(RP_MAX_HAMMING + 1, RP_BITS)
+        for lo, hi in chunk_bounds(similarity.RP_MAX_HAMMING + 1, similarity.RP_BITS)
     )
     out["rp_lsh_near_dups"] = f"""WITH {emb_corpus},
 vsigs AS (
@@ -1652,7 +1625,7 @@ vsigs AS (
 SELECT id_a, id_b, round(cos, 5) AS cos FROM (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos('a.vec', 'b.vec')} AS cos
   FROM vsigs a JOIN vsigs b ON a.vec_id < b.vec_id AND ({chunk_eq})
-) WHERE cos >= {NEARDUP_COS}"""
+) WHERE cos >= {similarity.NEAR_DUP_COSINE}"""
 
     # semantic_dedup: full SemDeDup re-derivation -- take_centroids codebook,
     # argmax-cosine assignment (tie -> lowest cidx, mirroring Spark's
@@ -1674,7 +1647,7 @@ cassign AS (
 edges AS (
   SELECT a.vec_id AS src, b.vec_id AS dst
   FROM cassign a JOIN cassign b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  WHERE {_cos('a.vec', 'b.vec')} >= {NEARDUP_COS}
+  WHERE {_cos('a.vec', 'b.vec')} >= {similarity.NEAR_DUP_COSINE}
 ),
 {oracle.cc_walk_ctes('edges')},
 comp AS (SELECT node, CAST(min(label) AS BIGINT) AS keep FROM walk GROUP BY node)
@@ -1799,7 +1772,7 @@ FROM grid g LEFT JOIN counts c ON c.field = g.field AND c.level = g.level"""
     out["cluster_metrics"] = f"""WITH RECURSIVE {oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},
 {oracle.minhash_ctes('hay', MINHASH_PARAMS)},
 cand AS ({oracle.lsh_pairs_sql('hay', num_hashes=32, bands=8)}),
-edges AS (SELECT id_a AS src, id_b AS dst FROM cand WHERE est_jaccard >= {NEARDUP_EST_J}),
+edges AS (SELECT id_a AS src, id_b AS dst FROM cand WHERE est_jaccard >= {dedup.NEAR_DUP_JACCARD}),
 {oracle.cc_walk_ctes('edges')},
 comp AS (SELECT node, CAST(min(label) AS BIGINT) AS keep FROM walk GROUP BY node),
 assign AS (
@@ -1988,7 +1961,7 @@ SELECT ref_a, ref_b,
 FROM cand GROUP BY 1, 2"""
 
     # --- edit_distance_join: trigram candidates + length-gap prefilter +
-    # exact levenshtein <= EDIT_MAX; both engines' levenshtein is the
+    # exact levenshtein <= EDIT_MAX_DIST; both engines' levenshtein is the
     # standard unit-cost edit distance, so counts are integer-exact
     out["edit_distance_join"] = f"""WITH {oracle.norm_cte('hay', dup_corpus, 'doc_id', 'text')},
 {oracle.trigram_ctes('hay')},
@@ -1998,8 +1971,8 @@ SELECT p.ref_a, p.ref_b,
 FROM rawpairs p
 JOIN hay_norm na ON na.ref = p.ref_a
 JOIN hay_norm nb ON nb.ref = p.ref_b
-WHERE abs(length(na.norm) - length(nb.norm)) <= {EDIT_MAX}
-  AND levenshtein(na.norm, nb.norm) <= {EDIT_MAX}"""
+WHERE abs(length(na.norm) - length(nb.norm)) <= {EDIT_MAX_DIST}
+  AND levenshtein(na.norm, nb.norm) <= {EDIT_MAX_DIST}"""
 
     # --- threshold_sweep: P/R/F1 of `jaccard >= t` per threshold vs the
     # planted-dup truth; integer conditional sums, floats only in the final

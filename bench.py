@@ -255,7 +255,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         (r["query_id"], r["vec_id"])
         for r in similarity.cosine_topk(corpus, qv).collect()
     }
-    cents = similarity.kmeans_centroids(corpus, k=em.ANN_K, iterations=em.ANN_ITERS)
+    cents = similarity.kmeans_centroids(corpus, iterations=em.ANN_ITERS)
     got: set = set()
 
     def record_ivf(df) -> None:
@@ -276,7 +276,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         emb_all.select((F.col("vec_id") + 1_000_000).alias("vec_id"), sem_dup.alias("vec"))
     ).cache()
     sem_corpus.count()
-    sem_cents = similarity.kmeans_centroids(sem_corpus, k=16, iterations=2, vec_col="vec")
+    sem_cents = similarity.kmeans_centroids(sem_corpus, iterations=2, vec_col="vec")
 
     # round 5: ER evaluation metrics at SF scale -- the near-dedup clustering
     # scored against the planted truth (pairwise + B-cubed, contingency-table
@@ -323,9 +323,11 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         try:
             pairs = _with_jacc(_cand_pairs(p, max_df=CAP_DF), p)
             lev = em._fs_levels(pairs, docs_meta)
-            row = _fs_score(
-                lev, [em.FS_JACC, em.FS_LANG, em.FS_SOURCE], prior=em.FS_PRIOR
-            ).selectExpr("count(*) AS c", "avg(match_weight)").collect()[0]
+            row = (
+                _fs_score(lev, [em.FS_JACC, em.FS_LANG, em.FS_SOURCE])
+                .selectExpr("count(*) AS c", "avg(match_weight)")
+                .collect()[0]
+            )
             extras["fs_pairs"] = row["c"]
         finally:
             p.unpersist()
@@ -343,7 +345,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
             recs = _with_norm(docs_meta, "text", "norm").select(
                 F.col("doc_id").alias("ref"), "norm"
             )
-            row = _with_edit(cand, recs, max_dist=40).selectExpr(
+            row = _with_edit(cand, recs).selectExpr(
                 "count(*) AS c", "avg(edit_dist)"
             ).collect()[0]
             extras["edit_pairs"] = row["c"]
@@ -456,18 +458,16 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ),
         Query(
             "q_simhash",
-            plan=lambda: dedup.simhash_near_dups(
-                sketch_corpus, max_hamming=6, hash_fn="fast"
-            ),
+            plan=lambda: dedup.simhash_near_dups(sketch_corpus, hash_fn="fast"),
             act=count,
         ),
         # round 4: cross-corpus dedup (fresh batch vs retained corpus) and
         # the span cut-and-keep pass, both on the production hash family
         Query(
             "q_near_dedup_cross",
-            plan=lambda: dedup.near_dedup_against(
-                new_batch, docs_only, threshold=0.5, hash_fn="fast"
-            ).where("is_dup = 1"),
+            plan=lambda: dedup.near_dedup_against(new_batch, docs_only, hash_fn="fast").where(
+                "is_dup = 1"
+            ),
             act=count,
         ),
         # sum of kept lengths forces the full rebuild, not just row counting
@@ -484,7 +484,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         Query(
             "q_contamination",
             plan=lambda: corpus_ops.ngram_contamination(
-                docs_only, holdout, n=8, hash_fn="fast"
+                docs_only, holdout, hash_fn="fast"
             ).where("is_contaminated = 1"),
             act=count,
         ),
@@ -526,9 +526,7 @@ def queries(spark, sf_dir: str = SF_DIR, cpus: str = CPUS) -> Queries:
         ),
         Query(
             "q_semantic_dedup",
-            act=lambda: similarity.semantic_dedup(
-                sem_corpus, sem_cents, threshold=0.95, vec_col="vec"
-            )
+            act=lambda: similarity.semantic_dedup(sem_corpus, sem_cents, vec_col="vec")
             .where("is_dup = 1")
             .count(),
         ),

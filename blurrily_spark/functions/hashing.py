@@ -13,10 +13,13 @@ default in Spark 4) can never overflow-error, and DuckDB's checked BIGINT
 math is equally safe. Two independent hashes (bases 31 and 131) give 62
 usable bits where one 31-bit value is not enough.
 
-Operators take ``hash_fn='portable'|'fast'``: *portable* is this family
-(verifiable against the DuckDB oracle), *fast* is JVM ``xxhash64`` (native,
-codegen'd -- the 100 TB production setting, identical semantics modulo the
-hash family).
+The sketch operators (MinHash, SimHash) take
+``hash_fn='portable'|'fast'``: *portable* is this family (verifiable
+against the DuckDB oracle), *fast* is JVM ``xxhash64`` (native, codegen'd
+-- the 100 TB production setting, identical semantics modulo the hash
+family). The span passes and the contamination join key raw strings
+instead and take ``hash_fn='exact'|'fast'``: *exact* shuffles the n-word
+strings themselves, *fast* their ``xxhash64``. Any other value is refused.
 """
 
 from __future__ import annotations
@@ -40,12 +43,12 @@ def char_codes(c: Column) -> Column:
     ).otherwise(F.array().cast("array<long>"))
 
 
-def poly_hash(c: Column, base: int = POLY_BASE_A, mod: int = MERSENNE) -> Column:
-    """Portable polynomial hash of a string column, in [0, mod)."""
+def poly_hash(c: Column, base: int = POLY_BASE_A) -> Column:
+    """Portable polynomial hash of a string column, in [0, MERSENNE)."""
     return F.aggregate(
         char_codes(c),
         F.lit(0).cast("long"),
-        lambda acc, x: F.pmod(acc * base + x, F.lit(mod)),
+        lambda acc, x: F.pmod(acc * base + x, F.lit(MERSENNE)),
     )
 
 

@@ -45,7 +45,9 @@ from pyspark.sql import functions as F
 
 from blurrily_spark.config import spread_small_input
 from blurrily_spark.functions.tokenizer import with_normalized
-from blurrily_spark.operators.dedup import word_shingles
+from blurrily_spark.operators.dedup import _check_hash_fn, word_shingles
+
+CONTAMINATION_WORDS = 8  # word n-gram that ngram_contamination matches
 
 
 def _exploded_grams(
@@ -62,14 +64,13 @@ def _exploded_grams(
 def ngram_contamination(
     train: DataFrame,
     holdout: DataFrame,
-    n: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_fn: str = "exact",
 ) -> DataFrame:
     """Benchmark decontamination: per TRAIN document, how many of its
-    distinct word ``n``-grams appear verbatim anywhere in the ``holdout``
-    (evaluation) corpus.
+    distinct word 8-grams (:data:`CONTAMINATION_WORDS`) appear verbatim
+    anywhere in the ``holdout`` (evaluation) corpus.
 
     Returns one row per train document:
     ``(id, n_grams, n_contaminated, contamination, is_contaminated)``
@@ -83,9 +84,10 @@ def ngram_contamination(
     a left-semi equi-join to count hits, and a left join back onto the
     per-doc totals. Linear in token count; no doc x doc work.
     """
-    t = _exploded_grams(train, id_col, text_col, n, distinct=True)
+    _check_hash_fn(hash_fn, ("exact", "fast"))
+    t = _exploded_grams(train, id_col, text_col, CONTAMINATION_WORDS, distinct=True)
     h = (
-        _exploded_grams(holdout, id_col, text_col, n, distinct=False)
+        _exploded_grams(holdout, id_col, text_col, CONTAMINATION_WORDS, distinct=False)
         .select("gram")
         .distinct()
     )
@@ -208,6 +210,7 @@ def tfidf_top_terms(
 
 _MINSTD = 48271
 _MINSTD_MOD = 2_147_483_647  # 2^31 - 1 (prime), the Lehmer/MINSTD modulus
+SAMPLE_SEED, SPLIT_SEED = 7, 11  # seeds of sample_corpus's and split_corpus's draws
 
 
 def _lcg_u(key, seed: int):
@@ -234,20 +237,18 @@ def _threshold(fraction: float) -> int:
 
 def sample_corpus(
     df: DataFrame,
-    *,
     by: dict[str, float],
     stratum_col: str = "source",
     key_col: str = "doc_id",
-    seed: int = 1,
 ) -> DataFrame:
     """Deterministic stratified corpus sampling: keep a row iff its key's
     :func:`_lcg_u` value falls under ``floor(fraction * (2^31-1))``, where
     ``by`` maps each stratum value to its fraction. Rows whose stratum is
-    absent are DROPPED -- ``by`` IS the mixture spec. The decision is
-    a pure function of ``(key, seed)``: stable under repartitioning,
-    re-runs, engine changes, and corpus growth (a row's fate never
-    depends on other rows), which is what makes ablation and mixture
-    experiments comparable across pipeline versions. Plan shape: one
+    absent are DROPPED -- ``by`` IS the mixture spec. The decision is a
+    pure function of the key (seeded with :data:`SAMPLE_SEED`): stable
+    under repartitioning, re-runs, engine changes, and corpus growth (a
+    row's fate never depends on other rows), which is what makes ablation
+    and mixture experiments comparable across pipeline versions. Plan shape: one
     codegen'd Filter over the scan -- no shuffle, no UDF (pinned in
     tests/test_plans.py)."""
     if not by:
@@ -255,7 +256,7 @@ def sample_corpus(
     thr = F.lit(0)
     for value, frac in by.items():
         thr = F.when(F.col(stratum_col) == value, F.lit(_threshold(frac))).otherwise(thr)
-    return df.where(_lcg_u(F.col(key_col), seed) < thr)
+    return df.where(_lcg_u(F.col(key_col), SAMPLE_SEED) < thr)
 
 
 def split_corpus(
@@ -263,20 +264,20 @@ def split_corpus(
     weights: dict[str, float],
     *,
     key_col: str = "doc_id",
-    seed: int = 1,
     split_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test carving: adds ``split_col`` naming
     each row's split, chosen by where its :func:`_lcg_u` value falls in
     the cumulative ``weights`` intervals (normalized; insertion order =
     interval order). Splits are exhaustive and disjoint by construction,
-    and a row's assignment is a pure function of ``(key, seed)`` -- the
-    holdout set cannot leak into training when the corpus is re-sharded,
-    re-deduped upstream, or grown (existing rows keep their split).
+    and a row's assignment is a pure function of the key (seeded with
+    :data:`SPLIT_SEED`) -- the holdout set cannot leak into training when
+    the corpus is re-sharded, re-deduped upstream, or grown (existing rows
+    keep their split).
     Zero-shuffle single projection, same portability contract as
     :func:`sample_corpus`."""
     uppers, last = split_thresholds(weights)
-    u = _lcg_u(F.col(key_col), seed)
+    u = _lcg_u(F.col(key_col), SPLIT_SEED)
     expr = F.lit(last)  # the last interval takes the remainder
     for name, upper in reversed(uppers):
         expr = F.when(u < upper, F.lit(name)).otherwise(expr)

@@ -42,6 +42,15 @@ SIMHASH_BITS = 62  # 2 x 31-bit portable hashes; fits a positive int64
 SHINGLE_WORDS = 3  # word n-gram of the exact Jaccard join and of MinHash
 MINHASH_HASHES = 32  # signature length
 MINHASH_BANDS = 8  # LSH bands of MINHASH_HASHES // MINHASH_BANDS rows each
+NEAR_DUP_JACCARD = 0.5  # 3-gram Jaccard (exact, or MinHash-estimated) of a near-dup
+SPAN_WORDS = 8  # rolling window of the span passes, in words
+SIMHASH_MAX_HAMMING = 6  # fingerprint bits two SimHash near-dups may differ in
+
+
+def _check_hash_fn(hash_fn: str, accepted: tuple[str, str]) -> None:
+    """Refuse a ``hash_fn`` outside ``accepted`` (sites test only ``'fast'``)."""
+    if hash_fn not in accepted:
+        raise ValueError(f"hash_fn must be {accepted[0]!r} or {accepted[1]!r}, got {hash_fn!r}")
 
 
 def exact_duplicates(
@@ -83,11 +92,10 @@ def jaccard_join_exact(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    threshold: float = 0.5,
 ) -> DataFrame:
     """EXACT threshold Jaccard self-join via prefix filtering: every pair
     whose sets of word 3-grams (:data:`SHINGLE_WORDS`) have Jaccard >=
-    ``threshold``, no misses, no approximation,
+    ``t`` = 0.5 (:data:`NEAR_DUP_JACCARD`), no misses, no approximation,
     without the all-pairs blowup (AllPairs / PPJoin family: Bayardo et
     al., WWW 2007; Xiao et al., WWW 2008).
 
@@ -116,8 +124,6 @@ def jaccard_join_exact(
 
     Returns ``(id_a, id_b, inter, jaccard)``.
     """
-    if not (0 < threshold <= 1):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = (
         with_normalized(spread_small_input(df), text_col, "_norm")
         .select(
@@ -129,7 +135,7 @@ def jaccard_join_exact(
     counts = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     pos_win = Window.partitionBy("id").orderBy(F.col("_df").asc(), F.col("sh").asc())
-    prefix_len = F.col("n_sh") - F.ceil(threshold * F.col("n_sh") - 1e-9) + 1
+    prefix_len = F.col("n_sh") - F.ceil(NEAR_DUP_JACCARD * F.col("n_sh") - 1e-9) + 1
     prefix = (
         sh.join(dfreq, "sh")
         .withColumn("_pos", F.row_number().over(pos_win))
@@ -142,7 +148,7 @@ def jaccard_join_exact(
         # size filter: J >= t needs t*max <= min (slack admits, never drops)
         .where(
             F.least("n_sh_a", "n_sh_b") + F.lit(1e-9)
-            >= threshold * F.greatest("n_sh_a", "n_sh_b")
+            >= NEAR_DUP_JACCARD * F.greatest("n_sh_a", "n_sh_b")
         )
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
@@ -156,24 +162,25 @@ def jaccard_join_exact(
             F.col("inter")
             / (F.size("_arr_a") + F.size("_arr_b") - F.col("inter")).cast("double"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= NEAR_DUP_JACCARD)
         .select("id_a", "id_b", "inter", "jaccard")
     )
 
 
-def _permutation_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the universal-hash permutations."""
+def _permutation_params() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs (seed 7) of the MINHASH_HASHES permutations."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(7)
     return [
         (rng.randrange(1, MERSENNE - 1), rng.randrange(0, MERSENNE - 1))
-        for _ in range(num_hashes)
+        for _ in range(MINHASH_HASHES)
     ]
 
 
 def _shingle_hash(s: Column, hash_fn: str) -> Column:
     """Hash of one shingle into [0, MERSENNE)."""
+    _check_hash_fn(hash_fn, ("portable", "fast"))
     if hash_fn == "fast":
         return F.pmod(F.xxhash64(s), F.lit(MERSENNE))
     return poly_hash(s)
@@ -193,7 +200,7 @@ def minhash_signatures(
     keeps every product < 2^62 (ANSI-safe). All JVM-side: one hash per
     shingle, then one array_min(transform(...)) per signature position.
     """
-    params = _permutation_params(MINHASH_HASHES)
+    params = _permutation_params()
     base = with_normalized(spread_small_input(df), text_col, "_norm").select(
         F.col(id_col).alias("id"),
         F.transform(
@@ -322,14 +329,13 @@ def near_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    threshold: float = 0.5,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """End-to-end near-duplicate corpus dedup -- the retained-corpus face
     of MinHash LSH: candidate pairs from banded signatures (32 hashes in
-    8 bands, as in :func:`minhash_lsh_pairs`), filtered at
-    ``est_jaccard >= threshold``, connected components over the resulting
-    dup graph, smallest id per component elected canonical.
+    8 bands, as in :func:`minhash_lsh_pairs`), filtered at ``est_jaccard
+    >= 0.5`` (:data:`NEAR_DUP_JACCARD`), connected components over the
+    resulting dup graph, smallest id per component elected canonical.
 
     Returns one row per input document: ``(id, keep_id, is_dup)``;
     ``WHERE is_dup = 0`` is the deduplicated corpus, ``keep_id`` maps every
@@ -345,7 +351,7 @@ def near_dedup(
 
     _require_integral_id(df, id_col, "near_dedup")
     pairs = minhash_lsh_pairs(df, id_col, text_col, hash_fn=hash_fn)
-    edges = pairs.where(F.col("est_jaccard") >= threshold).select(
+    edges = pairs.where(F.col("est_jaccard") >= NEAR_DUP_JACCARD).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     return _keepers(assign_entities(df.select(id_col), edges, node_col=id_col))
@@ -366,7 +372,6 @@ def near_dedup_against(
     ref_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    threshold: float = 0.5,
     hash_fn: str = "portable",
 ) -> DataFrame:
     """Cross-corpus near-dedup: flag documents of ``new_df`` that
@@ -375,8 +380,8 @@ def near_dedup_against(
 
     Returns one row per new document:
     ``(id, matched_ref_id, est_jaccard, is_dup)`` where ``matched_ref_id``
-    is the reference document with the highest estimated Jaccard >=
-    ``threshold`` (ties break to the smallest ref id) and NULL /
+    is the reference document with the highest estimated Jaccard >= 0.5
+    (:data:`NEAR_DUP_JACCARD`; ties to the smallest ref id) and NULL /
     ``is_dup=0`` when nothing qualifies. The two corpora's id spaces are
     independent -- orientation is preserved, ids are never compared across
     sides.
@@ -398,7 +403,7 @@ def near_dedup_against(
     joined = banded(new_df, "new_id", "a").join(
         banded(ref_df, "ref_id", "b"), ["band", "bhash"]
     )
-    cand = _banded_candidates(joined).where(F.col("est_jaccard") >= threshold)
+    cand = _banded_candidates(joined).where(F.col("est_jaccard") >= NEAR_DUP_JACCARD)
     # min(struct(1-e, ref_id, e)): max est_jaccard, ties to the SMALLEST
     # ref id, via one partial-aggregating min -- no window (a row_number
     # would lose map-side combine) and no id negation (-ref_id raises
@@ -433,11 +438,11 @@ def near_dedup_against(
 
 
 def _span_occurrences(
-    df: DataFrame, id_col: str, text_col: str, w: int, hash_fn: str, keep_win: bool
+    df: DataFrame, id_col: str, text_col: str, hash_fn: str, keep_win: bool
 ) -> DataFrame:
     """One row per window occurrence: ``(id, start_word[, win], _dup)``
-    over rolling ``w``-word windows of the normalized text, one at every
-    word. ``_dup`` is true iff the window occurs in two or more distinct
+    over rolling :data:`SPAN_WORDS`-word windows of the normalized text,
+    one at every word. ``_dup`` is true iff the window occurs in two or more distinct
     documents (non-NULL ids, as ``count_distinct`` counts them).
 
     One pass: the windows are built once and the document count is a
@@ -445,11 +450,12 @@ def _span_occurrences(
     per key -- so the occurrence stream is never re-read by a separate
     frequency aggregation and a join back; the plan stays lazy.
     """
+    _check_hash_fn(hash_fn, ("exact", "fast"))
     d = with_normalized(spread_small_input(df), text_col, "_norm")
-    # a short doc (fewer than w words) is one whole-text window at word 0
+    # a short doc (fewer than SPAN_WORDS words) is one whole-text window
     occ = d.select(
         F.col(id_col).cast("long").alias("id"),
-        F.posexplode(word_shingles(F.col("_norm"), w)).alias("start_word", "win"),
+        F.posexplode(word_shingles(F.col("_norm"), SPAN_WORDS)).alias("start_word", "win"),
     )
     key = "win"
     if hash_fn == "fast":
@@ -490,12 +496,11 @@ def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 8,
     hash_fn: str = "exact",
 ) -> DataFrame:
-    """Span-level duplicate statistics: rolling ``w``-word windows over the
-    normalized text; a window appearing verbatim in two or more distinct
-    documents is a duplicated span.
+    """Span-level duplicate statistics: rolling 8-word windows
+    (:data:`SPAN_WORDS`) over the normalized text; a window appearing
+    verbatim in two or more distinct documents is a duplicated span.
 
     The DataFrame-expressible face of substring dedup (the suffix-array
     method of Lee et al., "Deduplicating Training Data Makes Language
@@ -512,13 +517,13 @@ def duplicate_spans(
     :func:`_span_occurrences`) and one per-doc rollup counts them --
     equi-key shuffles over a single read of the input, never pairwise, and
     no job runs before the action. ``hash_fn='fast'`` shuffles 8-byte
-    ``xxhash64`` window keys instead of the w-word strings (the default
+    ``xxhash64`` window keys instead of the 8-word strings (the default
     'exact' keeps raw windows so the DuckDB oracle can reproduce the
-    result bit-for-bit). Documents shorter than ``w`` words contribute
+    result bit-for-bit). Documents shorter than 8 words contribute
     their whole text as one window. At most one document may have a NULL
     id; with two or more the query fails.
     """
-    occ = _span_occurrences(df, id_col, text_col, w, hash_fn, keep_win=False)
+    occ = _span_occurrences(df, id_col, text_col, hash_fn, keep_win=False)
     return occ.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum(F.col("_dup").cast("long")).alias("n_dup_windows"),
@@ -538,7 +543,6 @@ def duplicate_span_positions(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 8,
 ) -> DataFrame:
     """Per-span cut points for :func:`duplicate_spans` (round-3 verdict
     #7): one row per OCCURRENCE of a duplicated window --
@@ -554,7 +558,7 @@ def duplicate_span_positions(
     window, so the DuckDB oracle reproduces rows bit-for-bit.
     """
     return (
-        _span_occurrences(df, id_col, text_col, w, "exact", keep_win=True)
+        _span_occurrences(df, id_col, text_col, "exact", keep_win=True)
         .where("_dup")
         .drop("_dup")
     )
@@ -564,11 +568,11 @@ def cut_duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    w: int = 8,
     hash_fn: str = "fast",
 ) -> DataFrame:
     """Cut-and-keep pass: remove every word covered by a duplicated
-    ``w``-word window and reassemble the remaining text in order.
+    8-word window (:data:`SPAN_WORDS`) and reassemble the remaining text
+    in order.
 
     Returns one row per document id:
     ``(id, kept_text, n_words, n_kept_words)`` -- a fully-duplicated
@@ -579,14 +583,14 @@ def cut_duplicate_spans(
 
     Scale shape: duplicated occurrences (the one-pass flagging of
     :func:`duplicate_span_positions`, without the span text) -> covered
-    word positions (explode of at most w per occurrence, deduped on
+    word positions (explode of at most 8 per occurrence, deduped on
     (id, pos)) -> one outer join against the document's indexed words ->
     one per-doc aggregation that counts the words and rebuilds the text
     from the uncovered ones (sort_array over (pos, word) structs; bounded
     by the document length, which the input row already holds). No
     pairwise work anywhere, and no job before the action.
     """
-    occ = _span_occurrences(df, id_col, text_col, w, hash_fn, keep_win=False)
+    occ = _span_occurrences(df, id_col, text_col, hash_fn, keep_win=False)
     positions = occ.where("_dup")
     d = with_normalized(spread_small_input(df), text_col, "_norm")
     words = F.split(F.col("_norm"), " ")
@@ -599,7 +603,7 @@ def cut_duplicate_spans(
     covered = positions.select(
         F.col("id").alias("_cid"),
         F.explode(
-            F.sequence(F.col("start_word"), F.col("start_word") + F.lit(w - 1))
+            F.sequence(F.col("start_word"), F.col("start_word") + F.lit(SPAN_WORDS - 1))
         ).alias("_cpos"),
     ).distinct()
     # null-safe id equality: a NULL-id document is still a document whose
@@ -635,6 +639,7 @@ def cut_duplicate_spans(
 
 def _token_hashes(df_tok: DataFrame, hash_fn: str) -> DataFrame:
     """Adds 62 bit sources: columns h1 (bits 0..30) and h2 (bits 31..61)."""
+    _check_hash_fn(hash_fn, ("portable", "fast"))
     if hash_fn == "fast":
         h = F.xxhash64("tok")
         return df_tok.withColumn("h1", h.bitwiseAND(F.lit(MERSENNE))).withColumn(
@@ -727,21 +732,21 @@ def simhash_near_dups(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
     hash_fn: str = "portable",
 ) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming: exact recall.
+    """Near-dup pairs with Hamming(simhash) <= 6
+    (:data:`SIMHASH_MAX_HAMMING`): exact recall.
 
-    Blocking: the 62-bit fingerprint is split into ``max_hamming + 1``
-    disjoint chunks; a pair within the threshold differs in at most
-    ``max_hamming`` bits, so by pigeonhole at least one chunk matches
-    exactly -- candidates come from ``max_hamming + 1`` equi-joins, never a
-    cross join, with NO recall loss at any threshold (the chunk count is
-    derived from the threshold; a fixed chunking silently misses pairs the
-    moment the caller raises the threshold).
+    Blocking: the 62-bit fingerprint is split into 7 disjoint chunks; a
+    pair within the threshold differs in at most 6 bits, so by pigeonhole
+    at least one chunk matches exactly -- candidates come from 7
+    equi-joins, never a cross join, with NO recall loss (the chunk count
+    is derived from the threshold by :func:`hamming_chunks`).
     """
     chunks = simhash62(df, id_col, text_col, hash_fn).select(
-        "id", "simhash", F.inline(hamming_chunks(F.col("simhash"), max_hamming, SIMHASH_BITS))
+        "id",
+        "simhash",
+        F.inline(hamming_chunks(F.col("simhash"), SIMHASH_MAX_HAMMING, SIMHASH_BITS)),
     )
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int")
     # Hamming filter BEFORE the pair dedup: bit_count is a pure function of
@@ -754,6 +759,6 @@ def simhash_near_dups(
     return (
         self_join_pairs(chunks, ["chunk", "ckey"], "id", ["simhash"])
         .select("id_a", "id_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .dropDuplicates(["id_a", "id_b"])
     )

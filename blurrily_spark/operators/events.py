@@ -6,7 +6,7 @@ scope): activity streams (clicks, tool calls, conversation turns) must be
 cut into sessions before per-user behavioral features, abuse scoring, or
 transcript segmentation can be computed. The semantics are the industry-
 standard gap rule: a new session starts whenever the time since the SAME
-user's previous event exceeds ``gap_seconds``.
+user's previous event exceeds :data:`SESSION_GAP_S`.
 
 Scale design:
 
@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+SESSION_GAP_S = 28800  # 8 h, in seconds (the bench events' median gap is ~7.3 h)
+
 
 def _micros(ts_col: str):
     """int64 epoch microseconds. Parquet event times arrive as
@@ -40,16 +42,15 @@ def _micros(ts_col: str):
 
 def sessionize(
     events: DataFrame,
-    gap_seconds: float = 1800.0,
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
 ) -> DataFrame:
     """Assign each event a per-user ``session_seq`` (1-based, in time
     order): a new session opens when the gap since the user's previous
-    event exceeds ``gap_seconds``. Adds ``session_seq``; all input columns
-    pass through. First event per user always opens session 1."""
-    gap_us = int(gap_seconds * 1_000_000)
+    event exceeds :data:`SESSION_GAP_S`. Adds ``session_seq``; all input
+    columns pass through. First event per user always opens session 1."""
+    gap_us = SESSION_GAP_S * 1_000_000
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     micros = _micros(ts_col)
     prev = F.lag(micros).over(w)
@@ -63,7 +64,6 @@ def sessionize(
 
 def session_stats(
     events: DataFrame,
-    gap_seconds: float = 1800.0,
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
@@ -74,7 +74,7 @@ def session_stats(
     Built on :func:`sessionize`; the grouping key ``(user, session_seq)``
     is a refinement of the window partitioning, so the aggregate is a pure
     partial-agg + equi-shuffle -- no second sort, no driver state."""
-    s = sessionize(events, gap_seconds, user_col, ts_col, id_col)
+    s = sessionize(events, user_col, ts_col, id_col)
     micros = _micros(ts_col)
     return s.groupBy(user_col, "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -38,6 +38,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+FS_PRIOR = 0.05  # prior match probability of a candidate pair
+
 
 @dataclass(frozen=True)
 class FieldModel:
@@ -81,11 +83,11 @@ def _pick(values: list[float], level: Column) -> Column:
 def fs_score(
     pairs: DataFrame,
     fields: list[FieldModel],
-    prior: float = 0.01,
     weight_col: str = "match_weight",
     prob_col: str = "match_probability",
 ) -> DataFrame:
-    """Append the Fellegi-Sunter match weight and posterior probability.
+    """Append the Fellegi-Sunter match weight and posterior probability,
+    at the prior :data:`FS_PRIOR`.
 
     ``pairs`` must already carry every field's ``level_col`` (int). The
     weight is the sum of per-level log2(m/u) literals in *field order*
@@ -96,11 +98,9 @@ def fs_score(
     """
     if not fields:
         raise ValueError("fs_score needs at least one FieldModel")
-    if not (0.0 < prior < 1.0):
-        raise ValueError(f"prior must be in (0, 1), got {prior}")
     weight = None
-    bf_m = F.lit(float(prior))
-    bf_u = F.lit(float(1.0 - prior))
+    bf_m = F.lit(FS_PRIOR)
+    bf_u = F.lit(1.0 - FS_PRIOR)
     for f in fields:
         lvl = F.col(f.level_col)
         w = _pick(f.log2_weights(), lvl)

@@ -27,7 +27,8 @@ Scale design (the part the single-node reference never had to solve):
   :func:`self_join_pairs` builds such a set from the rows that share a key
   and :func:`join_pair_ends` attaches a per-record table to both ends;
   every blocker and scorer in the package goes through the two.
-* **Block purge.** Every key cap (``max_df``, ``PHONETIC_MAX_BLOCK``) goes
+* **Block purge.** Every key cap (``max_df``, ``TOKEN_BLOCK_MAX_DF``,
+  ``PHONETIC_MAX_BLOCK``) goes
   through :func:`purge_blocks`: an anti-join against the broadcast list of
   the keys whose block exceeds the cap.
 """
@@ -243,16 +244,17 @@ def with_set_similarity(pairs: DataFrame, postings: DataFrame) -> DataFrame:
 
 # shared distinct words a token-blocking pair needs
 TOKEN_BLOCK_MIN_MATCHES = 3
+TOKEN_BLOCK_MAX_DF = 80  # documents above which a token's block is purged
 
 
 def token_blocking_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_df: int | None = None,
 ) -> DataFrame:
     """Token blocking: candidate pairs sharing at least
-    :data:`TOKEN_BLOCK_MIN_MATCHES` (3) distinct words.
+    :data:`TOKEN_BLOCK_MIN_MATCHES` (3) distinct words, on the tokens of
+    at most :data:`TOKEN_BLOCK_MAX_DF` (80) documents.
 
     The schema-agnostic baseline blocker of the meta-blocking literature
     (Papadakis et al.: every record pair co-occurring in at least one
@@ -262,13 +264,13 @@ def token_blocking_pairs(
     comparable to trigram ``matches`` and usable as a CBS weight for
     :func:`meta_blocking_prune`. Higher per-block recall and far hotter
     blocks than trigram keys (a stopword's block is the whole corpus), so
-    the ``max_df`` purge is load-bearing here, not optional hygiene.
+    the df purge is load-bearing here, not optional hygiene.
 
     Scale shape: one token-keyed equi-self-join, same class as
     :func:`candidate_pairs`; the df purge (:func:`purge_blocks`) rides one
     group-by of the keyed projection. The token vocabulary is unbounded,
     but the purge broadcasts only the hot tokens, of which there are at
-    most ``rows / (max_df + 1)``.
+    most ``rows / 81``.
     """
     from blurrily_spark.functions.tokenizer import with_normalized
 
@@ -281,8 +283,7 @@ def token_blocking_pairs(
         .where(F.col("token") != "")
         .distinct()
     )
-    if max_df is not None:
-        toks = purge_blocks(toks, "token", max_df, "max_df")
+    toks = purge_blocks(toks, "token", TOKEN_BLOCK_MAX_DF, "TOKEN_BLOCK_MAX_DF")
     return (
         self_join_pairs(toks, "token", "ref", [])
         .groupBy("ref_a", "ref_b")
@@ -536,6 +537,7 @@ def meta_blocking_prune(edges: DataFrame, weight_col: str = "matches") -> DataFr
 # Nothing reaches the driver and no job runs before the action. Identical
 # output to single-task `row_number`, verified against exactly that SQL by
 # the DuckDB oracle.
+SNM_WINDOW = 4  # a record pairs with its SNM_WINDOW - 1 sort successors
 
 
 def global_sort_ranks(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
@@ -586,24 +588,20 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
     id_col: str = "ref",
-    window: int = 5,
 ) -> DataFrame:
-    """Candidate pairs whose global sort ranks differ by < ``window``.
+    """Candidate pairs whose global sort ranks differ by < 4 (:data:`SNM_WINDOW`).
 
     Returns ``(ref_a, ref_b, rank_gap)`` with ``rank_a < rank_b`` (so
     ``ref_a``/``ref_b`` follow sort order, not id order). Pairing is an
-    equi-join on rank: each row fans out to its w-1 successor ranks via
-    ``explode(sequence(...))``, so the join carries O(n * (w-1)) rows with
-    no skew by construction (every rank is unique). ``window`` must be
-    >= 2; w=2 degenerates to adjacent-pairs."""
-    if window < 2:
-        raise ValueError("window must be >= 2 (w-1 successors per record)")
+    equi-join on rank: each row fans out to its 3 successor ranks via
+    ``explode(sequence(...))``, so the join carries O(3n) rows with no
+    skew by construction (every rank is unique)."""
     ranked = global_sort_ranks(df, key_col, id_col)
     left = ranked.select(
         F.col(id_col).alias("ref_a"),
         F.col("rank").alias("rank_a"),
         F.explode(
-            F.sequence(F.col("rank") + 1, F.col("rank") + (window - 1))
+            F.sequence(F.col("rank") + 1, F.col("rank") + (SNM_WINDOW - 1))
         ).alias("rank"),
     )
     right = ranked.select(F.col(id_col).alias("ref_b"), "rank")

@@ -23,6 +23,8 @@ from pyspark.sql.types import DoubleType
 
 from blurrily_spark.operators.pairs import join_pair_ends
 
+EDIT_MAX_DIST = 40  # edits above which with_edit_distance drops a pair
+
 
 def _jaro(a: str, b: str) -> float:
     if a == b:
@@ -107,21 +109,19 @@ def score_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
 def with_edit_distance(
     pairs: DataFrame,
     records: DataFrame,
-    max_dist: int | None = None,
     text_col: str = "norm",
 ) -> DataFrame:
-    """Attach the exact Levenshtein distance to candidate pairs.
+    """Attach the exact Levenshtein distance to the candidate pairs within
+    ``k`` = 40 edits (:data:`EDIT_MAX_DIST`), dropping the others.
 
     The classic edit-distance similarity join, expressed the way every
     other scorer here is: blocking proposes candidates, this rescored them
     exactly. ``records`` is the ``(ref, <text_col>)`` side table (same
-    contract as :func:`score_pairs`). Adds an ``edit_dist`` int column;
-    with ``max_dist`` set, pairs farther apart are dropped.
+    contract as :func:`score_pairs`). Adds an ``edit_dist`` int column.
 
     Scale shape: two equi-joins to fetch the texts, then per-row JVM work
-    -- no extra shuffle. With ``max_dist`` the plan applies two sound
-    prunes in cost order: the length-difference filter
-    ``||a| - |b|| <= k`` is free (edit distance is bounded below by the
+    -- no extra shuffle. The plan applies two sound prunes in cost order:
+    the length-difference filter ``||a| - |b|| <= k`` is free (edit distance is bounded below by the
     length gap) and discards most non-matching pairs before any DP; the
     remaining pairs run the JVM's THRESHOLDED Levenshtein
     (``levenshtein(a, b, k)``, early exit, O(k * min-len) band instead of
@@ -130,14 +130,7 @@ def with_edit_distance(
     ``levenshtein`` is the standard unit-cost edit distance, so the result
     is integer-exact across engines.
     """
-    if max_dist is not None and max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     texts = records.select(F.col("ref"), F.col(text_col).alias("_t"))
-    if max_dist is None:
-        out = join_pair_ends(pairs, texts, "ref", ["_t"])
-        return out.withColumn("edit_dist", F.levenshtein("_t_a", "_t_b")).drop(
-            "_t_a", "_t_b"
-        )
     # Decide with small rows, move big rows once (guide §8): the length-gap
     # prune needs only LENGTHS, so a per-ref aggregated (ref, min_len,
     # max_len) table joins first -- exactly one row per ref, so join
@@ -158,15 +151,13 @@ def with_edit_distance(
     )
     pruned = (
         join_pair_ends(pairs, lens, "ref", ["_lmin", "_lmax"])
-        .where(gap <= F.lit(int(max_dist)))
+        .where(gap <= F.lit(EDIT_MAX_DIST))
         .drop("_lmin_a", "_lmax_a", "_lmin_b", "_lmax_b")
     )
     out = (
         join_pair_ends(pruned, texts, "ref", ["_t"])
-        .where(F.abs(F.length("_t_a") - F.length("_t_b")) <= F.lit(int(max_dist)))
-        .withColumn(
-            "edit_dist", F.levenshtein(F.col("_t_a"), F.col("_t_b"), int(max_dist))
-        )
+        .where(F.abs(F.length("_t_a") - F.length("_t_b")) <= F.lit(EDIT_MAX_DIST))
+        .withColumn("edit_dist", F.levenshtein(F.col("_t_a"), F.col("_t_b"), EDIT_MAX_DIST))
         .where(F.col("edit_dist") >= 0)
     )
     return out.drop("_t_a", "_t_b")

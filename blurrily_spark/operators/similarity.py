@@ -122,6 +122,11 @@ def _cos_pre(a, b, na, nb):
 
 
 TOPK = 5  # rows per query of cosine_topk and ivf_topk
+KMEANS_K = 16  # centroids of the k-means codebook
+NEAR_DUP_COSINE = 0.95  # cosine at which two embeddings are near-duplicates
+# random-hyperplane LSH: signature bits, the Hamming radius its chunk
+# blocking is lossless for, and the hyperplanes' seed
+RP_BITS, RP_MAX_HAMMING, RP_SEED = 32, 6, 11
 
 
 def cosine_topk(
@@ -289,11 +294,10 @@ MAXMIN_SEED_SCAN = 100_000
 
 def maxmin_centroids(
     corpus: DataFrame,
-    k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """Deterministic farthest-first (maxmin) seeding: start from the
+    """Deterministic :data:`KMEANS_K` farthest-first (maxmin) seeds: start from the
     lowest-id vector, then repeatedly take the vector with the smallest
     maximum cosine to any chosen seed (ties -> lowest id). The k-means++
     idea without its randomness, so both scaling runs and the test oracle
@@ -315,7 +319,7 @@ def maxmin_centroids(
         corpus.orderBy(F.col(id_col).asc()).limit(1).select(vec_col).collect()[0][0]
     )
     cents = [list(map(float, first))]
-    for _ in range(k - 1):
+    for _ in range(KMEANS_K - 1):
         lits = _lit_mat(cents)
         near = F.array_max(F.transform(lits, lambda c: cosine(F.col(vec_col), c)))
         row = (
@@ -330,12 +334,12 @@ def maxmin_centroids(
 
 def kmeans_centroids(
     corpus: DataFrame,
-    k: int = 8,
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """Lloyd-iteration coarse codebook (cosine assignment, mean update).
+    """Lloyd-iteration coarse codebook of :data:`KMEANS_K` centroids
+    (cosine assignment, mean update).
 
     Fully distributed per iteration: assign (JVM cosine) -> posexplode ->
     groupBy(bucket, dim) mean -> collect k*dim floats to the driver (the
@@ -343,7 +347,7 @@ def kmeans_centroids(
     farthest-first from the lowest-id vector (:func:`maxmin_centroids`).
     Empty buckets keep their previous centroid.
     """
-    cents = maxmin_centroids(corpus, k, id_col, vec_col)
+    cents = maxmin_centroids(corpus, id_col, vec_col)
     for _ in range(iterations):
         assigned = assign_buckets(corpus, cents, id_col, vec_col)
         means = (
@@ -368,11 +372,11 @@ def kmeans_centroids(
 
 def cosine_near_dup_pairs(
     emb: DataFrame,
-    threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, exact brute force.
+    """Embedding-cosine near-duplicate pairs (:data:`NEAR_DUP_COSINE`),
+    exact brute force.
 
     All-pairs cosine -- the O(n^2) correctness baseline that validates
     :func:`rp_lsh_near_dup_pairs` (the scale path). Returns (id_a, id_b, cos).
@@ -384,16 +388,17 @@ def cosine_near_dup_pairs(
     return (
         self_join_pairs(withn, [], "id", ["_v", "_n"])
         .select("id_a", "id_b", _pair_cos().alias("cos"))
-        .where(F.col("cos") >= threshold)
+        .where(F.col("cos") >= NEAR_DUP_COSINE)
     )
 
 
-def random_hyperplanes(n_bits: int, dim: int, seed: int = 11) -> list[list[float]]:
-    """Deterministic Gaussian hyperplanes for angular (sign-bit) LSH."""
+def random_hyperplanes(dim: int) -> list[list[float]]:
+    """:data:`RP_BITS` deterministic Gaussian hyperplanes (seeded with
+    :data:`RP_SEED`) of length ``dim`` for angular (sign-bit) LSH."""
     import random
 
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
+    rng = random.Random(RP_SEED)
+    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(RP_BITS)]
 
 
 def rp_signature(vec_col: str, planes: list[list[float]]):
@@ -419,25 +424,21 @@ def rp_signature(vec_col: str, planes: list[list[float]]):
 def rp_lsh_near_dup_pairs(
     emb: DataFrame,
     dim: int,
-    threshold: float = 0.95,
-    n_bits: int = 32,
-    max_hamming: int = 6,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dups at scale: random-hyperplane LSH + exact rescore.
 
-    1. sketch every vector to an ``n_bits`` sign-bit signature (one scan,
-       pure JVM folds);
-    2. block on ``max_hamming + 1`` signature chunks (pigeonhole: any pair
-       within Hamming <= max_hamming collides on some chunk) -- equi-joins,
+    1. sketch every vector to a 32-bit sign-bit signature (:data:`RP_BITS`;
+       one scan, pure JVM folds);
+    2. block on 7 signature chunks (pigeonhole: any pair within Hamming
+       <= 6, :data:`RP_MAX_HAMMING`, collides on some chunk) -- equi-joins,
        never all-pairs;
-    3. exact cosine rescore ``>= threshold`` per candidate.
+    3. exact cosine rescore ``>= 0.95`` (:data:`NEAR_DUP_COSINE`).
 
     Precision is exact (step 3); recall is the probability that a
-    qualifying pair lands within ``max_hamming`` sketch bits -- for
-    cos >= 0.95 and 32 bits, P[bit differs] <= acos(.95)/pi ~ 0.101, so
+    qualifying pair lands within 6 sketch bits -- for cos >= 0.95 and
+    32 bits, P[bit differs] <= acos(.95)/pi ~ 0.101, so
     P[Hamming <= 6] > 0.97 per pair (measured in tests). More bits buy
     recall at scale; the blocking contract itself is threshold-derived,
     as in :func:`blurrily_spark.operators.dedup.simhash_near_dups`.
@@ -447,7 +448,7 @@ def rp_lsh_near_dup_pairs(
     """
     from blurrily_spark.functions.hashing import hamming_chunks
 
-    planes = random_hyperplanes(n_bits, dim, seed)
+    planes = random_hyperplanes(dim)
     sigs = spread_small_input(emb).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("_v"),
@@ -455,7 +456,7 @@ def rp_lsh_near_dup_pairs(
         rp_signature(vec_col, planes).alias("sig"),
     )
     chunks = sigs.select(
-        "id", "_v", "_n", F.inline(hamming_chunks(F.col("sig"), max_hamming, n_bits))
+        "id", "_v", "_n", F.inline(hamming_chunks(F.col("sig"), RP_MAX_HAMMING, RP_BITS))
     )
     # cosine rescore + threshold BEFORE the pair dedup: the cosine is a pure
     # function of the pair (identical on every chunk collision of the same
@@ -467,7 +468,7 @@ def rp_lsh_near_dup_pairs(
     return (
         self_join_pairs(chunks, ["chunk", "ckey"], "id", ["_v", "_n"])
         .select("id_a", "id_b", _pair_cos().alias("cos"))
-        .where(F.col("cos") >= threshold)
+        .where(F.col("cos") >= NEAR_DUP_COSINE)
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -475,14 +476,13 @@ def rp_lsh_near_dup_pairs(
 def semantic_dedup(
     emb: DataFrame,
     centroids: list[list[float]],
-    threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
     cluster embeddings against a coarse codebook, call members of the same
-    cluster whose cosine exceeds ``threshold`` semantic duplicates, and
-    keep one representative per connected duplicate group.
+    cluster whose cosine reaches 0.95 (:data:`NEAR_DUP_COSINE`) semantic
+    duplicates, and keep one representative per connected duplicate group.
 
     Returns one row per input vector: ``(id, keep_id, is_dup)`` -- the same
     retained-corpus face as :func:`blurrily_spark.operators.dedup.near_dedup`,
@@ -511,7 +511,7 @@ def semantic_dedup(
     # staged the norm as _n.
     edges = (
         self_join_pairs(assigned, "bucket", "vec_id", ["_v", "_n"])
-        .where(_pair_cos() >= threshold)
+        .where(_pair_cos() >= NEAR_DUP_COSINE)
         .select(F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst"))
     )
     return _keepers(assign_entities(assigned.select("vec_id"), edges, node_col="vec_id"))

@@ -21,9 +21,6 @@ STOPWORDS = {
     "de": ["der", "die", "und", "das", "ein", "mit", "von", "zu", "den", "ist"],
 }
 
-FINGERPRINT_MOD = 2_147_483_647  # Mersenne prime; keeps the fold ANSI-safe
-FINGERPRINT_BASE = 31
-
 # BPE-ish pre-tokenization: word pieces, numbers, or single non-space symbols
 # (a public GPT-2-style pattern simplified to Java regex).
 BPE_SPLIT_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -239,5 +236,5 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     projection with no Python node for any script.
     """
     tmp = with_normalized(df, text_col, "_norm")
-    fp = poly_hash(F.col("_norm"), FINGERPRINT_BASE, FINGERPRINT_MOD)
+    fp = poly_hash(F.col("_norm"))
     return tmp.select(F.col(id_col), fp.alias("fingerprint"))

@@ -9,6 +9,7 @@ import pytest
 
 from blurrily_spark.functions.tokenizer import normalize_py
 from blurrily_spark.operators.corpus import (
+    CONTAMINATION_WORDS,
     frequent_ngrams,
     ngram_contamination,
     tfidf_top_terms,
@@ -40,7 +41,7 @@ def _df(spark, rows):
 
 @pytest.mark.parametrize("hash_fn", ["exact", "fast"])
 def test_contamination_matches_python_model(spark, hash_fn):
-    n = 8
+    n = CONTAMINATION_WORDS
     hold = set().union(*(_grams(t, n) for _, t in HOLDOUT))
     exp = {}
     for ref, t in TRAIN:
@@ -55,7 +56,7 @@ def test_contamination_matches_python_model(spark, hash_fn):
             r["is_contaminated"],
         )
         for r in ngram_contamination(
-            _df(spark, TRAIN), _df(spark, HOLDOUT), n=n, hash_fn=hash_fn
+            _df(spark, TRAIN), _df(spark, HOLDOUT), hash_fn=hash_fn
         ).collect()
     }
     assert got == exp
@@ -129,6 +130,8 @@ def test_tfidf_window_group_limit_plan(spark):
 from blurrily_spark.operators.corpus import (  # noqa: E402
     _MINSTD,
     _MINSTD_MOD,
+    SAMPLE_SEED,
+    SPLIT_SEED,
     sample_corpus,
     split_corpus,
     split_thresholds,
@@ -152,28 +155,27 @@ def test_sample_corpus_matches_python_model_exactly(spark):
     approximation -- and therefore identical across engines and runs."""
     df = _keyed(spark)
     every = {f"src{i}": 0.3 for i in range(4)}  # one rate over every stratum
-    got = {r["doc_id"] for r in sample_corpus(df, by=every, seed=9).collect()}
+    got = {r["doc_id"] for r in sample_corpus(df, every).collect()}
     thr = int(0.3 * _MINSTD_MOD)
-    expected = {k for k in range(4000) if _lcg_py(k, 9) < thr}
+    expected = {k for k in range(4000) if _lcg_py(k, SAMPLE_SEED) < thr}
     assert got == expected
     # unbiased enough at n=4000: rate within 2 points of the target
     assert abs(len(got) / 4000 - 0.3) < 0.02
-    # a different seed draws a genuinely different (but same-rate) set
-    other = {r["doc_id"] for r in sample_corpus(df, by=every, seed=10).collect()}
-    assert other != expected
+    # the seed decorrelates the draw from the split's, which keys the same ids
+    assert expected != {k for k in range(4000) if _lcg_py(k, SPLIT_SEED) < thr}
 
 
 def test_sample_corpus_stratified_mixture(spark):
     df = _keyed(spark)
     mix = {"src0": 1.0, "src1": 0.5, "src2": 0.0}  # src3 absent -> dropped
-    rows = sample_corpus(df, by=mix, seed=3).collect()
+    rows = sample_corpus(df, by=mix).collect()
     by_src = {}
     for r in rows:
         by_src.setdefault(r["source"], set()).add(r["doc_id"])
     assert len(by_src.get("src0", ())) == 1000  # fraction 1.0 keeps all
     assert "src2" not in by_src and "src3" not in by_src
     thr = int(0.5 * _MINSTD_MOD)
-    expected1 = {k for k in range(1, 4000, 4) if _lcg_py(k, 3) < thr}
+    expected1 = {k for k in range(1, 4000, 4) if _lcg_py(k, SAMPLE_SEED) < thr}
     assert by_src["src1"] == expected1
 
 
@@ -188,13 +190,13 @@ def test_sample_corpus_validation(spark):
 def test_split_corpus_is_an_exact_disjoint_partition(spark):
     df = _keyed(spark)
     weights = {"train": 0.8, "val": 0.1, "test": 0.1}
-    rows = split_corpus(df, weights, seed=11).collect()
+    rows = split_corpus(df, weights).collect()
     assert len(rows) == 4000  # exhaustive: every row labeled
     uppers, remainder = split_thresholds(weights)
     assert remainder == "test"
 
     def expected_label(k: int) -> str:
-        u = _lcg_py(k, 11)
+        u = _lcg_py(k, SPLIT_SEED)
         for name, upper in uppers:
             if u < upper:
                 return name
@@ -207,7 +209,7 @@ def test_split_corpus_is_an_exact_disjoint_partition(spark):
     assert abs(counts["train"] / 4000 - 0.8) < 0.02
     assert abs(counts["val"] / 4000 - 0.1) < 0.01
     # growth stability: the same keys keep their split in a larger corpus
-    bigger = split_corpus(_keyed(spark, 8000), weights, seed=11)
+    bigger = split_corpus(_keyed(spark, 8000), weights)
     small = {r["doc_id"]: r["split"] for r in rows}
     grown = {r["doc_id"]: r["split"] for r in bigger.collect() if r["doc_id"] < 4000}
     assert grown == small

@@ -10,8 +10,10 @@ import pytest
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
+from blurrily_spark.functions.hashing import hamming_chunks
 from blurrily_spark.functions.tokenizer import with_normalized
 from blurrily_spark.operators import dedup
+from blurrily_spark.operators.corpus import ngram_contamination
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while seven wizards "
@@ -54,32 +56,54 @@ def test_near_dedup_retained_corpus(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 4]
 
 
-def test_near_dedup_threshold_one_keeps_everything(spark):
-    # est_jaccard never reaches 1.0 for the truncated dups at threshold > max
-    out = {r["id"]: r["is_dup"] for r in dedup.near_dedup(_corpus(spark), threshold=1.01).collect()}
-    assert out == {1: 0, 2: 0, 3: 0, 4: 0}
+def test_near_dedup_cuts_candidates_at_the_near_dup_jaccard(spark):
+    """Against a Python union-find over the operator's own LSH pairs: only
+    candidates estimated at NEAR_DUP_JACCARD or above join a cluster, and
+    the corpus holds a colliding pair below the cut, so the cut shows."""
+    words = BASE.split(" ")
+    rows = [
+        (1, BASE),
+        (2, BASE[: int(len(BASE) * 0.9)]),
+        # BASE's first 15 words and UNIQUE's first 8: collides with 1 and 2
+        # on a band, at estimates below the cut
+        (3, " ".join(words[:15] + UNIQUE.split(" ")[:8])),
+        (4, UNIQUE),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = [
+        (r["id_a"], r["id_b"], r["est_jaccard"]) for r in dedup.minhash_lsh_pairs(df).collect()
+    ]
+    assert {(a, b) for a, b, e in pairs if e < dedup.NEAR_DUP_JACCARD} == {(1, 3), (2, 3)}
+    keep = {i: i for i, _ in rows}
+    for a, b, e in sorted(pairs):
+        if e >= dedup.NEAR_DUP_JACCARD:
+            ka, kb = keep[a], keep[b]
+            keep = {i: min(ka, kb) if k in (ka, kb) else k for i, k in keep.items()}
+    got = {r["id"]: (r["keep_id"], r["is_dup"]) for r in dedup.near_dedup(df).collect()}
+    assert got == {i: (k, int(k != i)) for i, k in keep.items()}
+    assert got[3] == (3, 0)  # its two candidates fall below the cut
 
 
 def test_duplicate_spans_flags_shared_windows(spark):
-    shared = "alpha beta gamma delta epsilon zeta eta theta"  # exactly w=8 words
+    shared = "alpha beta gamma delta epsilon zeta eta theta"  # exactly SPAN_WORDS
     rows = [
         (1, shared + " unique tail one here now"),
         (2, "different head words go here " + shared),
         (3, "totally disjoint text with no overlap at all whatsoever"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["id"]: r for r in dedup.duplicate_spans(df, w=8).collect()}
+    out = {r["id"]: r for r in dedup.duplicate_spans(df).collect()}
     # docs 1 and 2 share the 8-word window; doc 3 shares nothing
     assert out[1]["n_dup_windows"] >= 1 and out[2]["n_dup_windows"] >= 1
     assert out[3]["n_dup_windows"] == 0 and out[3]["dup_fraction"] == 0.0
-    # window count: n_words - w + 1 (doc 3 has 9 words)
-    assert out[3]["n_windows"] == 9 - 8 + 1
+    # window count: n_words - SPAN_WORDS + 1 (doc 3 has 9 words)
+    assert out[3]["n_windows"] == 9 - dedup.SPAN_WORDS + 1
 
 
 def test_duplicate_spans_short_doc_is_one_window(spark):
     rows = [(1, "tiny doc"), (2, "tiny doc"), (3, "other short")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["id"]: r for r in dedup.duplicate_spans(df, w=8).collect()}
+    out = {r["id"]: r for r in dedup.duplicate_spans(df).collect()}
     assert out[1]["n_windows"] == 1 and out[1]["dup_fraction"] == 1.0
     assert out[2]["dup_fraction"] == 1.0
     assert out[3]["n_dup_windows"] == 0
@@ -91,9 +115,10 @@ def test_duplicate_spans_fast_hash_matches_exact(spark):
         for i in range(20)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = sorted(tuple(r) for r in dedup.duplicate_spans(df, w=6).collect())
-    fast = sorted(tuple(r) for r in dedup.duplicate_spans(df, w=6, hash_fn="fast").collect())
+    exact = sorted(tuple(r) for r in dedup.duplicate_spans(df).collect())
+    fast = sorted(tuple(r) for r in dedup.duplicate_spans(df, hash_fn="fast").collect())
     assert exact == fast
+    assert any(r[2] for r in exact)  # some window is duplicated
 
 
 def test_near_dedup_against_matches_and_orientation(spark):
@@ -151,8 +176,27 @@ def test_minhash_lsh_pairs_follow_the_pair_convention(spark):
 
 
 def test_simhash_near_dups_refuses_max_hamming_outside_the_fingerprint(spark):
+    # the chunker of simhash_near_dups, at the fingerprint's width
     with pytest.raises(ValueError, match=r"max_hamming must be in \[0, 62\), got 62"):
-        dedup.simhash_near_dups(_corpus(spark), max_hamming=62)
+        hamming_chunks(F.col("simhash"), 62, dedup.SIMHASH_BITS)
+
+
+@pytest.mark.parametrize(
+    "op, accepted",
+    [
+        (lambda df: dedup.minhash_signatures(df, hash_fn="exact"), "'portable' or 'fast'"),
+        (lambda df: dedup.simhash62(df, hash_fn="xxhash"), "'portable' or 'fast'"),
+        (lambda df: dedup.duplicate_spans(df, hash_fn="xxhash"), "'exact' or 'fast'"),
+        (lambda df: dedup.cut_duplicate_spans(df, hash_fn="portable"), "'exact' or 'fast'"),
+        (lambda df: ngram_contamination(df, df, hash_fn="portable"), "'exact' or 'fast'"),
+    ],
+    ids=["minhash", "simhash", "duplicate_spans", "cut_duplicate_spans", "ngram_contamination"],
+)
+def test_unknown_hash_fn_is_refused(spark, op, accepted):
+    """Each site tests ``hash_fn == 'fast'`` only, so any string outside
+    the operator's two families is refused, naming the two."""
+    with pytest.raises(ValueError, match=f"hash_fn must be {accepted}, got"):
+        op(_corpus(spark))
 
 
 def test_near_dedup_rejects_string_ids(spark):
@@ -170,18 +214,12 @@ def test_duplicate_spans_randomized_python_oracle(spark):
 
     Inputs are pre-normalized (lowercase ASCII words), so normalization is
     the identity and the Python oracle only has to replicate the window
-    semantics: positional w-windows (whole text when shorter), a window is
-    dup iff it appears verbatim in >= 2 distinct docs."""
+    semantics: positional SPAN_WORDS-windows (whole text when shorter), a
+    window is dup iff it appears verbatim in >= 2 distinct docs."""
     import random
 
-    rng = random.Random(99)
-    # alphabetic-only vocab: S1 normalization strips digits (base-28
-    # alphabet is a-z + space), which would collapse tok0/tok1/... to 'tok'
-    vocab = [f"tok{chr(97 + i)}" for i in range(12)]  # toka..tokl
-    docs = {
-        i: [rng.choice(vocab) for _ in range(rng.randint(2, 30))] for i in range(40)
-    }
-    w = 5
+    docs = _planted_span_docs(random.Random(99), range(40))
+    w = dedup.SPAN_WORDS
 
     def windows(ws):
         if len(ws) < w:
@@ -205,9 +243,29 @@ def test_duplicate_spans_randomized_python_oracle(spark):
     )
     got = {
         r["id"]: (r["n_windows"], r["n_dup_windows"])
-        for r in dedup.duplicate_spans(df, w=w, hash_fn="fast").collect()
+        for r in dedup.duplicate_spans(df, hash_fn="fast").collect()
     }
     assert got == expected
+    assert sum(d for _, d in got.values()) > 0  # the planted phrases show
+
+
+def _planted_span_docs(rng, ids) -> dict:
+    """Seeded word lists, one per id: random words around, in most
+    documents, one of three shared 10-word phrases, so windows of
+    :data:`dedup.SPAN_WORDS` words repeat across documents. The vocabulary
+    is alphabetic-only, as S1 normalization strips digits (base-28
+    alphabet is a-z + space), which would collapse tok0/tok1/... to
+    'tok'; some documents are shorter than a window."""
+    vocab = [f"tok{chr(97 + i)}" for i in range(12)]  # toka..tokl
+    phrases = [[rng.choice(vocab) for _ in range(10)] for _ in range(3)]
+    docs = {}
+    for i in ids:
+        ws = [rng.choice(vocab) for _ in range(rng.randint(2, 14))]
+        if rng.random() < 0.6:
+            at = rng.randint(0, len(ws))
+            ws[at:at] = rng.choice(phrases)
+        docs[i] = ws
+    return docs
 
 
 def test_near_dedup_randomized_planted_groups(spark):
@@ -233,13 +291,13 @@ def test_near_dedup_randomized_planted_groups(spark):
             expected_keeper[i] = min(ids)
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["id"]: r for r in dedup.near_dedup(df, threshold=0.5).collect()}
+    got = {r["id"]: r for r in dedup.near_dedup(df).collect()}
     assert {i: r["keep_id"] for i, r in got.items()} == expected_keeper
     for i, r in got.items():
         assert r["is_dup"] == (1 if expected_keeper[i] != i else 0)
 
 
-def _span_oracle(texts: dict[int, str], w: int):
+def _span_oracle(texts: dict[int, str]):
     """Pure-Python oracle: windows per doc (with offsets), dup-window set
     (windows in two or more documents),
     covered positions, kept text and per-doc ``(n_windows,
@@ -247,6 +305,7 @@ def _span_oracle(texts: dict[int, str], w: int):
     has windows but, as in ``count_distinct``, counts as no document."""
     from blurrily_spark.functions.tokenizer import normalize_py
 
+    w = dedup.SPAN_WORDS
     wins: dict[int, list[tuple[int, str]]] = {}
     for i, t in texts.items():
         ws = normalize_py(t).split(" ")
@@ -284,16 +343,16 @@ def test_span_positions_and_cut_golden(spark):
         3: "no overlap with anyone at all in this document text",
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    exp_pos, exp_kept, _ = _span_oracle(texts, w=8)
+    exp_pos, exp_kept, _ = _span_oracle(texts)
     got_pos = {
         (r["id"], r["start_word"], r["win"])
-        for r in dedup.duplicate_span_positions(df, w=8).collect()
+        for r in dedup.duplicate_span_positions(df).collect()
     }
     assert got_pos == exp_pos
     assert any(r[0] == 1 for r in got_pos) and any(r[0] == 2 for r in got_pos)
     got_kept = {
         r["id"]: (r["kept_text"], r["n_words"], r["n_kept_words"])
-        for r in dedup.cut_duplicate_spans(df, w=8, hash_fn="exact").collect()
+        for r in dedup.cut_duplicate_spans(df, hash_fn="exact").collect()
     }
     assert got_kept == exp_kept
     assert got_kept[3][2] == got_kept[3][1]  # doc 3 untouched: nothing cut
@@ -303,30 +362,27 @@ def test_span_cut_randomized_python_oracle(spark):
     import random
 
     rng = random.Random(41)
-    vocab = [f"w{i}" for i in range(12)]
     for trial in range(3):
-        texts = {
-            i: " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 40)))
-            for i in [*range(14), None]
-        }
+        docs = _planted_span_docs(rng, [*range(14), None])
+        texts = {i: " ".join(ws) for i, ws in docs.items()}
         df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-        w = rng.choice([4, 5, 3])
-        exp_pos, exp_kept, exp_stats = _span_oracle(texts, w=w)
+        exp_pos, exp_kept, exp_stats = _span_oracle(texts)
+        assert exp_pos, f"trial {trial}: no duplicated span planted"
         got_stats = {
             r["id"]: (r["n_windows"], r["n_dup_windows"])
-            for r in dedup.duplicate_spans(df, w=w).collect()
+            for r in dedup.duplicate_spans(df).collect()
         }
-        assert got_stats == exp_stats, f"stats mismatch (trial {trial}, w={w})"
+        assert got_stats == exp_stats, f"stats mismatch (trial {trial})"
         got_pos = {
             (r["id"], r["start_word"], r["win"])
-            for r in dedup.duplicate_span_positions(df, w=w).collect()
+            for r in dedup.duplicate_span_positions(df).collect()
         }
-        assert got_pos == exp_pos, f"positions mismatch (trial {trial}, w={w})"
+        assert got_pos == exp_pos, f"positions mismatch (trial {trial})"
         got_kept = {
             r["id"]: (r["kept_text"], r["n_words"], r["n_kept_words"])
-            for r in dedup.cut_duplicate_spans(df, w=w, hash_fn="fast").collect()
+            for r in dedup.cut_duplicate_spans(df, hash_fn="fast").collect()
         }
-        assert got_kept == exp_kept, f"kept-text mismatch (trial {trial}, w={w})"
+        assert got_kept == exp_kept, f"kept-text mismatch (trial {trial})"
 
     # one NULL id is a document of its own (the None key above); two would
     # fall into one id group and merge, so both rollups fail instead
@@ -335,26 +391,27 @@ def test_span_cut_randomized_python_oracle(spark):
     )
     for op in (dedup.duplicate_spans, dedup.cut_duplicate_spans):
         with pytest.raises(SparkRuntimeException, match="2 documents have a NULL id"):
-            op(two_null, w=2).collect()
+            op(two_null).collect()
 
 
 def test_fully_duplicated_doc_cuts_to_empty(spark):
     same = "exact same words in both documents for the whole text body"
     df = spark.createDataFrame([(1, same), (2, same)], "doc_id long, text string")
-    got = {r["id"]: r for r in dedup.cut_duplicate_spans(df, w=5).collect()}
+    got = {r["id"]: r for r in dedup.cut_duplicate_spans(df).collect()}
     assert got[1]["kept_text"] == "" and got[1]["n_kept_words"] == 0
     assert got[2]["kept_text"] == "" and got[2]["n_words"] > 0
 
 
-def _brute_jaccard_pairs(df, w: int = 3, threshold: float = 0.5):
-    """All-pairs exact shingle-set Jaccard: explode distinct shingles,
+def _brute_jaccard_pairs(df):
+    """All-pairs exact shingle-set Jaccard at or above
+    :data:`dedup.NEAR_DUP_JACCARD`: explode distinct shingles,
     self-join on the shingle, count intersections, divide by the union.
     Quadratic; only a reference for :func:`dedup.jaccard_join_exact`."""
     sh = (
         with_normalized(df, "text", "_norm")
         .select(
             F.col("doc_id").alias("id"),
-            F.explode(dedup.word_shingles(F.col("_norm"), w)).alias("sh"),
+            F.explode(dedup.word_shingles(F.col("_norm"), dedup.SHINGLE_WORDS)).alias("sh"),
         )
         .distinct()
     )
@@ -373,43 +430,37 @@ def _brute_jaccard_pairs(df, w: int = 3, threshold: float = 0.5):
             "jaccard",
             F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")).cast("double"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= dedup.NEAR_DUP_JACCARD)
         .select("id_a", "id_b", "inter", "jaccard")
     )
 
 
 def test_jaccard_join_exact_equals_brute(spark):
-    """Prefix filtering is an exact method: across thresholds and a seeded
-    random corpus (injected near-dups + unique tails), the prefix-filtered
-    join must return the IDENTICAL pair set, intersections, and jaccard
-    values as the brute all-pairs baseline."""
+    """Prefix filtering is an exact method: on a seeded random corpus
+    (injected near-dups truncated to 30-90% of their source, so their
+    Jaccard falls on both sides of the cut), the prefix-filtered join must
+    return the IDENTICAL pair set, intersections, and jaccard values as
+    the brute all-pairs baseline."""
     import random
 
     rng = random.Random(13)
-    vocab = [f"w{i}" for i in range(30)]
+    # alphabetic-only: normalization strips digits, so w0..w29 would all be "w"
+    vocab = [f"w{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(30)]
     rows = []
     for i in range(40):
         words = [rng.choice(vocab) for _ in range(rng.randint(2, 25))]
         rows.append((i, " ".join(words)))
-        if i % 4 == 0:  # a truncated near-duplicate
-            rows.append((100 + i, " ".join(words[: max(2, len(words) * 3 // 4)])))
+        if i % 2 == 0:  # a truncated near-duplicate
+            keep = max(2, int(len(words) * rng.uniform(0.3, 0.9)))
+            rows.append((100 + i, " ".join(words[:keep])))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.3, 0.5, 0.8, 1.0):
-        brute = sorted(
-            (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))
-            for r in _brute_jaccard_pairs(df, threshold=t).collect()
-        )
-        fast = sorted(
-            (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))
-            for r in dedup.jaccard_join_exact(df, threshold=t).collect()
-        )
-        assert fast == brute, f"threshold {t}"
-        assert brute, f"threshold {t}: degenerate test (no qualifying pairs)"
-
-
-def test_jaccard_join_exact_validates_threshold(spark):
-    import pytest
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="threshold"):
-        dedup.jaccard_join_exact(df, threshold=0.0)
+    brute = sorted(
+        (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))
+        for r in _brute_jaccard_pairs(df).collect()
+    )
+    fast = sorted(
+        (r["id_a"], r["id_b"], r["inter"], round(r["jaccard"], 9))
+        for r in dedup.jaccard_join_exact(df).collect()
+    )
+    assert fast == brute
+    assert any(j < 1.0 for *_, j in brute), "degenerate test (no partial overlap kept)"

@@ -6,9 +6,10 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from blurrily_spark.operators.events import session_stats, sessionize
+from blurrily_spark.operators.events import SESSION_GAP_S, session_stats, sessionize
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+G = SESSION_GAP_S
 
 
 def _events(spark, rows):
@@ -29,17 +30,14 @@ def test_gap_rule_golden(spark):
         spark,
         [
             (0, 1, 0, "a", 1.0),
-            (1, 1, 100, "a", 1.0),     # in-session (gap 100 <= 300)
-            (2, 1, 401, "b", 1.0),     # new session (gap 301 > 300)
-            (3, 1, 701, "a", 1.0),     # in-session (gap 300 == 300, NOT >)
-            (4, 2, 50, "a", 1.0),      # other user: independent numbering
-            (5, 2, 100_000, "a", 1.0),
+            (1, 1, 100, "a", 1.0),             # in-session (gap 100 <= G)
+            (2, 1, 100 + G + 1, "b", 1.0),     # new session (gap G + 1 > G)
+            (3, 1, 100 + 2 * G + 1, "a", 1.0), # in-session (gap G == G, NOT >)
+            (4, 2, 50, "a", 1.0),              # other user: independent numbering
+            (5, 2, 50 + 3 * G, "a", 1.0),
         ],
     )
-    got = {
-        r["event_id"]: r["session_seq"]
-        for r in sessionize(ev, gap_seconds=300).collect()
-    }
+    got = {r["event_id"]: r["session_seq"] for r in sessionize(ev).collect()}
     assert got == {0: 1, 1: 1, 2: 2, 3: 2, 4: 1, 5: 2}
 
 
@@ -47,7 +45,7 @@ def test_timestamp_ties_break_by_event_id(spark):
     # two events at the same instant: (ts, id) total order makes the
     # boundary deterministic whichever partition delivers first
     ev = _events(spark, [(7, 1, 0, "a", 1.0), (3, 1, 0, "a", 1.0)])
-    got = {r["event_id"]: r["session_seq"] for r in sessionize(ev, 300).collect()}
+    got = {r["event_id"]: r["session_seq"] for r in sessionize(ev).collect()}
     assert got == {3: 1, 7: 1}
 
 
@@ -57,13 +55,10 @@ def test_session_stats_golden(spark):
         [
             (0, 1, 0, "a", 1.5),
             (1, 1, 10, "b", 2.0),
-            (2, 1, 1000, "a", 3.0),
+            (2, 1, 10 + G + 1, "a", 3.0),
         ],
     )
-    rows = {
-        (r["user_id"], r["session_seq"]): r
-        for r in session_stats(ev, gap_seconds=300).collect()
-    }
+    rows = {(r["user_id"], r["session_seq"]): r for r in session_stats(ev).collect()}
     s1 = rows[(1, 1)]
     assert s1["n_events"] == 2
     assert s1["duration_s"] == 10.0
@@ -77,24 +72,24 @@ def test_sessionize_single_exchange(spark):
     """Both window passes (lag + running sum) share one (user, ts, id)
     partitioning/ordering -> exactly one Exchange, no SinglePartition."""
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    plan = sessionize(ev, 900)._jdf.queryExecution().executedPlan().toString()
+    plan = sessionize(ev)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "SinglePartition" not in plan
 
 
 def test_fractional_microsecond_gaps(spark):
-    # gap strictly-greater comparison happens in int64 micros: 300.000001s
-    # vs a 300s rule must open a new session, 299.999999s must not
+    # gap strictly-greater comparison happens in int64 micros: G s + 1 us
+    # must open a new session, G s - 1 us must not
     base = T0
     data = [
         (0, base, 1, "a", 1.0, "{}"),
-        (1, base + dt.timedelta(seconds=300, microseconds=1), 1, "a", 1.0, "{}"),
-        (2, base + dt.timedelta(seconds=599, microseconds=999_999), 1, "a", 1.0, "{}"),
+        (1, base + dt.timedelta(seconds=G, microseconds=1), 1, "a", 1.0, "{}"),
+        (2, base + dt.timedelta(seconds=2 * G, microseconds=0), 1, "a", 1.0, "{}"),
     ]
     ev = spark.createDataFrame(
         data,
         "event_id long, ts timestamp_ntz, user_id long, event_type string, "
         "value double, props string",
     )
-    got = {r["event_id"]: r["session_seq"] for r in sessionize(ev, 300).collect()}
+    got = {r["event_id"]: r["session_seq"] for r in sessionize(ev).collect()}
     assert got == {0: 1, 1: 2, 2: 2}

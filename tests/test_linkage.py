@@ -6,17 +6,16 @@ import math
 
 import pytest
 
-from blurrily_spark.operators.linkage import FieldModel, estimate_m_u, fs_score
+from blurrily_spark.operators.linkage import FS_PRIOR, FieldModel, estimate_m_u, fs_score
 
 JACC = FieldModel("jacc", "jacc_level", m=(0.05, 0.20, 0.75), u=(0.85, 0.12, 0.03))
 LANG = FieldModel("lang", "lang_level", m=(0.10, 0.90), u=(0.60, 0.40))
-PRIOR = 0.01
 
 
-def py_fs(levels: dict[str, int], fields, prior=PRIOR):
+def py_fs(levels: dict[str, int], fields):
     weight = sum(math.log2(f.m[levels[f.level_col]] / f.u[levels[f.level_col]]) for f in fields)
-    bm = prior
-    bu = 1.0 - prior
+    bm = FS_PRIOR
+    bu = 1.0 - FS_PRIOR
     for f in fields:
         bm *= f.m[levels[f.level_col]]
         bu *= f.u[levels[f.level_col]]
@@ -41,7 +40,7 @@ def test_fs_score_matches_python_model(spark):
     df = spark.createDataFrame(rows, "ref_a long, ref_b long, jacc_level int, lang_level int")
     got = {
         (r["ref_a"], r["ref_b"]): (r["match_weight"], r["match_probability"])
-        for r in fs_score(df, [JACC, LANG], prior=PRIOR).collect()
+        for r in fs_score(df, [JACC, LANG]).collect()
     }
     for a, b, ja, la in rows:
         w, p = py_fs({"jacc_level": ja, "lang_level": la}, [JACC, LANG])
@@ -56,11 +55,6 @@ def test_fs_score_out_of_range_level_fails_loudly(spark):
     df = spark.createDataFrame([(1, 2, 9, 1)], "ref_a long, ref_b long, jacc_level int, lang_level int")
     with pytest.raises(Exception):
         fs_score(df, [JACC, LANG]).collect()
-
-
-def test_fs_score_invalid_prior():
-    with pytest.raises(ValueError, match="prior"):
-        fs_score(None, [JACC], prior=1.0)
 
 
 def test_estimate_m_u_matches_hand_counts(spark):

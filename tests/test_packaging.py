@@ -8,6 +8,7 @@ cached in cluster storage) and zipimport-ability (executors extend
 e.g. ``__file__``-relative data loading would break).
 """
 
+import functools
 import os
 import subprocess
 import sys
@@ -68,6 +69,26 @@ def _root_files(root: str) -> list[str]:
     ]
 
 
+def _module_file(root: str, name: str, from_dir: str) -> str | None:
+    """Repo-relative path of the module a dotted ``name`` imports: against
+    the repo root, or a bare name against the importing script's own
+    directory (it is ``sys.path[0]`` when run); None outside the repo."""
+    for base in (root, from_dir):
+        stem = os.path.join(base, *name.split("."))
+        for cand in (stem + ".py", os.path.join(stem, "__init__.py")):
+            if os.path.isfile(cand):
+                return os.path.relpath(cand, root)
+    return None
+
+
+def _from_module(rel: str, node) -> str:
+    """The absolute dotted module of a ``from ... import`` node in the repo
+    file ``rel``: level 1 is the importing module's package, 2 its parent."""
+    pkg = os.path.dirname(rel).split(os.sep)
+    base = pkg[: len(pkg) - node.level + 1] if node.level else []
+    return ".".join(base + ([node.module] if node.module else []))
+
+
 def _reached_modules(root: str) -> set[str]:
     """Repo modules the non-test entry points (:func:`_root_files`)
     import, transitively. Every ``import`` and
@@ -77,16 +98,6 @@ def _reached_modules(root: str) -> set[str]:
     """
     import ast
 
-    def resolve(name: str, from_dir: str) -> str | None:
-        # a dotted name against the repo root, or a bare name against the
-        # importing script's own directory (it is sys.path[0] when run)
-        for base in (root, from_dir):
-            stem = os.path.join(base, *name.split("."))
-            for cand in (stem + ".py", os.path.join(stem, "__init__.py")):
-                if os.path.isfile(cand):
-                    return os.path.relpath(cand, root)
-        return None
-
     def with_parents(name: str) -> list[str]:
         parts = name.split(".")
         return [".".join(parts[: i + 1]) for i in range(len(parts))]
@@ -95,16 +106,13 @@ def _reached_modules(root: str) -> set[str]:
         path = os.path.join(root, rel)
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), filename=path)
-        pkg = os.path.dirname(rel).split(os.sep)
         names: list[str] = []
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 for a in node.names:
                     names.extend(with_parents(a.name))
             elif isinstance(node, ast.ImportFrom):
-                # level 1 is the importing module's package, 2 its parent
-                base = pkg[: len(pkg) - node.level + 1] if node.level else []
-                mod = ".".join(base + ([node.module] if node.module else []))
+                mod = _from_module(rel, node)
                 names.extend(with_parents(mod))
                 # "from pkg import name" imports the submodule pkg.name if any
                 names.extend(f"{mod}.{a.name}" for a in node.names)
@@ -119,7 +127,7 @@ def _reached_modules(root: str) -> set[str]:
         seen.add(rel)
         here = os.path.join(root, os.path.dirname(rel))
         for name in imported_names(rel):
-            hit = resolve(name, here)
+            hit = _module_file(root, name, here)
             if hit is not None and hit not in seen:
                 todo.append(hit)
     return seen
@@ -143,45 +151,158 @@ def test_every_package_module_is_reached_from_a_non_test_root():
     assert sorted(set(_package_files(root)) - reached) == []
 
 
-def _call_sites(root: str, files: list[str]) -> dict[str, list[tuple[list, dict]]]:
-    """Every call in ``files``, by callee name (the called name, or the
-    attribute of a dotted call; a name bound by ``from ... import name as
-    alias`` counts under ``name``): ``(positional argument nodes,
-    {keyword: value node})`` per call. The keys of a ``**name`` whose
-    ``name`` (or ``self.name``) is assigned a ``dict(...)`` call or a dict
-    literal in the same file count as keywords, with that dict's value
-    nodes."""
+@functools.lru_cache(maxsize=None)
+def _scope(root: str, rel: str) -> tuple[dict, dict, dict]:
+    """``(constants, imports, defs)`` of the repo file ``rel``, each over
+    the names the file binds in one way only (a name bound twice -- say
+    a module constant and a parameter -- is in none of them):
+
+    * ``constants``: a name bound once, by a module-level assignment of a
+      literal (``ast.literal_eval``), to that literal's node;
+    * ``imports``: a name bound only by imports of one target, to
+      ``(file, None)`` for a repo module and ``(file, attr)`` for the name
+      ``attr`` of the repo module ``file``;
+    * ``defs``: a module-level function or class bound once, to its node.
+
+    Methods are not bindings of the module: a class body is no enclosing
+    scope of the functions that call a module name."""
+    import ast
+    from collections import Counter
+
+    path = os.path.join(root, rel)
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=path)
+    here = os.path.join(root, os.path.dirname(rel))
+    methods = {
+        id(m)
+        for c in ast.walk(tree)
+        if isinstance(c, ast.ClassDef)
+        for m in c.body
+        if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    bound: Counter = Counter()
+    targets: dict[str, set] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Load):
+            bound[node.id] += 1
+        elif isinstance(node, ast.arg):
+            bound[node.arg] += 1
+        elif isinstance(node, ast.ExceptHandler) and node.name:
+            bound[node.name] += 1
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            bound[node.name] += id(node) not in methods
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                name = a.name if a.asname else a.name.split(".")[0]
+                file = _module_file(root, name, here)
+                targets.setdefault(a.asname or name, set()).add((file, None) if file else None)
+        elif isinstance(node, ast.ImportFrom):
+            mod = _from_module(rel, node)
+            file = _module_file(root, mod, here)
+            for a in node.names:
+                sub = _module_file(root, f"{mod}.{a.name}", here)
+                hit = (sub, None) if sub else (file, a.name) if file else None
+                targets.setdefault(a.asname or a.name, set()).add(hit)
+    imports = {
+        n: t.pop() for n, t in targets.items() if len(t) == 1 and None not in t and not bound[n]
+    }
+    constants: dict = {}
+    defs: dict = {}
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and node.value is not None:
+            target = node.targets[0] if isinstance(node, ast.Assign) else node.target
+            pairs = [(target, node.value)]
+            if isinstance(target, ast.Tuple) and isinstance(node.value, ast.Tuple):
+                pairs = list(zip(target.elts, node.value.elts))
+            for t, v in pairs:
+                if isinstance(t, ast.Name) and bound[t.id] == 1 and t.id not in targets:
+                    try:
+                        ast.literal_eval(v)
+                    except ValueError:
+                        continue
+                    constants[t.id] = v
+        elif isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            if bound[node.name] == 1 and node.name not in targets:
+                defs[node.name] = node
+    return constants, imports, defs
+
+
+def _literal(root: str, rel: str, node):
+    """The literal node a module constant argument stands for: a bare
+    name the file ``rel`` binds once to a literal, a name it imports from
+    a repo module that binds it so, or ``alias.NAME`` of an imported repo
+    module that binds ``NAME`` so. Any other node comes back as is."""
+    import ast
+
+    constants, imports, _ = _scope(root, rel)
+    if isinstance(node, ast.Name):
+        if node.id in constants:
+            return constants[node.id]
+        file, attr = imports.get(node.id, (None, None))
+        if attr is not None:
+            return _scope(root, file)[0].get(attr, node)
+    elif isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+        file, attr = imports.get(node.value.id, (None, None))
+        if file is not None and attr is None:
+            return _scope(root, file)[0].get(node.attr, node)
+    return node
+
+
+def _calls(root: str, rel: str) -> list[tuple]:
+    """Every call in the repo file ``rel``: ``(call node, positional
+    argument nodes, {keyword: value node})``, each argument resolved by
+    :func:`_literal`. The keys of a ``**name`` whose ``name`` (or
+    ``self.name``) is assigned a ``dict(...)`` call or a dict literal in
+    the same file count as keywords, with that dict's value nodes; any
+    other ``**`` passes no keyword."""
     import ast
 
     def name_of(node) -> str | None:
         return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
 
+    with open(os.path.join(root, rel), encoding="utf-8") as f:
+        nodes = list(ast.walk(ast.parse(f.read())))
+    dicts: dict[str, dict] = {}
+    for node in nodes:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1:
+            v = node.value
+            if isinstance(v, ast.Call) and name_of(v.func) == "dict":
+                dicts[name_of(node.targets[0])] = {k.arg: k.value for k in v.keywords}
+            elif isinstance(v, ast.Dict):
+                dicts[name_of(node.targets[0])] = {
+                    k.value: val
+                    for k, val in zip(v.keys, v.values)
+                    if isinstance(k, ast.Constant)
+                }
+    out = []
+    for node in nodes:
+        if isinstance(node, ast.Call):
+            keywords: dict = {}
+            for k in node.keywords:
+                keywords.update({k.arg: k.value} if k.arg else dicts.get(name_of(k.value), {}))
+            out.append((
+                node,
+                [_literal(root, rel, a) for a in node.args],
+                {k: _literal(root, rel, v) for k, v in keywords.items()},
+            ))
+    return out
+
+
+def _call_sites(root: str, files: list[str]) -> dict[str, list[tuple[list, dict]]]:
+    """Every call in ``files`` (see :func:`_calls`), by callee name: the
+    called name, or the attribute of a dotted call; a name bound by
+    ``from ... import name as alias`` counts under ``name``."""
+    import ast
+
     sites: dict[str, list[tuple[list, dict]]] = {}
     for rel in files:
-        with open(os.path.join(root, rel), encoding="utf-8") as f:
-            nodes = list(ast.walk(ast.parse(f.read())))
-        dicts: dict[str, dict] = {}
-        aliases: dict[str, str] = {}
-        for node in nodes:
-            if isinstance(node, ast.ImportFrom):
-                aliases.update((a.asname, a.name) for a in node.names if a.asname)
-            if isinstance(node, ast.Assign) and len(node.targets) == 1:
-                v = node.value
-                if isinstance(v, ast.Call) and name_of(v.func) == "dict":
-                    dicts[name_of(node.targets[0])] = {k.arg: k.value for k in v.keywords}
-                elif isinstance(v, ast.Dict):
-                    dicts[name_of(node.targets[0])] = {
-                        k.value: val
-                        for k, val in zip(v.keys, v.values)
-                        if isinstance(k, ast.Constant)
-                    }
-        for node in nodes:
-            if isinstance(node, ast.Call):
-                keywords: dict = {}
-                for k in node.keywords:
-                    keywords.update({k.arg: k.value} if k.arg else dicts.get(name_of(k.value), {}))
-                callee = name_of(node.func)
-                sites.setdefault(aliases.get(callee, callee), []).append((node.args, keywords))
+        imports = _scope(root, rel)[1]
+        for node, args, keywords in _calls(root, rel):
+            func = node.func
+            callee = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if isinstance(func, ast.Name) and imports.get(callee, (None, None))[1]:
+                callee = imports[callee][1]
+            sites.setdefault(callee, []).append((args, keywords))
     return sites
 
 
@@ -218,7 +339,8 @@ def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], l
     left out), every parameter it names, its options -- each parameter
     with a default, each keyword-only parameter and a ``**kwargs`` (as
     ``**name``), without the ``*_col`` parameters -- and the default
-    value node of each option that has one."""
+    value node of each option that has one (a module constant resolved
+    by :func:`_literal`)."""
     import ast
 
     out = []
@@ -243,8 +365,10 @@ def _operator_options(root: str) -> list[tuple[str, str, list[str], list[str], l
             positional = [p.arg for p in a.posonlyargs + a.args][skip:]
             keyword_only = [p.arg for p in a.kwonlyargs]
             options = positional[len(positional) - len(a.defaults) :] if a.defaults else []
-            defaults = dict(zip(options, a.defaults))
-            defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d)
+            defaults = {o: _literal(root, rel, d) for o, d in zip(options, a.defaults)}
+            defaults.update(
+                (p.arg, _literal(root, rel, d)) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d
+            )
             options += keyword_only + ([f"**{a.kwarg.arg}"] if a.kwarg else [])
             options = [o for o in options if not o.endswith("_col")]
             out.append((module, node.name, positional, positional + keyword_only, options, defaults))
@@ -296,9 +420,9 @@ _ONE_VALUE_EXEMPT = {
 
 
 def _values(node) -> set:
-    """The values an argument node can take: one literal by
-    ``ast.literal_eval``, or two distinct markers for anything else, as
-    a name or an expression may take many."""
+    """The values an argument node (resolved by :func:`_literal`) can
+    take: one literal by ``ast.literal_eval``, or two distinct markers for
+    anything else, as a name or an expression may take many."""
     import ast
 
     try:
@@ -312,7 +436,8 @@ def test_every_operator_option_takes_two_values():
     each option of a public function or class under ``blurrily_spark/``
     (see :func:`_operator_options`; ``**kwargs`` aside) must take two or
     more values over the calls of the non-test roots and the package
-    modules -- each literal a call passes, any non-literal argument as
+    modules -- each literal a call passes, a module constant bound once
+    to a literal as that literal (:func:`_literal`), any other argument as
     many values, and the default when some call leaves the option out.
     ``_ONE_VALUE_EXEMPT`` names the exceptions with their reasons, and
     names only options the gate flags."""
@@ -334,3 +459,82 @@ def test_every_operator_option_takes_two_values():
     assert not constant, "options every non-test caller sets to one value: " + ", ".join(constant)
     stale = sorted(set(_ONE_VALUE_EXEMPT) - set(single))
     assert not stale, "exemptions for options that take two values: " + ", ".join(stale)
+
+
+def _signature(node) -> tuple[list[str], set[str], bool, bool] | None:
+    """``(positional, named, takes *args, takes **kwargs)`` of a function
+    node, or of a class node's ``__init__`` (``self`` left out; a
+    ``@dataclass`` without one takes its annotated fields in order); None
+    for a class whose constructor is neither."""
+    import ast
+
+    skip = 0
+    if isinstance(node, ast.ClassDef):
+        init = next(
+            (b for b in node.body if isinstance(b, ast.FunctionDef) and b.name == "__init__"),
+            None,
+        )
+        if init is None:
+            if not any("dataclass" in ast.unparse(d) for d in node.decorator_list):
+                return None
+            fields = [b.target.id for b in node.body if isinstance(b, ast.AnnAssign)]
+            return fields, set(fields), False, False
+        node, skip = init, 1
+    a = node.args
+    positional = [p.arg for p in a.posonlyargs + a.args][skip:]
+    named = {p.arg for p in a.args + a.kwonlyargs} - {p.arg for p in a.posonlyargs}
+    return positional, named, a.vararg is not None, a.kwarg is not None
+
+
+def _callee(root: str, rel: str, func) -> tuple[str, object] | None:
+    """``(file, def node)`` of the function or class under
+    ``blurrily_spark/`` that a call's ``func`` names in the repo file
+    ``rel``: a module-level def of a package file, a name imported from a
+    repo module (followed through re-exports such as a package
+    ``__init__``), or ``alias.name`` of an imported repo module. None for
+    anything else (a method, a local function, a library call)."""
+    import ast
+
+    _, imports, defs = _scope(root, rel)
+    if isinstance(func, ast.Name):
+        file, name = (rel, func.id) if func.id in defs else imports.get(func.id, (None, None))
+    elif isinstance(func, ast.Attribute) and isinstance(func.value, ast.Name):
+        file, attr = imports.get(func.value.id, (None, None))
+        name = func.attr if attr is None else None
+    else:
+        return None
+    for _ in range(8):  # a re-export chain is short; a cycle must end
+        if file is None or name is None:
+            return None
+        _, imports, defs = _scope(root, file)
+        if name in defs:
+            return (file, defs[name]) if file.startswith("blurrily_spark" + os.sep) else None
+        file, name = imports.get(name, (None, None))
+    return None
+
+
+def test_every_package_call_passes_only_parameters_its_callee_takes():
+    """A call that passes a keyword its callee no longer takes fails only
+    when its code runs: every call in a non-test root or a package module
+    that resolves to a function or class under ``blurrily_spark/`` (see
+    :func:`_callee`) may pass only keywords the callee names (or a
+    ``**kwargs`` takes) and no more positional arguments than it has (or
+    a ``*args`` takes). A ``**dict`` counts by the keys
+    :func:`_calls` resolves; a ``*list`` is not counted."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bad = []
+    for rel in _root_files(root) + _package_files(root):
+        for node, args, keywords in _calls(root, rel):
+            hit = _callee(root, rel, node.func)
+            signature = _signature(hit[1]) if hit else None
+            if signature is None:
+                continue
+            positional, named, varargs, varkw = signature
+            where = f"{rel}:{node.lineno} {hit[1].name}"
+            starred = any(isinstance(a, ast.Starred) for a in node.args)
+            if not (varargs or starred) and len(args) > len(positional):
+                bad.append(f"{where}: {len(args)} positional arguments, takes {len(positional)}")
+            bad += [f"{where}({k}=)" for k in keywords if not varkw and k not in named]
+    assert not bad, "calls that pass what the callee does not take: " + ", ".join(bad)

@@ -173,12 +173,15 @@ def test_keys_only_candidates_match_full(spark):
 # -- sorted-neighborhood blocking ---------------------------------------------
 
 
-def _snm_oracle(rows, window):
-    """Single-process row_number oracle: rank by (key, id), pair within w."""
+def _snm_oracle(rows):
+    """Single-process row_number oracle: rank by (key, id), pair within
+    SNM_WINDOW."""
+    from blurrily_spark.operators.pairs import SNM_WINDOW
+
     ranked = sorted(rows, key=lambda r: (r[1], r[0]))
     out = []
     for i, (id_a, _) in enumerate(ranked):
-        for j in range(i + 1, min(i + window, len(ranked))):
+        for j in range(i + 1, min(i + SNM_WINDOW, len(ranked))):
             out.append((id_a, ranked[j][0], j - i))
     return sorted(out)
 
@@ -246,14 +249,13 @@ def test_sorted_neighborhood_matches_oracle(spark):
     rng = random.Random(11)
     rows = [(i, f"key{rng.randrange(25):02d}") for i in range(200)]
     df = spark.createDataFrame(rows, "ref long, key string")
-    for w in (2, 5):
-        got = sorted(
-            (r["ref_a"], r["ref_b"], r["rank_gap"])
-            for r in sorted_neighborhood_pairs(df, "key", window=w).collect()
-        )
-        assert got == _snm_oracle(rows, w)
-    # n * (w-1) - sum(1..w-1) pairs exactly
-    assert len(_snm_oracle(rows, 5)) == 200 * 4 - (1 + 2 + 3 + 4)
+    got = sorted(
+        (r["ref_a"], r["ref_b"], r["rank_gap"])
+        for r in sorted_neighborhood_pairs(df, "key").collect()
+    )
+    assert got == _snm_oracle(rows)
+    # n * (w-1) - sum(1..w-1) pairs exactly, at w = SNM_WINDOW = 4
+    assert len(got) == 200 * 3 - (1 + 2 + 3)
 
 
 def test_sorted_neighborhood_no_single_task_window(spark):
@@ -264,21 +266,11 @@ def test_sorted_neighborhood_no_single_task_window(spark):
 
     df = spark.range(500).selectExpr("id AS ref", "format_string('k%03d', CAST(pmod(id, 50) AS INT)) AS key")
     plan = (
-        sorted_neighborhood_pairs(df, "key", window=3)
+        sorted_neighborhood_pairs(df, "key")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SinglePartition" not in plan
     assert "rangepartitioning" in plan.lower()
-
-
-def test_sorted_neighborhood_window_validation(spark):
-    import pytest as _pytest
-
-    from blurrily_spark.operators.pairs import sorted_neighborhood_pairs
-
-    df = spark.range(3).selectExpr("id AS ref", "CAST(id AS STRING) AS key")
-    with _pytest.raises(ValueError):
-        sorted_neighborhood_pairs(df, "key", window=1)
 
 
 # --- phonetic blocking ------------------------------------------------------
@@ -711,23 +703,23 @@ def test_token_blocking_dedupes_repeated_tokens(spark):
 
 
 def test_token_blocking_max_df_purges_stopwords(spark):
-    from blurrily_spark.operators.pairs import token_blocking_pairs
+    from blurrily_spark.operators.pairs import TOKEN_BLOCK_MAX_DF, token_blocking_pairs
 
-    # "the" appears in all 4 docs -> purged at max_df=3, so (1,3) and (2,3)
-    # keep only {big,red}=2 and drop out; (1,2) keep {big,red,cat}=3
-    docs = spark.createDataFrame(
-        [(1, "the big red cat"), (2, "the big red cat"), (3, "the big red dog"), (4, "the end")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r["ref_a"], r["ref_b"]): r["matches"]
-        for r in token_blocking_pairs(docs, max_df=3).collect()
-    }
-    assert got == {(1, 2): 3}
-    import pytest as _pytest
+    # fillers "the end" bring "the" to TOKEN_BLOCK_MAX_DF (80) documents, or
+    # one more; fillers share no 3 words, so they pair with nothing
+    head = [(1, "the big red cat"), (2, "the big red cat"), (3, "the big red dog")]
 
-    with _pytest.raises(ValueError, match="max_df"):
-        token_blocking_pairs(docs, max_df=1)
+    def pairs(n_docs):
+        fill = [(i, "the end") for i in range(4, n_docs + 1)]
+        docs = spark.createDataFrame(head + fill, "doc_id long, text string")
+        rows = token_blocking_pairs(docs).collect()
+        return {(r["ref_a"], r["ref_b"]): r["matches"] for r in rows}
+
+    # at the cap "the" stays a block: (1,3) and (2,3) share {the,big,red}
+    assert pairs(TOKEN_BLOCK_MAX_DF) == {(1, 2): 4, (1, 3): 3, (2, 3): 3}
+    # one document past it "the" is purged: they keep only {big,red}=2 and
+    # drop out; (1,2) keep {big,red,cat}=3
+    assert pairs(TOKEN_BLOCK_MAX_DF + 1) == {(1, 2): 3}
 
 
 def test_token_blocking_normalizes_before_splitting(spark):
@@ -765,29 +757,24 @@ def test_with_edit_distance_threshold_and_length_prefilter(spark):
     from blurrily_spark.operators.scoring import with_edit_distance
 
     recs = spark.createDataFrame(
-        [(1, "kitten"), (2, "sitting"), (3, "abcdefghijklmnop")],
+        [(1, "kitten"), (2, "sitting"), (3, "x" * 47), (4, "a" * 30), (5, "b" * 41)],
         "ref long, norm string",
     )
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 3)], "ref_a long, ref_b long"
+        [(1, 2), (1, 3), (4, 5)], "ref_a long, ref_b long"
     )
-    # k=3 keeps (1,2) at exactly 3; (1,3) dies in the free length prefilter
-    # (|6-16| = 10 > 3) before any DP
-    rows = with_edit_distance(pairs, recs, max_dist=3).collect()
+    # k = EDIT_MAX_DIST = 40 keeps (1,2) at 3; (1,3) dies in the free length
+    # prefilter (|6-47| = 41 > 40) before any DP; (4,5) passes it (|30-41|
+    # = 11) and dies in the thresholded levenshtein (41 > 40, the -1 filter)
+    rows = with_edit_distance(pairs, recs).collect()
     assert [(r["ref_a"], r["ref_b"], r["edit_dist"]) for r in rows] == [(1, 2, 3)]
-    # k=2 drops it in the thresholded levenshtein (-1 filter), not an error
-    assert with_edit_distance(pairs, recs, max_dist=2).count() == 0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_dist"):
-        with_edit_distance(pairs, recs, max_dist=-1)
 
 
 def test_with_edit_distance_duplicate_ref_multiplicity(spark):
     """The length-first prune must not change output multiplicity when
     ``records`` carries duplicate refs: the prune joins a per-ref
     AGGREGATED (min_len, max_len) table -- one row per ref -- and only the
-    text joins (same as the unbounded path) multiply rows."""
+    text joins multiply rows."""
     from blurrily_spark.operators.scoring import with_edit_distance
 
     recs = spark.createDataFrame(
@@ -795,37 +782,43 @@ def test_with_edit_distance_duplicate_ref_multiplicity(spark):
         "ref long, norm string",
     )
     pairs = spark.createDataFrame([(7, 8), (7, 9)], "ref_a long, ref_b long")
-    unbounded = with_edit_distance(pairs, recs).where("edit_dist <= 3").collect()
-    bounded = with_edit_distance(pairs, recs, max_dist=3).collect()
-    key = lambda r: (r["ref_a"], r["ref_b"], r["edit_dist"])
-    # (7,8) appears twice in both paths (two copies of ref 7); (7,9) dies
-    # in the length prune / threshold in both
-    assert sorted(map(key, bounded)) == sorted(map(key, unbounded)) == [
+    got = with_edit_distance(pairs, recs).collect()
+    # (7,8) appears twice (two copies of ref 7); (7,9) dies in the length
+    # prune (|6-60| > 40)
+    assert sorted((r["ref_a"], r["ref_b"], r["edit_dist"]) for r in got) == [
         (7, 8, 3),
         (7, 8, 3),
     ]
 
 
 def test_with_edit_distance_bounded_equals_unbounded_within_k(spark):
-    # the thresholded DP must agree with full levenshtein on every pair it
-    # keeps, over real candidate pairs
+    # the thresholded DP must agree with a full Python levenshtein on every
+    # pair within EDIT_MAX_DIST, over real candidate pairs
     from blurrily_spark.operators.index import prepare_needles
-    from blurrily_spark.operators.scoring import with_edit_distance
+    from blurrily_spark.operators.scoring import EDIT_MAX_DIST, with_edit_distance
+
+    def levenshtein(a: str, b: str) -> int:
+        row = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            prev, row[0] = row[0], i
+            for j, cb in enumerate(b, 1):
+                prev, row[j] = row[j], min(row[j] + 1, row[j - 1] + 1, prev + (ca != cb))
+        return row[-1]
 
     hay_df = put_rows(spark, HAYSTACK)
     postings = build_postings(hay_df, order_col="seq")
     cand = candidate_pairs(postings).select("ref_a", "ref_b")
     recs = prepare_needles(hay_df, order_col="seq").select("ref", "norm")
+    norm = {r["ref"]: r["norm"] for r in recs.collect()}
     full = {
+        (r["ref_a"], r["ref_b"]): levenshtein(norm[r["ref_a"]], norm[r["ref_b"]])
+        for r in cand.collect()
+    }
+    bounded = {
         (r["ref_a"], r["ref_b"]): r["edit_dist"]
         for r in with_edit_distance(cand, recs).collect()
     }
-    k = 6
-    bounded = {
-        (r["ref_a"], r["ref_b"]): r["edit_dist"]
-        for r in with_edit_distance(cand, recs, max_dist=k).collect()
-    }
-    assert bounded == {p: d for p, d in full.items() if d <= k}
+    assert bounded == {p: d for p, d in full.items() if d <= EDIT_MAX_DIST}
 
 
 # -- set-similarity family -----------------------------------------------------

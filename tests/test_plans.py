@@ -191,14 +191,10 @@ def _lazy_operator_cases():
         )
 
     return {
-        "duplicate_spans_exact": lambda d, e: dedup.duplicate_spans(d, w=3),
-        "duplicate_spans_fast": lambda d, e: dedup.duplicate_spans(
-            d, w=3, hash_fn="fast"
-        ),
-        "duplicate_span_positions": lambda d, e: dedup.duplicate_span_positions(
-            d, w=3
-        ),
-        "cut_duplicate_spans": lambda d, e: dedup.cut_duplicate_spans(d, w=3),
+        "duplicate_spans_exact": lambda d, e: dedup.duplicate_spans(d),
+        "duplicate_spans_fast": lambda d, e: dedup.duplicate_spans(d, hash_fn="fast"),
+        "duplicate_span_positions": lambda d, e: dedup.duplicate_span_positions(d),
+        "cut_duplicate_spans": lambda d, e: dedup.cut_duplicate_spans(d),
         "lm_score": lambda d, e: corpus.lm_score(d, d),
         "meta_blocking_wnp": lambda d, e: pairs.meta_blocking_prune(e),
         "rp_lsh_near_dup_pairs": lambda d, e: similarity.rp_lsh_near_dup_pairs(
@@ -211,7 +207,7 @@ def _lazy_operator_cases():
             postings(d), max_df=2
         ),
         "sorted_neighborhood_pairs": lambda d, e: pairs.sorted_neighborhood_pairs(
-            d, "text", id_col="doc_id", window=3
+            d, "text", id_col="doc_id"
         ),
     }
 
@@ -324,11 +320,13 @@ def _purge_cases():
             " AS t(doc_id, text)"
         )
 
+    # token blocking always purges, at TOKEN_BLOCK_MAX_DF: it has no
+    # uncapped plan (None) to compare against
     return {
         "candidate_pairs": lambda s, cap: pairs.candidate_pairs(postings(s), max_df=cap),
         "knn_join": lambda s, cap: knn_join(postings(s), k=3, max_df=cap),
-        "token_blocking_pairs": lambda s, cap: pairs.token_blocking_pairs(
-            docs(s), max_df=cap
+        "token_blocking_pairs": lambda s, cap: (
+            None if cap is None else pairs.token_blocking_pairs(docs(s))
         ),
     }
 
@@ -345,9 +343,10 @@ def _walk(node, under_broadcast=False):
 @pytest.mark.parametrize("name", sorted(_purge_cases()))
 def test_block_purge_is_a_broadcast_anti_join(spark, name):
     """Every key cap purges through pairs.purge_blocks: a BroadcastHashJoin
-    LeftAnti against the hot keys, and the shuffle exchanges outside the
-    broadcast side are those of the uncapped plan. Planned with AQE and
-    size-based broadcasts off, so only the operator's own hint broadcasts."""
+    LeftAnti against the hot keys, and, for an operator with an uncapped
+    plan, the shuffle exchanges outside the broadcast side are those of
+    that plan. Planned with AQE and size-based broadcasts off, so only the
+    operator's own hint broadcasts."""
     saved = {
         k: spark.conf.get(k)
         for k in ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
@@ -357,8 +356,9 @@ def test_block_purge_is_a_broadcast_anti_join(spark, name):
     try:
         build = _purge_cases()[name]
         plans = {
-            cap: list(_walk(build(spark, cap)._jdf.queryExecution().executedPlan()))
-            for cap in (None, 2)
+            cap: list(_walk(df._jdf.queryExecution().executedPlan()))
+            for cap, df in ((cap, build(spark, cap)) for cap in (None, 2))
+            if df is not None
         }
     finally:
         for k, v in saved.items():
@@ -376,5 +376,6 @@ def test_block_purge_is_a_broadcast_anti_join(spark, name):
     assert anti and all(n.nodeName() == "BroadcastHashJoin" for n in anti), [
         (n.nodeName(), n.joinType().toString()) for n in joins
     ]
-    assert not [n for n, _ in plans[None] if n.nodeName() == "BroadcastExchange"]
-    assert shuffles(plans[2]) == shuffles(plans[None])
+    if None in plans:
+        assert not [n for n, _ in plans[None] if n.nodeName() == "BroadcastExchange"]
+        assert shuffles(plans[2]) == shuffles(plans[None])

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from blurrily_spark.operators import similarity
 
 SF_DIR = "/root/testdata/sf0.001"
-# shipped ANN settings (__spark_entry__.q_ann_ivf)
-ANN_K, ANN_NPROBE, ANN_ITERS = 16, 11, 4
+# shipped ANN settings (__spark_entry__.q_ann_ivf; KMEANS_K = 16 centroids)
+ANN_NPROBE, ANN_ITERS = 11, 4
 
 
 @pytest.fixture(scope="module")
@@ -41,7 +41,7 @@ def test_ivf_recall_at_shipped_params(spark, emb):
     corpus, q = _split(emb)
     bf = {(r["query_id"], r["vec_id"])
           for r in similarity.cosine_topk(corpus, q).collect()}
-    cents = similarity.kmeans_centroids(corpus, k=ANN_K, iterations=ANN_ITERS)
+    cents = similarity.kmeans_centroids(corpus, iterations=ANN_ITERS)
     got = {(r["query_id"], r["vec_id"])
            for r in similarity.ivf_topk(corpus, q, cents, nprobe=ANN_NPROBE).collect()}
     recall = len(got & bf) / len(bf)
@@ -104,9 +104,7 @@ def test_rp_lsh_nested_vector_field_equals_top_level(spark):
     )
 
     def pairs(df, vec_col):
-        out = similarity.rp_lsh_near_dup_pairs(
-            df, dim=em.EMB_DIM, threshold=em.NEARDUP_COS, vec_col=vec_col
-        )
+        out = similarity.rp_lsh_near_dup_pairs(df, dim=em.EMB_DIM, vec_col=vec_col)
         return sorted(tuple(r) for r in out.collect())
 
     want = pairs(flat, "vec")
@@ -116,10 +114,11 @@ def test_rp_lsh_nested_vector_field_equals_top_level(spark):
 
 def test_maxmin_seeding_deterministic(spark, emb):
     corpus, _ = _split(emb)
-    a = similarity.maxmin_centroids(corpus, 4)
-    b = similarity.maxmin_centroids(corpus, 4)
+    a = similarity.maxmin_centroids(corpus)
+    b = similarity.maxmin_centroids(corpus)
     assert a == b
-    assert len(a) == 4 and len(set(map(tuple, a))) == 4  # distinct seeds
+    k = similarity.KMEANS_K
+    assert len(a) == k and len(set(map(tuple, a))) == k  # distinct seeds
 
 
 def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb, monkeypatch):
@@ -135,8 +134,8 @@ def test_maxmin_sampled_seeding_deterministic_and_recall(spark, emb, monkeypatch
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     monkeypatch.setattr(similarity, "MAXMIN_SEED_SCAN", 50)
-    seeds1 = similarity.maxmin_centroids(corpus, k=em.ANN_K)
-    seeds2 = similarity.maxmin_centroids(corpus, k=em.ANN_K)
+    seeds1 = similarity.maxmin_centroids(corpus)
+    seeds2 = similarity.maxmin_centroids(corpus)
     assert seeds1 == seeds2  # hash-sample is partitioning-independent
 
     # full kmeans (shipped iteration count) with the sampled seeding still
@@ -186,7 +185,7 @@ def _sem_df(spark):
 
 
 def test_semantic_dedup_planted_groups_min_id(spark):
-    out = similarity.semantic_dedup(_sem_df(spark), SEM_CENTS, threshold=0.95)
+    out = similarity.semantic_dedup(_sem_df(spark), SEM_CENTS)
     got = {r["id"]: (r["keep_id"], r["is_dup"]) for r in out.collect()}
     assert got == {
         1: (1, 0),
@@ -198,16 +197,20 @@ def test_semantic_dedup_planted_groups_min_id(spark):
 
 
 def test_rp_lsh_refuses_signatures_past_62_bits(spark):
-    # a ValueError, not an assert, so python -O cannot skip the check
+    # the sketch of rp_lsh_near_dup_pairs; a ValueError, not an assert, so
+    # python -O cannot skip the check
     with pytest.raises(ValueError, match="planes: at most 62 fit a BIGINT signature, got 63"):
-        similarity.rp_lsh_near_dup_pairs(_sem_df(spark), dim=4, n_bits=63)
+        similarity.rp_signature("embedding", [[1.0, 0.0]] * 63)
 
 
 @pytest.mark.parametrize("max_hamming", [-1, 32])
 def test_rp_lsh_refuses_max_hamming_outside_the_signature(spark, max_hamming):
-    # the error names the caller's keyword and the signature's bit range
+    # the chunker of rp_lsh_near_dup_pairs, at the signature's RP_BITS:
+    # the error names the keyword and the signature's bit range
+    from blurrily_spark.functions.hashing import hamming_chunks
+
     with pytest.raises(ValueError, match=rf"max_hamming must be in \[0, 32\), got {max_hamming}"):
-        similarity.rp_lsh_near_dup_pairs(_sem_df(spark), dim=4, max_hamming=max_hamming)
+        hamming_chunks(F.col("sig"), max_hamming, similarity.RP_BITS)
 
 
 def test_semantic_dedup_refuses_non_integral_ids(spark):
@@ -218,7 +221,7 @@ def test_semantic_dedup_refuses_non_integral_ids(spark):
         "vec_id double, embedding array<double>",
     )
     with pytest.raises(ValueError, match="semantic_dedup requires an integral 'vec_id'"):
-        similarity.semantic_dedup(df, SEM_CENTS, threshold=0.95)
+        similarity.semantic_dedup(df, SEM_CENTS)
 
 
 def test_semantic_dedup_single_cluster_matches_brute_cc(spark, emb):
@@ -235,11 +238,9 @@ def test_semantic_dedup_single_cluster_matches_brute_cc(spark, emb):
         base.select((F.col("vec_id") + 1000).alias("vec_id"), dup.alias("vec"))
     )
     cents = similarity.take_centroids(corpus, 1, vec_col="vec")
-    out = similarity.semantic_dedup(corpus, cents, threshold=0.95, vec_col="vec")
+    out = similarity.semantic_dedup(corpus, cents, vec_col="vec")
 
-    pairs = similarity.cosine_near_dup_pairs(
-        corpus, threshold=0.95, vec_col="vec"
-    ).collect()
+    pairs = similarity.cosine_near_dup_pairs(corpus, vec_col="vec").collect()
     parent: dict[int, int] = {}
 
     def find(x):
@@ -265,7 +266,6 @@ def test_semantic_dedup_single_cluster_matches_brute_cc(spark, emb):
 def test_semantic_dedup_plan_has_no_cartesian(spark):
     """The within-cluster pair join must be an equi-join on bucket -- a
     cartesian product over the corpus would be the SemDeDup scale bug."""
-    plan = similarity.semantic_dedup(
-        _sem_df(spark), SEM_CENTS, threshold=0.95
-    )._jdf.queryExecution().executedPlan().toString()
+    out = similarity.semantic_dedup(_sem_df(spark), SEM_CENTS)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
