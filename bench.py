@@ -182,11 +182,8 @@ def session(app: str):
     from blurrily_spark import get_spark
 
     spark = get_spark(app, master=f"local[{CPUS}]")
-    # warm up JVM + the Arrow/pandas worker pool outside the timings (cold
-    # python-daemon forks under a busy host have produced 10x outliers)
-    warm = spark.range(256).selectExpr("concat('wärm', id) AS t")
-    # an identity mapInPandas: unlike a projected UDF, count() cannot prune it
-    warm.mapInPandas(lambda batches: batches, warm.schema).count()
+    # warm up the JVM (job scheduling, codegen) outside the timings
+    spark.range(256).selectExpr("concat('wärm', id) AS t").collect()
     return spark
 
 

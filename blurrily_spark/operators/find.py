@@ -246,8 +246,11 @@ def mutual_knn_pairs(
 def find_one(postings: DataFrame, needle: str) -> DataFrame:
     """Single-needle FIND with the reference's default limit of 10.
 
-    Compiles to TakeOrderedAndProject (no window) -- the single-query fast
-    path. Returns ``(ref, matches, weight)`` ordered like F5.
+    The batch :func:`find` plan over a one-row needle batch: WindowGroupLimit
+    (partial and final), the ``row_number`` Window and a ``rank <= 10``
+    Filter, then the ``orderBy("rank")`` as an ``Exchange
+    rangepartitioning`` and a global Sort over those at most 10 rows.
+    Returns ``(ref, matches, weight)`` ordered like F5.
     """
     spark = postings.sparkSession
     q = spark.createDataFrame([(0, needle)], "query_id long, needle string")

@@ -1,109 +1,32 @@
-"""Pairwise scoring: blurrily's (matches, weight) order + Jaro-Winkler tie-break.
+"""Pairwise scoring: blurrily's (matches, weight) order, edit distance,
+token-sort ratio and the match edges clustering reads.
 
 The reference ranks on (matches DESC, weight ASC) and leaves full ties in
-*unspecified* order (unstable qsort, ext/blurrily/storage.c:566). Per the
-north star, this module adds a Jaro-Winkler similarity computed in batched
-Arrow/pandas UDFs **strictly below** the (matches, weight) order -- it can
-reorder only rows the reference itself leaves unordered, so reference
-rankings are preserved by construction.
+*unspecified* order (unstable qsort, ext/blurrily/storage.c:566). Every
+scorer here is a JVM expression over the pair rows; none runs a Python
+worker.
 
 Pair score components:
 * ``matches``      -- shared unique trigram count (F4 semantics);
 * ``jaccard``      -- matches / |T(a) ∪ T(b)| (size-normalized matchiness);
-* ``weight_delta`` -- |weight_a - weight_b| (the length-difference weighting);
-* ``jw``           -- Jaro-Winkler over the normalized texts (tie-break only).
+* ``weight_delta`` -- |weight_a - weight_b| (the length-difference weighting).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from blurrily_spark.operators.pairs import join_pair_ends
 
 EDIT_MAX_DIST = 40  # edits above which with_edit_distance drops a pair
 
 
-def _jaro(a: str, b: str) -> float:
-    if a == b:
-        return 1.0
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return 0.0
-    window = max(la, lb) // 2 - 1
-    if window < 0:
-        window = 0
-    match_a = [False] * la
-    match_b = [False] * lb
-    matches = 0
-    for i, ch in enumerate(a):
-        lo = max(0, i - window)
-        hi = min(lb, i + window + 1)
-        for j in range(lo, hi):
-            if not match_b[j] and b[j] == ch:
-                match_a[i] = True
-                match_b[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    transpositions = 0
-    j = 0
-    for i in range(la):
-        if match_a[i]:
-            while not match_b[j]:
-                j += 1
-            if a[i] != b[j]:
-                transpositions += 1
-            j += 1
-    t = transpositions / 2
-    m = float(matches)
-    return (m / la + m / lb + (m - t) / m) / 3.0
-
-
-def jaro_winkler_py(a: str | None, b: str | None) -> float | None:
-    """Plain-Python Jaro-Winkler (golden model + UDF kernel): Winkler's
-    prefix scale 0.1 over a common prefix of at most 4 characters."""
-    if a is None or b is None:
-        return None
-    j = _jaro(a, b)
-    prefix = 0
-    for ca, cb in zip(a[:4], b[:4]):
-        if ca != cb:
-            break
-        prefix += 1
-    return j + prefix * 0.1 * (1.0 - j)
-
-
-@F.pandas_udf(DoubleType())
-def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched Jaro-Winkler over two string columns."""
-    return pd.Series(
-        [jaro_winkler_py(x, y) for x, y in zip(a, b)], dtype="float64"
-    )
-
-
-def score_pairs(pairs: DataFrame, records: DataFrame) -> DataFrame:
-    """Attach score components to candidate pairs.
-
-    ``records`` is ``(ref, norm)``, one row per record -- the
-    normalized-text side table kept alongside the postings (the reference
-    never stores strings, README.md:125-127, so text-based tie-breaking is
-    an extension that needs this side table).
-
-    Returns pairs + ``weight_delta`` + ``jw``. Ordering convention for
-    consumers: (matches DESC, weight_delta ASC, jw DESC, ref_a ASC,
-    ref_b ASC).
-    """
-    texts = records.select("ref", F.col("norm").alias("_norm"))
-    delta = pairs.withColumn("weight_delta", F.abs(F.col("weight_a") - F.col("weight_b")))
-    return (
-        join_pair_ends(delta, texts, "ref", ["_norm"])
-        .withColumn("jw", jaro_winkler("_norm_a", "_norm_b"))
-        .drop("_norm_a", "_norm_b")
-    )
+def score_pairs(pairs: DataFrame) -> DataFrame:
+    """Attach ``weight_delta`` = |weight_a - weight_b| to candidate pairs:
+    the length-difference weighting of the reference's (matches DESC,
+    weight ASC) order, one projection per pair row."""
+    return pairs.withColumn("weight_delta", F.abs(F.col("weight_a") - F.col("weight_b")))
 
 
 def with_edit_distance(
@@ -116,8 +39,8 @@ def with_edit_distance(
 
     The classic edit-distance similarity join, expressed the way every
     other scorer here is: blocking proposes candidates, this rescored them
-    exactly. ``records`` is the ``(ref, <text_col>)`` side table (same
-    contract as :func:`score_pairs`). Adds an ``edit_dist`` int column.
+    exactly. ``records`` is the ``(ref, <text_col>)`` side table, one row
+    per record. Adds an ``edit_dist`` int column.
 
     Scale shape: two equi-joins to fetch the texts, then per-row JVM work
     -- no extra shuffle. The plan applies two sound prunes in cost order:
@@ -189,10 +112,9 @@ def token_sort_ratio(a, b):
     ``levenshtein`` is the standard integer edit distance, so the score
     is exactly reproducible in SQL). Word-order swaps ("john smith" vs
     "smith john") score 1.0 where raw edit distance would not; two empty
-    strings score 1.0. A tie-break refinement like Jaro-Winkler in
-    :func:`score_pairs`: at scale, compute it only on pairs that already
-    passed the cheap set-similarity threshold, never on the raw candidate
-    set."""
+    strings score 1.0. A refinement: at scale, compute it only on pairs
+    that already passed the cheap set-similarity threshold, never on the
+    raw candidate set."""
     sa, sb = token_sort_key(a), token_sort_key(b)
     mx = F.greatest(F.length(sa), F.length(sb))
     return F.when(mx == 0, F.lit(1.0)).otherwise(

@@ -3,7 +3,7 @@
 transcripts -> turns (normalize + entity refs + trigram array)
             -> postings (trigram inverted index)
             -> pairs (blocking self-join + jaccard)
-            -> scores (weight-delta + Jaro-Winkler tie-break)
+            -> scores (jaccard cut + weight delta)
             -> edges (threshold) -> entities (connected components)
 
 Each turn is tokenized once, in the turns stage, as the reference
@@ -174,7 +174,8 @@ class LinkagePipeline:
     # workdir written under another layout reruns instead of resuming into
     # tables this code cannot read. 2: turns carries ``trigrams``. 3: pairs
     # is the rescored form for every ``max_df`` (no ``tg_a``/``tg_b``).
-    LAYOUT = 3
+    # 4: scores has no ``jw`` column.
+    LAYOUT = 4
 
     def __init__(
         self,
@@ -303,23 +304,16 @@ class LinkagePipeline:
         pairs = self._load_or("pairs", _pairs)
 
         def _scores():
-            # Cheap jaccard threshold FIRST: Jaro-Winkler (an Arrow UDF over
-            # both texts) is a tie-break refinement, so it only ever needs to
-            # run on pairs that already pass the match threshold -- never on
-            # the full candidate set (at 10^12 turns that difference is the
-            # whole job).
+            # The cut keeps a small share of the pairs (1,500 of 152,744 on
+            # the 1,000-turn benchmark) but not of their partitions. One AQE
+            # rebalance sizes the tail by survivor bytes: the scores files,
+            # and through them the edges files and CC's collect, take as
+            # many partitions as the survivors fill (one at that size, many
+            # at scale, with skewed partitions split).
             survivors = pairs.where(
                 F.col("jaccard") >= self.config["jaccard_threshold"]
             )
-            # The cut keeps a small share of the pairs (1,500 of 152,744 on
-            # the 1,000-turn benchmark) but not of their partitions. One AQE
-            # rebalance sizes the tail by survivor bytes: the text joins,
-            # the Jaro-Winkler Python tasks and the scores files, and through
-            # them the edges files and CC's collect, take as many partitions
-            # as the survivors fill (one at that size, many at scale, with
-            # skewed partitions split).
-            records = turns.select("ref", "norm")
-            return score_pairs(survivors.hint("rebalance"), records)
+            return score_pairs(survivors.hint("rebalance"))
 
         scores = self._load_or("scores", _scores)
 

@@ -538,3 +538,35 @@ def test_every_package_call_passes_only_parameters_its_callee_takes():
                 bad.append(f"{where}: {len(args)} positional arguments, takes {len(positional)}")
             bad += [f"{where}({k}=)" for k in keywords if not varkw and k not in named]
     assert not bad, "calls that pass what the callee does not take: " + ", ".join(bad)
+
+
+_PYTHON_UDF_NAMES = {"udf", "pandas_udf", "mapInPandas", "mapInArrow", "applyInPandas"}
+
+
+def test_no_package_module_runs_a_python_udf():
+    """A Python UDF runs a Python worker next to every task: its rows cross
+    the JVM boundary twice, and each worker costs CPU before it touches a
+    row. No module under ``blurrily_spark/`` may call or decorate with
+    ``udf``, ``pandas_udf``, ``mapInPandas``, ``mapInArrow`` or
+    ``applyInPandas``, by attribute (``F.udf``) or by bare name."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    found = []
+    for rel in _package_files(root):
+        with open(os.path.join(root, rel)) as fh:
+            tree = ast.parse(fh.read(), rel)
+        targets = []
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                targets.append(n.func)
+            elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                targets += n.decorator_list  # a bare ``@F.udf`` is no Call
+        for t in targets:
+            name = t.attr if isinstance(t, ast.Attribute) else getattr(t, "id", None)
+            if name in _PYTHON_UDF_NAMES:
+                found.append(f"{rel}:{t.lineno} {name}")
+    assert not found, (
+        "Python UDFs in the package (a Python UDF comes back only with a"
+        " perfbench workload that measures it): " + ", ".join(sorted(found))
+    )

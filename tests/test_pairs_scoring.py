@@ -1,4 +1,4 @@
-"""Pair generation semantics + scoring (matches counts, jaccard, JW tie-break)."""
+"""Pair generation semantics + scoring (matches counts, jaccard, weight delta)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from conftest import put_rows
 from blurrily_spark.functions.tokenizer import normalize_py, tokenize_py
 from blurrily_spark.operators.index import build_postings, prepare_needles
 from blurrily_spark.operators.pairs import candidate_pairs, with_jaccard
-from blurrily_spark.operators.scoring import jaro_winkler_py, score_pairs
+from blurrily_spark.operators.scoring import score_pairs
 
 HAYSTACK = [
     ("london", 1),
@@ -82,25 +82,13 @@ def test_jaccard(spark):
         assert abs(gj - m / (ta + tb - m)) < 1e-12
 
 
-def test_jaro_winkler_known_values():
-    assert jaro_winkler_py("martha", "marhta") > 0.95
-    assert jaro_winkler_py("london", "london") == 1.0
-    assert jaro_winkler_py("abc", "xyz") == 0.0
-    assert jaro_winkler_py("", "abc") == 0.0
-    # winkler prefix boost: shared prefix scores higher
-    assert jaro_winkler_py("london", "londom") > jaro_winkler_py("london", "mondon")
-
-
-def test_score_pairs_jw_matches_python(spark):
-    haystack_df = put_rows(spark, HAYSTACK)
-    postings = build_postings(haystack_df, order_col="seq")
-    records = prepare_needles(haystack_df, order_col="seq").select("ref", "norm")
+def test_score_pairs_weight_delta_matches_python(spark):
+    postings = build_postings(put_rows(spark, HAYSTACK), order_col="seq")
     pairs = with_jaccard(candidate_pairs(postings), postings)
-    scored = score_pairs(pairs, records).collect()
+    scored = score_pairs(pairs).collect()
+    assert scored
     norm = {ref: normalize_py(text) for text, ref in HAYSTACK}
     for r in scored:
-        exp = jaro_winkler_py(norm[r["ref_a"]], norm[r["ref_b"]])
-        assert abs(r["jw"] - exp) < 1e-12
         assert r["weight_delta"] == abs(len(norm[r["ref_a"]]) - len(norm[r["ref_b"]]))
 
 
@@ -793,7 +781,9 @@ def test_with_edit_distance_duplicate_ref_multiplicity(spark):
 
 def test_with_edit_distance_bounded_equals_unbounded_within_k(spark):
     # the thresholded DP must agree with a full Python levenshtein on every
-    # pair within EDIT_MAX_DIST, over real candidate pairs
+    # pair within EDIT_MAX_DIST, over real candidate pairs, and drop the
+    # one pair past it: two records of one length that share their
+    # "quartz " trigrams and differ in 50 letters
     from blurrily_spark.operators.index import prepare_needles
     from blurrily_spark.operators.scoring import EDIT_MAX_DIST, with_edit_distance
 
@@ -805,7 +795,8 @@ def test_with_edit_distance_bounded_equals_unbounded_within_k(spark):
                 prev, row[j] = row[j], min(row[j] + 1, row[j - 1] + 1, prev + (ca != cb))
         return row[-1]
 
-    hay_df = put_rows(spark, HAYSTACK)
+    far = [("quartz " + "x" * 50, 8), ("quartz " + "y" * 50, 9)]
+    hay_df = put_rows(spark, HAYSTACK + far)
     postings = build_postings(hay_df, order_col="seq")
     cand = candidate_pairs(postings).select("ref_a", "ref_b")
     recs = prepare_needles(hay_df, order_col="seq").select("ref", "norm")
@@ -818,7 +809,9 @@ def test_with_edit_distance_bounded_equals_unbounded_within_k(spark):
         (r["ref_a"], r["ref_b"]): r["edit_dist"]
         for r in with_edit_distance(cand, recs).collect()
     }
-    assert bounded == {p: d for p, d in full.items() if d <= EDIT_MAX_DIST}
+    assert full[(8, 9)] > EDIT_MAX_DIST
+    assert (8, 9) not in bounded
+    assert bounded == {p: d for p, d in full.items() if p != (8, 9)}
 
 
 # -- set-similarity family -----------------------------------------------------

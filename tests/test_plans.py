@@ -16,8 +16,9 @@ or degrades a join strategy fails CI instead of shipping:
   streaming input streaming;
 * ``global_sort_ranks`` reads its one range exchange twice, the second
   time as a ``ReusedExchange``;
-* the linkage tail is survivor-sized: one rebalance exchange below the
-  Jaro-Winkler eval node, and an entities stage without an aggregate;
+* the linkage tail is survivor-sized: one rebalance exchange in the
+  scores stage, no Python eval node in any stage, and an entities stage
+  without an aggregate;
 * each capped blocker purges its hot keys with a broadcast anti-join and
   no shuffle exchange outside the broadcast side.
 """
@@ -272,8 +273,8 @@ def test_global_sort_ranks_reuses_its_range_exchange(spark):
 
 def test_linkage_tail_is_survivor_sized(spark, tmp_path, monkeypatch):
     """After the Jaccard cut the scores plan holds exactly one rebalance
-    exchange, below the Jaro-Winkler eval node, so a toy run writes one
-    scores file and one edges file. The entities stage is one left join of
+    exchange, so a toy run writes one scores file and one edges file. No
+    stage runs a Python worker. The entities stage is one left join of
     CC's labels onto the turns: no aggregate over refs, one row per turn."""
     from blurrily_spark.plans.pipeline import LinkagePipeline
     from blurrily_spark.sources.synth import generate_transcripts
@@ -295,7 +296,9 @@ def test_linkage_tail_is_survivor_sized(spark, tmp_path, monkeypatch):
 
     rebalance = "REBALANCE_PARTITIONS_BY_NONE"
     assert plans["scores"].count(rebalance) == 1, plans["scores"]
-    assert rebalance in plans["scores"].split("ArrowEvalPython", 1)[1], plans["scores"]
+    for stage, plan in plans.items():
+        for node in ("EvalPython", "InPandas", "InArrow"):
+            assert node not in plan, (stage, plan)
     m = pipe.metrics
     assert m["scores"]["rows"] > 0
     assert m["scores"]["partitions"]["n_files"] == 1
